@@ -750,7 +750,8 @@ def run_scaling(sf_dir: str, mult: float = 10.0, cores_pair=(1, 4),
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS")
+                                or len(os.sched_getaffinity(0))))
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--scaling", action="store_true")

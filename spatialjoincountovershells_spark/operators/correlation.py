@@ -202,109 +202,49 @@ def _nn_min_kernel_cnt(
 ) -> DataFrame:
     """dgrid-shaped 1-NN pass: broadcast the CSR cell grid of the DATA
     side (with ids when self_mode, for identity exclusion), stream the
-    probe table through mapInPandas, per-offset segment-min via
-    minimum.reduceat — each batch emits only per-shell PARTIAL COUNTS
-    (<= nshells rows), so candidate pairs never leave the task.
+    probe table through mapInPandas and take each probe's minimum over
+    the in-range pairs of shell_count's ring sweep (``_make_sweep``,
+    ring-1) — each batch emits only per-shell PARTIAL COUNTS (<=
+    nshells rows), so candidate pairs never leave the task.
     -> (shell_idx int, _n long) partials; caller sums.
 
     Same broadcast envelope, cell arithmetic (with_cell f64 floor) and
-    strict-< searchsorted binning as shell_count's dgrid plan
-    (`shell_count.py:_dgrid_plan`); distances in np_dtype with the
-    (dx2+dy2)+dz2 order and min-image fold, so results are bit-equal to
-    the sql-plan expression tree."""
+    strict-< searchsorted binning as shell_count's dgrid plan; distances
+    in np_dtype with the (dx2+dy2)+dz2 order and min-image fold, so
+    results are bit-equal to the sql-plan expression tree."""
     import pandas as pd
 
-    from .shell_count import _H, _build_grid, _ring_geometry
+    from .shell_count import _H, _build_grid, _make_sweep
 
     id_arg = "_did" if self_mode else None
-    bc, _n_data = _build_grid(
+    bc, n_data = _build_grid(
         data, ("_px", "_py", "_pz"), id_arg, nc, box, np_dtype)
-    cs = box / nc
-    r2k = np.asarray(r2, dtype=np_dtype)
-    r2max = r2k[-1]
+    # bin on the kernel-dtype edges, widened exactly
+    r2k = np.asarray(r2, dtype=np_dtype).astype(np.float64)
     nr = len(r2k)
-    rmax2_infl = float(np.asarray(r2, dtype=np.float64)[-1]) * (1.0 + 1e-9)
-    raw_offs, _doff, prune_ok, _fp = _ring_geometry(nc, cs, 1, rmax2_infl)
-    oidx = raw_offs + 1
-    bx = np_dtype(box)
+    sweep = _make_sweep(nc, box, 1, r2, np_dtype, n_data)
 
     def kern(batches):
         g = bc.value
-        Px, Py, Pz = g["Hx"], g["Hy"], g["Hz"]
         dids = g.get("ids")
-        keys_s = g.get("keys")
-        starts = g.get("starts")
-        st0 = st1 = None
-        if starts is not None:
-            st0, st1 = starts[:-1], starts[1:]
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            H64 = pdf[list(_H)].to_numpy(np.float64)
-            H = H64.astype(np_dtype)
             qids = (pdf["_qid"].to_numpy(np.int64) if self_mode else None)
-            pc = np.clip(np.floor(H64 / cs), 0, nc - 1).astype(np.int64)
             accmin = np.full(n, np.inf)
-            if prune_ok:
-                G = np.empty((3, 3, n), dtype=np.float64)
-                for a in range(3):
-                    lo_f = pc[:, a].astype(np.float64) * cs
-                    gm = H64[:, a] - lo_f
-                    gp = lo_f + cs - H64[:, a]
-                    G[a, 1] = 0.0
-                    G[a, 0] = gm * gm
-                    G[a, 2] = gp * gp
-            for j in range(len(raw_offs)):
-                qc = (pc + raw_offs[j]) % nc
-                qk = (qc[:, 0] * nc + qc[:, 1]) * nc + qc[:, 2]
-                if st0 is not None:
-                    lo_i = st0[qk]
-                    cn = st1[qk] - lo_i
-                else:
-                    lo_i = np.searchsorted(keys_s, qk, side="left")
-                    cn = np.searchsorted(keys_s, qk, side="right") - lo_i
-                keep = cn > 0
-                if prune_ok:
-                    g2 = G[0, oidx[j, 0]] + G[1, oidx[j, 1]]
-                    g2 += G[2, oidx[j, 2]]
-                    keep &= g2 < rmax2_infl
-                idx = np.nonzero(keep)[0]
-                if len(idx) == 0:
-                    continue
-                lo_c = lo_i[idx]
-                cnt = cn[idx].astype(np.int64)
-                total = int(cnt.sum())
-                c0 = np.cumsum(cnt) - cnt
-                didx = np.arange(total, dtype=np.int64)
-                didx += np.repeat(lo_c - c0, cnt)
-                dx = np.take(Px, didx)
-                dx -= np.repeat(H[idx, 0], cnt)
-                dy = np.take(Py, didx)
-                dy -= np.repeat(H[idx, 1], cnt)
-                dz = np.take(Pz, didx)
-                dz -= np.repeat(H[idx, 2], cnt)
-                np.abs(dx, out=dx)
-                np.minimum(dx, bx - dx, out=dx)
-                np.abs(dy, out=dy)
-                np.minimum(dy, bx - dy, out=dy)
-                np.abs(dz, out=dz)
-                np.minimum(dz, bx - dz, out=dz)
-                dx *= dx
-                dy *= dy
-                dz *= dz
-                d2 = (dx + dy) + dz
-                d2 = d2.astype(np.float64, copy=False)
+            for row, gidx, d2 in sweep(g, pdf[list(_H)].to_numpy(np.float64)):
+                d2 = d2.astype(np.float64)
                 if self_mode:
-                    d2[np.take(dids, didx) == np.repeat(qids[idx], cnt)] = np.inf
-                segmin = np.minimum.reduceat(d2, c0)
-                accmin[idx] = np.minimum(accmin[idx], segmin)
-            found = accmin < float(r2max)
+                    d2[dids[gidx] == qids[row]] = np.inf
+                # rows are sorted within a chunk: per-row segment minima
+                b = np.flatnonzero(np.r_[True, row[1:] != row[:-1]])
+                r = row[b]
+                accmin[r] = np.minimum(accmin[r], np.minimum.reduceat(d2, b))
+            found = accmin < r2k[-1]
             if not found.any():
                 continue
-            sh = np.searchsorted(
-                np.asarray(r2k, dtype=np.float64), accmin[found], side="right"
-            )
+            sh = np.searchsorted(r2k, accmin[found], side="right")
             counts = np.bincount(sh, minlength=nr)
             nz = np.nonzero(counts)[0]
             yield pd.DataFrame(

@@ -314,12 +314,15 @@ def shell_count(
     n_est = n_particles_est
     if plan == "auto":
         n_est = n_est or particles.count()
-        n_h = n_halos_est or halos.count()
         rmax = float(np.asarray(edges)[-1])
-        plan = choose_plan(
-            n_h, n_est, rmax, box, ncells, cell_mult=cell_mult,
-            weighted=weight_col is not None,
-        )
+        kw = dict(box=box, ncells=ncells, cell_mult=cell_mult,
+                  weighted=weight_col is not None)
+        # choose_plan's first test (dgrid) reads only the particle
+        # side: with no halos it answers 'dgrid' iff that test passes,
+        # so the halos are counted only when the choice needs them
+        plan = choose_plan(0, n_est, rmax, **kw)
+        if plan != "dgrid":
+            plan = choose_plan(n_halos_est or halos.count(), n_est, rmax, **kw)
     if weight_col is not None and plan == "bcast":
         raise ValueError(
             "weight_col is not supported by plan='bcast': its sort-"
@@ -555,12 +558,8 @@ def _build_grid(
     pass and the driver still has to collect every row afterwards;
     argsort+gather of 6M rows is ~0.8s vs ~3s of sort overhead) — and
     the serial work is bounded by the same broadcast budget that gates
-    this plan, so it cannot grow past ~16M rows.  Dense CSR offsets
-    over the nc^3 grid when it fits (64 MB int32 at 16M cells); the
-    sorted key array is shipped ONLY for the searchsorted fallback on
-    absurdly fine grids — with dense offsets the kernels never touch
-    it, and dropping it cuts the broadcast ~35%.
-    Returns (broadcast, n_rows)."""
+    this plan, so it cannot grow past ~16M rows.  Payload layout:
+    ``_csr_grid``.  Returns (broadcast, n_rows)."""
     from .cells import with_cell
 
     cols = ([id_col] if id_col else []) + list(coords)
@@ -568,24 +567,36 @@ def _build_grid(
         cols.append(weight_col)
     keyed = with_cell(side.select(*cols), ncells, box, cols=coords)
     tbl = keyed.toArrow()
-    key = np.asarray(tbl.column("cell_id"))
+    payload = _csr_grid(
+        np.asarray(tbl.column("cell_id")),
+        [np.asarray(tbl.column(c)) for c in coords], ncells, np_dtype,
+        ids=np.asarray(tbl.column(id_col)) if id_col else None,
+        W=np.asarray(tbl.column(weight_col)) if weight_col else None,
+    )
+    n = len(payload["Hx"])
+    return side.sparkSession.sparkContext.broadcast(payload), n
+
+
+def _csr_grid(key, xyz, nc: int, np_dtype, ids=None, W=None) -> dict:
+    """Sort rows by cell key into the broadcast grid payload: coords
+    Hx/Hy/Hz (np_dtype), optional ids/W (int64), and dense CSR offsets
+    ``starts`` over the nc^3 grid when it fits (64 MB int32 at 16M
+    cells), else the sorted ``keys`` for a searchsorted lookup — never
+    both: with dense offsets the kernels never touch the keys, and
+    dropping them cuts the broadcast ~35%."""
     n = len(key)
     # introsort, NOT stable: every kernel output is a per-id integer
     # count, invariant to row order within a cell, and default argsort
     # is ~2.4x faster than the stable radix at 6M keys (profiled)
     order = np.argsort(key)
-    xs = [
-        np.asarray(tbl.column(c)).astype(np_dtype, copy=False)[order]
-        for c in coords
-    ]
-    payload = {"Hx": xs[0], "Hy": xs[1], "Hz": xs[2]}
-    if id_col:
-        payload["ids"] = np.asarray(tbl.column(id_col)).astype(
-            np.int64, copy=False)[order]
-    if weight_col:
-        payload["W"] = np.asarray(tbl.column(weight_col)).astype(
-            np.int64, copy=False)[order]
-    nc = ncells
+    payload = {
+        a: np.asarray(x).astype(np_dtype, copy=False)[order]
+        for a, x in zip(("Hx", "Hy", "Hz"), xyz)
+    }
+    if ids is not None:
+        payload["ids"] = ids.astype(np.int64, copy=False)[order]
+    if W is not None:
+        payload["W"] = W.astype(np.int64, copy=False)[order]
     if nc**3 <= 16_000_000:
         counts = np.bincount(key, minlength=nc**3)
         payload["starts"] = np.concatenate(([0], np.cumsum(counts))).astype(
@@ -593,30 +604,212 @@ def _build_grid(
         )
     else:
         payload["keys"] = key[order]
-    return side.sparkSession.sparkContext.broadcast(payload), n
+    return payload
 
 
-def _ring_geometry(nc: int, cs: float, kk: int, rmax2_infl: float):
-    """Ring-k offsets (mod-dedup'd), offset-level Euclidean prune, the
-    interior neighbor-key delta LUT, and the two fast-path gates."""
-    offs = ring_offsets(nc, k=kk)
-    half = nc // 2
+# pairs per chunk of the sweep's pair phase: its ~10 per-pair
+# temporaries then stay a few MB, cache-resident
+_SWEEP_CHUNK = 1 << 18
+
+
+def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
+                n_grid: int):
+    """The broadcast plans' one ring kernel -> ``sweep(grid, P64)``.
+
+    ``grid`` is a ``_build_grid`` payload (the broadcast side, CSR by
+    cell key), ``P64`` the streamed rows' (n, 3) float64 coords.
+    ``sweep`` yields ``(row, gidx, d2)`` chunks: streamed row (int32,
+    non-decreasing within a chunk), grid row and kernel-dtype squared
+    distance of every candidate pair with ``d2 < r_max^2``.
+
+    Candidates come from the ring-k cell neighborhood (cells of size
+    box/nc, k = ring_k) cut by a per-row Euclidean slab prune: a cell
+    is kept iff ``(Gx + Gy) + Gz < r_max^2`` in f64, G the squared gap
+    from the row to that cell's slab on each axis.
+
+    * Interior rows (cell >= k from every face; the vast majority,
+      needs 2nc >= 5(k+1)) visit (2k+1)^2 z-STRIPES, not (2k+1)^3
+      cells: Gz grows with |oz|, so a column's kept cells are one run
+      of consecutive cell keys and one CSR range
+      ``[starts[key+jlo], starts[key+jhi+1])`` replaces up to 2k+1
+      segments (one searchsorted pair on the sorted-``keys`` fallback).
+      Their pairs skip the min-image fold: every per-axis separation
+      is <= (k+1)*cs < box/2, where ``min(|d|, box-|d|)`` provably
+      picks ``|d|``.
+    * Boundary rows (and every row on grids too coarse for the fast
+      path) take one vectorized pass per ring cell with a modulo wrap,
+      and their pairs fold.
+    * Segments are laid out row-major, then the pair phase runs in
+      ~256k-pair chunks split on segment boundaries: one int32 repeat
+      of the row and one of the CSR base per pair, flat ``np.take``
+      gathers of three contiguous f32 coord arrays, f32-safe
+      (dx2+dy2)+dz2.
+
+    SJCS_KERN_PROF=1 prints one JSON line per call to stderr (rows,
+    segments, candidate pairs, thread CPU).
+    """
+    cs = box / nc
+    kk = ring_k
+    r2max = np.asarray(r2, dtype=np_dtype)[-1]
+    rmax2_infl = float(np.asarray(r2, dtype=np.float64)[-1]) * (1.0 + 1e-9)
+    # ring-k offsets, mod-dedup'd, folded to -nc/2..nc/2
     raw_offs = np.array(
-        [[m if m <= half else m - nc for m in o] for o in offs], dtype=np.int64
+        [[m if m <= nc // 2 else m - nc for m in o]
+         for o in ring_offsets(nc, k=kk)], dtype=np.int64
     )
     if nc > 2 * kk:
-        # a whole ring cell is out of range for EVERY probe point when
-        # its min per-axis gap (|o|-1 full cells) already exceeds rmax
-        # — e.g. the 8 corner cells at k=3
+        # a whole ring cell is out of range for EVERY row when its min
+        # per-axis gap (|o|-1 full cells) already exceeds rmax — e.g.
+        # the 8 corner cells at k=3
         omin = np.maximum(np.abs(raw_offs) - 1, 0) * cs
         raw_offs = raw_offs[(omin * omin).sum(axis=1) < rmax2_infl]
-    doff = (raw_offs[:, 0] * nc + raw_offs[:, 1]) * nc + raw_offs[:, 2]
     prune_ok = nc >= 2 * kk + 1
     # interior pairs have |d|_axis <= (k+1)*cs <= 2box/5 < box/2 with a
     # wide margin, so the min-image fold can never flip within an ulp
     # of the box/2 boundary
     fastpath_ok = 2 * nc >= 5 * (kk + 1)
-    return raw_offs, doff, prune_ok, fastpath_ok
+    oidx = raw_offs + kk  # raw offset -k..+k -> gap-table column
+    key_t = np.int32 if nc**3 < 2**31 - 1 else np.int64
+    idx_t = np.int32 if n_grid + _SWEEP_CHUNK < 2**31 - 1 else np.int64
+    seg_t = np.int32 if n_grid < 2**31 - 1 else np.int64
+    bx = np_dtype(box)
+    # z-stripes (interior rows only): per (ox, oy) column, the largest
+    # |oz| the offset-level prune keeps — an interval, since the
+    # per-offset gap bound grows with |oz|
+    span: dict[tuple[int, int], int] = {}
+    for ox, oy, oz in raw_offs.tolist():
+        span[ox, oy] = max(span.get((ox, oy), 0), abs(oz))
+    stripes = [(ox, oy, m, (ox * nc + oy) * nc) for (ox, oy), m in span.items()]
+
+    def gaps(P64, pc):
+        # per-(axis, slab) squared gaps, contiguous in n: gap to the
+        # slab at offset |o| = within-cell face gap + |o|-1 full cells
+        G = np.empty((3, 2 * kk + 1, len(P64)), dtype=np.float64)
+        for a in range(3):
+            lo_f = pc[:, a].astype(np.float64) * cs
+            gm = P64[:, a] - lo_f
+            gp = lo_f + cs - P64[:, a]
+            G[a, kk] = 0.0
+            for j in range(1, kk + 1):
+                gmj = gm + (j - 1) * cs
+                gpj = gp + (j - 1) * cs
+                G[a, kk - j] = gmj * gmj
+                G[a, kk + j] = gpj * gpj
+        return G
+
+    def sweep(grid, P64):
+        import os
+        import time
+
+        cpu0 = time.thread_time()
+        X, Y, Z = grid["Hx"], grid["Hy"], grid["Hz"]  # grid-side coords
+        starts, keys = grid.get("starts"), grid.get("keys")
+
+        def lookup(klo, khi):
+            # CSR range of cell keys klo..khi (inclusive)
+            if starts is not None:
+                lo = starts[klo]
+                return lo, starts[khi + 1] - lo
+            lo = np.searchsorted(keys, klo, side="left")
+            return lo, np.searchsorted(keys, khi, side="right") - lo
+
+        def stripe_segments(P64, pc):
+            G = gaps(P64, pc)
+            pck = pc.astype(key_t)
+            pkey = (pck[:, 0] * nc + pck[:, 1]) * nc + pck[:, 2]
+            LO = np.empty((len(stripes), len(pc)), dtype=seg_t)
+            CN = np.empty_like(LO)
+            for c, (ox, oy, m, dcol) in enumerate(stripes):
+                s = G[0, ox + kk] + G[1, oy + kk]
+                klo = pkey + dcol
+                khi = klo.copy()
+                for j in range(1, m + 1):
+                    klo -= (s + G[2, kk - j]) < rmax2_infl
+                    khi += (s + G[2, kk + j]) < rmax2_infl
+                LO[c], CN[c] = lookup(klo, khi)
+                CN[c, s >= rmax2_infl] = 0  # not even the centre cell
+            return LO, CN
+
+        def cell_segments(P64, pc):
+            G = gaps(P64, pc) if prune_ok else None
+            LO = np.empty((len(raw_offs), len(pc)), dtype=seg_t)
+            CN = np.empty_like(LO)
+            for j in range(len(raw_offs)):
+                qc = (pc + raw_offs[j]) % nc
+                qk = (qc[:, 0] * nc + qc[:, 1]) * nc + qc[:, 2]
+                LO[j], CN[j] = lookup(qk, qk)
+                if prune_ok:
+                    g2 = G[0, oidx[j, 0]] + G[1, oidx[j, 1]]
+                    g2 += G[2, oidx[j, 2]]
+                    CN[j, g2 >= rmax2_infl] = 0
+            return LO, CN
+
+        P = P64.astype(np_dtype)
+        Px, Py, Pz = (np.ascontiguousarray(P[:, a]) for a in range(3))
+        pc = np.clip(np.floor(P64 / cs), 0, nc - 1).astype(np.int64)
+        if fastpath_ok:
+            inner = ((pc >= kk) & (pc <= nc - 1 - kk)).all(axis=1)
+            parts = [(np.flatnonzero(inner), False),
+                     (np.flatnonzero(~inner), True)]
+        else:
+            parts = [(np.arange(len(P64)), True)]
+        n_seg = n_pairs = 0
+        for rows, fold in parts:
+            if len(rows) == 0:
+                continue
+            LO, CN = (cell_segments if fold else stripe_segments)(
+                P64[rows], pc[rows])
+            # row-major segments: a chunk then covers a contiguous run
+            # of rows (probe-local accumulators stay small)
+            cn = CN.T.ravel()
+            seg = np.flatnonzero(cn)
+            if len(seg) == 0:
+                continue
+            cn = cn[seg]
+            lo = LO.T.ravel()[seg]
+            srow = rows[seg // len(LO)].astype(np.int32)
+            cum = np.cumsum(cn)
+            n_seg += len(seg)
+            n_pairs += int(cum[-1])
+            s0, base = 0, 0
+            while s0 < len(seg):
+                s1 = max(int(np.searchsorted(cum, base + _SWEEP_CHUNK, "right")),
+                         s0 + 1)
+                cnt = cn[s0:s1]
+                gidx = np.arange(cum[s1 - 1] - base, dtype=idx_t)
+                gidx += np.repeat((lo[s0:s1] - (cum[s0:s1] - cnt - base))
+                                  .astype(idx_t), cnt)
+                row = np.repeat(srow[s0:s1], cnt)
+                dx = np.take(X, gidx)
+                dx -= np.take(Px, row)
+                dy = np.take(Y, gidx)
+                dy -= np.take(Py, row)
+                dz = np.take(Z, gidx)
+                dz -= np.take(Pz, row)
+                if fold:
+                    # min-image fold, f32-exact ((dx2+dy2)+dz2 order kept)
+                    for d in (dx, dy, dz):
+                        np.abs(d, out=d)
+                        np.minimum(d, bx - d, out=d)
+                dx *= dx
+                dy *= dy
+                dz *= dz
+                d2 = dx + dy
+                d2 += dz
+                k = np.flatnonzero(d2 < r2max)
+                if len(k):
+                    yield row[k], gidx[k], d2[k]
+                base, s0 = int(cum[s1 - 1]), s1
+        if os.environ.get("SJCS_KERN_PROF") == "1":
+            import json
+            import sys
+
+            print("SJCS_KERN_PROF " + json.dumps({
+                "rows": len(P64), "segments": n_seg, "pairs": n_pairs,
+                "cpu_s": round(time.thread_time() - cpu0, 4)}),
+                file=sys.stderr, flush=True)
+
+    return sweep
 
 
 def _bcast_plan(
@@ -652,59 +845,27 @@ def _bcast_plan(
     a few more candidate CELLS for far fewer candidate PAIRS: the kept
     volume shrinks from the (3*rmax)^3 ring-1 cube toward the ball
     volume plus one cell-width shell — the closest Spark-shaped analog
-    of the reference tree's tight MBR descent, and the r2-verdict fix
-    for the candidates/probe gap.  Numerics are identical to the fused
-    kernel (f32-safe
-    (dx2+dy2)+dz2, strict-< first-match searchsorted binning), so the
-    byte-exact golden tests hold for this plan too.
+    of the reference tree's tight MBR descent.  Numerics are identical
+    to the fused kernel (f32-safe (dx2+dy2)+dz2, strict-< first-match
+    searchsorted binning), so the byte-exact golden tests hold for this
+    plan too.
 
-    Kernel hot-path design (profiled stage-by-stage, round 3): the
-    per-candidate-cell bookkeeping — not the distance math — dominated
-    the round-2 kernel (int64 ``% nc`` wrap + per-group np.repeat were
-    ~60% of wall time).  Now:
-
-    * particles whose cell is >= 1 from every box face (the vast
-      majority; requires nc >= 5) take a FAST path: neighbor cell key
-      is one add against a precomputed offset LUT (no modulo), and the
-      pair distance skips the min-image fold entirely — exact, because
-      every candidate pair then has per-axis separation <= 2*cs <=
-      box/2, where ``min(|d|, box-|d|)`` provably picks ``|d|`` and
-      ``|d|^2 == d^2`` in IEEE f32;
-    * empty candidate cells are dropped before pair expansion, and the
-      expansion builds the halo index in ONE np.repeat + one arange
-      (was three repeats);
-    * halo coords are broadcast as three CONTIGUOUS 1-D arrays so the
-      per-pair gather is a flat ``np.take``, and the probe coords are
-      np.repeat'ed values (4 B floats), never 8 B row indices;
-    * pairs are pre-filtered with ``d2 < r2_max`` (typically only a few
-      % survive at reference shapes) before the 40-edge searchsorted.
+    Kernel hot-path design: the ring sweep is ``_make_sweep``, shared
+    with plan='dgrid' (z-stripe CSR ranges for interior particles, a
+    per-cell wrapped pass for boundary ones, chunked pair phase); this
+    plan only accumulates.  Each in-range pair becomes one
+    ``halo_row * nshells + shell`` key; keys are sort-reduced (or
+    bincounted, when they outnumber the halo x shell domain) per task,
+    so only nonzero partial (halo, shell) counts leave it.
     """
     np_dtype = np.float32 if dtype == "float32" else np.float64
-    spark = halos.sparkSession
     bc, m = _build_grid(halos, h_coords, id_col, ncells, box, np_dtype)
-    nc = ncells
-    cs = box / nc
     r2k = np.asarray(r2, dtype=np_dtype)
-    r2max = r2k[-1]
     nr = len(r2k)
-    rmax2_infl = float(np.asarray(r2, dtype=np.float64)[-1]) * (1.0 + 1e-9)
-    kk = ring_k
-    raw_offs, doff, prune_ok, fastpath_ok = _ring_geometry(
-        nc, cs, kk, rmax2_infl)
-    bx = np_dtype(box)
-
-    # int32 wherever the bounds allow — halves the bytes every gather,
-    # sort, and multiply touches vs int64 (profiled ~25% of kernel time)
-    key_t = np.int32 if nc**3 < 2**31 - 1 else np.int64
+    sweep = _make_sweep(ncells, box, ring_k, r2, np_dtype, m)
+    # int32 wherever the bounds allow — halves the bytes every sort and
+    # multiply touches vs int64
     out_t = np.int32 if m * nr < 2**31 - 1 else np.int64
-    doff_t = doff.astype(key_t)
-    oidx = raw_offs + kk  # raw offset -k..+k -> gap-table column
-
-    def _reduce(keys: np.ndarray, cnts: np.ndarray):
-        o = np.argsort(keys, kind="stable")
-        k, c = keys[o], cnts[o]
-        b = np.nonzero(np.r_[True, k[1:] != k[:-1]])[0]
-        return k[b], np.add.reduceat(c, b)
 
     def _count(keys: np.ndarray):
         # sort-reduce of unit counts: ~4x cheaper than a dense bincount
@@ -715,18 +876,7 @@ def _bcast_plan(
         return ks[b], np.diff(np.r_[b, len(ks)]).astype(np.int64)
 
     def kern(batches):
-        import os as _os
-        import time as _time
-
-        prof = _os.environ.get("SJCS_KERN_PROF") == "1"
-        cpu0 = _time.thread_time()
         data = bc.value
-        Hx, Hy, Hz = data["Hx"], data["Hy"], data["Hz"]
-        ids_s, keys_s = data["ids"], data.get("keys")
-        starts = data.get("starts")
-        st0 = st1 = None
-        if starts is not None:
-            st0, st1 = starts[:-1], starts[1:]
         comp: list[tuple[np.ndarray, np.ndarray]] = []
         raw: list[np.ndarray] = []
         raw_n = 0
@@ -744,139 +894,31 @@ def _bcast_plan(
                 comp.append(_count(k))
             raw, raw_n = [], 0
 
-        def run_cols(P, P64s, pc, fold):
-            """Column-at-a-time ring sweep over one particle subset.
-
-            One vectorized pass per ring offset (contiguous adds + two
-            int32 gathers + the slab prune) beats the row-masked
-            (n, noffs) variant ~2x: no 2-D boolean nonzero, no fancy
-            (n, noffs) gap gathers, no int64 anywhere in the hot loop.
-            fold=True takes the periodic min-image path (boundary
-            cells); fold=False is exact without folding (interior,
-            per-axis |d| <= (k+1)*cs < box/2)."""
-            nonlocal raw_n
-            n = len(P)
-            if n == 0:
-                return
-            if prune_ok:
-                # per-(axis, slab) squared gaps, contiguous in n:
-                # gap to slab at offset |o| = within-cell face gap
-                # plus |o|-1 full cells (the vectorized MBR prune)
-                G = np.empty((3, 2 * kk + 1, n), dtype=np.float64)
-                for a in range(3):
-                    lo_f = pc[:, a].astype(np.float64) * cs
-                    gm = P64s[:, a] - lo_f
-                    gp = lo_f + cs - P64s[:, a]
-                    G[a, kk] = 0.0
-                    for j in range(1, kk + 1):
-                        gmj = gm + (j - 1) * cs
-                        gpj = gp + (j - 1) * cs
-                        G[a, kk - j] = gmj * gmj
-                        G[a, kk + j] = gpj * gpj
-            pck = pc.astype(key_t)
-            pkey = (pck[:, 0] * nc + pck[:, 1]) * nc + pck[:, 2]
-            pis, los, cns = [], [], []
-            for j in range(len(raw_offs)):
-                if fold:
-                    qc = (pc + raw_offs[j]) % nc
-                    qk = (qc[:, 0] * nc + qc[:, 1]) * nc + qc[:, 2]
-                else:
-                    qk = pkey + doff_t[j]
-                if st0 is not None:
-                    lo_i = st0[qk]
-                    cn = st1[qk] - lo_i
-                else:
-                    lo_i = np.searchsorted(keys_s, qk, side="left")
-                    cn = np.searchsorted(keys_s, qk, side="right") - lo_i
-                if prune_ok:
-                    g2 = G[0, oidx[j, 0]] + G[1, oidx[j, 1]]
-                    g2 += G[2, oidx[j, 2]]
-                    keep = (cn > 0) & (g2 < rmax2_infl)
-                else:
-                    keep = cn > 0
-                idx = np.nonzero(keep)[0]
-                if len(idx) == 0:
-                    continue
-                pis.append(idx)
-                los.append(lo_i[idx])
-                cns.append(cn[idx])
-            if not pis:
-                return
-            pi0 = np.concatenate(pis)
-            lo_c = np.concatenate(los).astype(out_t)
-            cnt = np.concatenate(cns).astype(np.int64)
-            total = int(cnt.sum())
-            if total == 0:
-                return
-            idx_t = out_t if total < 2**31 - 1 else np.int64
-            c0 = np.cumsum(cnt) - cnt
-            hidx = np.arange(total, dtype=idx_t)
-            hidx += np.repeat((lo_c - c0).astype(idx_t), cnt)
-            dx = np.take(Hx, hidx)
-            dx -= np.repeat(P[pi0, 0], cnt)
-            dy = np.take(Hy, hidx)
-            dy -= np.repeat(P[pi0, 1], cnt)
-            dz = np.take(Hz, hidx)
-            dz -= np.repeat(P[pi0, 2], cnt)
-            if fold:
-                # min-image fold, f32-exact ((dx2+dy2)+dz2 order kept)
-                np.abs(dx, out=dx)
-                np.minimum(dx, bx - dx, out=dx)
-                np.abs(dy, out=dy)
-                np.minimum(dy, bx - dy, out=dy)
-                np.abs(dz, out=dz)
-                np.minimum(dz, bx - dz, out=dz)
-            dx *= dx
-            dy *= dy
-            dz *= dz
-            d2 = dx + dy
-            d2 += dz
-            inr = d2 < r2max  # cheap prefilter before the 40-edge bin
-            if not inr.any():
-                return
-            sh = np.searchsorted(r2k, d2[inr], side="right").astype(out_t)
-            keys = hidx[inr].astype(out_t) * out_t(nr) + sh
-            raw.append(keys)
-            raw_n += len(keys)
-            if raw_n > 24_000_000:
-                flush()
-
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             # bin from original precision (plan-invariant cells); the
             # kernel-dtype copy is used only for distances
             P64 = pdf[list(_P)].to_numpy(np.float64)
-            P = P64.astype(np_dtype)
-            pc = np.clip(np.floor(P64 / cs), 0, nc - 1).astype(np.int64)
-            if fastpath_ok:
-                interior = ((pc >= kk) & (pc <= nc - 1 - kk)).all(axis=1)
-                ii = np.nonzero(interior)[0]
-                bi = np.nonzero(~interior)[0]
-                run_cols(P[ii], P64[ii], pc[ii], fold=False)
-                run_cols(P[bi], P64[bi], pc[bi], fold=True)
-            else:
-                run_cols(P, P64, pc, fold=True)
+            for _row, gidx, d2 in sweep(data, P64):
+                sh = np.searchsorted(r2k, d2, side="right").astype(out_t)
+                raw.append(gidx.astype(out_t) * out_t(nr) + sh)
+                raw_n += len(sh)
+                if raw_n > 24_000_000:
+                    flush()
         flush()
-        if prof:
-            # per-task kernel CPU (thread_time: immune to hypervisor
-            # steal, unlike wall clock) -> driver stderr in local mode
-            import json as _json
-            import sys as _sys
-
-            print("SJCS_KERN_PROF " + _json.dumps(
-                {"task_cpu_s": round(_time.thread_time() - cpu0, 3)}),
-                file=_sys.stderr, flush=True)
         if not comp:
             return
         k = np.concatenate([x[0] for x in comp])
         c = np.concatenate([x[1] for x in comp])
-        k, c = _reduce(k, c)
+        o = np.argsort(k, kind="stable")
+        k, c = k[o], c[o]
+        b = np.nonzero(np.r_[True, k[1:] != k[:-1]])[0]
+        k, c = k[b], np.add.reduceat(c, b)
         if len(k):
             yield pd.DataFrame(
                 {
-                    id_col: ids_s[(k // nr).astype(np.int64)],
+                    id_col: data["ids"][(k // nr).astype(np.int64)],
                     "shell_idx": (k % nr).astype(np.int32),
                     "cnt": c.astype(np.int64),
                 }
@@ -915,9 +957,19 @@ def _dgrid_plan(
     * ring bookkeeping (neighbor keys, CSR lookups, slab prune) is per
       PROBE, and probes are typically 10x fewer than particles;
     * per-batch counts accumulate into a dense (batch x nshells)
-      bincount and leave pre-aggregated — the JVM never hash-aggregates
+      array and leave pre-aggregated — the JVM never hash-aggregates
       tens of millions of partial rows (measured at ~40% of plan=
       'bcast' wall time at the reference-matched shape).
+
+    Kernel hot-path design: the ring sweep is ``_make_sweep``, shared
+    with plan='bcast': an interior probe visits (2k+1)^2 z-stripes,
+    each one contiguous CSR range of particles, instead of (2k+1)^3
+    cells; boundary probes take the per-cell wrapped pass.  Pairs come
+    back in ~256k-pair chunks laid out probe-major, so each chunk
+    covers a short run of probes and is counted with one small
+    bincount over that run's ``(probe, shell)`` slice of the batch
+    accumulator (weights: a second bincount of the per-pair particle
+    weights, exact while every partial stays under 2^53).
 
     Scale envelope: the DATA side must fit executor memory (16-20 B/
     particle; the reference's own published run holds 3x100M particles
@@ -930,165 +982,43 @@ def _dgrid_plan(
     np_dtype = np.float32 if dtype == "float32" else np.float64
     bc, n_data = _build_grid(particles, p_coords, None, ncells, box, np_dtype,
                              weight_col=weight_col)
-    nc = ncells
-    cs = box / nc
     r2k = np.asarray(r2, dtype=np_dtype)
-    r2max = r2k[-1]
     nr = len(r2k)
-    rmax2_infl = float(np.asarray(r2, dtype=np.float64)[-1]) * (1.0 + 1e-9)
-    kk = ring_k
-    raw_offs, doff, prune_ok, fastpath_ok = _ring_geometry(
-        nc, cs, kk, rmax2_infl)
-    bx = np_dtype(box)
-    key_t = np.int32 if nc**3 < 2**31 - 1 else np.int64
-    idx_t = np.int32 if n_data < 2**31 - 1 else np.int64
-    doff_t = doff.astype(key_t)
-    oidx = raw_offs + kk
+    sweep = _make_sweep(ncells, box, ring_k, r2, np_dtype, n_data)
 
     def kern(batches):
-        import os as _os
-        import time as _time
-
-        prof = _os.environ.get("SJCS_KERN_PROF") == "1"
-        cpu0 = _time.thread_time()
         data = bc.value
-        Px, Py, Pz = data["Hx"], data["Hy"], data["Hz"]
         W = data.get("W")
-        keys_s = data.get("keys")
-        starts = data.get("starts")
-        st0 = st1 = None
-        if starts is not None:
-            st0, st1 = starts[:-1], starts[1:]
-
-        def sweep(H, H64s, pc, fold, acc, base_idx, accw=None):
-            n = len(H)
-            if n == 0:
-                return
-            if prune_ok:
-                G = np.empty((3, 2 * kk + 1, n), dtype=np.float64)
-                for a in range(3):
-                    lo_f = pc[:, a].astype(np.float64) * cs
-                    gm = H64s[:, a] - lo_f
-                    gp = lo_f + cs - H64s[:, a]
-                    G[a, kk] = 0.0
-                    for j in range(1, kk + 1):
-                        gmj = gm + (j - 1) * cs
-                        gpj = gp + (j - 1) * cs
-                        G[a, kk - j] = gmj * gmj
-                        G[a, kk + j] = gpj * gpj
-            pck = pc.astype(key_t)
-            pkey = (pck[:, 0] * nc + pck[:, 1]) * nc + pck[:, 2]
-            pis, los, cns = [], [], []
-            for j in range(len(raw_offs)):
-                if fold:
-                    qc = (pc + raw_offs[j]) % nc
-                    qk = (qc[:, 0] * nc + qc[:, 1]) * nc + qc[:, 2]
-                else:
-                    qk = pkey + doff_t[j]
-                if st0 is not None:
-                    lo_i = st0[qk]
-                    cn = st1[qk] - lo_i
-                else:
-                    lo_i = np.searchsorted(keys_s, qk, side="left")
-                    cn = np.searchsorted(keys_s, qk, side="right") - lo_i
-                if prune_ok:
-                    g2 = G[0, oidx[j, 0]] + G[1, oidx[j, 1]]
-                    g2 += G[2, oidx[j, 2]]
-                    keep = (cn > 0) & (g2 < rmax2_infl)
-                else:
-                    keep = cn > 0
-                idx = np.nonzero(keep)[0]
-                if len(idx) == 0:
-                    continue
-                pis.append(idx)
-                los.append(lo_i[idx])
-                cns.append(cn[idx])
-            if not pis:
-                return
-            pi0 = np.concatenate(pis)
-            lo_c = np.concatenate(los).astype(idx_t)
-            cnt = np.concatenate(cns).astype(np.int64)
-            total = int(cnt.sum())
-            if total == 0:
-                return
-            et = idx_t if total < 2**31 - 1 else np.int64
-            c0 = np.cumsum(cnt) - cnt
-            didx = np.arange(total, dtype=et)
-            didx += np.repeat((lo_c - c0).astype(et), cnt)
-            dx = np.take(Px, didx)
-            dx -= np.repeat(H[pi0, 0], cnt)
-            dy = np.take(Py, didx)
-            dy -= np.repeat(H[pi0, 1], cnt)
-            dz = np.take(Pz, didx)
-            dz -= np.repeat(H[pi0, 2], cnt)
-            if fold:
-                np.abs(dx, out=dx)
-                np.minimum(dx, bx - dx, out=dx)
-                np.abs(dy, out=dy)
-                np.minimum(dy, bx - dy, out=dy)
-                np.abs(dz, out=dz)
-                np.minimum(dz, bx - dz, out=dz)
-            dx *= dx
-            dy *= dy
-            dz *= dz
-            d2 = dx + dy
-            d2 += dz
-            inr = d2 < r2max
-            if not inr.any():
-                return
-            sh = np.searchsorted(r2k, d2[inr], side="right").astype(np.int64)
-            # probe-local accumulation: batch_row * nr + shell, dense
-            probe = np.repeat(base_idx[pi0], cnt)[inr]
-            keys = probe * nr + sh
-            acc += np.bincount(keys, minlength=len(acc))
-            if accw is not None:
-                # per-pair particle weights: same exactness guard as the
-                # fused kernel — bincount's f64 partials are exact while
-                # every intermediate stays under 2^53
-                wk = W[didx[inr]]
-                if np.abs(wk).sum() < 2.0**53:
-                    accw += np.bincount(
-                        keys, weights=wk, minlength=len(accw)
-                    ).astype(np.int64)
-                else:
-                    np.add.at(accw, keys, wk)
-
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            H64 = pdf[list(_H)].to_numpy(np.float64)
-            H = H64.astype(np_dtype)
-            ids_b = pdf[id_col].to_numpy(np.int64)
-            pc = np.clip(np.floor(H64 / cs), 0, nc - 1).astype(np.int64)
             acc = np.zeros(n * nr, dtype=np.int64)
             accw = np.zeros(n * nr, dtype=np.int64) if W is not None else None
-            rows = np.arange(n, dtype=np.int64)
-            if fastpath_ok:
-                interior = ((pc >= kk) & (pc <= nc - 1 - kk)).all(axis=1)
-                ii = np.nonzero(interior)[0]
-                bi = np.nonzero(~interior)[0]
-                sweep(H[ii], H64[ii], pc[ii], False, acc, rows[ii], accw)
-                sweep(H[bi], H64[bi], pc[bi], True, acc, rows[bi], accw)
-            else:
-                sweep(H, H64, pc, True, acc, rows, accw)
+            for row, gidx, d2 in sweep(data, pdf[list(_H)].to_numpy(np.float64)):
+                # rows are sorted within a chunk: count into its slice
+                r0 = int(row[0])
+                sl = slice(r0 * nr, (int(row[-1]) + 1) * nr)
+                keys = (row - r0) * nr + np.searchsorted(r2k, d2, side="right")
+                acc[sl] += np.bincount(keys, minlength=sl.stop - sl.start)
+                if accw is not None:
+                    wk = W[gidx]
+                    if np.abs(wk).sum() < 2.0**53:
+                        accw[sl] += np.bincount(
+                            keys, weights=wk, minlength=sl.stop - sl.start
+                        ).astype(np.int64)
+                    else:
+                        np.add.at(accw[sl], keys, wk)
             nz = np.nonzero(acc)[0]
             if len(nz):
                 out_cols = {
-                    id_col: ids_b[nz // nr],
+                    id_col: pdf[id_col].to_numpy(np.int64)[nz // nr],
                     "shell_idx": (nz % nr).astype(np.int32),
                     "cnt": acc[nz],
                 }
                 if accw is not None:
                     out_cols["wsum"] = accw[nz]
                 yield pd.DataFrame(out_cols)
-        if prof:
-            import json as _json
-            import sys as _sys
-
-            print("SJCS_KERN_PROF " + _json.dumps(
-                {"task_cpu_s": round(_time.thread_time() - cpu0, 3)}),
-                file=_sys.stderr, flush=True)
 
     probes = halos.select(
         F.col(id_col), *[F.col(c).alias(a) for c, a in zip(h_coords, _H)]

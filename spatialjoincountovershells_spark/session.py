@@ -19,7 +19,7 @@ def get_spark(
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     # make this package importable by Python UDF workers regardless of the
     # driver's cwd — the local-mode analog of `spark-submit --py-files`
@@ -53,6 +53,11 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
+    if os.path.isfile(os.path.join(pkg_root, "sjcs_worker_daemon.py")):
+        # Python workers import pyspark unzipped (sjcs_worker_daemon.py:
+        # ~0.25 CPU.s per task otherwise).  Only when this package is
+        # loaded from a directory: a --py-files zip does not ship it.
+        b = b.config("spark.python.daemon.module", "sjcs_worker_daemon")
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

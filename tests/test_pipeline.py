@@ -283,3 +283,49 @@ def test_sjcs_job_via_spark_submit(spark, tmp_path):
     second = run()
     assert second["rows"] == first["rows"]
     assert os.path.getmtime(marker) == mtime, "second run must resume"
+
+
+def test_python_workers_hold_no_zipimporter(spark):
+    """get_spark starts Python workers through sjcs_worker_daemon: after
+    a task a worker imports pyspark unzipped and holds no zipimporter
+    (each one re-reads its archive's directory on every task)."""
+    import pandas as pd
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyspark
+
+        for _ in batches:
+            pass
+        n = sum(isinstance(v, zipimport.zipimporter)
+                for v in sys.path_importer_cache.values())
+        yield pd.DataFrame({"n_zip": [n], "pyspark": [pyspark.__file__]})
+
+    res = spark.range(0, 100, numPartitions=2).mapInPandas(
+        probe, "n_zip long, pyspark string").toPandas()
+    assert res.n_zip.tolist() == [0, 0]
+    assert not any(".zip" in f for f in res.pyspark)
+
+
+@pytest.mark.parametrize("same_version", [True, False])
+def test_worker_daemon_drops_archives_only_for_same_version(
+        tmp_path, monkeypatch, same_version):
+    import sys as _sys
+    import zipfile
+
+    import pyspark
+    import sjcs_worker_daemon
+
+    with open(os.path.join(os.path.dirname(pyspark.__file__), "version.py"),
+              "rb") as f:
+        version = f.read()
+    zp = str(tmp_path / "pyspark.zip")
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("pyspark/version.py",
+                   version if same_version else b"__version__ = '0.0'\n")
+    monkeypatch.setattr(_sys, "path", [zp] + _sys.path)
+    dropped = sjcs_worker_daemon.drop_spark_archives()
+    assert (zp in dropped) == same_version
+    assert (zp in _sys.path) != same_version
