@@ -24,6 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .sqltext import ident
 from .texthash import MAXLEN, P, POWS
 
 
@@ -59,7 +60,11 @@ def with_poly_hash_arrow(
     df: DataFrame, col: str, out: str = "_base", max_len: int = MAXLEN
 ) -> DataFrame:
     """Append ``out`` = texthash base hash of string column ``col`` via
-    one mapInPandas pass; every other column passes through."""
+    one mapInPandas pass; every other column passes through.  Raises
+    ValueError when ``out`` already names a column of ``df``."""
+    if out in df.columns:
+        raise ValueError(
+            f"with_poly_hash_arrow: output column {out!r} already exists")
 
     def op(batches):
         for pdf in batches:
@@ -74,5 +79,5 @@ def with_poly_hash_arrow(
                 pdf[out] = hashes
             yield pdf
 
-    fields = ", ".join(f"{n} {t}" for n, t in df.dtypes)
-    return df.mapInPandas(op, schema=f"{fields}, {out} long")
+    fields = ", ".join(f"{ident(n)} {t}" for n, t in df.dtypes)
+    return df.mapInPandas(op, schema=f"{fields}, {ident(out)} long")

@@ -1,4 +1,4 @@
-"""Distance expressions (JVM-side, codegen'd).
+"""Distance expressions (JVM-side, codegen'd; built as SQL text).
 
 The reference computes squared L2 in float32 via SSE ``_mm_dp_ps``
 (``include/objects/RTree/Distance.h:6-26``); for 3 components that
@@ -20,19 +20,31 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def flit(v: float, dtype: str) -> Column:
-    """Literal in the kernel dtype; f32 literals are rounded once here."""
-    if dtype == "float32":
-        return F.lit(float(np.float32(v))).cast("float")
-    return F.lit(float(v))
+from .sqltext import flit_sql, ident
 
 
-def axis_delta(a: Column, b: Column, box: float, dtype: str, periodic: bool = True) -> Column:
-    d = F.abs(a - b)
+def _axis_delta_sql(a: str, b: str, box: float, dtype: str, periodic: bool = True) -> str:
+    """|a - b| on one axis (min-image when periodic) as SQL text over
+    column names ``a`` and ``b``."""
+    d = f"abs({ident(a)} - {ident(b)})"
     if not periodic:
         return d
-    return F.least(d, flit(box, dtype) - d)
+    return f"least({d}, {flit_sql(box, dtype)} - {d})"
+
+
+def squared_distance_sql(
+    h_cols: tuple[str, str, str],
+    p_cols: tuple[str, str, str],
+    box: float,
+    dtype: str = "float32",
+    periodic: bool = True,
+) -> str:
+    """((dx*dx + dy*dy) + dz*dz) in the kernel dtype, as SQL text."""
+    dx, dy, dz = (
+        _axis_delta_sql(h, p, box, dtype, periodic)
+        for h, p in zip(h_cols, p_cols)
+    )
+    return f"(({dx} * {dx}) + ({dy} * {dy})) + ({dz} * {dz})"
 
 
 def squared_distance_expr(
@@ -42,12 +54,8 @@ def squared_distance_expr(
     dtype: str = "float32",
     periodic: bool = True,
 ) -> Column:
-    """((dx*dx + dy*dy) + dz*dz) in the kernel dtype."""
-    dx, dy, dz = (
-        axis_delta(F.col(h), F.col(p), box, dtype, periodic)
-        for h, p in zip(h_cols, p_cols)
-    )
-    return (dx * dx + dy * dy) + dz * dz
+    """squared_distance_sql wrapped in one ``F.expr`` Column."""
+    return F.expr(squared_distance_sql(h_cols, p_cols, box, dtype, periodic))
 
 
 def squared_distance_np(

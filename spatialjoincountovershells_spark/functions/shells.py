@@ -15,8 +15,8 @@ Reference parity (see SURVEY.md §2.7 F1/F2 and §2.2 P6):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from .sqltext import dlit, ident
 
 
 def logspace_edges(rmin: float, rmax: float, n: int, dtype: str = "float32") -> np.ndarray:
@@ -38,29 +38,32 @@ def squared_edges(edges: np.ndarray) -> np.ndarray:
     return (e * e).astype(e.dtype)
 
 
-def shell_index_expr(d2: Column, r2_edges: np.ndarray) -> Column:
-    """Binary-search WHEN-tree first-match bin: NULL when d2 >= r2[-1].
+def shell_index_expr(d2_name: str, r2_edges: np.ndarray) -> str:
+    """Binary-search CASE tree over column ``d2_name``, as SQL text:
+    first-match bin, NULL when d2 >= r2[-1].
 
     Semantically identical to the reference's linear first-match scan
     (strict ``<`` on ascending squared edges) but evaluates ceil(log2 n)
     comparisons per row instead of up to n — at 40 shells and 10^8+
     surviving pairs the linear chain is the hottest expression in the
     plan.  All edge literals are exact float64 widenings of the
-    (possibly f32) edge values, so each ``d2 < edge`` decides exactly
-    as the reference's f32 comparison.
+    (possibly f32) edge values (``dlit`` round-trips them), so each
+    ``d2 < edge`` decides exactly as the reference's f32 comparison.
+    Returned as text so the whole tree costs one ``selectExpr`` call;
+    as ``F.when`` Columns every node costs about ten py4j round trips
+    (see functions/sqltext.py).
     """
-    r2 = [float(v) for v in np.asarray(r2_edges)]
+    d2 = ident(d2_name)
+    r2 = [dlit(v) for v in np.asarray(r2_edges)]
 
-    def build(lo: int, hi: int) -> Column:
+    def build(lo: int, hi: int) -> str:
         # invariant: d2 < r2[hi] already established (or hi == len(r2)
         # meaning "maybe out of range" -> NULL branch)
         if lo == hi:
-            return F.lit(lo) if hi < len(r2) else F.lit(None).cast("int")
+            return str(lo) if hi < len(r2) else "CAST(NULL AS INT)"
         mid = (lo + hi) // 2
-        return (
-            F.when(d2 < F.lit(r2[mid]), build(lo, mid))
-            .otherwise(build(mid + 1, hi))
-        )
+        return (f"CASE WHEN {d2} < {r2[mid]} THEN {build(lo, mid)} "
+                f"ELSE {build(mid + 1, hi)} END")
 
     return build(0, len(r2))
 

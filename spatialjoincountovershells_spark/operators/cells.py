@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import dlit, ident
+
 
 def grid_ncells(
     rmax: float,
@@ -45,10 +47,10 @@ def grid_ncells(
     return max(1, min(nc, max_per_axis))
 
 
-def _axis_idx(col: str, cs: float, ncells: int):
-    i = F.floor(F.col(col).cast("double") / F.lit(cs))
+def _axis_idx(col: str, cs: float, ncells: int) -> str:
     # clamp: coords are in [0, box) but f32 edge rounding could hit ncells
-    return F.least(F.greatest(i, F.lit(0)), F.lit(ncells - 1)).cast("long")
+    i = f"FLOOR(CAST({ident(col)} AS DOUBLE) / {dlit(cs)})"
+    return f"CAST(least(greatest({i}, 0), {ncells - 1}) AS BIGINT)"
 
 
 def with_cell(
@@ -61,8 +63,8 @@ def with_cell(
     """Add the composite int64 cell key (cx*nc + cy)*nc + cz."""
     cs = box / ncells
     cx, cy, cz = (_axis_idx(c, cs, ncells) for c in cols)
-    nc = F.lit(ncells)
-    return df.withColumn(out, (cx * nc + cy) * nc + cz)
+    return df.withColumn(
+        out, F.expr(f"(({cx} * {ncells}) + {cy}) * {ncells} + {cz}"))
 
 
 def cell_stats(
@@ -178,6 +180,14 @@ def explode_ring(
       fell back to interpreted evaluation — 25x slower, measured on
       this very filter (the same class of pitfall as CLAUDE.md's
       interpreted-HOF note, one layer down).
+
+    Every row expression here is SQL text (functions/sqltext.py): the
+    offset array is one ``array(named_struct(...), ...)`` literal, the
+    cell key one ``F.expr`` and the row prune one ``where`` string, so
+    building the explode costs a few py4j calls however many offsets
+    survive — as ``Column`` objects each literal and operator costs
+    about ten round trips, about 4,900 for the 27-offset pruned array.
+    Column names are backtick-quoted, so any name works in ``cols``.
     """
     cs = box / ncells
     cx, cy, cz = (_axis_idx(c, cs, ncells) for c in cols)
@@ -197,45 +207,39 @@ def explode_ring(
             if sum((max(abs(r) - 1, 0) * cs) ** 2 for r in _raws(o)) < r2_infl
         ]
 
-    def _struct(o: tuple[int, int, int]):
-        fields = [F.lit(v).alias(n) for v, n in zip(o, "abc")]
+    def _struct(o: tuple[int, int, int]) -> str:
+        fields = [f"'{n}', {v}" for v, n in zip(o, "abc")]
         if prune:
             for ax, raw in zip("xyz", _raws(o)):
-                fields.append(
-                    F.lit(float((raw > 0) - (raw < 0))).alias(f"s{ax}"))
-                fields.append(
-                    F.lit((abs(raw) - 1) * cs).alias(f"A{ax}"))
-        return F.struct(*fields)
+                fields.append(f"'s{ax}', {dlit((raw > 0) - (raw < 0))}")
+                fields.append(f"'A{ax}', {dlit((abs(raw) - 1) * cs)}")
+        return f"named_struct({', '.join(fields)})"
 
-    arr = F.array([_struct(o) for o in offs])
-    nc = F.lit(ncells)
+    arr = f"array({', '.join(_struct(o) for o in offs)})"
     if prune:
         # in-cell fractional position, projected once before the explode
-        fracs = [
-            (F.col(c).cast("double") - ci * F.lit(cs)).alias(f"_fr{ax}")
+        df = df.selectExpr("*", *(
+            f"CAST({ident(c)} AS DOUBLE) - ({ci} * {dlit(cs)}) AS `_fr{ax}`"
             for c, ci, ax in zip(cols, (cx, cy, cz), "xyz")
-        ]
-        df = df.select("*", *fracs)
-    o = F.explode(arr).alias("_o")
-    df = df.select("*", o)
+        ))
+    df = df.selectExpr("*", f"explode({arr}) AS `_o`")
+    nc = ncells
     cell = (
-        F.pmod(cx + F.col("_o.a"), nc) * nc + F.pmod(cy + F.col("_o.b"), nc)
-    ) * nc + F.pmod(cz + F.col("_o.c"), nc)
-    df = df.withColumn(out, cell)
+        f"((pmod({cx} + `_o`.`a`, {nc}) * {nc}) + pmod({cy} + `_o`.`b`, {nc}))"
+        f" * {nc} + pmod({cz} + `_o`.`c`, {nc})"
+    )
+    df = df.withColumn(out, F.expr(cell))
     if prune:
-        def gap(ax: str):
-            s = F.col(f"_o.s{ax}")
-            A = F.col(f"_o.A{ax}")
-            fr = F.col(f"_fr{ax}")
+        def gap(ax: str) -> str:
+            s, A, fr = f"`_o`.`s{ax}`", f"`_o`.`A{ax}`", f"`_fr{ax}`"
             # s=+1 -> A + (cs - frac); s=-1 -> A + frac; s=0 -> 0
             # (A = -cs when s=0, clamped by the outer greatest)
-            return F.greatest(
-                F.lit(0.0), A + F.greatest(s * F.lit(cs) - s * fr, -s * fr)
-            )
+            return (f"greatest(0.0D, {A} + greatest(({s} * {dlit(cs)}) - "
+                    f"({s} * {fr}), (-{s}) * {fr}))")
 
         gx, gy, gz = gap("x"), gap("y"), gap("z")
         r2 = float(prune_radius) ** 2 * (1.0 + 1e-9)
-        df = df.where(gx * gx + gy * gy + gz * gz < F.lit(r2)).drop(
-            "_frx", "_fry", "_frz"
-        )
+        df = df.where(
+            f"(({gx} * {gx}) + ({gy} * {gy})) + ({gz} * {gz}) < {dlit(r2)}"
+        ).drop("_frx", "_fry", "_frz")
     return df.drop("_o")

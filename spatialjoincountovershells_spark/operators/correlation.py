@@ -350,7 +350,7 @@ def nn_dist_cdf(
             .agg(F.min("_d2").alias("_m"))
         )
         cnt = (
-            m.select(shell_index_expr(F.col("_m"), r2).alias("shell_idx"))
+            m.selectExpr(f"{shell_index_expr('_m', r2)} AS shell_idx")
             .groupBy("shell_idx")
             .agg(F.count(F.lit(1)).alias("_n"))
         )

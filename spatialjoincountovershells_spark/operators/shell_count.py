@@ -40,8 +40,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geometry import squared_distance_expr, squared_distance_np
+from ..functions.geometry import (
+    squared_distance_expr,
+    squared_distance_np,
+    squared_distance_sql,
+)
 from ..functions.shells import shell_index_expr, shell_index_np, squared_edges
+from ..functions.sqltext import dlit, ident
 from .cells import explode_ring, grid_ncells, ring_offsets, with_cell  # noqa: F401
 
 _H = ("_hx", "_hy", "_hz")
@@ -131,15 +136,15 @@ def _prep(
     nc = ncells or grid_ncells(rmax / max(cell_mult, 1), box, n_hint=n_hint)
     # ring depth follows the grid: k*cell_size must cover rmax
     ring_k = max(1, int(np.ceil(rmax / (box / nc) - 1e-9)))
-    h = halos.select(
-        F.col(id_col), *[F.col(c).alias(a) for c, a in zip(h_coords, _H)]
+    h = halos.selectExpr(
+        ident(id_col), *[f"{ident(c)} AS {a}" for c, a in zip(h_coords, _H)]
     )
     # per-row Euclidean cell prune: the MBR-overlap analog, drops ring
     # cells no point of which can satisfy the strict d^2 < rmax^2 bound
     h = explode_ring(h, nc, box, cols=_H, k=ring_k, prune_radius=rmax)
-    p = particles.select(
-        *[F.col(c).alias(a) for c, a in zip(p_coords, _P)],
-        *[F.col(c) for c in extra_p],
+    p = particles.selectExpr(
+        *[f"{ident(c)} AS {a}" for c, a in zip(p_coords, _P)],
+        *[ident(c) for c in extra_p],
     )
     p = with_cell(p, nc, box, cols=_P)
     return h, p, nc, edges
@@ -383,20 +388,21 @@ def shell_count(
         return _fused_plan(h, p, r2, box, dtype, id_col, join_key,
                            weight_col=weight_col)
     j = h.join(p, join_key)
-    d2 = squared_distance_expr(_H, _P, box, dtype)
+    d2 = squared_distance_sql(_H, _P, box, dtype)
     # project d2 ONCE, then bin on the column reference — embedding the
     # distance expression inside every WHEN branch would re-evaluate it
     # per branch (and blow codegen limits at 40 shells)
-    wcols = [F.col(weight_col)] if weight_col else []
-    proj = j.select(F.col(id_col), d2.alias("_d2"), *wcols).where(
-        F.col("_d2") < F.lit(float(r2[-1]))
+    hid = ident(id_col)
+    wcols = [ident(weight_col)] if weight_col else []
+    proj = j.selectExpr(hid, f"{d2} AS _d2", *wcols).where(
+        f"_d2 < {dlit(r2[-1])}"
     )
-    sh = shell_index_expr(F.col("_d2"), r2).alias("shell_idx")
-    aggs = [F.count(F.lit(1)).alias("cnt")]
+    aggs = [F.expr("count(1) AS cnt")]
     if weight_col:
-        aggs.append(F.sum(weight_col).cast("long").alias("wsum"))
+        aggs.append(F.expr(f"CAST(sum({ident(weight_col)}) AS BIGINT) AS wsum"))
     return (
-        proj.select(F.col(id_col), sh, *wcols)
+        proj.selectExpr(
+            hid, f"{shell_index_expr('_d2', r2)} AS shell_idx", *wcols)
         .groupBy(id_col, "shell_idx")
         .agg(*aggs)
     )
@@ -516,24 +522,23 @@ def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
             cols["wsum"] = accw[nz]
         return pd.DataFrame(cols)
 
-    schema = f"{id_col} long, shell_idx int, cnt long" + (
+    schema = f"{ident(id_col)} long, shell_idx int, cnt long" + (
         ", wsum long" if weight_col else ""
     )
-    bkt = F.pmod(F.col(join_key), F.lit(n_buckets)).cast("int").alias("_bkt")
-    hsel = [F.col(id_col), *[F.col(c) for c in _H], F.col(join_key), bkt]
-    psel = [*[F.col(c) for c in _P], F.col(join_key), bkt] + (
-        [F.col(weight_col)] if weight_col else []
-    )
+    key = ident(join_key)
+    bkt = f"CAST(pmod({key}, {n_buckets}) AS INT) AS _bkt"
+    hsel = [ident(id_col), *_H, key, bkt]
+    psel = [*_P, key, bkt] + ([ident(weight_col)] if weight_col else [])
     out = (
-        h.select(*hsel)
+        h.selectExpr(*hsel)
         .groupBy("_bkt")
-        .cogroup(p.select(*psel).groupBy("_bkt"))
+        .cogroup(p.selectExpr(*psel).groupBy("_bkt"))
         .applyInPandas(kern, schema=schema)
     )
     # per-cell partials -> final agg (the map-side-combine analog)
-    aggs = [F.sum("cnt").alias("cnt")]
+    aggs = [F.expr("sum(cnt) AS cnt")]
     if weight_col:
-        aggs.append(F.sum("wsum").alias("wsum"))
+        aggs.append(F.expr("sum(wsum) AS wsum"))
     return out.groupBy(id_col, "shell_idx").agg(*aggs)
 
 
@@ -1069,9 +1074,9 @@ def range_join_pairs(
     )
     r2 = squared_edges(edges)
     j = h.join(p, "cell_id")
-    d2 = squared_distance_expr(_H, _P, box, dtype)
-    out = j.select(F.col(id_col), F.col(particle_id_col), d2.alias("d2")).where(
-        F.col("d2") < F.lit(float(r2[0]))
+    d2 = squared_distance_sql(_H, _P, box, dtype)
+    out = j.selectExpr(ident(id_col), ident(particle_id_col), f"{d2} AS d2").where(
+        f"d2 < {dlit(r2[0])}"
     )
     return out if include_distance else out.drop("d2")
 

@@ -128,7 +128,8 @@ def checkpoint(df: DataFrame, path: str, token: str) -> dict:
     The marker records the completion token and per-partition counts;
     `resume` treats a matching marker as proof of completion."""
     write_table(df, path)
-    back = read_table(df.sparkSession, path)
+    # the schema it just wrote: no footer-inference job on read-back
+    back = read_table(df.sparkSession, path, schema=df.schema)
     metrics = [r.asDict() for r in partition_metrics(back).collect()]
     meta = {"token": token, "n_rows": int(sum(m["n_rows"] for m in metrics)),
             "partitions": metrics}

@@ -27,16 +27,33 @@ _SJCS_DONE marker is subsumed by Iceberg's own snapshot commit.
 
 from __future__ import annotations
 
+import weakref
+
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# SparkContext -> probe result.  The JVM classpath is fixed when the
+# context starts, and a missing class costs a ClassNotFoundException
+# thrown through py4j (about 25 ms) on every probe; weak keys let a
+# stopped context's entry go with it.
+_ICEBERG: weakref.WeakKeyDictionary[SparkContext, bool] = (
+    weakref.WeakKeyDictionary())
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    """True iff the Iceberg Spark runtime is on the session's JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
+    """True iff the Iceberg Spark runtime is on the session's JVM
+    classpath; probed once per SparkContext."""
+    sc = spark.sparkContext
+    if sc not in _ICEBERG:
+        try:
+            spark._jvm.java.lang.Class.forName(
+                "org.apache.iceberg.spark.SparkCatalog")
+            _ICEBERG[sc] = True
+        except Py4JJavaError:  # ClassNotFoundException
+            _ICEBERG[sc] = False
+    return _ICEBERG[sc]
 
 
 def resolve_format(spark: SparkSession, fmt: str | None = None) -> str:
@@ -62,8 +79,17 @@ def write_table(
     return fmt
 
 
-def read_table(spark: SparkSession, location: str, fmt: str | None = None) -> DataFrame:
+def read_table(
+    spark: SparkSession,
+    location: str,
+    fmt: str | None = None,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Read `location` back.  `schema` (parquet stand-in only) skips
+    the one-task footer-inference job when the caller knows what it
+    wrote; Iceberg tables carry their own schema."""
     fmt = resolve_format(spark, fmt)
     if fmt == "iceberg":
         return spark.table(location)
-    return spark.read.parquet(location)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(location)

@@ -57,8 +57,9 @@ def _binned_stream(
     """
     import numpy as np
 
-    from ..functions.geometry import squared_distance_expr
+    from ..functions.geometry import squared_distance_sql
     from ..functions.shells import shell_index_expr, squared_edges
+    from ..functions.sqltext import dlit, ident
     from ..operators.cells import explode_ring, grid_ncells, with_cell
     from ..operators.shell_count import _H, _P
 
@@ -76,13 +77,13 @@ def _binned_stream(
     )
     p = with_cell(p, nc, box, cols=_P)
     r2 = squared_edges(edges)
-    d2 = squared_distance_expr(_H, _P, box, dtype)
+    d2 = squared_distance_sql(_H, _P, box, dtype)
     j = p.join(h, "cell_id")  # stream on the left: stream-static join
-    proj = j.select(F.col(id_col), d2.alias("_d2")).where(
-        F.col("_d2") < F.lit(float(r2[-1]))
+    proj = j.selectExpr(ident(id_col), f"{d2} AS _d2").where(
+        f"_d2 < {dlit(r2[-1])}"
     )
-    sh = shell_index_expr(F.col("_d2"), r2).alias("shell_idx")
-    return proj.select(F.col(id_col), sh), len(r2)
+    sh = shell_index_expr("_d2", r2)
+    return proj.selectExpr(ident(id_col), f"{sh} AS shell_idx"), len(r2)
 
 
 def stream_shell_counts(

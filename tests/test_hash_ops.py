@@ -156,6 +156,29 @@ def test_arrowhash_matches_sql(spark):
     assert got[7] == want[7] and got[6] is not None
 
 
+def test_arrowhash_quotes_names_and_rejects_collision(spark):
+    """with_poly_hash_arrow's output schema backtick-quotes every name
+    (a space, a hyphen), and an ``out`` that already names a column
+    raises instead of silently shadowing it."""
+    from spatialjoincountovershells_spark.functions.arrowhash import (
+        with_poly_hash_arrow,
+    )
+    from spatialjoincountovershells_spark.functions.texthash import (
+        poly_hash_np,
+    )
+
+    vals = ["a", "hello world", "café"]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals)], "i long, s string"
+    ).toDF("doc id", "tok-s")
+    out = with_poly_hash_arrow(df, "tok-s", out="h-x")
+    assert out.columns == ["doc id", "tok-s", "h-x"]
+    got = [r["h-x"] for r in out.orderBy("doc id").collect()]
+    assert got == poly_hash_np(vals).tolist()
+    with pytest.raises(ValueError, match="already exists"):
+        with_poly_hash_arrow(df, "tok-s", out="doc id")
+
+
 def test_simhash_arrow_matches_expr(spark):
     """The vectorized simhash kernel must be bit-identical to the
     all-JVM expr path: multi-whitespace runs (tab/CR/LF/VT/FF),

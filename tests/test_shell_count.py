@@ -500,3 +500,126 @@ def test_manual_sql_grid_matches_auto_grid_on_sparse_data(spark):
         ("x", "y", "z"), ("x", "y", "z"), None, cell_mult=1,
     )
     assert nc_nohint == 200
+
+
+@pytest.mark.parametrize("plan", ["sql", "fused"])
+def test_join_plan_build_py4j_budget(spark, plan, monkeypatch):
+    """Building a cell-grid join plan is a fixed handful of py4j round
+    trips: its row expressions are SQL text, one call per projection,
+    not one Column call (~10 round trips) per literal and operator —
+    about 7,600 per call for the 27-offset, 40-shell sql plan."""
+    import gc
+    import time
+
+    import py4j.clientserver as cs
+
+    halos = _df_points(spark, synth_points_np(50, seed=1), id_col="halo_id")
+    parts = _df_points(spark, synth_points_np(200, seed=2))
+    edges = logspace_edges(10.0 / 5000, 10.0, 40)
+
+    def build():
+        # the estimates size a 67-cell grid: full pruned 27-offset ring
+        return shell_count(halos, parts, edges, plan=plan,
+                           n_halos_est=20_000, n_particles_est=300_000)
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def settle():
+        # freed proxies' GC commands go out on py4j's finalizer thread:
+        # collect, then let that queue drain, so earlier tests' garbage
+        # is not counted and this build's own garbage is
+        gc.collect()
+        deadline = time.monotonic() + 30
+        while client.finalizer_deque and time.monotonic() < deadline:
+            time.sleep(0.01)
+        time.sleep(0.1)
+
+    build()
+    settle()
+    n = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        n[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    build()
+    settle()
+    assert 0 < n[0] <= 500
+
+
+@pytest.mark.parametrize("dtype", ["float32", "float64"])
+def test_shell_index_expr_literals_exact(spark, dtype):
+    """The CASE tree's text literals decide exactly like the numpy
+    first-match bin: d2 on every squared edge lands in the next shell
+    (strict <), one ulp below stays in it."""
+    from pyspark.sql import functions as F
+
+    from spatialjoincountovershells_spark.functions.shells import (
+        shell_index_expr,
+        shell_index_np,
+    )
+    from spatialjoincountovershells_spark.functions.sqltext import dlit
+
+    rmax = 12.7718
+    r2 = squared_edges(logspace_edges(rmax / 5000, rmax, 40, dtype=dtype))
+    d2 = np.concatenate([r2, np.nextafter(r2, np.zeros_like(r2)), [0.0]])
+    d2 = d2.astype(r2.dtype)
+    sql_t = "float" if dtype == "float32" else "double"
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(d2)], f"i long, d2 {sql_t}")
+    got = {r.i: r.shell_idx for r in df.selectExpr(
+        "i", f"{shell_index_expr('d2', r2)} AS shell_idx").collect()}
+    want = shell_index_np(d2, r2)
+    assert [len(r2) if got[i] is None else got[i]
+            for i in range(len(d2))] == want.tolist()
+    # dlit round-trips the extremes of the double range and the sign of 0
+    vals = [5e-324, 1.7976931348623157e308, -0.0, float(r2[-1])]
+    row = spark.range(1).select(
+        *[F.expr(dlit(v)).alias(f"v{i}") for i, v in enumerate(vals)]).first()
+    back = [row[f"v{i}"] for i in range(len(vals))]
+    assert back == vals
+    assert np.signbit(back[2])
+
+
+def test_cell_grid_builders_quote_column_names(spark):
+    """Coordinate names that only parse backtick-quoted (a dot, a
+    space, a backtick) work through with_cell, explode_ring and the sql
+    shell plan, with the same answers as plain names."""
+    from spatialjoincountovershells_spark.operators.cells import (
+        explode_ring,
+        with_cell,
+    )
+
+    odd = ("pos.x", "pos y", "p`z")
+    H = synth_points_np(40, seed=11)
+    P = synth_points_np(1500, seed=12)
+    halos = _df_points(spark, H, id_col="halo_id")
+    parts = _df_points(spark, P)
+    halos_q = halos.toDF("halo_id", *odd)
+    parts_q = parts.toDF(*odd)
+    nc, box = 9, 1000.0
+
+    cs = box / nc
+    ax = np.clip(np.floor(P.astype(np.float64) / cs), 0, nc - 1).astype(np.int64)
+    want_cells = (ax[:, 0] * nc + ax[:, 1]) * nc + ax[:, 2]
+    got_cells = [r.cell_id for r in
+                 with_cell(parts_q, nc, box, cols=odd).collect()]
+    assert got_cells == want_cells.tolist()
+
+    def ring(df, cols):
+        out = explode_ring(df, nc, box, cols=cols, prune_radius=60.0)
+        return sorted((r.halo_id, r.cell_id)
+                      for r in out.select("halo_id", "cell_id").collect())
+
+    assert ring(halos_q, odd) == ring(halos, ("x", "y", "z"))
+
+    edges = logspace_edges(2.0, 60.0, 10)
+    res = shell_count(halos_q, parts_q, edges, plan="sql",
+                      h_coords=odd, p_coords=odd)
+    got = dense_from_long(
+        [(r.halo_id, r.shell_idx, r.cnt) for r in res.collect()],
+        len(H), len(edges))
+    want = oracle_shell_counts(H, P, squared_edges(edges))
+    assert got.tolist() == want.tolist() and want.sum() > 0
