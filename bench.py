@@ -224,10 +224,8 @@ def _run_one(query: str, cores: int, sf_dir: str, mult: float,
         best_b = best_s = best_t = float("inf")
         for _ in range(repeat):
             t0 = time.time()
-            cm = int(os.environ.get("SJCS_BENCH_CELL_MULT", "1"))
             df = shell_count(halos, parts, edges, plan=plan, id_col="halo_id",
-                             n_halos_est=n_halo, n_particles_est=n_part,
-                             cell_mult=cm)
+                             n_halos_est=n_halo, n_particles_est=n_part)
             t1 = time.time()
             noop_write(df)
             t2 = time.time()

@@ -33,9 +33,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geometry import squared_distance_expr
 from ..functions.shells import squared_edges
-from .shell_count import _H, _P, _prep
+from ..functions.sqltext import ident
+from .shell_count import _pairs_within, _prep
 
 # weights are clamped at 2^62 BEFORE the long cast so a pathologically
 # tiny (but nonzero) d2 saturates identically in Spark and the oracle
@@ -86,18 +86,14 @@ def idw_interpolate(
     edges = np.asarray(
         [radius], dtype=np.float32 if dtype == "float32" else np.float64
     )
-    h, p, nc, edges = _prep(
+    h, p, _, _ = _prep(
         queries, data, edges, box, id_col, h_coords, p_coords, ncells,
         extra_p=(value_col,),
     )
-    r2 = squared_edges(edges)
-    j = h.join(p, "cell_id")
-    d2 = squared_distance_expr(_H, _P, box, dtype)
-    pairs = j.select(
-        F.col(id_col),
-        F.col(value_col).cast("long").alias("_v"),
-        d2.alias("_d2"),
-    ).where(F.col("_d2") < F.lit(float(r2[0])))
+    pairs = _pairs_within(
+        h.join(p, "cell_id"), squared_edges(edges)[0], box, dtype, id_col,
+        value_col,
+    ).selectExpr(ident(id_col), f"CAST({ident(value_col)} AS BIGINT) AS _v", "_d2")
     wq = _weight_expr(F.col("_d2"), power, float(1 << weight_shift))
     ex = F.col("_d2") == F.lit(0.0)
     dec = "decimal(38,0)"

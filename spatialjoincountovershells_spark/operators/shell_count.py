@@ -9,7 +9,13 @@ Reference semantics (SURVEY §2.3 J1/J2, §2.4 A1, §2.11):
   (``MultiRangeCount.c:13-73``), valid while r_max < box/2;
 * zero-distance pairs ARE counted (STR semantics, SURVEY §2.11.4).
 
-Spark plan (both variants share the cell-grid candidate generation):
+Four physical plans share one uniform periodic cell grid.  Its size
+and ring depth come from one rule, ``_plan_grid``, which also enforces
+r_max < box/2: explicit ``ncells`` wins, else cells of r_max/2 for the
+broadcast plans, ~128 particles/cell for 'fused', and the finest
+occupancy-capped ring-1 grid for 'sql'.
+
+The join plans ('sql', 'fused') explode the probe side over its ring:
 
   halos --cell+ring explode--> (cell_id, halo_id, hx, hy, hz)   [27x rows]
   particles --cell assign----> (cell_id, px, py, pz)            [1x rows]
@@ -20,11 +26,20 @@ Spark plan (both variants share the cell-grid candidate generation):
   Catalyst/AQE picks broadcast vs sort-merge; at cluster scale,
   pre-bucketing the particle table by cell_id makes the big side
   shuffle-free (see plans/pipeline.py).
-* plan="fused": cogroup-per-cell Arrow kernel — candidate pairs never
+* plan="fused": bucketed cogroup Arrow kernel — candidate pairs never
   materialize in the shuffle; each cell computes a numpy distance
   matrix and emits per-(halo, shell) partial counts via np.bincount
   (the analog of the reference's in-place ``counts[i]++`` fusion,
   ``MultiRangeCount.c:110``).  Wins when pairs/cell is large.
+
+The broadcast plans CSR-sort one side into a driver-built grid and
+stream the other past it through one numpy ring sweep (``_make_sweep``):
+
+* plan="dgrid": the particle (data) grid is broadcast and halos
+  stream — the reference's own architecture; no shuffle, no
+  aggregation.
+* plan="bcast": the halo grid is broadcast and particles stream — the
+  big table is never shuffled; a small final aggregation.
 
 Output: long-form (halo_id, shell_idx, cnt), nonzero rows only — the
 dense (nhalos x nshells) matrix of the reference is a presentation
@@ -33,6 +48,7 @@ concern (see sources/report.py).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable
 
 import numpy as np
@@ -107,6 +123,72 @@ def apply_salting(
     return h2, p2, skey
 
 
+_PLANS = ("sql", "fused", "bcast", "dgrid")
+
+
+def _plan_grid(
+    plan: str,
+    rmax: float,
+    box: float,
+    n_particles: int | None = None,
+    ncells: int | None = None,
+) -> tuple[int, int]:
+    """The one grid rule -> (cells per axis, ring depth k) for `plan`.
+
+    Raises unless r_max < box/2, the precondition of the reference's
+    subset-enumerated periodic search (``MultiRangeCount.c:13-73``,
+    SURVEY §2.11.5), and on a plan name outside ``_PLANS``.  An
+    explicit `ncells` wins; otherwise:
+
+    * 'bcast'/'dgrid': cells of size r_max/2, probed ring-2.  Empty
+      cells are free in the CSR layout and the ring bookkeeping is a
+      few numpy ops per row inside the kernel, so the Euclidean prune's
+      ~2x cut in candidate pairs vs ring-1 is nearly free (measured,
+      BENCH/BASELINE.md).
+    * 'fused': ~128 particles/cell, capped at the ring-1 grid: the
+      kernel's per-CELL numpy dispatch and the halo-ring fanout
+      dominate on the fine grid (35.8 s at nc=78 vs 16.6 s at nc=36,
+      pinned reference shape); the distance-matrix kernel eats the
+      coarser grid's candidates at ~11M pairs/s/core instead.
+    * 'sql' (and every other cell-grid join): the finest ring-1 grid,
+      capped at cbrt(n_particles) so sparse data keeps occupancy ~1.
+      Sub-r_max cells LOSE for a row-materializing join: each exploded
+      ring row costs ~1 us (materialize + shuffle + hash probe)
+      against ~0.6 us saved per pruned pair, so cells of r_max/2
+      (fanout 20.6 -> 84 rows/probe for a 2x pair cut) ran 32 s ->
+      200+ s at the reference shape (round 4, CPU-pinned).
+
+    The ring depth follows the grid: k cells must cover r_max.
+    """
+    if not rmax < box / 2:
+        raise ValueError(f"r_max={rmax} must be < box/2={box / 2}")
+    if plan not in _PLANS:
+        raise ValueError(f"unknown plan {plan!r}: expected one of "
+                         f"{', '.join(_PLANS)} or auto")
+    if ncells:
+        nc = ncells
+    elif plan in ("bcast", "dgrid"):
+        nc = grid_ncells(rmax / 2, box)
+    elif plan == "fused":
+        nc = max(2, min(grid_ncells(rmax, box),
+                        round((n_particles / 128) ** (1.0 / 3.0))))
+    else:
+        nc = grid_ncells(rmax, box, n_hint=n_particles)
+    return nc, max(1, math.ceil(rmax / (box / nc) - 1e-9))
+
+
+def _pairs_within(joined: DataFrame, r2max: float, box: float, dtype: str,
+                  *cols: str) -> DataFrame:
+    """Candidate pairs (a join carrying `_H` and `_P` coords) ->
+    ``(*cols, _d2)`` rows with ``_d2 < r2max``, as SQL text.  The
+    min-image squared distance is projected ONCE, so shell binning
+    reads the column instead of re-evaluating the expression per CASE
+    branch (which also blows codegen limits at 40 shells)."""
+    d2 = squared_distance_sql(_H, _P, box, dtype)
+    return joined.selectExpr(*map(ident, cols), f"{d2} AS _d2").where(
+        f"_d2 < {dlit(r2max)}")
+
+
 def _prep(
     halos: DataFrame,
     particles: DataFrame,
@@ -117,25 +199,13 @@ def _prep(
     p_coords: tuple[str, str, str],
     ncells: int | None,
     extra_p: Iterable[str] = (),
-    cell_mult: int = 1,
     n_hint: int | None = None,
 ):
+    """Ring-explode the halos and cell-assign the particles on the sql
+    grid (``_plan_grid``) -> (h, p, ncells, edges)."""
     edges = np.asarray(edges)
     rmax = float(edges[-1])
-    if not rmax < box / 2:
-        # precondition of the subset-enumerated periodic search (§2.11.5)
-        raise ValueError(f"r_max={rmax} must be < box/2={box / 2}")
-    # cell_mult >= 2: sub-rmax cells (size rmax/mult) probed with a
-    # ring-mult neighborhood + the Euclidean prune.  Kept volume shrinks
-    # from 20.6·rmax³ (ring-1) to 10.5·rmax³ at mult=2
-    # (expected_ring_cells) — but for a row-materializing join the
-    # fanout usually costs more than the pruned pairs save, so the
-    # default is 1 (see shell_count's cell_mult note).
-    # n_hint caps the grid at ~occupancy-1 on sparse data (same policy
-    # the auto path uses) — the rmax/mult cap binds at production density.
-    nc = ncells or grid_ncells(rmax / max(cell_mult, 1), box, n_hint=n_hint)
-    # ring depth follows the grid: k*cell_size must cover rmax
-    ring_k = max(1, int(np.ceil(rmax / (box / nc) - 1e-9)))
+    nc, ring_k = _plan_grid("sql", rmax, box, n_hint, ncells)
     h = halos.selectExpr(
         ident(id_col), *[f"{ident(c)} AS {a}" for c, a in zip(h_coords, _H)]
     )
@@ -182,9 +252,7 @@ def choose_plan(
     rmax: float,
     box: float = 1000.0,
     ncells: int | None = None,
-    fused_occupancy: int = 128,
     max_broadcast_bytes: int = 512 << 20,
-    cell_mult: int = 1,
     weighted: bool = False,
 ) -> str:
     """Pick the physical plan for shell_count.
@@ -203,18 +271,17 @@ def choose_plan(
     big table — at 100 TB (where the data side can't possibly fit)
     that dominates everything else.
 
-    Otherwise 'fused' vs 'sql' by estimated per-plan runtime.  Each
-    runs on a DIFFERENT grid: sql on the finest ring-1 grid
-    (occupancy-capped — the same grid shell_count passes to the sql
-    plan when 'auto' picks it, so the cost model and the executed
-    plan agree), fused on a ~`fused_occupancy`-particles/cell grid
+    Otherwise 'fused' vs 'sql' by estimated per-plan runtime.  Every
+    plan is priced on the grid it runs on (``_plan_grid``): the
+    broadcast offsets on the r_max/2 grid, sql on the finest
+    occupancy-capped ring-1 grid, fused on a ~128-particles/cell grid
     that amortizes per-group Arrow overhead.  Estimated core-time =
     that plan's candidate-pair volume / its measured per-core rate;
     ties go to sql (lower fixed overhead, pure JVM).
     """
     from .cells import expected_ring_cells
 
-    nc_bcast = grid_ncells(rmax, box)
+    nc_bcast, _ = _plan_grid("dgrid", rmax, box, ncells=ncells)
     grid_bytes = min(nc_bcast**3, 16_000_000) * 4
     # a weight adds one int64 per particle to the dgrid payload; the
     # bcast plan stays count-only (its sort-reduce kernel has no
@@ -225,13 +292,8 @@ def choose_plan(
     if not weighted and n_halos * 40 + grid_bytes <= max_broadcast_bytes:
         return "bcast"
 
-    nc_sql = ncells or grid_ncells(
-        rmax / max(cell_mult, 1), box, n_hint=n_particles)
-    nc_fused = max(
-        2,
-        min(grid_ncells(rmax, box),
-            int(round((n_particles / fused_occupancy) ** (1.0 / 3.0)))),
-    )
+    nc_sql, _ = _plan_grid("sql", rmax, box, n_particles, ncells)
+    nc_fused, _ = _plan_grid("fused", rmax, box, n_particles, ncells)
 
     def ring(nc: int) -> float:
         return expected_ring_cells(rmax / (box / nc))  # Euclidean cell prune
@@ -266,8 +328,6 @@ def shell_count(
     max_salt: int = 64,
     n_halos_est: int | None = None,
     n_particles_est: int | None = None,
-    bcast_cell_mult: int = 2,
-    cell_mult: int = 1,
     weight_col: str | None = None,
 ) -> DataFrame:
     """J1+J2+A1: -> (id_col, shell_idx int, cnt long), nonzero rows only.
@@ -285,43 +345,29 @@ def shell_count(
     weight considers dgrid/sql/fused.  Keep weights integer for
     bit-exact cross-engine sums.
 
-    plan: 'sql' (codegen join), 'fused' (cogroup Arrow kernel), or
-    'auto' — pick by estimated pairs/core (choose_plan).  'auto' needs
-    row counts: pass n_halos_est / n_particles_est (free if the caller
-    tracks table stats, as any catalog/Iceberg metadata does) or one
-    count() pre-job per missing side runs here — at cluster scale,
-    always pass the estimates.
+    plan: 'sql' (codegen join), 'fused' (cogroup Arrow kernel),
+    'dgrid' (broadcast particle grid), 'bcast' (broadcast halo grid),
+    or 'auto' — pick by estimated per-plan cost (choose_plan); any
+    other name raises.  'auto' needs row counts: pass n_halos_est /
+    n_particles_est (free if the caller tracks table stats, as any
+    catalog/Iceberg metadata does) or one count() pre-job per missing
+    side runs here — at cluster scale, always pass the estimates.
+    'fused' without `ncells` needs the particle count too (its grid
+    is occupancy-driven).
+
+    ncells: cells per axis, overriding the plan's grid rule
+    (``_plan_grid``, which documents each plan's measured grid); the
+    ring depth always follows the grid, so any explicit grid is exact.
 
     salt_threshold: if set, run the dense-cell salting pre-pass
     (apply_salting) so no hot cell serializes one reducer/task.
-
-    bcast_cell_mult: grid-refinement factor for the broadcast plans —
-    cells of size rmax/mult probed with ring-mult offsets + Euclidean
-    slab pruning.  2 cuts candidate pairs ~2x vs ring-1 at matched
-    correctness (measured, BENCH/BASELINE.md); ignored when `ncells`
-    is passed explicitly.
-
-    cell_mult: the same refinement for the 'sql' join plan.  Default 1
-    — a MEASURED negative result (round 4, CPU-pinned ref shape): the
-    join plan pays ~1 us per exploded halo-ring ROW (materialize +
-    shuffle/broadcast-build + hash probe) against ~0.6 us saved per
-    pruned PAIR inside codegen, so mult=2 (fanout 20.6 -> 84 rows/probe
-    for a 2x pair cut) ran 32s -> 200+s.  The broadcast plans keep
-    mult=2 because their ring bookkeeping is a few numpy ops per row
-    INSIDE the kernel, never a row.  The knob stays for extreme-density
-    regimes (ring-1 candidates/probe >~ 3000, where the pair term
-    dominates the fanout term; choose_plan's cost model prices both).
-    Ignored for 'fused' (occupancy-driven grid) and when `ncells` is
-    passed explicitly.  What actually closed the r3 sql candidate-cost
-    gap is the flat codegen-safe prune in explode_ring — the ring-1
-    sql plan itself got 2.7x faster (see cells.py).
     """
+    edges = np.asarray(edges)
+    rmax = float(edges[-1])
     n_est = n_particles_est
     if plan == "auto":
         n_est = n_est or particles.count()
-        rmax = float(np.asarray(edges)[-1])
-        kw = dict(box=box, ncells=ncells, cell_mult=cell_mult,
-                  weighted=weight_col is not None)
+        kw = dict(box=box, ncells=ncells, weighted=weight_col is not None)
         # choose_plan's first test (dgrid) reads only the particle
         # side: with no halos it answers 'dgrid' iff that test passes,
         # so the halos are counted only when the choice needs them
@@ -337,80 +383,43 @@ def shell_count(
             "side fits the broadcast budget, else 'sql'/'fused')"
         )
     if plan == "fused" and ncells is None:
-        # the Arrow kernel wants dense cells: target ~128 particles/cell.
-        # Still true after the round-4 bucketed-cogroup rewrite (which
-        # removed per-GROUP overhead): on the fine ring-1 grid the
-        # in-kernel per-CELL numpy dispatch + the 3.3x halo-ring fanout
-        # dominate — measured 35.8s (nc=78) vs 16.6s (nc=36) at the
-        # pinned ref shape; the distance-matrix kernel eats the coarser
-        # grid's extra candidate volume at ~11M pairs/s/core instead
         n_est = n_est or particles.count()
-        cap = max(2, int(round((n_est / 128) ** (1.0 / 3.0))))
-        ncells = max(1, min(grid_ncells(float(np.asarray(edges)[-1]), box), cap))
-    if plan in ("bcast", "dgrid"):
-        # no shuffle at all -> salting is moot; empty cells are free in
-        # the CSR layout, so a grid FINER than ring-1 (cells of size
-        # rmax/cell_mult probed with a ring-cell_mult neighborhood) is
-        # available via bcast_cell_mult: the Euclidean prune tightens
-        # the candidate set from the (3*rmax)^3 ring-1 cube toward the
-        # ball volume itself, at the price of more ring bookkeeping
-        # per streamed row (VERDICT r2 top item: candidate volume)
-        edges = np.asarray(edges)
-        rmax = float(edges[-1])
-        if not rmax < box / 2:
-            raise ValueError(f"r_max={rmax} must be < box/2={box / 2}")
-        nc = ncells or grid_ncells(rmax / bcast_cell_mult, box)
-        # ring depth follows the grid: k*cell_size must cover rmax
-        ring_k = max(1, int(np.ceil(rmax / (box / nc) - 1e-9)))
-        if plan == "dgrid":
-            return _dgrid_plan(
-                halos, particles, squared_edges(edges), box, dtype, id_col,
-                nc, h_coords, p_coords, ring_k=ring_k, weight_col=weight_col,
-            )
-        return _bcast_plan(
-            halos, particles, squared_edges(edges), box, dtype, id_col, nc,
-            h_coords, p_coords, ring_k=ring_k,
-        )
-    h, p, nc, edges = _prep(
-        halos, particles, edges, box, id_col, h_coords, p_coords, ncells,
+    # the plan runs on the grid the cost model priced (ADVICE r2)
+    nc, ring_k = _plan_grid(plan, rmax, box, n_est, ncells)
+    r2 = squared_edges(edges)
+    if plan == "dgrid":
+        return _dgrid_plan(halos, particles, r2, box, dtype, id_col, nc,
+                           h_coords, p_coords, ring_k, weight_col)
+    if plan == "bcast":
+        # no shuffle at all -> salting is moot
+        return _bcast_plan(halos, particles, r2, box, dtype, id_col, nc,
+                           h_coords, p_coords, ring_k)
+    h, p, _, _ = _prep(
+        halos, particles, edges, box, id_col, h_coords, p_coords, nc,
         extra_p=(weight_col,) if weight_col else (),
-        # the sql plan executes on the same refined occupancy-capped grid
-        # the cost model evaluated (ADVICE r2: chooser/plan grid agreement);
-        # fused's grid was already fixed above (occupancy-driven)
-        cell_mult=cell_mult if plan == "sql" else 1,
-        n_hint=n_est,
     )
     join_key = "cell_id"
     if salt_threshold is not None:
         h, p, join_key = apply_salting(h, p, salt_threshold, max_salt)
-    r2 = squared_edges(edges)
     if plan == "fused":
         return _fused_plan(h, p, r2, box, dtype, id_col, join_key,
                            weight_col=weight_col)
-    j = h.join(p, join_key)
-    d2 = squared_distance_sql(_H, _P, box, dtype)
-    # project d2 ONCE, then bin on the column reference — embedding the
-    # distance expression inside every WHEN branch would re-evaluate it
-    # per branch (and blow codegen limits at 40 shells)
-    hid = ident(id_col)
-    wcols = [ident(weight_col)] if weight_col else []
-    proj = j.selectExpr(hid, f"{d2} AS _d2", *wcols).where(
-        f"_d2 < {dlit(r2[-1])}"
-    )
+    wcols = [weight_col] if weight_col else []
+    proj = _pairs_within(h.join(p, join_key), r2[-1], box, dtype, id_col, *wcols)
     aggs = [F.expr("count(1) AS cnt")]
     if weight_col:
         aggs.append(F.expr(f"CAST(sum({ident(weight_col)}) AS BIGINT) AS wsum"))
     return (
-        proj.selectExpr(
-            hid, f"{shell_index_expr('_d2', r2)} AS shell_idx", *wcols)
+        proj.selectExpr(ident(id_col),
+                        f"{shell_index_expr('_d2', r2)} AS shell_idx",
+                        *map(ident, wcols))
         .groupBy(id_col, "shell_idx")
         .agg(*aggs)
     )
 
 
 def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
-                weight_col: str | None = None,
-                n_buckets: int | None = None) -> DataFrame:
+                weight_col: str | None = None) -> DataFrame:
     """Cogroup Arrow kernel, bucketed.
 
     Cogrouping per CELL was the round-3 shape; per-group Python/Arrow
@@ -431,14 +440,13 @@ def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
     nr = len(r2k)
     bx = np_dtype(box)
     out_cols = [id_col, "shell_idx", "cnt"] + (["wsum"] if weight_col else [])
-    if n_buckets is None:
-        sp = h.sparkSession
-        try:
-            # the conf may be 'auto' under AQE-managed deployments
-            conf_parts = int(sp.conf.get("spark.sql.shuffle.partitions", "200"))
-        except ValueError:
-            conf_parts = 256
-        n_buckets = max(256, conf_parts)
+    try:
+        # the conf may be 'auto' under AQE-managed deployments
+        conf_parts = int(
+            h.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    except ValueError:
+        conf_parts = 256
+    n_buckets = max(256, conf_parts)
 
     def _empty():
         return pd.DataFrame({c: [] for c in out_cols}).astype(
@@ -827,7 +835,7 @@ def _bcast_plan(
     ncells: int,
     h_coords: tuple[str, str, str],
     p_coords: tuple[str, str, str],
-    ring_k: int = 1,
+    ring_k: int,
 ) -> DataFrame:
     """Broadcast-halo-grid plan: stream the BIG table map-side only.
 
@@ -945,7 +953,7 @@ def _dgrid_plan(
     ncells: int,
     h_coords: tuple[str, str, str],
     p_coords: tuple[str, str, str],
-    ring_k: int = 1,
+    ring_k: int,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Broadcast-DATA grid: the reference's architecture, sides as-is.
@@ -1061,24 +1069,12 @@ def range_join_pairs(
     predicate is strict ``d2 < radius^2`` (SURVEY §2.3 J3 note).
     """
     edges = np.asarray([radius], dtype=np.float32 if dtype == "float32" else np.float64)
-    h, p, nc, edges = _prep(
-        halos,
-        particles,
-        edges,
-        box,
-        id_col,
-        h_coords,
-        p_coords,
-        ncells,
-        extra_p=(particle_id_col,),
-    )
-    r2 = squared_edges(edges)
-    j = h.join(p, "cell_id")
-    d2 = squared_distance_sql(_H, _P, box, dtype)
-    out = j.selectExpr(ident(id_col), ident(particle_id_col), f"{d2} AS d2").where(
-        f"d2 < {dlit(r2[0])}"
-    )
-    return out if include_distance else out.drop("d2")
+    h, p, _, _ = _prep(halos, particles, edges, box, id_col, h_coords, p_coords,
+                       ncells, extra_p=(particle_id_col,))
+    out = _pairs_within(h.join(p, "cell_id"), squared_edges(edges)[0], box,
+                        dtype, id_col, particle_id_col)
+    return (out.withColumnRenamed("_d2", "d2") if include_distance
+            else out.drop("_d2"))
 
 
 def range_anti_join(
@@ -1109,11 +1105,9 @@ def range_anti_join(
     )
     r2 = squared_edges(edges)
     rmax = float(edges[-1])
-    if not rmax < box / 2:
-        raise ValueError(f"radius={rmax} must be < box/2={box / 2}")
-    nc = ncells or grid_ncells(rmax, box)
+    nc, ring_k = _plan_grid("sql", rmax, box, ncells=ncells)
     s = sites.select(*[F.col(c).alias(a) for c, a in zip(s_coords, _H)])
-    s = explode_ring(s, nc, box, cols=_H, k=1, prune_radius=rmax,
+    s = explode_ring(s, nc, box, cols=_H, k=ring_k, prune_radius=rmax,
                      out="_scell")
     p = with_cell(particles, nc, box, cols=p_coords, out="_pcell")
     d2 = squared_distance_expr(_H, p_coords, box, dtype)

@@ -55,33 +55,15 @@ def _binned_stream(
     stream->static equi-join on cell_id — stream-static joins are
     stateless and append-safe).  Returns (binned_df, n_shells).
     """
-    import numpy as np
-
-    from ..functions.geometry import squared_distance_sql
     from ..functions.shells import shell_index_expr, squared_edges
-    from ..functions.sqltext import dlit, ident
-    from ..operators.cells import explode_ring, grid_ncells, with_cell
-    from ..operators.shell_count import _H, _P
+    from ..functions.sqltext import ident
+    from ..operators.shell_count import _pairs_within, _prep
 
-    edges = np.asarray(edges)
-    rmax = float(edges[-1])
-    if not rmax < box / 2:
-        raise ValueError(f"r_max={rmax} must be < box/2={box / 2}")
-    nc = grid_ncells(rmax, box)
-    h = halos.select(
-        F.col(id_col), *[F.col(c).alias(a) for c, a in zip(("x", "y", "z"), _H)]
-    )
-    h = explode_ring(h, nc, box, cols=_H, k=1, prune_radius=rmax)
-    p = stream.select(
-        *[F.col(c).alias(a) for c, a in zip(("x", "y", "z"), _P)]
-    )
-    p = with_cell(p, nc, box, cols=_P)
+    xyz = ("x", "y", "z")
+    h, p, _, edges = _prep(halos, stream, edges, box, id_col, xyz, xyz, None)
     r2 = squared_edges(edges)
-    d2 = squared_distance_sql(_H, _P, box, dtype)
-    j = p.join(h, "cell_id")  # stream on the left: stream-static join
-    proj = j.selectExpr(ident(id_col), f"{d2} AS _d2").where(
-        f"_d2 < {dlit(r2[-1])}"
-    )
+    # stream on the left: stream-static join
+    proj = _pairs_within(p.join(h, "cell_id"), r2[-1], box, dtype, id_col)
     sh = shell_index_expr("_d2", r2)
     return proj.selectExpr(ident(id_col), f"{sh} AS shell_idx"), len(r2)
 

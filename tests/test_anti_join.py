@@ -50,3 +50,18 @@ def test_anti_join_strict_boundary(spark):
     got = {r.particle_id
            for r in range_anti_join(sp, ss, 10.0, dtype="float64").collect()}
     assert got == {1}
+
+
+def test_anti_join_explicit_fine_grid(spark):
+    """An explicit grid finer than the radius probes as many rings as
+    the radius spans: the site 11 away (2 cells of 5) still excludes."""
+    sp = spark.createDataFrame(
+        [(1, 100.0, 100.0, 100.0)],
+        "particle_id long, x double, y double, z double",
+    )
+    ss = spark.createDataFrame(
+        [(111.0, 100.0, 100.0)], "x double, y double, z double"
+    )
+    for ncells in (None, 200):
+        out = range_anti_join(sp, ss, 12.0, ncells=ncells)
+        assert out.count() == 0, ncells

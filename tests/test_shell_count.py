@@ -155,6 +155,18 @@ def test_choose_plan_measured_regimes():
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0) == "bcast"
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0,
                        weighted=True) in ("sql", "fused")
+    # the broadcast payload is priced on the grid that runs: r_max/2
+    # cells, 100^3 at r_max 20 = 4 MB of CSR offsets, which with 2.8 MB
+    # of particles overflows 4 MiB; an explicit ncells is what runs
+    budget = dict(max_broadcast_bytes=4 << 20)
+    assert choose_plan(10_000, 100_000, 20.0, **budget) not in ("dgrid", "bcast")
+    assert choose_plan(10_000, 100_000, 20.0, ncells=50, **budget) == "dgrid"
+
+
+def test_unknown_plan_raises(spark):
+    halos = _df_points(spark, PB_HALOS, id_col="halo_id")
+    with pytest.raises(ValueError, match="unknown plan 'dgird'"):
+        shell_count(halos, _df_points(spark, PB_PARTICLES), [1.0], plan="dgird")
 
 
 def test_plan_auto_matches_sql(spark):
@@ -411,25 +423,37 @@ def test_nn_dist_cdf_requires_id_in_self_mode(spark):
         nn_dist_cdf(df, np.array([10.0]))
 
 
-# --------------------------------------------- sub-rmax refined join grid
+# --------------------------------------------- explicit sub-rmax grids
 
 
-@pytest.mark.parametrize("mult", [1, 2, 3])
-def test_sql_cell_mult_matches_oracle(spark, mult):
-    """The refined (cells = rmax/mult, ring-mult + Euclidean prune) sql
-    grid — the r4 candidate-volume fix — is answer-invariant vs the
-    numpy oracle at every mult, including wrap-heavy radii."""
+@pytest.mark.parametrize("m", [1, 2, 3])
+def test_explicit_grid_matches_oracle(spark, m):
+    """An explicit grid of cells rmax/m — ring depth m from the grid
+    rule, plus the Euclidean prune — is answer-invariant vs the numpy
+    oracle on every plan and on range_join_pairs, including wrap-heavy
+    radii."""
+    from spatialjoincountovershells_spark.operators.shell_count import (
+        range_join_pairs,
+    )
+
     P = synth_points_np(800, seed=7)
     H = synth_points_np(40, seed=1007)
+    halos = _df_points(spark, H, id_col="halo_id")
+    parts = _df_points(spark, P, id_col="particle_id")
     for spec in [(0.5, 60.0, 6), (10.0, 300.0, 5)]:
         edges = logspace_edges(*spec)
-        halos = _df_points(spark, H, id_col="halo_id")
-        parts = _df_points(spark, P)
-        res = shell_count(halos, parts, edges, plan="sql", cell_mult=mult)
-        rows = [(r.halo_id, r.shell_idx, r.cnt) for r in res.collect()]
-        got = dense_from_long(rows, len(H), len(edges))
+        nc = int(1000.0 / (float(edges[-1]) / m))
         want = oracle_shell_counts(H, P, squared_edges(edges))
-        assert got.tolist() == want.tolist()
+        for plan in ("sql", "fused", "dgrid", "bcast"):
+            res = shell_count(halos, parts, edges, plan=plan, ncells=nc)
+            rows = [(r.halo_id, r.shell_idx, r.cnt) for r in res.collect()]
+            got = dense_from_long(rows, len(H), len(edges))
+            assert got.tolist() == want.tolist(), plan
+        pairs = range_join_pairs(halos, parts, float(edges[-1]), ncells=nc)
+        rows = [(r.halo_id, r.particle_id) for r in pairs.collect()]
+        assert len(set(rows)) == len(rows)
+        per_halo = np.bincount([h for h, _ in rows], minlength=len(H))
+        assert per_halo.tolist() == want.sum(axis=1).tolist()
 
 
 def test_explode_ring_k_prune_covers_and_is_tight(spark):
@@ -490,14 +514,13 @@ def test_manual_sql_grid_matches_auto_grid_on_sparse_data(spark):
     parts = _df_points(spark, P)
     _, _, nc_manual, _ = _prep(
         halos, parts, edges, 1000.0, "halo_id",
-        ("x", "y", "z"), ("x", "y", "z"), None,
-        cell_mult=1, n_hint=n_sparse,
+        ("x", "y", "z"), ("x", "y", "z"), None, n_hint=n_sparse,
     )
     assert nc_manual == grid_ncells(5.0, 1000.0, n_hint=n_sparse) == 10
     # and without the hint the old (over-fine) grid would have been used
     _, _, nc_nohint, _ = _prep(
         halos, parts, edges, 1000.0, "halo_id",
-        ("x", "y", "z"), ("x", "y", "z"), None, cell_mult=1,
+        ("x", "y", "z"), ("x", "y", "z"), None,
     )
     assert nc_nohint == 200
 
