@@ -1431,6 +1431,9 @@ FROM g
 
 
 def _simhash_sql() -> str:
+    """Tokens split on Java's ``\\s`` set (space, tab, LF, VT, FF, CR),
+    spelled out: RE2's ``\\s`` has no VT, so it would glue a VT-joined
+    pair into one token that Spark splits."""
     bitsums = ",\n  ".join(
         f"sum(CASE WHEN {affine_sql('base', b)} % 2 = 1 THEN 1 ELSE -1 END) AS b{b}"
         for b in range(64)
@@ -1440,7 +1443,7 @@ def _simhash_sql() -> str:
         for b in range(64)
     )
     return f"""
-WITH tok0 AS (SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok FROM documents),
+WITH tok0 AS (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+')) AS tok FROM documents),
 tok AS (SELECT doc_id, tok FROM tok0 WHERE length(tok) > 0),
 hb AS (SELECT doc_id, {poly_hash_duck("tok")} AS base FROM tok),
 bits AS (SELECT doc_id, {bitsums} FROM hb GROUP BY doc_id)

@@ -1,21 +1,28 @@
-"""Arrow-vectorized twin of the texthash base hash, as a DataFrame
-column projection.
+"""The texthash base hash as an Arrow-vectorized DataFrame column
+projection.
 
-``poly_hash_spark`` (functions/texthash.py) is an
+``poly_hash_spark`` (functions/texthash.py) is the same hash as an
 aggregate-over-transform SQL higher-order function; Spark evaluates HOF
-lambdas interpreted per element, so hashing a billion short tokens pays
-~2 interpreter steps per character — and call sites that inline the SQL
-text into several derived expressions (Count-Min's d streams, Bloom's k
-streams) re-evaluate it per stream.  ``with_poly_hash_arrow`` instead
-appends the base hash as ONE numpy pass per Arrow batch: all values'
-codepoints concatenate into a single int64 array (one C-level join +
-one utf-32 encode per batch, no per-char Python), each value's
-polynomial folds with add.reduceat against POWS, and every int64
-product stays < 2^62 so the values are bit-identical to the SQL forms
-in Spark and DuckDB (pinned by test_arrowhash_matches_sql).
+lambdas interpreted per element, so hashing a billion short tokens that
+way pays ~2 interpreter steps per character — and call sites that
+inline the SQL text into several derived expressions (Count-Min's d
+streams, Bloom's k streams) re-evaluate it per stream.
+``with_poly_hash_arrow`` instead appends the base hash as ONE numpy
+pass per Arrow batch: all values' codepoints concatenate into a single
+int64 array (one C-level join + one utf-32 encode per batch, no
+per-char Python), each value's polynomial folds with add.reduceat
+against POWS, and every int64 product stays < 2^62 so the values are
+bit-identical to the SQL forms in Spark and DuckDB (pinned by
+test_arrowhash_matches_sql).
 
 NULL hashes to NULL, '' to 0, and only the first MAXLEN codepoints
-count — exactly the expr semantics.
+count — exactly the SQL semantics.
+
+Column-name limit: every hash family's Spark builder (this module, the
+minhash/simhash kernels in operators/dedup.py, doc_fingerprint) runs
+through ``mapInPandas``, which cannot take a column whose name contains
+a dot — PySpark resolves ``df[name]`` as a nested-field access and
+raises AnalysisException.  Rename such a column before the call.
 """
 
 from __future__ import annotations

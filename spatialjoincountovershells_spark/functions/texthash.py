@@ -80,14 +80,6 @@ def poly_hash_duck(col: str, max_len: int = MAXLEN) -> str:
     )
 
 
-def poly_hash_fixed_spark(col: str, n: int) -> str:
-    """Unrolled base hash for strings of length <= n (e.g. shingles)."""
-    terms = " + ".join(
-        f"ascii(substring({col}, {j + 1}, 1)) * {POWS[j]}L" for j in range(n)
-    )
-    return f"(({terms}) % {P})"
-
-
 def poly_hash_fixed_duck(col: str, n: int) -> str:
     terms = " + ".join(
         f"(CASE WHEN {j + 1} <= length({col}) THEN ord(substr({col}, {j + 1}, 1)) ELSE 0 END)::BIGINT"
@@ -111,10 +103,9 @@ def shingle_array_sql(col: str, n: int) -> str:
     """All character n-gram shingles of `col` as one SQL array expr —
     the single source of truth for the shingle window (note the
     greatest(..., 1) pinning: an empty/short string yields exactly ONE
-    possibly-short shingle).  Shared by dedup.shingles (grouped path),
-    dedup.minhash_band_buckets (per-row path) and, in spirit, the
-    oracle _shingle_cte — three places that MUST stay in lockstep for
-    the grouped/per-row parity test and the DuckDB hash checks."""
+    possibly-short shingle).  Used by dedup.shingles and, in spirit,
+    the oracle _shingle_cte — two places that MUST stay in lockstep for
+    the DuckDB hash checks."""
     return (
         f"transform(sequence(1, greatest(length({col}) - {n - 1}, 1)), "
         f"i -> substring({col}, i, {n}))"

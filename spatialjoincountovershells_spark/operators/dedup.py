@@ -1,10 +1,13 @@
 """Deduplication operators for training-data pipelines.
 
-All hot paths are JVM-side: shingling via sequence+substring (codegen),
-hashing via the SQL-derivable polynomial/affine family in
-functions/texthash.py (so every operator here has a bit-exact DuckDB
-oracle), min-aggregation for MinHash, banded LSH buckets as plain
-groupBy keys.  No Python in any per-row path.
+Every string hash comes from the SQL-derivable polynomial/affine family
+in functions/texthash.py, so every operator here has a bit-exact
+DuckDB oracle.  The per-row hash passes (minhash band buckets, simhash)
+run as vectorized numpy kernels over Arrow batches (mapInPandas) —
+Spark evaluates SQL higher-order-function lambdas interpreted per
+element, so the SQL form of the same hash is several times slower.
+Shingling, bucket grouping, pair expansion and aggregation stay in
+JVM expressions.
 
 * exact_dedup        — hash-groupBy canonicalization
 * ngram_jaccard_pairs— exact n-gram Jaccard on candidate pairs, with a
@@ -26,10 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.texthash import (
-    affine_sql,
-    band_key_sql,
-    poly_hash_fixed_spark,
-    poly_hash_spark,
+    MAXLEN,
+    P,
+    POW2S,
+    POWS,
+    affine_consts,
     shingle_array_sql,
 )
 
@@ -189,32 +193,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 32,
-    shingle_n: int = 8,
-) -> DataFrame:
-    """-> (id, mh_0..mh_{k-1}) MinHash signature, fully JVM.
-
-    h_i(shingle) = affine_i(poly_hash(shingle)) in the 2^31-1 field
-    (functions/texthash.py); signature_i = min over the doc's shingles.
-    The base hash is computed ONCE per shingle row (codegen'd column
-    exprs), then each of the n_hashes streams is two multiplies — the
-    scale path runs at shuffle speed, and the whole pipeline has a
-    bit-exact ANSI-SQL twin for the oracle gate.
-    """
-    sh = shingles(df, text_col, id_col, shingle_n).withColumn(
-        "_base", F.expr(poly_hash_fixed_spark("shingle", shingle_n))
-    )
-    aggs = [
-        F.min(F.expr(affine_sql("_base", i))).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
 def minhash_band_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -226,76 +204,32 @@ def minhash_band_buckets(
     """LSH bucket rows (id, band int, key long) computed PER ROW —
     zero shuffles before the bucket table exists.
 
-    The grouped path (shingles explode -> distinct -> groupBy min) pays
-    two shuffles to build signatures; but each signature stream is
-    mh_i = min over the row's OWN shingles, so it folds into pure array
-    exprs evaluated inside one codegen projection:
-    array_min(transform(shingles(text), s -> affine_i(poly(s)))).
-    min over the shingle multiset == min over its distinct set, so the
-    values are bit-identical to minhash_signatures' (pinned by
-    test_minhash_rowwise_buckets_match_grouped).  The base hash array
-    is materialized once per row and every affine stream re-scans it.
+    Signature stream i is mh_i = min over the row's shingles of
+    affine_i(poly_hash(shingle)) (functions/texthash.py); band b's key
+    combines its n_hashes/bands streams with band_key_sql's formula.
+    Each signature depends only on the row's OWN shingles, so no
+    explode/distinct/groupBy is needed: one numpy kernel per Arrow
+    batch computes the base hashes as a vectorized sliding dot product
+    of the codepoint array against POWS[:shingle_n] (the dup_spans
+    convolution) and min-reduces each affine stream per row.  Exact
+    int64 everywhere: codepoints < 2^21, POWS/affine consts < P =
+    2^31-1, so every product stays < 2^62 — the identical value tree
+    as the DuckDB oracle (_minhash_lsh_sql; pinned by
+    test_minhash_arrow_buckets_match_expr).
 
-    Because this is stateless column arithmetic, it also works on
-    STREAMING DataFrames — see streaming/stream_dedup.py, which
-    stream-static joins these buckets against a precomputed corpus
-    bucket table for append-safe near-dup flagging.
+    Rows with NULL text or fewer than shingle_n characters emit no
+    bucket rows: a NULL text has no key and every sub-shingle doc would
+    hash its padded fragment, so at corpus scale millions of
+    null/trivial rows would pile into one degenerate bucket per band.
+    Trivial docs are exact-dedup's job, not LSH's; the DuckDB oracle
+    applies the same guard.
+
+    Because the kernel is stateless, it also runs on STREAMING
+    DataFrames — see streaming/stream_dedup.py, which stream-static
+    joins these buckets against a precomputed corpus bucket table for
+    append-safe near-dup flagging.
     """
     assert n_hashes % bands == 0
-    rows_per_band = n_hashes // bands
-    sh_arr = shingle_array_sql(text_col, shingle_n)
-    bases = f"transform({sh_arr}, s -> {poly_hash_fixed_spark('s', shingle_n)})"
-    sig = df.select(F.col(id_col), F.expr(bases).alias("_bases")).select(
-        F.col(id_col),
-        *[
-            F.expr(f"array_min(transform(_bases, b -> {affine_sql('b', i)}))").alias(
-                f"mh_{i}"
-            )
-            for i in range(n_hashes)
-        ],
-    )
-    band_cols = []
-    for b in range(bands):
-        cols = [f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(band_key_sql(cols)).alias("key"),
-            )
-        )
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-
-def _minhash_band_buckets_arrow(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_hashes: int,
-    bands: int,
-    shingle_n: int,
-) -> DataFrame:
-    """Arrow/numpy twin of ``minhash_band_buckets`` -> (id, band, key).
-
-    PRECONDITION: rows already pass the minhash_lsh_pairs guard
-    (text non-null, length >= shingle_n), so every shingle window is
-    full-width and the base hashes are one vectorized sliding dot
-    product of the codepoint array against POWS[:shingle_n] — the same
-    convolution trick as ``dup_spans``.  The pure-SQL expr path
-    computes identical values but Spark evaluates HOF lambdas
-    interpreted per element (~(shingle_n + 2*n_hashes) interpreter
-    steps per character); this kernel is the measured ~3x-overall
-    minhash_lsh speedup at sf0.1 (bit-equality pinned by
-    test_minhash_arrow_buckets_match_expr).  Streaming keeps the expr
-    path (stateless column arithmetic composes with any sink).
-
-    Exact int64 everywhere: codepoints < 2^21, POWS/affine consts < P
-    = 2^31-1, so every product stays < 2^62 — the identical value
-    tree as the Spark-SQL and DuckDB forms (functions/texthash.py).
-    """
-    from ..functions.texthash import P, POWS, POW2S, affine_consts
-
     rpb = n_hashes // bands
     pows = np.array(POWS[:shingle_n][::-1], dtype=np.int64)  # convolve reverses
     A = np.array([affine_consts(i)[0] for i in range(n_hashes)], dtype=np.int64)
@@ -336,6 +270,9 @@ def _minhash_band_buckets_arrow(
             )
 
     id_dt = dict(df.dtypes)[id_col]
+    df = df.where(
+        F.col(text_col).isNotNull() & (F.length(text_col) >= int(shingle_n))
+    )
     return df.select(id_col, text_col).mapInPandas(
         op, schema=f"{id_col} {id_dt}, band int, key long"
     )
@@ -349,41 +286,19 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 8,
     max_bucket: int | None = MAX_BUCKET_DEFAULT,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Banded-LSH candidate near-dup pairs -> (doc_a, doc_b, n_bands_hit).
 
     Docs colliding in >=1 band are candidates; verify with
     ngram_jaccard_pairs on the candidate set if exactness is needed.
-    Buckets come from a shuffle-free per-row derivation, so the whole
-    operator is ONE aggregation (bucket_pairs' groupBy) plus the final
-    pair count.  engine="arrow" (default) computes the bucket rows in
-    a vectorized numpy kernel (`_minhash_band_buckets_arrow` — the
-    expr path's HOF lambdas evaluate interpreted per character);
-    engine="expr" keeps the pure-SQL columns (the streaming builder) —
-    both produce bit-identical rows.
-
-    Docs with NULL text or fewer than shingle_n characters are
-    EXCLUDED: a NULL text hashes to a NULL band key and every
-    sub-shingle doc to the hash of its padded fragment, so at corpus
-    scale millions of null/trivial rows would pile into one degenerate
-    bucket per band (a single reducer collecting the whole bucket and
-    emitting C(n,2) spurious pairs).  Trivial docs are exact-dedup's
-    job, not LSH's; the DuckDB oracle applies the same guard.
+    Buckets come from the shuffle-free per-row kernel
+    (``minhash_band_buckets``, which also skips NULL and sub-shingle
+    docs), so the whole operator is ONE aggregation (bucket_pairs'
+    groupBy) plus the final pair count.
     """
-    df = df.where(
-        F.col(text_col).isNotNull() & (F.length(text_col) >= int(shingle_n))
+    buckets = minhash_band_buckets(
+        df, text_col, id_col, n_hashes, bands, shingle_n
     )
-    if engine == "arrow":
-        buckets = _minhash_band_buckets_arrow(
-            df, text_col, id_col, n_hashes, bands, shingle_n
-        )
-    elif engine == "expr":
-        buckets = minhash_band_buckets(
-            df, text_col, id_col, n_hashes, bands, shingle_n
-        )
-    else:
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
     return (
         bucket_pairs(buckets, ["band", "key"], id_col, max_bucket=max_bucket)
         .groupBy("doc_a", "doc_b")
@@ -511,11 +426,16 @@ def dedup_clusters(
     return labels.select(F.col("n").alias(out_id), F.col("lbl").alias(out_cluster))
 
 
+#: Java regex \s is the ASCII whitespace set (the DuckDB oracle spells
+#: it out as a class) — NOT Python's unicode \s; \xa0 etc. are token
+#: characters.
+_JAVA_WS = (0x20, 0x09, 0x0A, 0x0B, 0x0C, 0x0D)
+
+
 def simhash(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "arrow",
 ) -> DataFrame:
     """64-bit SimHash over whitespace tokens -> (id, simhash long).
 
@@ -523,50 +443,16 @@ def simhash(
     bit_b(token) = affine_b(poly_hash(token)) mod 2 — 64 independent
     universal-hash bits from one shared base hash (texthash.py).
     Documents with no tokens (NULL / empty / all-whitespace) emit no
-    row in either engine.
+    row.
 
-    engine="arrow" (default): one vectorized numpy pass — tokens are
-    located as runs of non-whitespace in the batch's concatenated
-    codepoint array (the exact Java ``\\s`` = ASCII
-    space/tab/LF/VT/FF/CR set that Spark's split uses), base hashes
+    One vectorized numpy pass per Arrow batch: tokens are located as
+    runs of non-whitespace in the batch's concatenated codepoint array
+    (the Java ``\\s`` = ASCII space/tab/LF/VT/FF/CR set), base hashes
     come from one add.reduceat over cp*POWS products (MAXLEN-capped by
     zeroing the power past 64), and the 64 vote streams are
-    sign-reduceat'd per doc — the expr path evaluates the base-hash
-    HOF lambda interpreted per character and 64 affine aggregations
-    per token row.  engine="expr": the original all-JVM column exprs
-    (streaming-safe).  Bit-identical (test_simhash_arrow_matches_expr).
+    sign-reduceat'd per doc.  Bit-identical to the DuckDB oracle
+    (_simhash_sql; pinned by test_simhash_arrow_matches_expr).
     """
-    if engine == "arrow":
-        return _simhash_arrow(df, text_col, id_col)
-    if engine != "expr":
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    tok = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"),
-    ).where(F.length("tok") > 0)
-    h = tok.withColumn("_base", F.expr(poly_hash_spark("tok")))
-    aggs = [
-        F.sum(
-            F.when(F.expr(affine_sql("_base", b)) % 2 == 1, 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(64)
-    ]
-    per = h.groupBy(id_col).agg(*aggs)
-    acc = F.lit(0).cast("long")
-    for b in range(64):
-        bit = F.lit(2**b if b < 63 else -(2**63)).cast("long")
-        acc = acc.bitwiseOR(F.when(F.col(f"b{b}") > 0, bit).otherwise(F.lit(0).cast("long")))
-    return per.select(F.col(id_col), acc.alias("simhash"))
-
-
-#: Java regex \s (what Spark's split uses) is the ASCII whitespace set —
-#: NOT Python's unicode \s; \xa0 etc. are token characters in both paths.
-_JAVA_WS = (0x20, 0x09, 0x0A, 0x0B, 0x0C, 0x0D)
-
-
-def _simhash_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    from ..functions.texthash import MAXLEN, P, POWS, affine_consts
-
     n_bits = 64
     A = np.array([affine_consts(b)[0] for b in range(n_bits)], dtype=np.int64)
     C = np.array([affine_consts(b)[1] for b in range(n_bits)], dtype=np.int64)
@@ -731,11 +617,10 @@ def simhash_pairs(
     bands: int = 4,
     max_hamming: int = 3,
     max_bucket: int | None = MAX_BUCKET_DEFAULT,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Banded-SimHash near-dup pairs -> (doc_a, doc_b, hamming).
     See ``hamming_pairs`` for the banding/recall contract."""
-    sig = simhash(df, text_col, id_col, engine=engine)
+    sig = simhash(df, text_col, id_col)
     return hamming_pairs(
         sig, "simhash", id_col, bands, max_hamming, max_bucket=max_bucket
     )

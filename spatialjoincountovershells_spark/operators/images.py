@@ -251,7 +251,6 @@ def crossmodal_dup_pairs(
     phash_bands: int = 3,
     max_hamming: int = 2,
     bits: int = 48,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Cross-modal near-duplicate pairs over (image, caption) rows ->
     (image_a, image_b, n_caption_bands, hamming, match_kind).
@@ -279,7 +278,6 @@ def crossmodal_dup_pairs(
         images.select(id_col, caption_col),
         text_col=caption_col, id_col=id_col,
         n_hashes=n_hashes, bands=bands, shingle_n=shingle_n,
-        engine=engine,
     ).select(
         F.col("doc_a").alias("image_a"),
         F.col("doc_b").alias("image_b"),

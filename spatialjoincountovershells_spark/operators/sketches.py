@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrowhash import with_poly_hash_arrow
 from ..functions.texthash import P, affine_sql
 
 __all__ = ["kmv_distinct", "kmv_hash_sql", "countmin_sketch",
@@ -91,29 +92,11 @@ def kmv_distinct(
                       est.alias("est_distinct"))
 
 
-def _base_hash_col(values: DataFrame, value_col: str, engine: str):
-    """(frame-with-_base, base_sql_name) — engine='arrow' appends the
-    texthash base hash as a materialized column in one vectorized pass
-    (functions/arrowhash.py); engine='expr' returns the interpreted
-    HOF SQL text inline (streaming-safe; also what every call site
-    duplicating the text per stream used to pay d/k times over)."""
-    from ..functions.texthash import poly_hash_spark
-
-    if engine == "arrow":
-        from ..functions.arrowhash import with_poly_hash_arrow
-
-        return with_poly_hash_arrow(values, value_col, "_base"), "_base"
-    if engine != "expr":
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    return values, poly_hash_spark(value_col)
-
-
 def countmin_sketch(
     values: DataFrame,
     value_col: str,
     d: int = 4,
     w: int = 512,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Count-Min sketch (Cormode & Muthukrishnan 2005) of a stream of
     string values -> the full counter grid (row int, bucket long, cnt
@@ -125,17 +108,15 @@ def countmin_sketch(
     the groupBy's map-side combine means shuffle volume is bounded by
     d*w per partition, the textbook bounded-state shape.
 
-    engine="arrow" (default) hashes the value column once per row in a
-    vectorized Arrow pass (functions/arrowhash.py) instead of
-    evaluating the interpreted base-hash HOF d times per row;
-    engine="expr" keeps the pure-SQL projection (streaming-safe).
-    Identical counters either way.
+    The base hash is computed once per row in a vectorized Arrow pass
+    (functions/arrowhash.py); the d streams are affine codegen exprs
+    over that one column.
     """
-    values, base = _base_hash_col(values, value_col, engine)
+    values = with_poly_hash_arrow(values, value_col)
     rows = [
         F.struct(
             F.lit(i).alias("row"),
-            F.expr(f"{affine_sql(base, i)} % {w}").alias("bucket"),
+            F.expr(f"{affine_sql('_base', i)} % {w}").alias("bucket"),
         )
         for i in range(d)
     ]
@@ -153,7 +134,6 @@ def countmin_estimate(
     query_col: str = "term",
     d: int = 4,
     w: int = 512,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Point-query the Count-Min grid -> (query_col, est_count long).
 
@@ -165,11 +145,11 @@ def countmin_estimate(
     Scale shape: the sketch is <= d*w rows — broadcast; queries flow
     through one broadcast join per hash row and a per-query min agg.
     """
-    queries, base = _base_hash_col(queries, query_col, engine)
+    queries = with_poly_hash_arrow(queries, query_col)
     rows = [
         F.struct(
             F.lit(i).alias("row"),
-            F.expr(f"{affine_sql(base, i)} % {w}").alias("bucket"),
+            F.expr(f"{affine_sql('_base', i)} % {w}").alias("bucket"),
         )
         for i in range(d)
     ]
@@ -183,6 +163,29 @@ def countmin_estimate(
     )
 
 
+def _bloom_masks(df: DataFrame, value: str, m_words: int, k: int, stream0: int):
+    """(frame, masks): the k (word_idx, mask) structs of ``value`` for
+    the Bloom grid.  A string column gets the texthash base hash
+    appended as ``_base`` (one Arrow pass); any other column folds into
+    [0, P) by a CAST expression."""
+    if dict(df.dtypes).get(value) == "string":
+        df, base = with_poly_hash_arrow(df, value), "_base"
+    else:
+        base = f"(((CAST({value} AS BIGINT) % {P}) + {P}) % {P})"
+    nbits = 63 * m_words
+    masks = [
+        F.struct(
+            F.expr(f"CAST(({affine_sql(base, stream0 + i)} % {nbits}) DIV 63 AS INT)")
+            .alias("word_idx"),
+            F.expr(
+                f"shiftleft(1L, CAST(({affine_sql(base, stream0 + i)} % {nbits}) % 63 AS INT))"
+            ).alias("mask"),
+        )
+        for i in range(k)
+    ]
+    return df, masks
+
+
 def bloom_words(
     df: DataFrame,
     group_cols: list[str],
@@ -190,7 +193,6 @@ def bloom_words(
     m_words: int = 8,
     k: int = 4,
     stream0: int = 64,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Bloom filter per group (Bloom 1970), materialized as its int64
     words -> (group_cols..., word_idx int, word long), at most m_words
@@ -210,29 +212,14 @@ def bloom_words(
     map-side combined, so shuffle volume is bounded by m_words per
     (partition, group) — bounded-state, order-independent, mergeable.
 
-    String values hash through one vectorized Arrow pass by default
-    (engine — see countmin_sketch; the k streams used to re-evaluate
-    the interpreted base-hash HOF 2k times per row); numeric values
-    fold by a plain CAST either way.
+    String values hash through one vectorized Arrow pass (see
+    countmin_sketch); numeric values fold by a plain CAST.  The
+    per-group grid is built from the unhashed frame, so the hash pass
+    runs once.
     """
-    dt = dict(df.dtypes).get(value)
-    if dt == "string":
-        df, base = _base_hash_col(df, value, engine)
-    else:
-        base = f"(((CAST({value} AS BIGINT) % {P}) + {P}) % {P})"
-    nbits = 63 * m_words
-    masks = [
-        F.struct(
-            F.expr(f"CAST(({affine_sql(base, stream0 + i)} % {nbits}) DIV 63 AS INT)")
-            .alias("word_idx"),
-            F.expr(
-                f"shiftleft(1L, CAST(({affine_sql(base, stream0 + i)} % {nbits}) % 63 AS INT))"
-            ).alias("mask"),
-        )
-        for i in range(k)
-    ]
+    hashed, masks = _bloom_masks(df, value, m_words, k, stream0)
     set_bits = (
-        df.select(*group_cols, F.explode(F.array(*masks)).alias("_wm"))
+        hashed.select(*group_cols, F.explode(F.array(*masks)).alias("_wm"))
         .select(*group_cols, "_wm.word_idx", "_wm.mask")
         .groupBy(*group_cols, "word_idx")
         .agg(F.expr("bit_or(mask)").alias("word"))
@@ -263,7 +250,6 @@ def bloom_might_contain(
     m_words: int = 8,
     k: int = 4,
     stream0: int = 64,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Membership test against ``bloom_words`` grids -> probe rows +
     (hit int): 1 iff ALL k bits are set in the group's filter (maybe
@@ -276,22 +262,7 @@ def bloom_might_contain(
     engines build for join pruning (probe rows failing `hit` skip the
     expensive join).
     """
-    dt = dict(probes.dtypes).get(value)
-    if dt == "string":
-        probes, base = _base_hash_col(probes, value, engine)
-    else:
-        base = f"(((CAST({value} AS BIGINT) % {P}) + {P}) % {P})"
-    nbits = 63 * m_words
-    masks = [
-        F.struct(
-            F.expr(f"CAST(({affine_sql(base, stream0 + i)} % {nbits}) DIV 63 AS INT)")
-            .alias("word_idx"),
-            F.expr(
-                f"shiftleft(1L, CAST(({affine_sql(base, stream0 + i)} % {nbits}) % 63 AS INT))"
-            ).alias("mask"),
-        )
-        for i in range(k)
-    ]
+    probes, masks = _bloom_masks(probes, value, m_words, k, stream0)
     want = probes.select(
         *group_cols, F.col(value), F.explode(F.array(*masks)).alias("_wm")
     ).select(*group_cols, value, "_wm.word_idx", "_wm.mask")

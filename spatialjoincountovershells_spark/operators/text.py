@@ -1,11 +1,13 @@
-"""Text-analysis operators for training-data pipelines — all pure
-Spark SQL expressions (codegen'd), integer/string outputs so ANSI-SQL
-oracles match exactly.
+"""Text-analysis operators for training-data pipelines — Spark SQL
+expressions (codegen'd) apart from the string-hash passes
+(doc_fingerprint's kernel, lm_familiarity's Count-Min base hash), which
+run as numpy kernels over Arrow batches; integer/string outputs so
+ANSI-SQL oracles match exactly.
 
 * text_stats       — char/token/punct counts
 * quality_score    — integer quality heuristic
 * lang_guess       — stopword-hit language heuristic
-* doc_fingerprint  — min polynomial window hash (pure codegen exprs)
+* doc_fingerprint  — min polynomial window hash (Arrow numpy kernel)
 * repetition_stats — Gopher-style intra-document repetition signals
 * bm25_scores      — Okapi BM25 retrieval scoring, all-integer contract
 """
@@ -115,66 +117,51 @@ def doc_fingerprint(
     text_col: str = "text",
     id_col: str = "doc_id",
     window: int = 16,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Winnowing-style fingerprint: min polynomial codepoint hash over
     all `window`-char substrings -> (id, fingerprint long).
 
-    engine="arrow" (default) computes the rolling hash as one numpy
-    sliding dot product of the codepoint array against POWS[:window]
-    (the dup_spans convolution) + a per-doc min — the expr path's
-    transform lambda runs interpreted with `window` substring+ascii
-    calls PER POSITION (measured 25s -> sub-second at sf0.1).
-    engine="expr" keeps the pure-JVM column expression (streaming-safe,
-    and the shape the DuckDB oracle mirrors); both are bit-identical
-    (every int64 product < 2^62; pinned by the parity test).  Texts
-    shorter than `window` hash one zero-padded window (ascii past the
-    end contributes 0); NULL text -> NULL fingerprint in both engines.
+    One numpy kernel per Arrow batch: a sliding dot product of the
+    codepoint array against POWS[:window] (the dup_spans convolution)
+    + a per-doc min.  The same hash as a SQL transform lambda runs
+    interpreted with `window` substring+ascii calls PER POSITION
+    (measured 25s -> sub-second at sf0.1).  Every int64 product stays
+    < 2^62, so the values are bit-identical to the DuckDB oracle
+    (_doc_fingerprint_sql).  Texts shorter than `window` hash one
+    zero-padded window; NULL text -> NULL fingerprint.
     """
+    import numpy as np
+    import pandas as pd
+
     from ..functions.texthash import P, POWS
 
-    if engine == "arrow":
-        import numpy as np
-        import pandas as pd
+    pows = np.array(POWS[:window][::-1], dtype=np.int64)  # convolve reverses
 
-        pows = np.array(POWS[:window][::-1], dtype=np.int64)  # convolve reverses
-
-        def op(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
+    def op(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            fps = []
+            for t in pdf[text_col]:
+                if t is None:
+                    fps.append(None)
                     continue
-                fps = []
-                for t in pdf[text_col]:
-                    if t is None:
-                        fps.append(None)
-                        continue
-                    c = np.frombuffer(
-                        t.encode("utf-32-le"), dtype=np.uint32
-                    ).astype(np.int64)
-                    if len(c) < window:  # one zero-padded window
-                        c = np.pad(c, (0, window - len(c)))
-                    fps.append(
-                        int((np.convolve(c, pows, mode="valid") % P).min())
-                    )
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col], "fingerprint": pd.array(fps, dtype="Int64")}
+                c = np.frombuffer(
+                    t.encode("utf-32-le"), dtype=np.uint32
+                ).astype(np.int64)
+                if len(c) < window:  # one zero-padded window
+                    c = np.pad(c, (0, window - len(c)))
+                fps.append(
+                    int((np.convolve(c, pows, mode="valid") % P).min())
                 )
+            yield pd.DataFrame(
+                {id_col: pdf[id_col], "fingerprint": pd.array(fps, dtype="Int64")}
+            )
 
-        id_dt = dict(df.dtypes)[id_col]
-        return df.select(id_col, text_col).mapInPandas(
-            op, schema=f"{id_col} {id_dt}, fingerprint long"
-        )
-    if engine != "expr":
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    terms = " + ".join(
-        f"ascii(substring({text_col}, u + {j}, 1)) * {POWS[j]}L"
-        for j in range(window)
+    id_dt = dict(df.dtypes)[id_col]
+    return df.select(id_col, text_col).mapInPandas(
+        op, schema=f"{id_col} {id_dt}, fingerprint long"
     )
-    fp = (
-        f"array_min(transform(sequence(1, greatest(length({text_col}) - {window - 1}, 1)), "
-        f"u -> ({terms}) % {P}))"
-    )
-    return df.select(F.col(id_col), F.expr(fp).alias("fingerprint"))
 
 
 def repetition_stats(

@@ -3,11 +3,12 @@
 The batch dedup family (operators/dedup.py) answers "which documents in
 this table are near-dups of each other"; an ingestion pipeline needs the
 online form — "is this ARRIVING document a near-dup of anything already
-in the corpus".  Because the minhash band keys are pure per-row column
-arithmetic (minhash_band_buckets: no explode/distinct/groupBy), the
-stream side needs NO state and NO shuffle, and the corpus check is one
-stream-static equi-join on (band, key) — the same stateless append-safe
-join shape as stream_cells.stream_shell_counts' cell join.
+in the corpus".  Because the minhash band keys are a stateless per-row
+kernel (minhash_band_buckets: one mapInPandas pass, no
+explode/distinct/groupBy), the stream side needs NO state and NO
+shuffle, and the corpus check is one stream-static equi-join on
+(band, key) — the same stateless append-safe join shape as
+stream_cells.stream_shell_counts' cell join.
 """
 
 from __future__ import annotations
@@ -42,18 +43,12 @@ def stream_near_dup(
     corpus documents table and it is bucketed here as a convenience.
 
     Scale shape: the arriving micro-batch fans out to `bands` bucket
-    rows per doc inside one codegen projection; the join shuffles only
-    the batch (or broadcasts the corpus buckets when small).  Identical
-    hash family to the batch operators, so a doc flagged here is
+    rows per doc in one vectorized kernel pass per Arrow batch (NULL
+    and sub-shingle docs emit none); the join shuffles only the batch
+    (or broadcasts the corpus buckets when small).  The same kernel
+    builds the batch operators' buckets, so a doc flagged here is
     exactly a doc that minhash_lsh_pairs would pair with the corpus.
     """
-    def _guard(df: DataFrame) -> DataFrame:
-        # same exclusion as minhash_lsh_pairs: NULL/sub-shingle docs
-        # would pile into one degenerate bucket per band
-        return df.where(
-            F.col(text_col).isNotNull() & (F.length(text_col) >= int(shingle_n))
-        )
-
     if "band" in corpus_buckets.columns or "key" in corpus_buckets.columns:
         # pre-bucketed: require EXACTLY the bucket schema so a raw
         # table that merely contains a 'band'/'key' column is rejected
@@ -69,12 +64,10 @@ def stream_near_dup(
             )
     else:
         corpus_buckets = minhash_band_buckets(
-            _guard(corpus_buckets), text_col, id_col, n_hashes, bands, shingle_n
+            corpus_buckets, text_col, id_col, n_hashes, bands, shingle_n
         )
     c = corpus_buckets.withColumnRenamed(id_col, corpus_id_col)
-    s = minhash_band_buckets(
-        _guard(stream), text_col, id_col, n_hashes, bands, shingle_n
-    )
+    s = minhash_band_buckets(stream, text_col, id_col, n_hashes, bands, shingle_n)
     return s.join(c, ["band", "key"]).select(
         F.col(id_col), F.col(corpus_id_col), F.col("band")
     )

@@ -2,9 +2,11 @@
 the operators rebuilt on it: MinHash-LSH, SimHash, doc_fingerprint,
 DF-capped n-gram Jaccard, and the similarity-search rewrites.
 
-The three-engine agreement test (Spark expr == DuckDB == numpy) is the
-load-bearing one: it is what entitles the driver's hash-comparing
-oracle gate to check these operators at all.
+The load-bearing tests are the agreement checks: the base hash's SQL
+text gives the same values in Spark, DuckDB and numpy, and each hash
+family's Arrow kernel equals its DuckDB oracle (or a numpy reference)
+on adversarial inputs.  They are what entitle the __spark_entry__.py
+hash-comparing oracle gate to check these operators at all.
 """
 
 from __future__ import annotations
@@ -84,8 +86,7 @@ def test_simhash_near_dup_small_hamming(spark):
 
 def test_simhash_pairs_bruteforce_recall(spark):
     """Banding must find EVERY pair with hamming < bands (pigeonhole) —
-    compare against a brute force over the signatures, and pin that the
-    whole pipeline stays JVM-side."""
+    compare against a brute force over the signatures."""
     from spatialjoincountovershells_spark.operators.dedup import simhash_pairs
 
     base = "spark catalyst optimizes declarative dataframe plans into stages "
@@ -106,12 +107,6 @@ def test_simhash_pairs_bruteforce_recall(spark):
             if h <= 3:
                 want[(a, b)] = h
     df = simhash_pairs(docs, max_hamming=3)
-    # the expr engine stays pure-JVM (the streaming-safe path)
-    plan = (
-        simhash_pairs(docs, max_hamming=3, engine="expr")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "InPandas" not in plan and "BatchEvalPython" not in plan
     got = {(r.doc_a, r.doc_b): r.hamming for r in df.collect()}
     assert got == want and (0, 1) in got and got[(0, 1)] == 0
 
@@ -181,11 +176,14 @@ def test_arrowhash_quotes_names_and_rejects_collision(spark):
 
 def test_simhash_arrow_matches_expr(spark):
     """The vectorized simhash kernel must be bit-identical to the
-    all-JVM expr path: multi-whitespace runs (tab/CR/LF/VT/FF),
+    DuckDB oracle (_simhash_sql): multi-whitespace runs
+    (tab/CR/LF/VT/FF — VT splits in Java \\s but not in RE2 \\s),
     NON-ASCII whitespace (\\xa0 is a token char in Java \\s — both
-    engines must agree), >MAXLEN tokens, unicode, leading/trailing
-    whitespace, and no-token docs (empty / all-whitespace / NULL)
-    which must emit NO row."""
+    must agree), >MAXLEN tokens, unicode, leading/trailing whitespace,
+    and no-token docs (empty / all-whitespace / NULL) which must emit
+    NO row."""
+    import __spark_entry__ as entrymod
+
     from spatialjoincountovershells_spark.operators.dedup import simhash
 
     texts = [
@@ -203,16 +201,19 @@ def test_simhash_arrow_matches_expr(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = {r.doc_id: r.simhash for r in simhash(docs).collect()}
-    want = {r.doc_id: r.simhash for r in simhash(docs, engine="expr").collect()}
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    want = dict(con.execute(entrymod._simhash_sql()).fetchall())
     assert got == want
     assert 5 not in got and 6 not in got and 7 not in got and 0 in got
 
 
 def test_doc_fingerprint_engines_agree_and_dup_equal(spark):
-    """Arrow default == pure-JVM expr path bit-for-bit (incl. the
-    zero-padded short-text window, empty text and unicode), the expr
-    path stays Python-free for streaming, and duplicate docs share a
-    fingerprint."""
+    """The Arrow kernel == the DuckDB oracle (_doc_fingerprint_sql)
+    bit-for-bit (incl. the zero-padded short-text window, empty text
+    and unicode), and duplicate docs share a fingerprint."""
+    import __spark_entry__ as entrymod
+
     texts = [
         "abcdefghijklmnopqrstuvwxyz0123",
         "abcdefghijklmnopqrstuvwxyz0123",
@@ -220,12 +221,14 @@ def test_doc_fingerprint_engines_agree_and_dup_equal(spark):
         "",
         "café ☃ naïve \U0001f600 sixteen+ chars of unicode",
     ]
-    df = doc_fingerprint(_docs(spark, texts))
-    expr = doc_fingerprint(_docs(spark, texts), engine="expr")
-    plan = expr._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan and "BatchEvalPython" not in plan
-    out = df.orderBy("doc_id").toPandas()
-    assert out.fingerprint.tolist() == expr.orderBy("doc_id").toPandas().fingerprint.tolist()
+    docs = _docs(spark, texts)
+    out = doc_fingerprint(docs).orderBy("doc_id").toPandas()
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    want = con.execute(
+        entrymod._doc_fingerprint_sql() + " ORDER BY doc_id"
+    ).df().fingerprint.tolist()
+    assert out.fingerprint.tolist() == want
     assert out.fingerprint[0] == out.fingerprint[1]
     assert (out.fingerprint >= 0).all()
 
@@ -420,54 +423,21 @@ def test_phash_near_dup_bruteforce_recall(spark):
     assert got[(0, 300)] == 1 and got[(0, 320)] == 2
 
 
-def test_minhash_rowwise_buckets_match_grouped(spark):
-    """The shuffle-free per-row bucket derivation (minhash_band_buckets)
-    must be bit-identical to the grouped signature path
-    (minhash_signatures -> band keys): min over the shingle multiset
-    equals min over its distinct set.  Includes repeated-shingle,
-    sub-shingle-length, empty and unicode texts."""
-    from spatialjoincountovershells_spark.functions.texthash import band_key_sql
-    from spatialjoincountovershells_spark.operators.dedup import (
-        minhash_band_buckets,
-        minhash_signatures,
-    )
-
-    texts = SAMPLES + ["abababababababab", "the the the the the", "tiny"]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    n_hashes, bands = 32, 8
-    r = n_hashes // bands
-    sig = minhash_signatures(docs, n_hashes=n_hashes)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.expr(band_key_sql([f"mh_{b * r + j}" for j in range(r)])).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    grouped = sig.select(
-        F.col("doc_id"), F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    rowwise = minhash_band_buckets(docs)
-    got = {tuple(x) for x in rowwise.collect()}
-    want = {tuple(x) for x in grouped.collect()}
-    assert got == want
-    # and the per-row path stays pure JVM (no Python eval in the plan)
-    plan = rowwise._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan and "BatchEvalPython" not in plan
-
-
 def test_minhash_arrow_buckets_match_expr(spark):
-    """The vectorized Arrow bucket kernel must be bit-identical to the
-    pure-SQL expr path on minhash_lsh_pairs' guard domain (text
-    non-null, len >= shingle_n): unicode, exact-boundary-length,
-    repeated-shingle, and long texts; and the two engine= routes of
-    minhash_lsh_pairs must agree pair-for-pair."""
+    """The Arrow bucket kernel must be bit-identical to a per-shingle
+    numpy reference of the texthash family (affine streams over the
+    distinct shingles' base hashes, band_key_sql's key formula), and
+    minhash_lsh_pairs must equal the DuckDB oracle (_minhash_lsh_sql)
+    pair-for-pair: unicode, exact-boundary-length, repeated-shingle and
+    long texts, plus NULL and sub-shingle docs, which emit no buckets."""
+    import __spark_entry__ as entrymod
+
+    from spatialjoincountovershells_spark.functions.texthash import (
+        POW2S,
+        P,
+    )
     from spatialjoincountovershells_spark.operators.dedup import (
-        _minhash_band_buckets_arrow,
         minhash_band_buckets,
-        minhash_lsh_pairs,
     )
 
     texts = [
@@ -477,18 +447,35 @@ def test_minhash_arrow_buckets_match_expr(spark):
         "z" * 8 + "café ☃ naïve \U0001f600 text" * 3,
         "The quick brown fox jumps over the lazy dog. " * 10,
         "The quick brown fox jumps over the lazy dog. " * 10,  # dup doc
+        "tiny",                          # sub-shingle: no buckets
+        None,                            # NULL: no buckets
     ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    pdf = pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts})
+    docs = spark.createDataFrame(pdf, "doc_id long, text string")
+    n_hashes, bands, n = 32, 8, 8
+    r = n_hashes // bands
+    want = set()
+    for i, t in enumerate(texts):
+        if t is None or len(t) < n:
+            continue
+        base = poly_hash_np(sorted({t[u:u + n] for u in range(len(t) - n + 1)}))
+        mh = []
+        for j in range(n_hashes):
+            a, c = affine_consts(j)
+            mh.append(int(((a * base + c) % P).min()))
+        for b in range(bands):
+            key = sum((mh[b * r + j] * POW2S[j]) % P for j in range(r)) % P
+            want.add((i, b, key))
+    assert {tuple(x) for x in minhash_band_buckets(docs).collect()} == want
+    got = minhash_lsh_pairs(docs).orderBy("doc_a", "doc_b").toPandas()
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    oracle = con.execute(entrymod._minhash_lsh_sql() + " ORDER BY doc_a, doc_b").df()
+    np.testing.assert_array_equal(
+        got[["doc_a", "doc_b", "n_bands_hit"]].to_numpy(np.int64),
+        oracle[["doc_a", "doc_b", "n_bands_hit"]].to_numpy(np.int64),
     )
-    arrow = _minhash_band_buckets_arrow(docs, "text", "doc_id", 32, 8, 8)
-    expr = minhash_band_buckets(docs)
-    assert {tuple(x) for x in arrow.collect()} == {
-        tuple(x) for x in expr.collect()
-    }
-    pa = {tuple(x) for x in minhash_lsh_pairs(docs, engine="arrow").collect()}
-    pe = {tuple(x) for x in minhash_lsh_pairs(docs, engine="expr").collect()}
-    assert pa == pe and any(p[:2] == (4, 5) for p in pa)
+    assert (4, 5) in set(zip(got.doc_a, got.doc_b))
 
 
 def test_crossmodal_dup_planted_classification(spark):

@@ -92,14 +92,11 @@ def test_fused_plan_cogroups_without_exploding_particles(sides):
 
 
 def test_crossmodal_plan_stays_jvm_after_source(spark):
-    """crossmodal_dup_pairs' scale story with engine="expr": beyond
-    the data SOURCE, the whole pair pipeline (caption shingle->minhash
-    bands, phash band slices, both pair expansions, the full-outer
-    join) is JVM expressions — no Python eval nodes.  (The default
-    engine="arrow" swaps only the caption bucket rows for the
-    vectorized kernel — parity pinned in test_hash_ops.)  Built from
-    an in-memory DataFrame so the plan contains no MapInPandas source
-    at all."""
+    """crossmodal_dup_pairs' scale story: beyond the data SOURCE, the
+    only Python node is the caption bucket kernel (one MapInPandas);
+    the phash band slices, both pair expansions and the full-outer
+    join are JVM expressions.  Built from an in-memory DataFrame so
+    the plan contains no MapInPandas source at all."""
     from spatialjoincountovershells_spark.operators.images import (
         crossmodal_dup_pairs,
     )
@@ -108,14 +105,21 @@ def test_crossmodal_plan_stays_jvm_after_source(spark):
         [(i, i * 977, f"caption text number {i} padded out") for i in range(50)],
         "image_id long, phash long, caption string",
     )
-    out = crossmodal_dup_pairs(df, engine="expr")
-    plan = plan_of(out)
-    assert "InPandas" not in plan and "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    # the two engines must classify identically
-    a = {tuple(r) for r in crossmodal_dup_pairs(df).collect()}
-    e = {tuple(r) for r in out.collect()}
-    assert a == e
+    plan = plan_of(crossmodal_dup_pairs(df))
+    assert n_nodes(plan, "MapInPandas") == 1
+    assert len(re.findall(r"^\(\d+\) \w*(InPandas|InArrow|EvalPython)", plan, flags=re.M)) == 1
+
+
+def test_bloom_words_hashes_strings_once(spark):
+    """bloom_words on a string value runs the Arrow base-hash pass once:
+    the per-group word grid comes from the unhashed frame, so the
+    opaque MapInPandas is not planned a second time for it."""
+    from spatialjoincountovershells_spark.operators.sketches import bloom_words
+
+    df = spark.createDataFrame(
+        [(i % 3, f"v{i}") for i in range(30)], "g int, v string"
+    )
+    assert n_nodes(plan_of(bloom_words(df, ["g"], "v")), "MapInPandas") == 1
 
 
 def test_decontaminate_broadcasts_bench_and_never_shuffles_corpus_text(spark):
