@@ -38,9 +38,12 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from spatialjoincountovershells_spark.operators.shell_count import (  # noqa: E402
+    _PLANS as SHELL_PLANS,
+)
+
 CACHE = "/tmp/sjcs_bench_cache"
 
-SHELL_PLANS = ("sql", "fused", "bcast", "dgrid")
 # the default bench also times plan='auto' (chooser overhead + did it
 # pick the winner?); the pinned --ref-shape section reports the choice
 # via choose_plan instead of re-running a duplicate measurement

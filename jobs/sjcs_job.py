@@ -12,7 +12,8 @@ execution, resumable output.
       [--format parquet|decoded|compressed] \
       [--halo-format parquet|halo-text] \
       [--filter-file /data/filter_ids.csv] \
-      [--salt-threshold 100000] [--plan sql|fused|auto] [--report out.txt]
+      [--salt-threshold 100000] [--plan sql|fused|bcast|dgrid|auto] \
+      [--report out.txt]
 
 Input formats: 'parquet' expects either (id,x,y,z) columns or the
 images-table shape with a phash column (auto-decoded); 'decoded' /
@@ -75,6 +76,8 @@ def load_points(spark, paths, fmt, id_col):
 
 
 def main(argv=None) -> int:
+    from spatialjoincountovershells_spark.operators.shell_count import _PLANS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--particle-files", nargs="+", required=True)
     ap.add_argument("--halo-file", required=True)
@@ -85,8 +88,11 @@ def main(argv=None) -> int:
     ap.add_argument("--halo-format", default=None,
                     choices=[None, "parquet", "halo-text"])
     ap.add_argument("--filter-file", default=None)
-    ap.add_argument("--plan", default="sql", choices=["sql", "fused", "auto"])
-    ap.add_argument("--salt-threshold", type=int, default=None)
+    ap.add_argument("--plan", default="sql", choices=[*_PLANS, "auto"])
+    ap.add_argument("--salt-threshold", type=int, default=None,
+                    help="split join groups holding more particles than "
+                         "this: sql's cells; fused's coarse blocks (a few "
+                         "dozen per job), so size it per block there")
     ap.add_argument("--box", type=float, default=1000.0)
     ap.add_argument("--report", default=None, help="optional text report path")
     args = ap.parse_args(argv)

@@ -12,34 +12,40 @@ Reference semantics (SURVEY §2.3 J1/J2, §2.4 A1, §2.11):
 Four physical plans share one uniform periodic cell grid.  Its size
 and ring depth come from one rule, ``_plan_grid``, which also enforces
 r_max < box/2: explicit ``ncells`` wins, else cells of r_max/2 for the
-broadcast plans, ~128 particles/cell for 'fused', and the finest
-occupancy-capped ring-1 grid for 'sql'.
+sweep plans ('dgrid', 'bcast', 'fused') and the finest
+occupancy-capped ring-1 grid for 'sql'.  The same rule sizes the
+coarse blocks 'fused' cogroups on.
 
-The join plans ('sql', 'fused') explode the probe side over its ring:
+The shuffle plans ('sql', 'fused') explode the probe side over its
+ring of a join grid and equi-join it with the cell-assigned particles:
 
-  halos --cell+ring explode--> (cell_id, halo_id, hx, hy, hz)   [27x rows]
+  halos --cell+ring explode--> (cell_id, halo_id, hx, hy, hz)   [~10x rows]
   particles --cell assign----> (cell_id, px, py, pz)            [1x rows]
   equi-join on cell_id  ==  the reference's MBR-overlap pruning
 
-* plan="sql": JVM-only — distance + binning as column expressions
-  inside whole-stage codegen, then groupBy(halo_id, shell).count().
-  Catalyst/AQE picks broadcast vs sort-merge; at cluster scale,
-  pre-bucketing the particle table by cell_id makes the big side
-  shuffle-free (see plans/pipeline.py).
-* plan="fused": bucketed cogroup Arrow kernel — candidate pairs never
-  materialize in the shuffle; each cell computes a numpy distance
-  matrix and emits per-(halo, shell) partial counts via np.bincount
-  (the analog of the reference's in-place ``counts[i]++`` fusion,
-  ``MultiRangeCount.c:110``).  Wins when pairs/cell is large.
+* plan="sql": JVM-only, on the fine ring-1 grid — distance + binning
+  as column expressions inside whole-stage codegen, then
+  groupBy(halo_id, shell).count().  Catalyst/AQE picks broadcast vs
+  sort-merge; at cluster scale, pre-bucketing the particle table by
+  cell_id makes the big side shuffle-free (see plans/pipeline.py).
+* plan="fused": the join grid is a few dozen coarse blocks (about
+  one copy per halo at small r_max), cogrouped on the block id; each
+  group runs the ring sweep below over its own particles and emits
+  per-(halo, shell) partial counts — candidate pairs never
+  materialize in the shuffle (the analog of the reference's in-place
+  ``counts[i]++`` fusion, ``MultiRangeCount.c:110``).
 
-The broadcast plans CSR-sort one side into a driver-built grid and
-stream the other past it through one numpy ring sweep (``_make_sweep``):
+Every plan but 'sql' runs one numpy ring sweep (``_make_sweep``): one
+side is CSR-sorted by cell key into a grid and the other streams past
+it.
 
 * plan="dgrid": the particle (data) grid is broadcast and halos
   stream — the reference's own architecture; no shuffle, no
   aggregation.
 * plan="bcast": the halo grid is broadcast and particles stream — the
   big table is never shuffled; a small final aggregation.
+* plan="fused": one particle grid per block, built inside its
+  cogroup group; nothing is broadcast.
 
 Output: long-form (halo_id, shell_idx, cnt), nonzero rows only — the
 dense (nhalos x nshells) matrix of the reference is a presentation
@@ -56,12 +62,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geometry import (
-    squared_distance_expr,
-    squared_distance_np,
-    squared_distance_sql,
-)
-from ..functions.shells import shell_index_expr, shell_index_np, squared_edges
+from ..functions.geometry import squared_distance_expr, squared_distance_sql
+from ..functions.shells import shell_index_expr, squared_edges
 from ..functions.sqltext import dlit, ident
 from .cells import explode_ring, grid_ncells, ring_offsets, with_cell  # noqa: F401
 
@@ -132,24 +134,35 @@ def _plan_grid(
     box: float,
     n_particles: int | None = None,
     ncells: int | None = None,
+    blocks_for: int | None = None,
 ) -> tuple[int, int]:
     """The one grid rule -> (cells per axis, ring depth k) for `plan`.
 
     Raises unless r_max < box/2, the precondition of the reference's
     subset-enumerated periodic search (``MultiRangeCount.c:13-73``,
-    SURVEY §2.11.5), and on a plan name outside ``_PLANS``.  An
-    explicit `ncells` wins; otherwise:
+    SURVEY §2.11.5), and on a plan name outside ``_PLANS``.  With
+    `blocks_for` (the session's parallelism), the grid is plan
+    'fused''s coarse cogroup blocks; otherwise an explicit `ncells`
+    wins, else:
 
-    * 'bcast'/'dgrid': cells of size r_max/2, probed ring-2.  Empty
-      cells are free in the CSR layout and the ring bookkeeping is a
-      few numpy ops per row inside the kernel, so the Euclidean prune's
-      ~2x cut in candidate pairs vs ring-1 is nearly free (measured,
-      BENCH/BASELINE.md).
-    * 'fused': ~128 particles/cell, capped at the ring-1 grid: the
-      kernel's per-CELL numpy dispatch and the halo-ring fanout
-      dominate on the fine grid (35.8 s at nc=78 vs 16.6 s at nc=36,
-      pinned reference shape); the distance-matrix kernel eats the
-      coarser grid's candidates at ~11M pairs/s/core instead.
+    * 'bcast'/'dgrid'/'fused' (the sweep plans): cells of size r_max/2,
+      probed ring-2.  Empty cells are free in the CSR layout and the
+      ring bookkeeping is a few numpy ops per row inside the kernel,
+      so the Euclidean prune's ~2x cut in candidate pairs vs ring-1 is
+      nearly free (measured, BENCH/BASELINE.md).
+    * 'fused' blocks: at least 3 per axis (the halo explode's prune
+      needs 2k+1), never narrower than r_max (a halo's ball touches a
+      27-block ring), and no fewer than two groups per core or than
+      one per ~1M particles.  Few big groups win because each group
+      pays the sweep's fixed cost (~4 ms): at 1.2M x 80k clustered
+      (warm ``local[4]``) 27 blocks took 7.9 CPU.s per call (median
+      of 3) against 8.4-9.4 at 64 and 125 blocks and 13.4 at 512; at
+      300k x 20k 27 and 64 tied.  Only the 3-per-axis floor set the
+      count in those runs (4 cores want 8 groups; 1.2M particles want
+      2).  The per-core floor (binds from 14 cores) and the ~1M cap
+      (binds from 27M particles) are reasoned, untested bounds: keep
+      every core busy, and keep one group's arrays well inside one
+      Python worker's memory.
     * 'sql' (and every other cell-grid join): the finest ring-1 grid,
       capped at cbrt(n_particles) so sparse data keeps occupancy ~1.
       Sub-r_max cells LOSE for a row-materializing join: each exploded
@@ -165,13 +178,14 @@ def _plan_grid(
     if plan not in _PLANS:
         raise ValueError(f"unknown plan {plan!r}: expected one of "
                          f"{', '.join(_PLANS)} or auto")
-    if ncells:
+    if blocks_for is not None:
+        want = max(2 * blocks_for, (n_particles or 0) / 1_000_000)
+        nc = min(max(3, math.ceil(want ** (1.0 / 3.0) - 1e-9)),
+                 grid_ncells(rmax, box))
+    elif ncells:
         nc = ncells
-    elif plan in ("bcast", "dgrid"):
+    elif plan in ("bcast", "dgrid", "fused"):
         nc = grid_ncells(rmax / 2, box)
-    elif plan == "fused":
-        nc = max(2, min(grid_ncells(rmax, box),
-                        round((n_particles / 128) ** (1.0 / 3.0))))
     else:
         nc = grid_ncells(rmax, box, n_hint=n_particles)
     return nc, max(1, math.ceil(rmax / (box / nc) - 1e-9))
@@ -202,7 +216,8 @@ def _prep(
     n_hint: int | None = None,
 ):
     """Ring-explode the halos and cell-assign the particles on the sql
-    grid (``_plan_grid``) -> (h, p, ncells, edges)."""
+    grid (``_plan_grid``; an explicit `ncells`, such as plan='fused''s
+    blocks, is the grid) -> (h, p, ncells, edges)."""
     edges = np.asarray(edges)
     rmax = float(edges[-1])
     nc, ring_k = _plan_grid("sql", rmax, box, n_hint, ncells)
@@ -220,29 +235,26 @@ def _prep(
     return h, p, nc, edges
 
 
-# CPU-pinned per-core cost model fitted to the measured regimes
-# (BENCH/BASELINE.md): the codegen join processes its (fine ring-1 grid)
-# candidates at ~2.5M pairs/s/core; the cogroup Arrow kernel runs ~4.5x
-# faster per pair (~11M) on its coarser 128-occupancy grid (more pairs)
-# plus ~2.4 us/core per row shipped through the cogroup (particles +
-# exploded halo-ring rows).  All four constants re-fit in round 4 after
-# the BUCKETED cogroup rewrite (see _fused_plan: per-cell groups ->
-# cell_id mod n_buckets groups dropped fused's per-row overhead from a
-# measured ~13 us to ~2.4 us — that 13 us was per-GROUP cogroup cost
-# amortized over tiny per-cell groups, not serialization), solving the
-# 2x2 system from the pinned ref-shape (rmax 12.77) and headline
-# (rmax 20) operating points at 6M x 600k.  Comparing each plan's own
-# work at its own rates predicts the winner in every measured regime; a
-# single pairs-per-core threshold does not.
+# Per-core cost model, each plan's own work at its own measured rates
+# (a single pairs-per-core threshold does not predict the winner).
+# sql: the codegen join's candidates on its fine ring-1 grid at ~2.5M
+# pairs/s/core plus ~2.3 us per exploded halo-ring row (shuffled +
+# hash-probed), fitted CPU-pinned in round 4 at 6M x 600k
+# (BENCH/BASELINE.md).  fused: the ring sweep's candidates on the
+# r_max/2 grid plus a per-row cost for every row shipped through the
+# cogroup (particles + halo block copies), fitted from warm calls at
+# 300k x 20k and 1.2M x 80k clustered (r_max 10, 40 shells, local[4]
+# on 4 vCPUs; 2.28M / 36.8M candidate pairs, 321k / 1.28M rows; medians
+# of 9 calls each): Python-worker CPU.s rose 0.94 -> 3.85 with the
+# pairs and JVM CPU.s 5.32 -> 7.98 with the rows.
 R_SQL_PAIRS_PER_CORE_SEC = 2.5e6
-R_FUSED_PAIRS_PER_CORE_SEC = 1.1e7
-A_FUSED_SEC_PER_ROW = 2.4e-6
-# per exploded halo-ring row (shuffled + hash-probed) on the sql plan
 A_SQL_SEC_PER_ROW = 2.3e-6
-# fused's fixed cost — Python-worker pool spinup + Arrow init, absent
-# from the pure-JVM sql plan (measured: small shape 600k x 60k rmax=20
-# pinned@4: sql 3.35s vs fused 4.58s, a ~1.2s wall gap the variable
-# terms don't explain).  Keeps tiny jobs on sql.
+R_FUSED_PAIRS_PER_CORE_SEC = 1.2e7
+A_FUSED_SEC_PER_ROW = 2.8e-6
+# fused's fixed cost per call (job and cogroup set-up, Python-worker
+# dispatch, Arrow init): the warm calls above leave ~5.1 CPU.s at both
+# shapes that neither rate explains, and a cold session pays the
+# worker pool spin-up on top.  Keeps small jobs on the pure-JVM sql.
 F_FUSED_FIXED_CORE_SEC = 5.0
 
 
@@ -271,13 +283,13 @@ def choose_plan(
     big table — at 100 TB (where the data side can't possibly fit)
     that dominates everything else.
 
-    Otherwise 'fused' vs 'sql' by estimated per-plan runtime.  Every
-    plan is priced on the grid it runs on (``_plan_grid``): the
-    broadcast offsets on the r_max/2 grid, sql on the finest
-    occupancy-capped ring-1 grid, fused on a ~128-particles/cell grid
-    that amortizes per-group Arrow overhead.  Estimated core-time =
-    that plan's candidate-pair volume / its measured per-core rate;
-    ties go to sql (lower fixed overhead, pure JVM).
+    Otherwise 'fused' vs 'sql' by estimated per-plan core-time, each
+    plan priced as it runs (``_plan_grid``): sql's candidate pairs on
+    its finest occupancy-capped ring-1 grid plus its exploded ring
+    rows; fused's candidate pairs on the sweep's r_max/2 grid plus the
+    rows its cogroup ships (particles + halo block copies, at the
+    fewest blocks — the copy count barely moves with parallelism) plus
+    its fixed Python-worker cost.  Ties go to sql (pure JVM).
     """
     from .cells import expected_ring_cells
 
@@ -293,7 +305,8 @@ def choose_plan(
         return "bcast"
 
     nc_sql, _ = _plan_grid("sql", rmax, box, n_particles, ncells)
-    nc_fused, _ = _plan_grid("fused", rmax, box, n_particles, ncells)
+    nc_sweep, _ = _plan_grid("fused", rmax, box, n_particles, ncells)
+    n_blocks, _ = _plan_grid("fused", rmax, box, n_particles, blocks_for=1)
 
     def ring(nc: int) -> float:
         return expected_ring_cells(rmax / (box / nc))  # Euclidean cell prune
@@ -306,8 +319,8 @@ def choose_plan(
         + n_halos * ring(nc_sql) * A_SQL_SEC_PER_ROW
     )
     t_fused = (
-        pairs(nc_fused) / R_FUSED_PAIRS_PER_CORE_SEC
-        + (n_particles + n_halos * ring(nc_fused)) * A_FUSED_SEC_PER_ROW
+        pairs(nc_sweep) / R_FUSED_PAIRS_PER_CORE_SEC
+        + (n_particles + n_halos * ring(n_blocks)) * A_FUSED_SEC_PER_ROW
         + F_FUSED_FIXED_CORE_SEC
     )
     return "sql" if t_sql <= t_fused else "fused"
@@ -335,32 +348,43 @@ def shell_count(
     weight_col: optional integer weight column on the particle side —
     the output gains `wsum long` = sum of weights per (halo, shell)
     (mass-weighted radial profiles, the natural generalization of the
-    reference's count-only A1).  Supported by the join plans
-    ('sql'/'fused'), which aggregate arbitrary expressions for free,
-    and by 'dgrid' (the broadcast data grid carries one int64 weight
-    per particle; the kernel bincounts weights alongside counts with
-    the same 2^53-exactness guard as the fused kernel).  'bcast'
+    reference's count-only A1).  Supported by 'sql', which aggregates
+    arbitrary expressions for free, and by the plans whose sweep grid
+    holds the particles, 'dgrid' and 'fused' (the grid carries one
+    int64 weight per particle; the kernel bincounts weights alongside
+    counts, exact while every partial sum stays under 2^53).  'bcast'
     raises: there the weight lives on the streamed side and its
     sort-reduce kernel ships unit counts only.  `plan='auto'` with a
     weight considers dgrid/sql/fused.  Keep weights integer for
     bit-exact cross-engine sums.
 
-    plan: 'sql' (codegen join), 'fused' (cogroup Arrow kernel),
+    plan: 'sql' (codegen join), 'fused' (cogroup of coarse blocks),
     'dgrid' (broadcast particle grid), 'bcast' (broadcast halo grid),
     or 'auto' — pick by estimated per-plan cost (choose_plan); any
     other name raises.  'auto' needs row counts: pass n_halos_est /
     n_particles_est (free if the caller tracks table stats, as any
     catalog/Iceberg metadata does) or one count() pre-job per missing
     side runs here — at cluster scale, always pass the estimates.
-    'fused' without `ncells` needs the particle count too (its grid
-    is occupancy-driven).
+    'fused' needs the particle count too (its block count is
+    occupancy-capped), so without n_particles_est it runs one count()
+    pre-job, even with an explicit `ncells`.
 
     ncells: cells per axis, overriding the plan's grid rule
-    (``_plan_grid``, which documents each plan's measured grid); the
-    ring depth always follows the grid, so any explicit grid is exact.
+    (``_plan_grid``, which documents each plan's measured grid; for
+    'fused' the sweep grid, not its blocks); the ring depth always
+    follows the grid, so any explicit grid is exact.
 
     salt_threshold: if set, run the dense-cell salting pre-pass
-    (apply_salting) so no hot cell serializes one reducer/task.
+    (apply_salting) on the shuffle plans' join key so no hot one
+    serializes one reducer/task.  The threshold counts particles per
+    join group: sql's cell, but fused's coarse block (~1/27 of the
+    data on 4 cores, ``_plan_grid``), so a threshold sized for cells
+    splits every fused block.  A split block sends all its halos to
+    each sub-key, and each sub-key pays the sweep's fixed cost: at
+    1.2M x 80k clustered (27 blocks of ~44k particles, warm
+    ``local[4]``, 3 calls each) fused took 8.4-11.5 CPU.s per call
+    unsalted, 14.6-18.3 at threshold 20000 (every block split in 3)
+    and 10.3-12.0 at 100000 (no split; the count pre-pass only).
     """
     edges = np.asarray(edges)
     rmax = float(edges[-1])
@@ -382,7 +406,7 @@ def shell_count(
             "materialize per-pair weights — use 'dgrid' when the data "
             "side fits the broadcast budget, else 'sql'/'fused')"
         )
-    if plan == "fused" and ncells is None:
+    if plan == "fused":
         n_est = n_est or particles.count()
     # the plan runs on the grid the cost model priced (ADVICE r2)
     nc, ring_k = _plan_grid(plan, rmax, box, n_est, ncells)
@@ -394,16 +418,20 @@ def shell_count(
         # no shuffle at all -> salting is moot
         return _bcast_plan(halos, particles, r2, box, dtype, id_col, nc,
                            h_coords, p_coords, ring_k)
+    join_nc = nc
+    if plan == "fused":  # joins on coarse blocks, sweeps on the nc grid
+        par = halos.sparkSession.sparkContext.defaultParallelism
+        join_nc, _ = _plan_grid(plan, rmax, box, n_est, blocks_for=par)
     h, p, _, _ = _prep(
-        halos, particles, edges, box, id_col, h_coords, p_coords, nc,
+        halos, particles, edges, box, id_col, h_coords, p_coords, join_nc,
         extra_p=(weight_col,) if weight_col else (),
     )
     join_key = "cell_id"
     if salt_threshold is not None:
         h, p, join_key = apply_salting(h, p, salt_threshold, max_salt)
     if plan == "fused":
-        return _fused_plan(h, p, r2, box, dtype, id_col, join_key,
-                           weight_col=weight_col)
+        return _fused_plan(h, p, r2, box, dtype, id_col, join_key, nc,
+                           ring_k, n_est, weight_col)
     wcols = [weight_col] if weight_col else []
     proj = _pairs_within(h.join(p, join_key), r2[-1], box, dtype, id_col, *wcols)
     aggs = [F.expr("count(1) AS cnt")]
@@ -418,132 +446,49 @@ def shell_count(
     )
 
 
-def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str = "cell_id",
+def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str, ncells: int,
+                ring_k: int, n_particles: int,
                 weight_col: str | None = None) -> DataFrame:
-    """Cogroup Arrow kernel, bucketed.
+    """Coarse-block cogroup on the shared ring sweep.
 
-    Cogrouping per CELL was the round-3 shape; per-group Python/Arrow
-    overhead (a few ms x one group per cell) dominated at production
-    grids (~27k cells -> fused 85.5s where sql ran 23.9s at the ref
-    shape, BENCH/BASELINE.md).  Round 4: cogroup on `cell_id mod
-    n_buckets` (a few hundred groups regardless of grid size) and
-    segment per cell INSIDE the kernel — both sides sorted by cell key,
-    searchsorted block boundaries, the same chunked distance-matrix
-    kernel per common cell.  Pair math, f32 discipline and counting
-    semantics are unchanged; only the grouping granularity moved, so
-    all goldens/oracles are invariant.  Composes with salting: the
-    salted key is cell_id*max_salt+salt, so pmod spreads a hot cell's
-    sub-keys across consecutive buckets.
+    `h`/`p` come from ``_prep`` on the block grid: every particle in
+    exactly one block, every halo copied to each block its r_max ball
+    touches (the Euclidean-pruned ring explode, wrap included).  Each
+    cogroup group CSR-indexes its block's particles by their global
+    cell key on the sweep grid (`ncells`, ring `ring_k`) and streams
+    its halos through ``_make_sweep`` into ``_probe_counts`` — the
+    kernel and accumulator of plan='dgrid'.  A pair is found only in
+    its particle's block, so the blocks partition the pair set
+    exactly; pairs across the box wrap take the sweep's fold path.
+    Each group emits partial (halo, shell) counts and one final
+    aggregation sums them.  Salting splits a hot block's particles
+    over sub-keys, every one of which receives the block's halos.
     """
     np_dtype = np.float32 if dtype == "float32" else np.float64
     r2k = np.asarray(r2, dtype=np_dtype)
-    nr = len(r2k)
-    bx = np_dtype(box)
-    out_cols = [id_col, "shell_idx", "cnt"] + (["wsum"] if weight_col else [])
-    try:
-        # the conf may be 'auto' under AQE-managed deployments
-        conf_parts = int(
-            h.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    except ValueError:
-        conf_parts = 256
-    n_buckets = max(256, conf_parts)
+    sweep = _make_sweep(ncells, box, ring_k, r2, np_dtype, n_particles)
 
-    def _empty():
-        return pd.DataFrame({c: [] for c in out_cols}).astype(
-            {c: ("int32" if c == "shell_idx" else "int64")
-             for c in out_cols}
-        )
-
-    def kern(left: pd.DataFrame, right: pd.DataFrame):
-        if len(left) == 0 or len(right) == 0:
-            return _empty()
-        hkey = left[join_key].to_numpy(np.int64)
-        pkey = right[join_key].to_numpy(np.int64)
-        # introsort, NOT stable: per-(id, shell) integer counts are
-        # invariant to row order within a cell block
-        ho = np.argsort(hkey)
-        po = np.argsort(pkey)
-        hkey = hkey[ho]
-        pkey = pkey[po]
-        H = left[list(_H)].to_numpy(np_dtype)[ho]
-        ids = left[id_col].to_numpy(np.int64)[ho]
-        P = right[list(_P)].to_numpy(np_dtype)[po]
-        if weight_col:
-            w = right[weight_col].to_numpy(np.int64)[po]
-        # exploded halo-ring rows repeat ids across cells: factorize once
-        # per bucket so the accumulator is (distinct ids x shells)
-        uids, id_idx = np.unique(ids, return_inverse=True)
-        uc = np.intersect1d(
-            hkey[np.r_[True, hkey[1:] != hkey[:-1]]],
-            pkey[np.r_[True, pkey[1:] != pkey[:-1]]],
-        )
-        if len(uc) == 0:
-            return _empty()
-        hs = np.searchsorted(hkey, uc, "left")
-        he = np.searchsorted(hkey, uc, "right")
-        ps = np.searchsorted(pkey, uc, "left")
-        pe = np.searchsorted(pkey, uc, "right")
-        key_chunks: list[np.ndarray] = []
-        w_chunks: list[np.ndarray] = []
-        for i in range(len(uc)):
-            PP = P[ps[i] : pe[i]]
-            n = len(PP)
-            HH_all = H[hs[i] : he[i]]
-            hloc_all = id_idx[hs[i] : he[i]]
-            # chunk the halo side so the (chunk x n) matrix stays small
-            chunk = max(1, 4_000_000 // max(n, 1))
-            for s in range(0, len(HH_all), chunk):
-                HH = HH_all[s : s + chunk]
-                d2 = squared_distance_np(HH, PP, box=float(bx))
-                sh = shell_index_np(d2.ravel(), r2k)
-                kidx = np.nonzero(sh < nr)[0]
-                if len(kidx) == 0:
-                    continue
-                hloc = hloc_all[s : s + len(HH)][kidx // n]
-                key_chunks.append(hloc * nr + sh[kidx])
-                if weight_col:
-                    # surviving pair -> its particle (flat pair % n)
-                    w_chunks.append(w[ps[i] : pe[i]][kidx % n])
-        if not key_chunks:
-            return _empty()
-        keys = np.concatenate(key_chunks)
-        acc = np.bincount(keys, minlength=len(uids) * nr)
-        if weight_col:
-            wk = np.concatenate(w_chunks)
-            if np.abs(wk).sum() < 2.0**53:
-                # bincount's f64 partial sums are exact while every
-                # intermediate stays under 2^53 — guaranteed by sum|w|
-                # over the bucket — and ~10x faster than the scatter
-                accw = np.bincount(
-                    keys, weights=wk, minlength=len(uids) * nr
-                ).astype(np.int64)
-            else:  # astronomically heavy bucket: exact fallback
-                accw = np.zeros(len(uids) * nr, dtype=np.int64)
-                np.add.at(accw, keys, wk)
-        nz = np.nonzero(acc)[0]
-        cols = {
-            id_col: uids[nz // nr],
-            "shell_idx": (nz % nr).astype(np.int32),
-            "cnt": acc[nz],
-        }
-        if weight_col:
-            cols["wsum"] = accw[nz]
-        return pd.DataFrame(cols)
+    def kern(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if left.empty or right.empty:
+            return pd.DataFrame()  # a block holding one side only
+        P64 = right[list(_P)].to_numpy(np.float64)
+        pc = _cell_index(P64, ncells, box)
+        grid = _csr_grid(
+            (pc[:, 0] * ncells + pc[:, 1]) * ncells + pc[:, 2], P64.T,
+            ncells, np_dtype, n_probes=len(left),
+            W=right[weight_col].to_numpy() if weight_col else None)
+        return _probe_counts(sweep, grid, left, id_col, r2k)
 
     schema = f"{ident(id_col)} long, shell_idx int, cnt long" + (
         ", wsum long" if weight_col else ""
     )
     key = ident(join_key)
-    bkt = f"CAST(pmod({key}, {n_buckets}) AS INT) AS _bkt"
-    hsel = [ident(id_col), *_H, key, bkt]
-    psel = [*_P, key, bkt] + ([ident(weight_col)] if weight_col else [])
+    psel = [*_P, key] + ([ident(weight_col)] if weight_col else [])
     out = (
-        h.selectExpr(*hsel)
-        .groupBy("_bkt")
-        .cogroup(p.selectExpr(*psel).groupBy("_bkt"))
+        h.selectExpr(ident(id_col), *_H, key).groupBy(join_key)
+        .cogroup(p.selectExpr(*psel).groupBy(join_key))
         .applyInPandas(kern, schema=schema)
     )
-    # per-cell partials -> final agg (the map-side-combine analog)
     aggs = [F.expr("sum(cnt) AS cnt")]
     if weight_col:
         aggs.append(F.expr("sum(wsum) AS wsum"))
@@ -590,13 +535,36 @@ def _build_grid(
     return side.sparkSession.sparkContext.broadcast(payload), n
 
 
-def _csr_grid(key, xyz, nc: int, np_dtype, ids=None, W=None) -> dict:
-    """Sort rows by cell key into the broadcast grid payload: coords
-    Hx/Hy/Hz (np_dtype), optional ids/W (int64), and dense CSR offsets
-    ``starts`` over the nc^3 grid when it fits (64 MB int32 at 16M
-    cells), else the sorted ``keys`` for a searchsorted lookup — never
-    both: with dense offsets the kernels never touch the keys, and
-    dropping them cuts the broadcast ~35%."""
+def _cell_index(xyz64: np.ndarray, nc: int, box: float) -> np.ndarray:
+    """(n, 3) float64 coords -> (n, 3) int64 cell indices on the grid
+    of nc cells per axis: ``with_cell``'s f64 floor(x / cs), clamped
+    to the box the same way, so a row lands in the same cell in the
+    kernels as in the SQL cell keys."""
+    return np.clip(np.floor(xyz64 / (box / nc)), 0, nc - 1).astype(np.int64)
+
+
+def _csr_grid(key, xyz, nc: int, np_dtype, ids=None, W=None,
+              n_probes: int | None = None) -> dict:
+    """Sort rows by cell key into a sweep grid payload: coords Hx/Hy/Hz
+    (np_dtype), optional ids/W (int64), and one CSR index — dense
+    offsets ``starts`` over the nc^3 grid, else the sorted ``keys``
+    (8 B per row) for a searchsorted lookup.  Never both: with dense
+    offsets the kernels never touch the keys, and dropping them cuts
+    the broadcast ~35%.
+
+    Dense while nc^3 <= 16M and, when the grid serves a known number
+    of probe rows (`n_probes`: one fused group's halos), while nc^3 <=
+    512 x n_probes.  The offsets cost ~11 ns per cell to build; the
+    keys cost ~7 us more per probe row (two searchsorted per z-stripe).
+    Driver-only numpy replay on 4 vCPUs, 300k x 20k clustered (seed
+    1003), r_max 10, 200^3 cells, CPU.s over 3 alternated runs: bcast's
+    20k-halo grid streaming 300k particles, dense 0.94-1.02 vs keys
+    2.99-3.11; dgrid's 300k-particle grid streaming 20k halos, dense
+    0.43-0.57 vs keys 0.53-0.55; fused's 27 blocks, dense 4.02-4.28 vs
+    keys 1.51-1.57 (at 1.2M x 80k one block's ~44k particles and ~3.1k
+    halos take 0.16-0.20 s dense vs 0.09-0.12 s keys).  So a broadcast
+    grid, which a whole table streams past, keeps dense offsets, and
+    a fused block never allocates nc^3 of them."""
     n = len(key)
     # introsort, NOT stable: every kernel output is a per-id integer
     # count, invariant to row order within a cell, and default argsort
@@ -610,7 +578,7 @@ def _csr_grid(key, xyz, nc: int, np_dtype, ids=None, W=None) -> dict:
         payload["ids"] = ids.astype(np.int64, copy=False)[order]
     if W is not None:
         payload["W"] = W.astype(np.int64, copy=False)[order]
-    if nc**3 <= 16_000_000:
+    if nc**3 <= 16_000_000 and (n_probes is None or nc**3 <= 512 * n_probes):
         counts = np.bincount(key, minlength=nc**3)
         payload["starts"] = np.concatenate(([0], np.cumsum(counts))).astype(
             np.int32 if n < 2**31 else np.int64
@@ -657,9 +625,6 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
       of the row and one of the CSR base per pair, flat ``np.take``
       gathers of three contiguous f32 coord arrays, f32-safe
       (dx2+dy2)+dz2.
-
-    SJCS_KERN_PROF=1 prints one JSON line per call to stderr (rows,
-    segments, candidate pairs, thread CPU).
     """
     cs = box / nc
     kk = ring_k
@@ -711,10 +676,6 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
         return G
 
     def sweep(grid, P64):
-        import os
-        import time
-
-        cpu0 = time.thread_time()
         X, Y, Z = grid["Hx"], grid["Hy"], grid["Hz"]  # grid-side coords
         starts, keys = grid.get("starts"), grid.get("keys")
 
@@ -759,14 +720,13 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
 
         P = P64.astype(np_dtype)
         Px, Py, Pz = (np.ascontiguousarray(P[:, a]) for a in range(3))
-        pc = np.clip(np.floor(P64 / cs), 0, nc - 1).astype(np.int64)
+        pc = _cell_index(P64, nc, box)
         if fastpath_ok:
             inner = ((pc >= kk) & (pc <= nc - 1 - kk)).all(axis=1)
             parts = [(np.flatnonzero(inner), False),
                      (np.flatnonzero(~inner), True)]
         else:
             parts = [(np.arange(len(P64)), True)]
-        n_seg = n_pairs = 0
         for rows, fold in parts:
             if len(rows) == 0:
                 continue
@@ -782,8 +742,6 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
             lo = LO.T.ravel()[seg]
             srow = rows[seg // len(LO)].astype(np.int32)
             cum = np.cumsum(cn)
-            n_seg += len(seg)
-            n_pairs += int(cum[-1])
             s0, base = 0, 0
             while s0 < len(seg):
                 s1 = max(int(np.searchsorted(cum, base + _SWEEP_CHUNK, "right")),
@@ -813,16 +771,48 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
                 if len(k):
                     yield row[k], gidx[k], d2[k]
                 base, s0 = int(cum[s1 - 1]), s1
-        if os.environ.get("SJCS_KERN_PROF") == "1":
-            import json
-            import sys
-
-            print("SJCS_KERN_PROF " + json.dumps({
-                "rows": len(P64), "segments": n_seg, "pairs": n_pairs,
-                "cpu_s": round(time.thread_time() - cpu0, 4)}),
-                file=sys.stderr, flush=True)
 
     return sweep
+
+
+def _probe_counts(sweep, grid, probes: pd.DataFrame, id_col: str,
+                  r2k: np.ndarray) -> pd.DataFrame:
+    """Stream `probes` (``_H`` coords and `id_col`) through `sweep` over
+    a particle `grid` -> their nonzero (id_col, shell_idx, cnt[, wsum])
+    rows, wsum when the grid carries weights ``W``.
+
+    Counts accumulate into one dense (probes x nshells) array.  Pairs
+    come back in ~256k-pair chunks laid out probe-major, so each chunk
+    covers a short run of probes and is counted with one small bincount
+    over that run's slice (weights: a second bincount of the per-pair
+    particle weights, exact while every partial stays under 2^53)."""
+    nr = len(r2k)
+    W = grid.get("W")
+    acc = np.zeros(len(probes) * nr, dtype=np.int64)
+    accw = np.zeros_like(acc) if W is not None else None
+    for row, gidx, d2 in sweep(grid, probes[list(_H)].to_numpy(np.float64)):
+        # rows are sorted within a chunk: count into its slice
+        r0 = int(row[0])
+        sl = slice(r0 * nr, (int(row[-1]) + 1) * nr)
+        keys = (row - r0) * nr + np.searchsorted(r2k, d2, side="right")
+        acc[sl] += np.bincount(keys, minlength=sl.stop - sl.start)
+        if accw is not None:
+            wk = W[gidx]
+            if np.abs(wk).sum() < 2.0**53:
+                accw[sl] += np.bincount(
+                    keys, weights=wk, minlength=sl.stop - sl.start
+                ).astype(np.int64)
+            else:
+                np.add.at(accw[sl], keys, wk)
+    nz = np.nonzero(acc)[0]
+    cols = {
+        id_col: probes[id_col].to_numpy(np.int64)[nz // nr],
+        "shell_idx": (nz % nr).astype(np.int32),
+        "cnt": acc[nz],
+    }
+    if accw is not None:
+        cols["wsum"] = accw[nz]
+    return pd.DataFrame(cols)
 
 
 def _bcast_plan(
@@ -859,7 +849,7 @@ def _bcast_plan(
     volume shrinks from the (3*rmax)^3 ring-1 cube toward the ball
     volume plus one cell-width shell — the closest Spark-shaped analog
     of the reference tree's tight MBR descent.  Numerics are identical
-    to the fused kernel (f32-safe (dx2+dy2)+dz2, strict-< first-match
+    to the other plans' (f32-safe (dx2+dy2)+dz2, strict-< first-match
     searchsorted binning), so the byte-exact golden tests hold for this
     plan too.
 
@@ -975,14 +965,11 @@ def _dgrid_plan(
       'bcast' wall time at the reference-matched shape).
 
     Kernel hot-path design: the ring sweep is ``_make_sweep``, shared
-    with plan='bcast': an interior probe visits (2k+1)^2 z-stripes,
-    each one contiguous CSR range of particles, instead of (2k+1)^3
-    cells; boundary probes take the per-cell wrapped pass.  Pairs come
-    back in ~256k-pair chunks laid out probe-major, so each chunk
-    covers a short run of probes and is counted with one small
-    bincount over that run's ``(probe, shell)`` slice of the batch
-    accumulator (weights: a second bincount of the per-pair particle
-    weights, exact while every partial stays under 2^53).
+    with plans 'bcast' and 'fused': an interior probe visits (2k+1)^2
+    z-stripes, each one contiguous CSR range of particles, instead of
+    (2k+1)^3 cells; boundary probes take the per-cell wrapped pass.
+    Each Arrow batch of probes is counted by ``_probe_counts``, shared
+    with plan='fused'.
 
     Scale envelope: the DATA side must fit executor memory (16-20 B/
     particle; the reference's own published run holds 3x100M particles
@@ -996,42 +983,14 @@ def _dgrid_plan(
     bc, n_data = _build_grid(particles, p_coords, None, ncells, box, np_dtype,
                              weight_col=weight_col)
     r2k = np.asarray(r2, dtype=np_dtype)
-    nr = len(r2k)
     sweep = _make_sweep(ncells, box, ring_k, r2, np_dtype, n_data)
 
     def kern(batches):
         data = bc.value
-        W = data.get("W")
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            acc = np.zeros(n * nr, dtype=np.int64)
-            accw = np.zeros(n * nr, dtype=np.int64) if W is not None else None
-            for row, gidx, d2 in sweep(data, pdf[list(_H)].to_numpy(np.float64)):
-                # rows are sorted within a chunk: count into its slice
-                r0 = int(row[0])
-                sl = slice(r0 * nr, (int(row[-1]) + 1) * nr)
-                keys = (row - r0) * nr + np.searchsorted(r2k, d2, side="right")
-                acc[sl] += np.bincount(keys, minlength=sl.stop - sl.start)
-                if accw is not None:
-                    wk = W[gidx]
-                    if np.abs(wk).sum() < 2.0**53:
-                        accw[sl] += np.bincount(
-                            keys, weights=wk, minlength=sl.stop - sl.start
-                        ).astype(np.int64)
-                    else:
-                        np.add.at(accw[sl], keys, wk)
-            nz = np.nonzero(acc)[0]
-            if len(nz):
-                out_cols = {
-                    id_col: pdf[id_col].to_numpy(np.int64)[nz // nr],
-                    "shell_idx": (nz % nr).astype(np.int32),
-                    "cnt": acc[nz],
-                }
-                if accw is not None:
-                    out_cols["wsum"] = accw[nz]
-                yield pd.DataFrame(out_cols)
+            out = _probe_counts(sweep, data, pdf, id_col, r2k)
+            if len(out):
+                yield out
 
     probes = halos.select(
         F.col(id_col), *[F.col(c).alias(a) for c, a in zip(h_coords, _H)]

@@ -110,6 +110,22 @@ def test_sweep_pairs_equal_brute_force(case, chunk, monkeypatch):
     assert got["d2"].to_numpy().tobytes() == d2[hi, pi].tobytes()
 
 
+def test_csr_layout_follows_probe_count():
+    """Dense CSR offsets for a broadcast grid (a whole table streams
+    past it): shells_ref's 1M-particle grid on 86^3 cells and the
+    shuffle shape's 20k-halo bcast grid on 200^3.  A fused group (10k
+    particles on the 200^3 grid of r_max 10) keeps them only while
+    nc^3 <= 512 x its probe rows: sorted keys for 3k probes, dense
+    offsets for 20k."""
+    for n, nc, n_probes, layout in ((1_000_000, 86, None, "starts"),
+                                    (20_000, 200, None, "starts"),
+                                    (10_000, 200, 3_000, "keys"),
+                                    (10_000, 200, 20_000, "starts")):
+        grid = _csr_grid(np.zeros(n, np.int64), np.zeros((3, n)), nc,
+                         np.float32, n_probes=n_probes)
+        assert set(grid) & {"starts", "keys"} == {layout}
+
+
 def _frames(spark, H, P, w):
     halos = spark.createDataFrame(pd.DataFrame({
         "halo_id": np.arange(len(H), dtype=np.int64),

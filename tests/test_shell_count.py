@@ -140,11 +140,14 @@ def test_choose_plan_measured_regimes():
     # data too big, probe side fits: bcast — never shuffles the big
     # table (ref scale: 10M probes vs 300M particles)
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0) == "bcast"
-    # beyond the budget: the measured sql/fused operating points after
-    # the round-4 bucketed-cogroup rewrite (pinned@4: sf0.1 rmax=20:
-    # sql 3.35 vs fused 4.58 — fused's fixed Python-worker spinup loses
-    # tiny jobs; sf1 rmax=20: sql 67.0 vs fused 30.6; ref-shape
-    # rmax=12.77: sql 23.9 vs fused 18.2)
+    # beyond the budget: fused's ~5 CPU.s fixed cost per call keeps
+    # small jobs on sql, and at 6M x 600k the sweep's pairs on the
+    # r_max/2 grid (12M/s) beat sql's ring-1 pairs (2.5M/s).  The same
+    # winners were measured in round 4 with fused's old per-cell
+    # kernel (pinned@4: sf0.1 rmax=20: sql 3.35 vs fused 4.58; sf1
+    # rmax=20: sql 67.0 vs fused 30.6; ref-shape rmax=12.77: sql 23.9
+    # vs fused 18.2), which the block plan beats by 1.3-1.5x in warm
+    # CPU.s (300k x 20k and 1.2M x 80k clustered)
     assert choose_plan(60_000, 600_000, rmax=20.0, max_broadcast_bytes=0) == "sql"
     assert choose_plan(600_000, 6_000_000, rmax=20.0, max_broadcast_bytes=0) == "fused"
     assert choose_plan(600_000, 6_000_000, rmax=12.77, max_broadcast_bytes=0) == "fused"
@@ -196,47 +199,92 @@ def test_self_join_autocorr_counts(spark):
     assert dense.tolist() == want.tolist()
 
 
+def _block_edge_points(rng, nb: int, rmax: float):
+    """Halos within r_max of a face, an edge or a corner of plan
+    'fused''s nb-per-axis block grid, five of each inside the box and
+    five across its periodic wrap, with particles scattered within
+    r_max of every halo; the last halo sits in a hot block of 400 more
+    particles."""
+    bs = 1000.0 / nb
+    H = []
+    for n_axes in (1, 2, 3):  # face, edge, corner
+        for wrap in (False, True):
+            for _ in range(5):
+                h = (rng.integers(0, nb, 3) + 0.5) * bs  # a block centre
+                ax = rng.choice(3, n_axes, replace=False)
+                face = 0 if wrap else rng.integers(1, nb, n_axes)
+                h[ax] = face * bs + rng.choice([-1.0, 1.0], n_axes) * rng.uniform(
+                    0.5, 0.9 * rmax, n_axes)
+                H.append(h % 1000.0)
+    H.append(np.full(3, 1.5 * bs))
+    H = np.array(H)
+    near = np.repeat(H, 20, axis=0) + rng.uniform(-rmax, rmax, (20 * len(H), 3))
+    hot = H[-1] + rng.normal(0, rmax / 4, (400, 3))
+    return H, np.vstack([near, hot]) % 1000.0
+
+
 @pytest.mark.parametrize("plan", ["sql", "fused", "dgrid"])
 def test_weighted_shell_sums(spark, plan):
     """weight_col: per-(halo, shell) integer weight sums (mass-weighted
     radial profiles) match a float64 min-image brute force exactly, and
-    cnt stays identical to the unweighted run."""
+    cnt stays identical to the unweighted run.  Two inputs: uniform
+    points, and halos at the faces, edges and corners of fused's
+    blocks (>= 3 per axis) inside the box and across its wrap, with a
+    hot block that the shuffle plans also run salted (sql salts its
+    cells, fused its blocks)."""
+    from spatialjoincountovershells_spark.operators.shell_count import _plan_grid
+
     rng = np.random.default_rng(8)
     H = rng.uniform(0, 1000.0, size=(60, 3))
     P = rng.uniform(0, 1000.0, size=(500, 3))
-    w = rng.integers(0, 1000, size=500)
-    edges = logspace_edges(30.0, 240.0, 4)
-    r2 = squared_edges(edges).astype(np.float64)
-    # float64 min-image brute force with exact integer weight sums
-    d = np.abs(H[:, None, :] - P[None, :, :])
-    d = np.minimum(d, 1000.0 - d)
-    d2 = (d[..., 0] * d[..., 0] + d[..., 1] * d[..., 1]) + d[..., 2] * d[..., 2]
-    sh = np.searchsorted(r2, d2.ravel(), side="right").reshape(len(H), len(P))
-    want_c = np.zeros((len(H), len(r2)), dtype=np.int64)
-    want_w = np.zeros((len(H), len(r2)), dtype=np.int64)
-    for hi in range(len(H)):
-        for pi in range(len(P)):
-            s = sh[hi, pi]
-            if s < len(r2):
-                want_c[hi, s] += 1
-                want_w[hi, s] += w[pi]
-    halos = spark.createDataFrame(
-        [(i, float(x), float(y), float(z)) for i, (x, y, z) in enumerate(H)],
-        "halo_id long, x double, y double, z double",
-    )
-    parts = spark.createDataFrame(
-        [(float(x), float(y), float(z), int(wi)) for (x, y, z), wi in zip(P, w)],
-        "x double, y double, z double, w long",
-    )
-    got = shell_count(halos, parts, edges, dtype="float64", plan=plan,
-                      id_col="halo_id", weight_col="w")
-    gc = np.zeros_like(want_c)
-    gw = np.zeros_like(want_w)
-    for r in got.collect():
-        gc[r.halo_id, r.shell_idx] = r.cnt
-        gw[r.halo_id, r.shell_idx] = r.wsum
-    assert gc.tolist() == want_c.tolist()
-    assert gw.tolist() == want_w.tolist()
+    cases = [(H, P, rng.integers(0, 1000, size=len(P)),
+              logspace_edges(30.0, 240.0, 4), [None])]
+    nb, _ = _plan_grid("fused", 40.0, 1000.0, 1000,
+                       blocks_for=spark.sparkContext.defaultParallelism)
+    assert nb >= 3
+    H, P = _block_edge_points(rng, nb, 40.0)
+    cases.append((H, P, rng.integers(0, 1000, size=len(P)),
+                  logspace_edges(2.0, 40.0, 4),
+                  [None] if plan == "dgrid" else [None, 50]))
+    for H, P, w, edges, salts in cases:
+        r2 = squared_edges(edges).astype(np.float64)
+        # float64 min-image brute force with exact integer weight sums
+        d = np.abs(H[:, None, :] - P[None, :, :])
+        d = np.minimum(d, 1000.0 - d)
+        d2 = (d[..., 0] * d[..., 0] + d[..., 1] * d[..., 1]) + d[..., 2] * d[..., 2]
+        sh = np.searchsorted(r2, d2.ravel(), side="right").reshape(len(H), len(P))
+        # in-range pairs really cross block faces, and the box wrap
+        near = sh < len(r2)
+        blk = np.floor(H / (1000.0 / nb))[:, None] != np.floor(P / (1000.0 / nb))
+        assert (near & blk.any(axis=-1)).any()
+        assert (near & (np.abs(H[:, None] - P) > 500.0).any(axis=-1)).any()
+        want_c = np.zeros((len(H), len(r2)), dtype=np.int64)
+        want_w = np.zeros((len(H), len(r2)), dtype=np.int64)
+        for hi in range(len(H)):
+            for pi in range(len(P)):
+                s = sh[hi, pi]
+                if s < len(r2):
+                    want_c[hi, s] += 1
+                    want_w[hi, s] += w[pi]
+        halos = spark.createDataFrame(
+            [(i, float(x), float(y), float(z)) for i, (x, y, z) in enumerate(H)],
+            "halo_id long, x double, y double, z double",
+        )
+        parts = spark.createDataFrame(
+            [(float(x), float(y), float(z), int(wi)) for (x, y, z), wi in zip(P, w)],
+            "x double, y double, z double, w long",
+        )
+        for salt in salts:
+            got = shell_count(halos, parts, edges, dtype="float64", plan=plan,
+                              id_col="halo_id", weight_col="w",
+                              salt_threshold=salt, max_salt=8)
+            gc = np.zeros_like(want_c)
+            gw = np.zeros_like(want_w)
+            for r in got.collect():
+                gc[r.halo_id, r.shell_idx] = r.cnt
+                gw[r.halo_id, r.shell_idx] = r.wsum
+            assert gc.tolist() == want_c.tolist(), salt
+            assert gw.tolist() == want_w.tolist(), salt
 
 
 def test_weight_col_rejected_on_bcast_plan(spark):
