@@ -203,19 +203,22 @@ def _nn_min_kernel_cnt(
 ) -> DataFrame:
     """dgrid-shaped 1-NN pass: broadcast the CSR cell grid of the DATA
     side (with ids when self_mode, for identity exclusion), stream the
-    probe table through mapInPandas and take each probe's minimum over
+    probe table through mapInArrow and take each probe's minimum over
     the in-range pairs of shell_count's ring sweep (``_make_sweep``,
-    ring-1) — each batch emits only per-shell PARTIAL COUNTS (<=
-    nshells rows), so candidate pairs never leave the task.
+    ring-1; each batch streams in the grid's cell-key order, its probe
+    ids permuted with it) — each batch emits only per-shell PARTIAL
+    COUNTS (<= nshells rows), so candidate pairs never leave the task.
     -> (shell_idx int, _n long) partials; caller sums.
 
     Same broadcast envelope, cell arithmetic (with_cell f64 floor) and
-    strict-< searchsorted binning as shell_count's dgrid plan; distances
-    in np_dtype with the (dx2+dy2)+dz2 order and min-image fold, so
-    results are bit-equal to the sql-plan expression tree."""
-    import pandas as pd
+    strict-< first-match binning (``shell_binner``) as shell_count's
+    dgrid plan; distances in np_dtype with the (dx2+dy2)+dz2 order and
+    min-image fold, so results are bit-equal to the sql-plan expression
+    tree."""
+    import pyarrow as pa
 
-    from .shell_count import _H, _build_grid, _make_sweep
+    from ..functions.shells import shell_binner
+    from .shell_count import _H, _arrow_xyz, _build_grid, _make_sweep
 
     id_arg = "_did" if self_mode else None
     bc, n_data = _build_grid(
@@ -228,13 +231,17 @@ def _nn_min_kernel_cnt(
     def kern(batches):
         g = bc.value
         dids = g.get("ids")
-        for pdf in batches:
-            n = len(pdf)
+        bin_ = shell_binner(r2k)
+        for batch in batches:
+            n = batch.num_rows
             if n == 0:
                 continue
-            qids = (pdf["_qid"].to_numpy(np.int64) if self_mode else None)
+            P64 = _arrow_xyz(batch, _H)
+            order = sweep.cell_order(P64)
+            qids = (np.asarray(batch.column("_qid"))[order] if self_mode
+                    else None)
             accmin = np.full(n, np.inf)
-            for row, gidx, d2 in sweep(g, pdf[list(_H)].to_numpy(np.float64)):
+            for row, gidx, d2 in sweep(g, P64[order]):
                 d2 = d2.astype(np.float64)
                 if self_mode:
                     d2[dids[gidx] == qids[row]] = np.inf
@@ -245,17 +252,15 @@ def _nn_min_kernel_cnt(
             found = accmin < r2k[-1]
             if not found.any():
                 continue
-            sh = np.searchsorted(r2k, accmin[found], side="right")
-            counts = np.bincount(sh, minlength=nr)
+            counts = np.bincount(bin_(accmin[found]), minlength=nr)
             nz = np.nonzero(counts)[0]
-            yield pd.DataFrame(
-                {"shell_idx": nz.astype(np.int32), "_n": counts[nz]}
-            )
+            yield pa.record_batch([nz.astype(np.int32), counts[nz]],
+                                  names=["shell_idx", "_n"])
 
     par = probe.sparkSession.sparkContext.defaultParallelism
     if probe.rdd.getNumPartitions() < par:
         probe = probe.repartition(par)
-    part = probe.mapInPandas(kern, schema="shell_idx int, _n long")
+    part = probe.mapInArrow(kern, schema="shell_idx int, _n long")
     return part.groupBy("shell_idx").agg(F.sum("_n").alias("_n"))
 
 

@@ -37,7 +37,9 @@ ring of a join grid and equi-join it with the cell-assigned particles:
 
 Every plan but 'sql' runs one numpy ring sweep (``_make_sweep``): one
 side is CSR-sorted by cell key into a grid and the other streams past
-it.
+it as Arrow record batches, each put in the grid's cell-key order
+first, and every pair is binned by one exact lookup-table binner
+(``functions/shells.shell_binner``).
 
 * plan="dgrid": the particle (data) grid is broadcast and halos
   stream — the reference's own architecture; no shuffle, no
@@ -56,14 +58,15 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterable
+from urllib.parse import unquote, urlparse
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geometry import squared_distance_expr, squared_distance_sql
-from ..functions.shells import shell_index_expr, squared_edges
+from ..functions.shells import shell_binner, shell_index_expr, squared_edges
 from ..functions.sqltext import dlit, ident
 from .cells import explode_ring, grid_ncells, ring_offsets, with_cell  # noqa: F401
 
@@ -258,6 +261,41 @@ A_FUSED_SEC_PER_ROW = 2.8e-6
 F_FUSED_FIXED_CORE_SEC = 5.0
 
 
+def _row_bound(df: DataFrame) -> int:
+    """An upper bound on ``df.count()``, without a Spark job when it can.
+
+    When no node of the optimized plan can add rows — a parquet file
+    relation under projects and filters only — the bound is the sum of
+    the parquet footers' ``num_rows`` over ``df.inputFiles()``, read by
+    pyarrow on the driver (a few ms for a few files; exact with no
+    filter).  Any other node (an explode, a join, an in-memory or
+    non-parquet source, a non-local file) falls back to ``count()``,
+    which runs the full-scan job."""
+    import pyarrow.parquet as pq
+
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "LogicalRelation":
+            rel = node.relation()
+            if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+                    or rel.fileFormat().getClass().getSimpleName()
+                    != "ParquetFileFormat"):
+                return df.count()
+        elif kind not in ("Project", "Filter"):
+            return df.count()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    paths = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        if u.scheme not in ("", "file"):
+            return df.count()
+        paths.append(unquote(u.path))
+    return sum(pq.read_metadata(f).num_rows for f in paths)
+
+
 def choose_plan(
     n_halos: int,
     n_particles: int,
@@ -363,11 +401,13 @@ def shell_count(
     or 'auto' — pick by estimated per-plan cost (choose_plan); any
     other name raises.  'auto' needs row counts: pass n_halos_est /
     n_particles_est (free if the caller tracks table stats, as any
-    catalog/Iceberg metadata does) or one count() pre-job per missing
-    side runs here — at cluster scale, always pass the estimates.
-    'fused' needs the particle count too (its block count is
-    occupancy-capped), so without n_particles_est it runs one count()
-    pre-job, even with an explicit `ncells`.
+    catalog/Iceberg metadata does), or each missing side is bounded
+    here by ``_row_bound``: the parquet footers' row counts, with no
+    Spark job, when the side is a parquet scan under projects and
+    filters (a filter makes it an upper bound); a count() pre-job for
+    any other input.  'fused' needs the particle count too (its block
+    count is occupancy-capped), so without n_particles_est it bounds
+    the particles the same way, even with an explicit `ncells`.
 
     ncells: cells per axis, overriding the plan's grid rule
     (``_plan_grid``, which documents each plan's measured grid; for
@@ -390,14 +430,15 @@ def shell_count(
     rmax = float(edges[-1])
     n_est = n_particles_est
     if plan == "auto":
-        n_est = n_est or particles.count()
+        n_est = n_est or _row_bound(particles)
         kw = dict(box=box, ncells=ncells, weighted=weight_col is not None)
         # choose_plan's first test (dgrid) reads only the particle
         # side: with no halos it answers 'dgrid' iff that test passes,
         # so the halos are counted only when the choice needs them
         plan = choose_plan(0, n_est, rmax, **kw)
         if plan != "dgrid":
-            plan = choose_plan(n_halos_est or halos.count(), n_est, rmax, **kw)
+            plan = choose_plan(n_halos_est or _row_bound(halos), n_est, rmax,
+                               **kw)
     if weight_col is not None and plan == "bcast":
         raise ValueError(
             "weight_col is not supported by plan='bcast': its sort-"
@@ -407,7 +448,7 @@ def shell_count(
             "side fits the broadcast budget, else 'sql'/'fused')"
         )
     if plan == "fused":
-        n_est = n_est or particles.count()
+        n_est = n_est or _row_bound(particles)
     # the plan runs on the grid the cost model priced (ADVICE r2)
     nc, ring_k = _plan_grid(plan, rmax, box, n_est, ncells)
     r2 = squared_edges(edges)
@@ -454,30 +495,37 @@ def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str, ncells: int,
     `h`/`p` come from ``_prep`` on the block grid: every particle in
     exactly one block, every halo copied to each block its r_max ball
     touches (the Euclidean-pruned ring explode, wrap included).  Each
-    cogroup group CSR-indexes its block's particles by their global
-    cell key on the sweep grid (`ncells`, ring `ring_k`) and streams
-    its halos through ``_make_sweep`` into ``_probe_counts`` — the
-    kernel and accumulator of plan='dgrid'.  A pair is found only in
-    its particle's block, so the blocks partition the pair set
-    exactly; pairs across the box wrap take the sweep's fold path.
-    Each group emits partial (halo, shell) counts and one final
-    aggregation sums them.  Salting splits a hot block's particles
-    over sub-keys, every one of which receives the block's halos.
+    cogroup group arrives as two Arrow tables (``applyInArrow``; no
+    pandas on either side), CSR-indexes its block's particles by their
+    global cell key on the sweep grid (`ncells`, ring `ring_k`) and
+    streams its halos, in that grid's cell-key order, through
+    ``_make_sweep`` into ``_probe_counts`` — the kernel and accumulator
+    of plan='dgrid'.  A pair is found only in its particle's block, so
+    the blocks partition the pair set exactly; pairs across the box
+    wrap take the sweep's fold path.  Each group emits partial (halo,
+    shell) counts and one final aggregation sums them.  Salting splits
+    a hot block's particles over sub-keys, every one of which receives
+    the block's halos.
     """
     np_dtype = np.float32 if dtype == "float32" else np.float64
     r2k = np.asarray(r2, dtype=np_dtype)
     sweep = _make_sweep(ncells, box, ring_k, r2, np_dtype, n_particles)
+    fields = [(id_col, pa.int64()), ("shell_idx", pa.int32()), ("cnt", pa.int64())]
+    if weight_col:
+        fields.append(("wsum", pa.int64()))
+    out_schema = pa.schema(fields)
 
-    def kern(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame()  # a block holding one side only
-        P64 = right[list(_P)].to_numpy(np.float64)
-        pc = _cell_index(P64, ncells, box)
+    def kern(left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows == 0 or right.num_rows == 0:
+            return out_schema.empty_table()  # a block holding one side only
+        P64 = _arrow_xyz(right, _P)
         grid = _csr_grid(
-            (pc[:, 0] * ncells + pc[:, 1]) * ncells + pc[:, 2], P64.T,
-            ncells, np_dtype, n_probes=len(left),
-            W=right[weight_col].to_numpy() if weight_col else None)
-        return _probe_counts(sweep, grid, left, id_col, r2k)
+            _cell_key(P64.T, ncells, box), P64.T, ncells, np_dtype,
+            n_probes=left.num_rows,
+            W=np.asarray(right.column(weight_col)) if weight_col else None)
+        return pa.table(_probe_counts(
+            sweep, grid, _arrow_xyz(left, _H),
+            np.asarray(left.column(id_col)), id_col, r2k), schema=out_schema)
 
     schema = f"{ident(id_col)} long, shell_idx int, cnt long" + (
         ", wsum long" if weight_col else ""
@@ -487,7 +535,7 @@ def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str, ncells: int,
     out = (
         h.selectExpr(ident(id_col), *_H, key).groupBy(join_key)
         .cogroup(p.selectExpr(*psel).groupBy(join_key))
-        .applyInPandas(kern, schema=schema)
+        .applyInArrow(kern, schema=schema)
     )
     aggs = [F.expr("sum(cnt) AS cnt")]
     if weight_col:
@@ -507,10 +555,11 @@ def _build_grid(
     """Collect one side, CSR-index it by cell key on the driver,
     broadcast.
 
-    The cell key is a codegen'd column expression (with_cell —
-    identical f64 floor(x/cs) arithmetic to the kernels', so cell
-    assignment is plan-invariant); the collect is an UNORDERED Arrow
-    collect and the CSR ordering is a driver-side numpy argsort +
+    The collect is an UNORDERED Arrow collect of the coordinates (plus
+    ids and weights) only; the cell keys are computed on the driver by
+    ``_cell_key`` (``with_cell``'s f64 floor(x/cs), clamped the same
+    way, so cell assignment is plan-invariant — pinned by the grid-key
+    parity test) and the CSR ordering is a driver-side numpy argsort +
     gather.  A Spark range-partitioned sort before the collect was
     measured SLOWER end-to-end (the sort adds a full shuffle + sampling
     pass and the driver still has to collect every row afterwards;
@@ -518,16 +567,13 @@ def _build_grid(
     the serial work is bounded by the same broadcast budget that gates
     this plan, so it cannot grow past ~16M rows.  Payload layout:
     ``_csr_grid``.  Returns (broadcast, n_rows)."""
-    from .cells import with_cell
-
     cols = ([id_col] if id_col else []) + list(coords)
     if weight_col:
         cols.append(weight_col)
-    keyed = with_cell(side.select(*cols), ncells, box, cols=coords)
-    tbl = keyed.toArrow()
+    tbl = side.select(*cols).toArrow()
+    xyz = [np.asarray(tbl.column(c)) for c in coords]
     payload = _csr_grid(
-        np.asarray(tbl.column("cell_id")),
-        [np.asarray(tbl.column(c)) for c in coords], ncells, np_dtype,
+        _cell_key(xyz, ncells, box), xyz, ncells, np_dtype,
         ids=np.asarray(tbl.column(id_col)) if id_col else None,
         W=np.asarray(tbl.column(weight_col)) if weight_col else None,
     )
@@ -536,11 +582,30 @@ def _build_grid(
 
 
 def _cell_index(xyz64: np.ndarray, nc: int, box: float) -> np.ndarray:
-    """(n, 3) float64 coords -> (n, 3) int64 cell indices on the grid
-    of nc cells per axis: ``with_cell``'s f64 floor(x / cs), clamped
-    to the box the same way, so a row lands in the same cell in the
-    kernels as in the SQL cell keys."""
-    return np.clip(np.floor(xyz64 / (box / nc)), 0, nc - 1).astype(np.int64)
+    """float64 coords -> int64 cell indices (same shape) on the grid of
+    nc cells per axis: ``with_cell``'s f64 floor(x / cs), clamped to
+    the box the same way (NaN to cell 0, as Spark's FLOOR casts it), so
+    a row lands in the same cell in the kernels as in the SQL keys."""
+    i = np.floor(xyz64 / (box / nc))
+    return np.fmin(np.fmax(i, 0), nc - 1).astype(np.int64)
+
+
+def _cell_key(xyz, nc: int, box: float) -> np.ndarray:
+    """Three per-axis coordinate arrays (any float dtype; an (n, 3)
+    array's ``.T``) -> ``with_cell``'s composite int64 key
+    (cx*nc + cy)*nc + cz."""
+    cx, cy, cz = (_cell_index(np.asarray(c, dtype=np.float64), nc, box)
+                  for c in xyz)
+    return (cx * nc + cy) * nc + cz
+
+
+def _arrow_xyz(tbl, names) -> np.ndarray:
+    """Three coordinate columns of an Arrow table or record batch ->
+    (n, 3) float64 (exact for f32 and f64 columns; nulls read NaN)."""
+    out = np.empty((tbl.num_rows, 3))
+    for a, c in enumerate(names):
+        out[:, a] = np.asarray(tbl.column(c))
+    return out
 
 
 def _csr_grid(key, xyz, nc: int, np_dtype, ids=None, W=None,
@@ -593,15 +658,32 @@ def _csr_grid(key, xyz, nc: int, np_dtype, ids=None, W=None,
 _SWEEP_CHUNK = 1 << 18
 
 
+def _tick(phase: str) -> None:
+    """The sweep's default phase clock: a no-op (tools/sweep_replay.py
+    passes one that charges CPU time to each named phase)."""
+
+
 def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
                 n_grid: int):
-    """The broadcast plans' one ring kernel -> ``sweep(grid, P64)``.
+    """The one ring kernel of every numpy plan -> ``sweep(grid, P64)``.
 
-    ``grid`` is a ``_build_grid`` payload (the broadcast side, CSR by
-    cell key), ``P64`` the streamed rows' (n, 3) float64 coords.
-    ``sweep`` yields ``(row, gidx, d2)`` chunks: streamed row (int32,
-    non-decreasing within a chunk), grid row and kernel-dtype squared
-    distance of every candidate pair with ``d2 < r_max^2``.
+    ``grid`` is a ``_csr_grid`` payload (CSR by cell key), ``P64`` the
+    streamed rows' (n, 3) float64 coords.  ``sweep`` yields ``(row,
+    gidx, d2)`` chunks: streamed row (int32, non-decreasing within a
+    chunk), grid row and kernel-dtype squared distance of every
+    candidate pair with ``d2 < r_max^2``.  ``sweep(grid, P64, clock)``
+    calls ``clock(phase)`` as each phase of the work ends.
+
+    ``sweep.cell_order(P64)`` is the permutation that puts streamed
+    rows in the grid's cell-key order; every caller streams its batch
+    in that order (one argsort) and maps rows back through it.  Rows
+    then walk the grid in the order it is laid out in memory: a run of
+    consecutive rows gathers from a few nearby CSR ranges instead of
+    from the whole grid (shells_ref's 1M-particle f32 grid is 14.5 MB
+    with its offsets, held once per Python worker: 58 MB on 4 workers
+    against the 4-vCPU EPYC host's 1 MB L2 per core and 32 MB L3).  The
+    grid-coordinate gather fell 0.14 -> 0.04 CPU.s in the single-thread
+    shells_ref replay (tools/sweep_replay.py, seed 1003).
 
     Candidates come from the ring-k cell neighborhood (cells of size
     box/nc, k = ring_k) cut by a per-row Euclidean slab prune: a cell
@@ -675,7 +757,7 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
                 G[a, kk + j] = gpj * gpj
         return G
 
-    def sweep(grid, P64):
+    def sweep(grid, P64, clock=_tick):
         X, Y, Z = grid["Hx"], grid["Hy"], grid["Hz"]  # grid-side coords
         starts, keys = grid.get("starts"), grid.get("keys")
 
@@ -742,6 +824,7 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
             lo = LO.T.ravel()[seg]
             srow = rows[seg // len(LO)].astype(np.int32)
             cum = np.cumsum(cn)
+            clock("segments")
             s0, base = 0, 0
             while s0 < len(seg):
                 s1 = max(int(np.searchsorted(cum, base + _SWEEP_CHUNK, "right")),
@@ -751,12 +834,15 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
                 gidx += np.repeat((lo[s0:s1] - (cum[s0:s1] - cnt - base))
                                   .astype(idx_t), cnt)
                 row = np.repeat(srow[s0:s1], cnt)
+                clock("index build")
                 dx = np.take(X, gidx)
-                dx -= np.take(Px, row)
                 dy = np.take(Y, gidx)
-                dy -= np.take(Py, row)
                 dz = np.take(Z, gidx)
+                clock("grid gather")
+                dx -= np.take(Px, row)
+                dy -= np.take(Py, row)
                 dz -= np.take(Pz, row)
+                clock("probe gather")
                 if fold:
                     # min-image fold, f32-exact ((dx2+dy2)+dz2 order kept)
                     for d in (dx, dy, dz):
@@ -768,33 +854,49 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
                 d2 = dx + dy
                 d2 += dz
                 k = np.flatnonzero(d2 < r2max)
+                row, gidx, d2 = row[k], gidx[k], d2[k]
+                clock("arithmetic")
                 if len(k):
-                    yield row[k], gidx[k], d2[k]
+                    yield row, gidx, d2
                 base, s0 = int(cum[s1 - 1]), s1
 
+    def cell_order(P64):
+        # int32 keys while they fit: argsort's cost tracks the key width
+        return np.argsort(_cell_key(P64.T, nc, box).astype(key_t, copy=False))
+
+    sweep.cell_order = cell_order
     return sweep
 
 
-def _probe_counts(sweep, grid, probes: pd.DataFrame, id_col: str,
-                  r2k: np.ndarray) -> pd.DataFrame:
-    """Stream `probes` (``_H`` coords and `id_col`) through `sweep` over
-    a particle `grid` -> their nonzero (id_col, shell_idx, cnt[, wsum])
-    rows, wsum when the grid carries weights ``W``.
+def _probe_counts(sweep, grid, P64: np.ndarray, ids: np.ndarray, id_col: str,
+                  r2k: np.ndarray, clock=_tick) -> dict[str, np.ndarray]:
+    """Stream probes (their (n, 3) float64 coords `P64` and int64 `ids`)
+    through `sweep` over a particle `grid` -> their nonzero (id_col,
+    shell_idx, cnt[, wsum]) columns, wsum when the grid carries weights
+    ``W``.
 
-    Counts accumulate into one dense (probes x nshells) array.  Pairs
-    come back in ~256k-pair chunks laid out probe-major, so each chunk
-    covers a short run of probes and is counted with one small bincount
-    over that run's slice (weights: a second bincount of the per-pair
-    particle weights, exact while every partial stays under 2^53)."""
+    Probes stream in the grid's cell-key order (``sweep.cell_order``)
+    and ids follow them through the permutation.  Counts accumulate
+    into one dense (probes x nshells) array.  Pairs come back in ~256k-
+    pair chunks laid out probe-major, so each chunk covers a short run
+    of probes, is binned by ``shell_binner`` and counted with one small
+    bincount over that run's slice (weights: a second bincount of the
+    per-pair particle weights, exact while every partial stays under
+    2^53)."""
     nr = len(r2k)
+    bin_ = shell_binner(r2k)
     W = grid.get("W")
-    acc = np.zeros(len(probes) * nr, dtype=np.int64)
+    order = sweep.cell_order(P64)
+    P64, ids = P64[order], ids[order]
+    clock("cell order")
+    acc = np.zeros(len(P64) * nr, dtype=np.int64)
     accw = np.zeros_like(acc) if W is not None else None
-    for row, gidx, d2 in sweep(grid, probes[list(_H)].to_numpy(np.float64)):
+    for row, gidx, d2 in sweep(grid, P64, clock):
         # rows are sorted within a chunk: count into its slice
         r0 = int(row[0])
         sl = slice(r0 * nr, (int(row[-1]) + 1) * nr)
-        keys = (row - r0) * nr + np.searchsorted(r2k, d2, side="right")
+        keys = (row - r0) * nr + bin_(d2)
+        clock("binning")
         acc[sl] += np.bincount(keys, minlength=sl.stop - sl.start)
         if accw is not None:
             wk = W[gidx]
@@ -804,15 +906,16 @@ def _probe_counts(sweep, grid, probes: pd.DataFrame, id_col: str,
                 ).astype(np.int64)
             else:
                 np.add.at(accw[sl], keys, wk)
+        clock("accumulate")
     nz = np.nonzero(acc)[0]
     cols = {
-        id_col: probes[id_col].to_numpy(np.int64)[nz // nr],
+        id_col: ids.astype(np.int64, copy=False)[nz // nr],
         "shell_idx": (nz % nr).astype(np.int32),
         "cnt": acc[nz],
     }
     if accw is not None:
         cols["wsum"] = accw[nz]
-    return pd.DataFrame(cols)
+    return cols
 
 
 def _bcast_plan(
@@ -850,13 +953,16 @@ def _bcast_plan(
     volume plus one cell-width shell — the closest Spark-shaped analog
     of the reference tree's tight MBR descent.  Numerics are identical
     to the other plans' (f32-safe (dx2+dy2)+dz2, strict-< first-match
-    searchsorted binning), so the byte-exact golden tests hold for this
-    plan too.
+    binning by ``shell_binner``), so the byte-exact golden tests hold
+    for this plan too.
 
     Kernel hot-path design: the ring sweep is ``_make_sweep``, shared
     with plan='dgrid' (z-stripe CSR ranges for interior particles, a
     per-cell wrapped pass for boundary ones, chunked pair phase); this
-    plan only accumulates.  Each in-range pair becomes one
+    plan only accumulates.  Particles arrive as Arrow record batches
+    (``mapInArrow``) and each batch streams in the halo grid's cell-key
+    order (``sweep.cell_order``; the output keys are halo rows, so the
+    permutation needs no mapping back).  Each in-range pair becomes one
     ``halo_row * nshells + shell`` key; keys are sort-reduced (or
     bincounted, when they outnumber the halo x shell domain) per task,
     so only nonzero partial (halo, shell) counts leave it.
@@ -880,6 +986,7 @@ def _bcast_plan(
 
     def kern(batches):
         data = bc.value
+        bin_ = shell_binner(r2k)
         comp: list[tuple[np.ndarray, np.ndarray]] = []
         raw: list[np.ndarray] = []
         raw_n = 0
@@ -897,14 +1004,14 @@ def _bcast_plan(
                 comp.append(_count(k))
             raw, raw_n = [], 0
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
             # bin from original precision (plan-invariant cells); the
             # kernel-dtype copy is used only for distances
-            P64 = pdf[list(_P)].to_numpy(np.float64)
-            for _row, gidx, d2 in sweep(data, P64):
-                sh = np.searchsorted(r2k, d2, side="right").astype(out_t)
+            P64 = _arrow_xyz(batch, _P)
+            for _row, gidx, d2 in sweep(data, P64[sweep.cell_order(P64)]):
+                sh = bin_(d2).astype(out_t, copy=False)
                 raw.append(gidx.astype(out_t) * out_t(nr) + sh)
                 raw_n += len(sh)
                 if raw_n > 24_000_000:
@@ -919,17 +1026,14 @@ def _bcast_plan(
         b = np.nonzero(np.r_[True, k[1:] != k[:-1]])[0]
         k, c = k[b], np.add.reduceat(c, b)
         if len(k):
-            yield pd.DataFrame(
-                {
-                    id_col: data["ids"][(k // nr).astype(np.int64)],
-                    "shell_idx": (k % nr).astype(np.int32),
-                    "cnt": c.astype(np.int64),
-                }
-            )
+            yield pa.record_batch(
+                [data["ids"][(k // nr).astype(np.int64)],
+                 (k % nr).astype(np.int32), c.astype(np.int64)],
+                names=[id_col, "shell_idx", "cnt"])
 
     out = particles.select(
         *[F.col(c).alias(a) for c, a in zip(p_coords, _P)]
-    ).mapInPandas(kern, schema=f"{id_col} long, shell_idx int, cnt long")
+    ).mapInArrow(kern, schema=f"{id_col} long, shell_idx int, cnt long")
     return out.groupBy(id_col, "shell_idx").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -952,7 +1056,7 @@ def _dgrid_plan(
     and streams probes past it (``src/astr_rcount/main.c``); this plan
     is the 1:1 Spark analog: the PARTICLE table is cell-sorted into a
     CSR grid, broadcast once, and the (small) probe table streams
-    through ``mapInPandas``.  Every probe's shell counts complete
+    through ``mapInArrow``.  Every probe's shell counts complete
     inside its own task, so the output needs NO shuffle and NO
     aggregation — the map output IS the result.  Two structural wins
     over plan='bcast' at in-memory data scales:
@@ -968,15 +1072,16 @@ def _dgrid_plan(
     with plans 'bcast' and 'fused': an interior probe visits (2k+1)^2
     z-stripes, each one contiguous CSR range of particles, instead of
     (2k+1)^3 cells; boundary probes take the per-cell wrapped pass.
-    Each Arrow batch of probes is counted by ``_probe_counts``, shared
-    with plan='fused'.
+    Each Arrow record batch of probes is counted by ``_probe_counts``
+    (shared with plan='fused'), which streams it in the grid's cell-key
+    order; no pandas frame is built on either side of the kernel.
 
     Scale envelope: the DATA side must fit executor memory (16-20 B/
     particle; the reference's own published run holds 3x100M particles
     ~5 GB per node the same way).  Beyond the broadcast budget use
     plan='bcast' (stream the 100 TB side); choose_plan gates on both
     budgets.  Numerics identical to the other plans (f32-safe
-    (dx2+dy2)+dz2, strict-< searchsorted binning, min-image fold only
+    (dx2+dy2)+dz2, strict-< first-match binning, min-image fold only
     where a pair can wrap) — pinned by the same golden tests.
     """
     np_dtype = np.float32 if dtype == "float32" else np.float64
@@ -987,10 +1092,11 @@ def _dgrid_plan(
 
     def kern(batches):
         data = bc.value
-        for pdf in batches:
-            out = _probe_counts(sweep, data, pdf, id_col, r2k)
-            if len(out):
-                yield out
+        for batch in batches:
+            out = _probe_counts(sweep, data, _arrow_xyz(batch, _H),
+                                np.asarray(batch.column(id_col)), id_col, r2k)
+            if len(out["cnt"]):
+                yield pa.record_batch(list(out.values()), names=list(out))
 
     probes = halos.select(
         F.col(id_col), *[F.col(c).alias(a) for c, a in zip(h_coords, _H)]
@@ -1003,7 +1109,7 @@ def _dgrid_plan(
         probes = probes.repartition(par)
     schema = f"{id_col} long, shell_idx int, cnt long" + (
         ", wsum long" if weight_col else "")
-    return probes.mapInPandas(kern, schema=schema)
+    return probes.mapInArrow(kern, schema=schema)
 
 
 def range_join_pairs(

@@ -154,3 +154,125 @@ def test_broadcast_plans_vs_brute_force(spark, case):
             got_w = np.zeros_like(want_w)
             got_w[res.halo_id, res.shell_idx] = res.wsum
             assert got_w.tolist() == want_w.tolist()
+
+
+def _binner_cases(dt):
+    """(r2 edges, d2 values) pairs for the binner: one edge, 40
+    log-spaced edges, and edges packed closer than one lookup bucket."""
+    one = squared_edges(np.array([7.5], dtype=dt))
+    logs = squared_edges(logspace_edges(12.7718 / 5000, 12.7718, 40,
+                                        dtype=np.dtype(dt).name))
+    packed = np.array([1.0, 1.0, 1.0, 1.0, 1.01, 3.0], dtype=dt)
+    for i in (1, 2, 3):
+        packed[i] = np.nextafter(packed[i - 1], dt(2))  # 1 ulp apart
+    tiny = np.finfo(dt).smallest_subnormal
+    for r2 in (one, logs, packed):
+        ulp_lo = np.nextafter(r2, dt(0))
+        ulp_hi = np.nextafter(r2, dt(np.inf))
+        d2 = np.concatenate([
+            np.array([0.0, -0.0, tiny, 7 * tiny, np.finfo(dt).tiny,
+                      np.finfo(dt).max, np.inf], dtype=dt),
+            r2, ulp_lo, ulp_hi,  # on each edge and 1 ulp either side
+            r2[-1:] * dt(1.5),  # above the last edge
+            np.random.default_rng(5).uniform(0, 1.2 * r2[-1], 2000).astype(dt),
+        ]).astype(dt)
+        yield r2, d2
+
+
+@pytest.mark.parametrize("dt", [np.float32, np.float64])
+def test_shell_binner_equals_searchsorted(dt):
+    """The lookup-table binner is np.searchsorted(side='right') exactly:
+    zeros of either sign, subnormals, every edge and its two 1-ulp
+    neighbours, the last edge and beyond; packed edges force more than
+    one compare-correction per bucket."""
+    from spatialjoincountovershells_spark.functions.shells import (
+        shell_binner,
+        shell_index_np,
+    )
+
+    for r2, d2 in _binner_cases(dt):
+        want = np.searchsorted(r2, d2, side="right")
+        assert shell_binner(r2)(d2).tolist() == want.tolist()
+        assert shell_index_np(d2, r2).tolist() == want.tolist()
+    # the packed case's first four edges share one lookup bucket, so it
+    # takes the multi-correction path
+    from spatialjoincountovershells_spark.functions.shells import _BIN_SUB_BITS
+
+    packed = list(_binner_cases(dt))[2][0]
+    bits = packed[:4].view(np.int32 if dt is np.float32 else np.int64)
+    assert len(set((bits >> (np.finfo(dt).nmant - _BIN_SUB_BITS)).tolist())) == 1
+
+
+def _face_values(nc):
+    """Cell faces on an nc-cell grid of BOX, each 1 ulp either side in
+    f32 and f64, 0 and -0, box - 1 ulp, and values outside [0, box)."""
+    faces = np.arange(nc + 1) * (BOX / nc)
+    vals = [faces, [0.0, -0.0, TOP, float(np.nextafter(BOX, 0.0)), BOX,
+                    -1e-3, -250.0, 1000.25, 2500.0, np.inf, -np.inf, np.nan]]
+    for t in (np.float32, np.float64):
+        f = faces.astype(t)
+        vals += [np.nextafter(f, t(-np.inf)), np.nextafter(f, t(np.inf))]
+    return np.concatenate([np.asarray(v, dtype=np.float64) for v in vals])
+
+
+@pytest.mark.parametrize("nc", [7, 10, 86])
+def test_cell_keys_equal_with_cell_sql(spark, nc):
+    """``_cell_key`` (the driver/kernel cell key of every sweep grid and
+    of the streamed rows' cell order) equals ``with_cell``'s SQL key on
+    every row: at 0, on cell faces and 1 ulp either side, at box - 1
+    ulp, and outside [0, box) (infinities and NaN included), where both
+    clamp to an edge cell (the coordinate contract is still open; this
+    pins today's clamp)."""
+    from spatialjoincountovershells_spark import with_cell
+    from spatialjoincountovershells_spark.operators.shell_count import _cell_key
+
+    v = _face_values(nc)
+    rng = np.random.default_rng(nc)
+    xyz = np.stack([v, rng.permutation(v), rng.permutation(v)], axis=1)
+    for sql_t, t in (("double", np.float64), ("float", np.float32)):
+        X = xyz.astype(t)
+        df = spark.createDataFrame(
+            pd.DataFrame({"i": np.arange(len(X)), "x": X[:, 0], "y": X[:, 1],
+                          "z": X[:, 2]}), f"i long, x {sql_t}, y {sql_t}, z {sql_t}")
+        got = with_cell(df, nc, BOX).toPandas().sort_values("i")
+        want = _cell_key(X.T, nc, BOX)
+        assert got["cell_id"].tolist() == want.tolist(), sql_t
+
+
+@pytest.mark.parametrize("case", CASES, ids=[c[0] for c in CASES])
+def test_probe_order_invariance(spark, case):
+    """The streamed side's order does not change the answer: ``_probe_counts``
+    on a probe batch and on a random permutation of it give the same
+    rows, and so does plan='bcast' (its kernel streams the particles)
+    on a permuted particle table."""
+    from spatialjoincountovershells_spark.operators.shell_count import (
+        _cell_key,
+        _probe_counts,
+    )
+
+    H, P, w, nc, edges = _inputs(case, seed=2)
+    r2 = squared_edges(edges).astype(np.float32)
+    rmax = float(edges[-1])
+    kk = max(1, int(np.ceil(rmax / (BOX / nc) - 1e-9)))
+    P64 = P.astype(np.float64)
+    grid = _csr_grid(_cell_key(P64.T, nc, BOX), P.T, nc, np.float32, W=w)
+    sweep = _make_sweep(nc, BOX, kk, r2, np.float32, len(P))
+    ids = np.arange(len(H), dtype=np.int64) * 3 + 11
+    perm = np.random.default_rng(3).permutation(len(H))
+
+    def rows(H64, hid):
+        out = pd.DataFrame(_probe_counts(sweep, grid, H64, hid, "h", r2))
+        return out.sort_values(["h", "shell_idx"]).reset_index(drop=True)
+
+    a = rows(H.astype(np.float64), ids)
+    b = rows(H.astype(np.float64)[perm], ids[perm])
+    assert len(a) > 0
+    pd.testing.assert_frame_equal(a, b)
+
+    halos, parts = _frames(spark, H, P, w)
+    _, parts_perm = _frames(spark, H, P[np.random.default_rng(4).permutation(len(P))], w)
+    got = [shell_count(halos, p, edges, plan="bcast", ncells=nc).toPandas()
+           .sort_values(["halo_id", "shell_idx"]).reset_index(drop=True)
+           for p in (parts, parts_perm)]
+    assert len(got[0]) > 0
+    pd.testing.assert_frame_equal(got[0], got[1])

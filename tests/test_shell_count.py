@@ -694,3 +694,66 @@ def test_cell_grid_builders_quote_column_names(spark):
         len(H), len(edges))
     want = oracle_shell_counts(H, P, squared_edges(edges))
     assert got.tolist() == want.tolist() and want.sum() > 0
+
+
+def _parquet_points(spark, tmp_path, n, seed):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spatialjoincountovershells_spark import decode_phash
+    from spatialjoincountovershells_spark.functions.phash import encode_phash_np
+
+    P = synth_points_np(n, seed=seed)
+    d = tmp_path / f"pts{seed}"
+    d.mkdir()
+    for i, part in enumerate(np.array_split(np.arange(n), 3)):
+        pq.write_table(pa.table({"id": part.astype(np.int64),
+                                 "phash": encode_phash_np(P[part])}),
+                       d / f"part-{i}.parquet")
+    return decode_phash(spark.read.parquet(str(d)))
+
+
+def test_row_bound_reads_parquet_footers_without_a_job(spark, tmp_path):
+    """A parquet scan under projects is bounded from the files' footers:
+    exact, and neither the bound nor building plan='auto'/'fused' over
+    such inputs (which bound both sides) starts a Spark job."""
+    from spatialjoincountovershells_spark.operators.shell_count import _row_bound
+
+    sc = spark.sparkContext
+    parts = _parquet_points(spark, tmp_path, 5000, seed=21)
+    halos = _parquet_points(spark, tmp_path, 300, seed=22).withColumnRenamed(
+        "id", "halo_id")
+    edges = logspace_edges(1.0, 40.0, 6)
+    sc.setJobGroup("row_bound", "no job expected")
+    try:
+        assert _row_bound(parts.select("x", "y", "z")) == 5000
+        assert _row_bound(halos) == 300
+        # plan='auto' with a broadcast-budget miss would collect; fused
+        # builds lazily, so it shows the bound's cost alone
+        shell_count(halos, parts, edges, plan="fused")
+        assert list(sc.statusTracker().getJobIdsForGroup("row_bound")) == []
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_row_bound_counts_when_rows_can_grow(spark, tmp_path):
+    """An explode can add rows, so the bound falls back to count(); a
+    filter cannot, so the footers' total bounds it from above and
+    choose_plan picks the same plan from it as from the true count."""
+    from pyspark.sql import functions as F
+
+    from spatialjoincountovershells_spark.operators.shell_count import (
+        _row_bound,
+        choose_plan,
+    )
+
+    parts = _parquet_points(spark, tmp_path, 4000, seed=23)
+    exploded = parts.withColumn("k", F.explode(F.array(F.lit(1), F.lit(2))))
+    assert _row_bound(exploded) == exploded.count() == 8000
+    filtered = parts.where("x < 300")
+    n = filtered.count()
+    bound = _row_bound(filtered)
+    assert 0 < n < bound == 4000
+    for budget in (512 << 20, 100_000, 0):
+        assert (choose_plan(300, bound, 40.0, max_broadcast_bytes=budget)
+                == choose_plan(300, n, 40.0, max_broadcast_bytes=budget))
