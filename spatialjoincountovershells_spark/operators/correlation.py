@@ -28,6 +28,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.shells import shell_binner
+from ..sources.tableio import count_rows
 from .shell_count import shell_count
 
 XI_QUANT = 1 << 20
@@ -80,9 +82,11 @@ def landy_szalay_xi(
 
     `data`/`randoms` need (x, y, z) columns (+ `id_col` if given; else
     a synthetic id is attached for the probe side).  `n_data` /
-    `n_randoms` skip the two count() jobs when the caller tracks table
-    stats.  xi_q = floor(xi * 2^20); rows with rr == 0 are dropped
-    (estimator undefined).
+    `n_randoms` are the row counts when the caller tracks table stats;
+    a missing one is ``sources.tableio.count_rows``'s exact count: the
+    parquet footers, with no Spark job, for an unfiltered parquet scan,
+    else a count() job.  xi_q = floor(xi * 2^20); rows with rr == 0 are
+    dropped (estimator undefined).
 
     dtype defaults to "float64" — unlike shell_count's f32 default —
     because this module's oracle contract is the exact f64 tree; the
@@ -91,8 +95,8 @@ def landy_szalay_xi(
     f64 oracle.
     """
     edges = np.asarray(edges)
-    nd = n_data if n_data is not None else data.count()
-    nr = n_randoms if n_randoms is not None else randoms.count()
+    nd = n_data if n_data is not None else count_rows(data)
+    nr = n_randoms if n_randoms is not None else count_rows(randoms)
     # edges[0] > 0 is enforced by pair_totals (subtract_self invariant)
     dd = pair_totals(data, data, edges, box, plan, dtype, id_col, nd) \
         .withColumnRenamed("n", "dd")
@@ -154,13 +158,13 @@ def ripley_k(
     single-partition sort is over len(edges) rows, never data."""
     edges = np.asarray(edges)
     spark = points.sparkSession
-    nd = n if n is not None else points.count()
+    nd = n if n is not None else count_rows(points)
     if other is None:
         nn = nd * (nd - 1)
         tot = pair_totals(points, points, edges, box, plan, dtype,
                           id_col, nd)
     else:
-        nb = n_other if n_other is not None else other.count()
+        nb = n_other if n_other is not None else count_rows(other)
         nn = nd * nb
         tot = pair_totals(points, other, edges, box, plan, dtype,
                           id_col, None)
@@ -191,77 +195,43 @@ def ripley_k(
     )
 
 
-def _nn_min_kernel_cnt(
-    probe: DataFrame,
-    data: DataFrame,
-    r2: np.ndarray,
-    box: float,
-    np_dtype,
-    nc: int,
-    ring_k: int,
-    self_mode: bool,
-) -> DataFrame:
-    """dgrid-shaped 1-NN pass: broadcast the CSR cell grid of the DATA
-    side (with ids when self_mode, for identity exclusion), stream the
-    probe table through mapInArrow and take each probe's minimum over
-    the in-range pairs of shell_count's ring sweep (``_make_sweep``,
-    ring-1; each batch streams in the grid's cell-key order, its probe
-    ids permuted with it) — each batch emits only per-shell PARTIAL
-    COUNTS (<= nshells rows), so candidate pairs never leave the task.
-    -> (shell_idx int, _n long) partials; caller sums.
+def _nn_min(grid, r2k: np.ndarray, _clock=None):
+    """Sweep reducer of ``nn_dist_cdf(plan='dgrid')``: each streamed
+    probe's minimum in-range d2 — in self mode (the grid carries the
+    data ``ids``) with the pairs of the probe's own id excluded — and,
+    at each batch's end, the per-shell counts of its probes' minima:
+    (shell_idx, _n) partials, at most nshells rows per batch.
 
-    Same broadcast envelope, cell arithmetic (with_cell f64 floor) and
-    strict-< first-match binning (``shell_binner``) as shell_count's
-    dgrid plan; distances in np_dtype with the (dx2+dy2)+dz2 order and
-    min-image fold, so results are bit-equal to the sql-plan expression
-    tree."""
-    import pyarrow as pa
+    Minima bin on the kernel-dtype edges widened exactly to f64, by
+    the same strict-< first-match ``shell_binner`` as shell_count, so
+    results are bit-equal to the sql plan's expression tree."""
+    r2 = r2k.astype(np.float64)
+    bin_ = shell_binner(r2)
+    dids = grid.get("ids")
+    qids = accmin = None
 
-    from ..functions.shells import shell_binner
-    from .shell_count import _H, _arrow_xyz, _build_grid, _make_sweep
+    def fold(row, gidx, d2):
+        d2 = d2.astype(np.float64)
+        if dids is not None:
+            d2[dids[gidx] == qids[row]] = np.inf
+        # rows are sorted within a chunk: per-row segment minima
+        b = np.flatnonzero(np.r_[True, row[1:] != row[:-1]])
+        r = row[b]
+        accmin[r] = np.minimum(accmin[r], np.minimum.reduceat(d2, b))
 
-    id_arg = "_did" if self_mode else None
-    bc, n_data = _build_grid(
-        data, ("_px", "_py", "_pz"), id_arg, nc, box, np_dtype)
-    # bin on the kernel-dtype edges, widened exactly
-    r2k = np.asarray(r2, dtype=np_dtype).astype(np.float64)
-    nr = len(r2k)
-    sweep = _make_sweep(nc, box, ring_k, r2, np_dtype, n_data)
-
-    def kern(batches):
-        g = bc.value
-        dids = g.get("ids")
-        bin_ = shell_binner(r2k)
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            P64 = _arrow_xyz(batch, _H)
-            order = sweep.cell_order(P64)
-            qids = (np.asarray(batch.column("_qid"))[order] if self_mode
-                    else None)
-            accmin = np.full(n, np.inf)
-            for row, gidx, d2 in sweep(g, P64[order]):
-                d2 = d2.astype(np.float64)
-                if self_mode:
-                    d2[dids[gidx] == qids[row]] = np.inf
-                # rows are sorted within a chunk: per-row segment minima
-                b = np.flatnonzero(np.r_[True, row[1:] != row[:-1]])
-                r = row[b]
-                accmin[r] = np.minimum(accmin[r], np.minimum.reduceat(d2, b))
-            found = accmin < r2k[-1]
-            if not found.any():
-                continue
-            counts = np.bincount(bin_(accmin[found]), minlength=nr)
+    def emit(ids):
+        nonlocal qids, accmin
+        cols = None
+        if accmin is not None:
+            counts = np.bincount(bin_(accmin[accmin < r2[-1]]),
+                                 minlength=len(r2))
             nz = np.nonzero(counts)[0]
-            yield pa.record_batch([nz.astype(np.int32), counts[nz]],
-                                  names=["shell_idx", "_n"])
+            cols = [nz.astype(np.int32), counts[nz]]
+        qids = ids
+        accmin = None if ids is None else np.full(len(ids), np.inf)
+        return cols
 
-    par = probe.sparkSession.sparkContext.defaultParallelism
-    if probe.rdd.getNumPartitions() < par:
-        probe = probe.repartition(par)
-    part = probe.mapInArrow(kern, schema="shell_idx int, _n long")
-    return part.groupBy("shell_idx").agg(F.sum("_n").alias("_n"))
+    return fold, emit
 
 
 def nn_dist_cdf(
@@ -296,18 +266,22 @@ def nn_dist_cdf(
     edges[-1] (ring-1 provably covers every pair within rmax) + a
     per-probe min aggregation on the probe key + an nshell-row
     cumulative window.  plan="dgrid" (use when the DATA side fits the
-    broadcast budget, shell_count's dgrid envelope): the data table is
-    CSR-grid-broadcast and probes stream through a numpy min-kernel
-    that emits only per-shell partial counts — candidate pairs never
-    leave the task and there is no per-probe shuffle at all (~10x the
-    sql plan at the contract shape).  No k-widening loop either way:
-    unlike `knn`, the search radius is bounded up front, so censoring
-    replaces iteration."""
+    broadcast budget, shell_count's dgrid envelope): shell_count's
+    sweep operator (``_sweep_join``) broadcasts the data table's CSR
+    grid, with ids in self mode, and streams the probes through one
+    mapInArrow into the ``_nn_min`` reducer, which emits only
+    per-shell partial counts — candidate pairs never leave the task
+    and there is no per-probe shuffle at all (~10x the sql plan at the
+    contract shape).  No k-widening loop either way: unlike `knn`, the
+    search radius is bounded up front, so censoring replaces
+    iteration.  Without `n_probe` the probes are counted by
+    ``sources.tableio.count_rows`` (exact; no Spark job for an
+    unfiltered parquet scan)."""
     from pyspark.sql.window import Window
 
     from ..functions.shells import shell_index_expr, squared_edges
     from .cells import explode_ring, with_cell
-    from .shell_count import _H, _P, _pairs_within, _plan_grid
+    from .shell_count import _H, _P, _pairs_within, _plan_grid, _sweep_join
 
     edges = np.asarray(edges)
     if plan not in ("sql", "dgrid"):
@@ -332,7 +306,7 @@ def nn_dist_cdf(
             F.monotonically_increasing_id().alias("_qid"),
             *[F.col(c).alias(a) for c, a in zip(("x", "y", "z"), _H)],
         )
-    np_ = n_probe if n_probe is not None else probe.count()
+    np_ = n_probe if n_probe is not None else count_rows(probe)
     if np_ <= 0:
         raise ValueError("empty probe set")
     r2 = squared_edges(edges)
@@ -342,9 +316,12 @@ def nn_dist_cdf(
     else:
         p = points.select(*data_cols)
     if plan == "dgrid":
-        np_dtype = np.float32 if dtype == "float32" else np.float64
-        cnt = _nn_min_kernel_cnt(probe, p, r2, box, np_dtype, nc, ring_k,
-                                 self_mode)
+        cnt = _sweep_join(
+            (probe, _H, "_qid" if self_mode else None),
+            (p, _P, "_did" if self_mode else None, None),
+            _nn_min, "shell_idx int, _n long", r2, box, dtype, nc, ring_k,
+            spread=True,
+        ).groupBy("shell_idx").agg(F.sum("_n").alias("_n"))
     else:
         h = explode_ring(probe, nc, box, cols=_H, k=ring_k, prune_radius=rmax)
         j = h.join(with_cell(p, nc, box, cols=_P), "cell_id")

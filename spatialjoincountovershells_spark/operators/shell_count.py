@@ -35,19 +35,54 @@ ring of a join grid and equi-join it with the cell-assigned particles:
   materialize in the shuffle (the analog of the reference's in-place
   ``counts[i]++`` fusion, ``MultiRangeCount.c:110``).
 
-Every plan but 'sql' runs one numpy ring sweep (``_make_sweep``): one
-side is CSR-sorted by cell key into a grid and the other streams past
-it as Arrow record batches, each put in the grid's cell-key order
-first, and every pair is binned by one exact lookup-table binner
-(``functions/shells.shell_binner``).
+Every plan but 'sql' runs one sweep operator, ``_sweep_join``: one
+side is CSR-sorted by cell key into a grid, the other streams past it
+as Arrow record batches through one per-batch loop
+(``_sweep_batches``) that puts each batch in the grid's cell-key order
+and runs the numpy ring kernel ``_make_sweep`` over it, and a reducer
+folds every in-range (row, grid row, d2) pair chunk into output rows.
+Every pair is binned by one exact lookup-table binner
+(``functions/shells.shell_binner``).  The reducers are
+``_probe_counts`` (per-(probe, shell) counts, with weight sums when
+the grid carries weights), ``_grid_row_counts`` (per-(grid row, shell)
+counts) and nn_dist_cdf's per-probe minimum (``correlation._nn_min``).
+Numerics are the same in every plan (f32-safe (dx2+dy2)+dz2, strict-<
+first-match binning, the min-image fold only where a pair can wrap),
+so the byte-exact golden tests pin every plan.
 
-* plan="dgrid": the particle (data) grid is broadcast and halos
-  stream — the reference's own architecture; no shuffle, no
-  aggregation.
-* plan="bcast": the halo grid is broadcast and particles stream — the
-  big table is never shuffled; a small final aggregation.
-* plan="fused": one particle grid per block, built inside its
-  cogroup group; nothing is broadcast.
+* plan="dgrid" (``_probe_counts``): the particle (data) grid is
+  broadcast and halos stream — the reference's own architecture
+  (``astr_rcount`` holds the whole particle index in per-node memory
+  and streams probes past it, ``src/astr_rcount/main.c``).  Every
+  probe's counts complete inside its own task, so the map output IS
+  the result: no shuffle, no aggregation.  Two structural wins over
+  'bcast' at in-memory data scales: ring bookkeeping (neighbour keys,
+  CSR lookups, slab prune) is per PROBE, and probes are typically 10x
+  fewer than particles; and each batch's counts leave pre-aggregated,
+  so the JVM never hash-aggregates tens of millions of partial rows
+  (measured at ~40% of plan='bcast' wall time at the
+  reference-matched shape).  The data side must fit executor memory
+  (16-20 B/particle; the reference's published run holds 3x100M
+  particles, ~5 GB per node, the same way).
+* plan="bcast" (``_grid_row_counts``): the halo grid is broadcast and
+  particles stream — the same architecture with the sides flipped to
+  fit Spark's broadcast model: the probe table, the small side by the
+  workload's own shape (10M probes vs 3x100M particles in the
+  published run), is the index, and the 100 TB particle table is
+  never shuffled, exploded or cogrouped: one scan, map-side partial
+  (halo, shell) counts and a small final aggregation whose input is
+  bounded by nonzero (halo, shell) cells per task.  The halo side
+  must fit executor memory (~40 B/halo: 10M halos ≈ 400 MB, the
+  reference's own per-node assumption).
+* plan="fused" (``_probe_counts``): one particle grid per coarse
+  block, built inside its cogroup group; nothing is broadcast.  Every
+  particle lies in exactly one block and every halo is copied to each
+  block its r_max ball touches (the Euclidean-pruned ring explode,
+  wrap included), so a pair is found only in its particle's block and
+  the blocks partition the pair set exactly; pairs across the box
+  wrap take the sweep's fold path.  One final aggregation sums the
+  groups' partial counts.  Salting splits a hot block's particles
+  over sub-keys, every one of which receives the block's halos.
 
 Output: long-form (halo_id, shell_idx, cnt), nonzero rows only — the
 dense (nhalos x nshells) matrix of the reference is a presentation
@@ -58,20 +93,23 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterable
-from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions.geometry import squared_distance_expr, squared_distance_sql
 from ..functions.shells import shell_binner, shell_index_expr, squared_edges
 from ..functions.sqltext import dlit, ident
+from ..sources.tableio import count_rows
 from .cells import explode_ring, grid_ncells, ring_offsets, with_cell  # noqa: F401
 
 _H = ("_hx", "_hy", "_hz")
 _P = ("_px", "_py", "_pz")
+_S = ("_sx", "_sy", "_sz")  # the sweep's streamed side
 
 
 def apply_salting(
@@ -261,41 +299,6 @@ A_FUSED_SEC_PER_ROW = 2.8e-6
 F_FUSED_FIXED_CORE_SEC = 5.0
 
 
-def _row_bound(df: DataFrame) -> int:
-    """An upper bound on ``df.count()``, without a Spark job when it can.
-
-    When no node of the optimized plan can add rows — a parquet file
-    relation under projects and filters only — the bound is the sum of
-    the parquet footers' ``num_rows`` over ``df.inputFiles()``, read by
-    pyarrow on the driver (a few ms for a few files; exact with no
-    filter).  Any other node (an explode, a join, an in-memory or
-    non-parquet source, a non-local file) falls back to ``count()``,
-    which runs the full-scan job."""
-    import pyarrow.parquet as pq
-
-    stack = [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        kind = node.getClass().getSimpleName()
-        if kind == "LogicalRelation":
-            rel = node.relation()
-            if (rel.getClass().getSimpleName() != "HadoopFsRelation"
-                    or rel.fileFormat().getClass().getSimpleName()
-                    != "ParquetFileFormat"):
-                return df.count()
-        elif kind not in ("Project", "Filter"):
-            return df.count()
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
-    paths = []
-    for uri in df.inputFiles():
-        u = urlparse(uri)
-        if u.scheme not in ("", "file"):
-            return df.count()
-        paths.append(unquote(u.path))
-    return sum(pq.read_metadata(f).num_rows for f in paths)
-
-
 def choose_plan(
     n_halos: int,
     n_particles: int,
@@ -402,10 +405,10 @@ def shell_count(
     other name raises.  'auto' needs row counts: pass n_halos_est /
     n_particles_est (free if the caller tracks table stats, as any
     catalog/Iceberg metadata does), or each missing side is bounded
-    here by ``_row_bound``: the parquet footers' row counts, with no
-    Spark job, when the side is a parquet scan under projects and
-    filters (a filter makes it an upper bound); a count() pre-job for
-    any other input.  'fused' needs the particle count too (its block
+    here by ``sources.tableio.count_rows(exact=False)``: the parquet
+    footers' row counts, with no Spark job, when the side is a parquet
+    scan under projects and filters (a filter makes it an upper
+    bound); a count() pre-job for any other input.  'fused' needs the particle count too (its block
     count is occupancy-capped), so without n_particles_est it bounds
     the particles the same way, even with an explicit `ncells`.
 
@@ -430,15 +433,16 @@ def shell_count(
     rmax = float(edges[-1])
     n_est = n_particles_est
     if plan == "auto":
-        n_est = n_est or _row_bound(particles)
+        n_est = n_est or count_rows(particles, exact=False)
         kw = dict(box=box, ncells=ncells, weighted=weight_col is not None)
         # choose_plan's first test (dgrid) reads only the particle
         # side: with no halos it answers 'dgrid' iff that test passes,
         # so the halos are counted only when the choice needs them
         plan = choose_plan(0, n_est, rmax, **kw)
         if plan != "dgrid":
-            plan = choose_plan(n_halos_est or _row_bound(halos), n_est, rmax,
-                               **kw)
+            plan = choose_plan(
+                n_halos_est or count_rows(halos, exact=False), n_est, rmax,
+                **kw)
     if weight_col is not None and plan == "bcast":
         raise ValueError(
             "weight_col is not supported by plan='bcast': its sort-"
@@ -448,17 +452,23 @@ def shell_count(
             "side fits the broadcast budget, else 'sql'/'fused')"
         )
     if plan == "fused":
-        n_est = n_est or _row_bound(particles)
+        n_est = n_est or count_rows(particles, exact=False)
     # the plan runs on the grid the cost model priced (ADVICE r2)
     nc, ring_k = _plan_grid(plan, rmax, box, n_est, ncells)
     r2 = squared_edges(edges)
+    schema = f"{ident(id_col)} long, shell_idx int, cnt long" + (
+        ", wsum long" if weight_col else "")
+    sweep_args = (r2, box, dtype, nc, ring_k)
     if plan == "dgrid":
-        return _dgrid_plan(halos, particles, r2, box, dtype, id_col, nc,
-                           h_coords, p_coords, ring_k, weight_col)
+        return _sweep_join((halos, h_coords, id_col),
+                           (particles, p_coords, None, weight_col),
+                           _probe_counts, schema, *sweep_args, spread=True)
     if plan == "bcast":
         # no shuffle at all -> salting is moot
-        return _bcast_plan(halos, particles, r2, box, dtype, id_col, nc,
-                           h_coords, p_coords, ring_k)
+        return _sweep_join((particles, p_coords, None),
+                           (halos, h_coords, id_col, None),
+                           _grid_row_counts, schema, *sweep_args) \
+            .groupBy(id_col, "shell_idx").agg(F.sum("cnt").alias("cnt"))
     join_nc = nc
     if plan == "fused":  # joins on coarse blocks, sweeps on the nc grid
         par = halos.sparkSession.sparkContext.defaultParallelism
@@ -471,8 +481,12 @@ def shell_count(
     if salt_threshold is not None:
         h, p, join_key = apply_salting(h, p, salt_threshold, max_salt)
     if plan == "fused":
-        return _fused_plan(h, p, r2, box, dtype, id_col, join_key, nc,
-                           ring_k, n_est, weight_col)
+        aggs = [F.expr("sum(cnt) AS cnt")]
+        if weight_col:
+            aggs.append(F.expr("sum(wsum) AS wsum"))
+        return _sweep_join((h, _H, id_col), (p, _P, None, weight_col),
+                           _probe_counts, schema, *sweep_args, key=join_key,
+                           n_grid=n_est).groupBy(id_col, "shell_idx").agg(*aggs)
     wcols = [weight_col] if weight_col else []
     proj = _pairs_within(h.join(p, join_key), r2[-1], box, dtype, id_col, *wcols)
     aggs = [F.expr("count(1) AS cnt")]
@@ -485,62 +499,6 @@ def shell_count(
         .groupBy(id_col, "shell_idx")
         .agg(*aggs)
     )
-
-
-def _fused_plan(h, p, r2, box, dtype, id_col, join_key: str, ncells: int,
-                ring_k: int, n_particles: int,
-                weight_col: str | None = None) -> DataFrame:
-    """Coarse-block cogroup on the shared ring sweep.
-
-    `h`/`p` come from ``_prep`` on the block grid: every particle in
-    exactly one block, every halo copied to each block its r_max ball
-    touches (the Euclidean-pruned ring explode, wrap included).  Each
-    cogroup group arrives as two Arrow tables (``applyInArrow``; no
-    pandas on either side), CSR-indexes its block's particles by their
-    global cell key on the sweep grid (`ncells`, ring `ring_k`) and
-    streams its halos, in that grid's cell-key order, through
-    ``_make_sweep`` into ``_probe_counts`` — the kernel and accumulator
-    of plan='dgrid'.  A pair is found only in its particle's block, so
-    the blocks partition the pair set exactly; pairs across the box
-    wrap take the sweep's fold path.  Each group emits partial (halo,
-    shell) counts and one final aggregation sums them.  Salting splits
-    a hot block's particles over sub-keys, every one of which receives
-    the block's halos.
-    """
-    np_dtype = np.float32 if dtype == "float32" else np.float64
-    r2k = np.asarray(r2, dtype=np_dtype)
-    sweep = _make_sweep(ncells, box, ring_k, r2, np_dtype, n_particles)
-    fields = [(id_col, pa.int64()), ("shell_idx", pa.int32()), ("cnt", pa.int64())]
-    if weight_col:
-        fields.append(("wsum", pa.int64()))
-    out_schema = pa.schema(fields)
-
-    def kern(left: pa.Table, right: pa.Table) -> pa.Table:
-        if left.num_rows == 0 or right.num_rows == 0:
-            return out_schema.empty_table()  # a block holding one side only
-        P64 = _arrow_xyz(right, _P)
-        grid = _csr_grid(
-            _cell_key(P64.T, ncells, box), P64.T, ncells, np_dtype,
-            n_probes=left.num_rows,
-            W=np.asarray(right.column(weight_col)) if weight_col else None)
-        return pa.table(_probe_counts(
-            sweep, grid, _arrow_xyz(left, _H),
-            np.asarray(left.column(id_col)), id_col, r2k), schema=out_schema)
-
-    schema = f"{ident(id_col)} long, shell_idx int, cnt long" + (
-        ", wsum long" if weight_col else ""
-    )
-    key = ident(join_key)
-    psel = [*_P, key] + ([ident(weight_col)] if weight_col else [])
-    out = (
-        h.selectExpr(ident(id_col), *_H, key).groupBy(join_key)
-        .cogroup(p.selectExpr(*psel).groupBy(join_key))
-        .applyInArrow(kern, schema=schema)
-    )
-    aggs = [F.expr("sum(cnt) AS cnt")]
-    if weight_col:
-        aggs.append(F.expr("sum(wsum) AS wsum"))
-    return out.groupBy(id_col, "shell_idx").agg(*aggs)
 
 
 def _build_grid(
@@ -675,8 +633,8 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
     calls ``clock(phase)`` as each phase of the work ends.
 
     ``sweep.cell_order(P64)`` is the permutation that puts streamed
-    rows in the grid's cell-key order; every caller streams its batch
-    in that order (one argsort) and maps rows back through it.  Rows
+    rows in the grid's cell-key order; ``_sweep_batches`` streams every
+    batch in that order (one argsort) and maps ids through it.  Rows
     then walk the grid in the order it is laid out in memory: a run of
     consecutive rows gathers from a few nearby CSR ranges instead of
     from the whole grid (shells_ref's 1M-particle f32 grid is 14.5 MB
@@ -865,33 +823,131 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
         return np.argsort(_cell_key(P64.T, nc, box).astype(key_t, copy=False))
 
     sweep.cell_order = cell_order
+    sweep.r2k = np.asarray(r2, dtype=np_dtype)
     return sweep
 
 
-def _probe_counts(sweep, grid, P64: np.ndarray, ids: np.ndarray, id_col: str,
-                  r2k: np.ndarray, clock=_tick) -> dict[str, np.ndarray]:
-    """Stream probes (their (n, 3) float64 coords `P64` and int64 `ids`)
-    through `sweep` over a particle `grid` -> their nonzero (id_col,
-    shell_idx, cnt[, wsum]) columns, wsum when the grid carries weights
-    ``W``.
+def _sweep_join(stream: tuple, indexed: tuple, reducer, schema: str, r2,
+                box: float, dtype: str, nc: int, ring_k: int,
+                spread: bool = False, key: str | None = None,
+                n_grid: int | None = None) -> DataFrame:
+    """The one sweep operator of every numpy plan -> rows of `schema`.
 
-    Probes stream in the grid's cell-key order (``sweep.cell_order``)
-    and ids follow them through the permutation.  Counts accumulate
-    into one dense (probes x nshells) array.  Pairs come back in ~256k-
-    pair chunks laid out probe-major, so each chunk covers a short run
-    of probes, is binned by ``shell_binner`` and counted with one small
-    bincount over that run's slice (weights: a second bincount of the
-    per-pair particle weights, exact while every partial stays under
-    2^53)."""
+    `stream` is (DataFrame, coords, id column or None) and `indexed`
+    (DataFrame, coords, id column or None, weight column or None).  The
+    indexed side is CSR-indexed by cell key on the (`nc`, `ring_k`)
+    sweep grid and the streamed side's Arrow batches run past it
+    through ``_sweep_batches``, folding pairs into `reducer`.
+
+    Without `key` the indexed side is collected and broadcast once
+    (``_build_grid``) and the streamed side runs through one
+    ``mapInArrow``: no shuffle.  With `spread`, a streamed side with
+    fewer partitions than cores is repartitioned first — Spark's scan
+    bin-packing often lands a small probe table in one or two
+    partitions, and this shuffles the SMALL side only.
+
+    With `key` (plan 'fused') the two sides are cogrouped on it
+    (``applyInArrow``; no pandas on either side): each group's indexed
+    rows become its own grid (``_csr_grid``, laid out for the group's
+    streamed row count) and its streamed rows are one batch.  `n_grid`
+    bounds the rows of any group's grid."""
+    sdf, s_coords, s_id = stream
+    idf, i_coords, i_id, wcol = indexed
+    np_dtype = np.float32 if dtype == "float32" else np.float64
+    pa_schema = to_arrow_schema(StructType.fromDDL(schema))
+    ssel = ([F.col(s_id)] if s_id else []) + [
+        F.col(c).alias(a) for c, a in zip(s_coords, _S)]
+    if key is None:
+        bc, n_grid = _build_grid(idf, i_coords, i_id, nc, box, np_dtype, wcol)
+        sweep = _make_sweep(nc, box, ring_k, r2, np_dtype, n_grid)
+        s = sdf.select(*ssel)
+        if spread:
+            par = sdf.sparkSession.sparkContext.defaultParallelism
+            if s.rdd.getNumPartitions() < par:
+                s = s.repartition(par)
+        return s.mapInArrow(
+            lambda batches: _sweep_batches(sweep, bc.value, batches, s_id,
+                                           reducer, pa_schema), schema)
+    sweep = _make_sweep(nc, box, ring_k, r2, np_dtype, n_grid)
+
+    def group(left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows == 0 or right.num_rows == 0:
+            return pa_schema.empty_table()  # a block holding one side only
+        I64 = _arrow_xyz(right, i_coords)
+        grid = _csr_grid(
+            _cell_key(I64.T, nc, box), I64.T, nc, np_dtype,
+            n_probes=left.num_rows,
+            W=np.asarray(right.column(wcol)) if wcol else None)
+        return pa.Table.from_batches(
+            list(_sweep_batches(sweep, grid, [left], s_id, reducer,
+                                pa_schema)), schema=pa_schema)
+
+    isel = [*i_coords, key] + ([wcol] if wcol else [])
+    return (sdf.select(*ssel, F.col(key)).groupBy(key)
+            .cogroup(idf.select(*isel).groupBy(key))
+            .applyInArrow(group, schema=schema))
+
+
+def _sweep_batches(sweep, grid, batches, id_col: str | None, reducer,
+                   schema: pa.Schema, clock=_tick):
+    """The one per-batch loop of every numpy plan -> Arrow record
+    batches of `schema`.
+
+    Each batch's ``_S`` coordinates become (n, 3) float64 (exact for
+    f32 and f64 columns; cells then come from the original precision,
+    so they are plan-invariant), put in the grid's cell-key order
+    (``sweep.cell_order``), and its `id_col` ids follow through the
+    permutation (without ids, the permutation stands in for them).
+    ``sweep`` then hands every in-range ``(row, gidx, d2)`` pair chunk
+    to the reducer.
+
+    A reducer is ``reducer(grid, r2k, clock) -> (fold, emit)``, made
+    once per call (one Spark task, or one fused group), with `r2k` the
+    kernel-dtype squared edges.  ``fold(row, gidx, d2)`` folds one
+    chunk.  ``emit(ids)`` is called before each batch with its cell-
+    ordered ids and once more with None at the end; it returns the
+    columns of the rows that are complete then (the previous batch's,
+    or at the end the whole call's) or None.  ``clock(phase)`` charges
+    CPU time to a named phase (tools/sweep_replay.py)."""
+    fold, emit = reducer(grid, sweep.r2k, clock)
+
+    def rows(ids):
+        cols = emit(ids)
+        if cols is not None and len(cols[0]):
+            yield pa.record_batch(cols, schema=schema)
+        clock("accumulate")
+
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        P64 = _arrow_xyz(batch, _S)
+        order = sweep.cell_order(P64)
+        ids = order if id_col is None else np.asarray(
+            batch.column(id_col))[order]
+        clock("cell order")
+        yield from rows(ids)
+        for row, gidx, d2 in sweep(grid, P64[order], clock):
+            fold(row, gidx, d2)
+    yield from rows(None)
+
+
+def _probe_counts(grid, r2k: np.ndarray, clock=_tick):
+    """Reducer of plans 'dgrid' and 'fused': each batch's nonzero
+    (probe id, shell_idx, cnt[, wsum]) rows, wsum when the grid
+    carries weights ``W``.
+
+    Counts accumulate into one dense (probes x nshells) array per
+    batch.  Pairs come back in ~256k-pair chunks laid out probe-major,
+    so each chunk covers a short run of probes, is binned by
+    ``shell_binner`` and counted with one small bincount over that
+    run's slice (weights: a second bincount of the per-pair particle
+    weights, exact while every partial stays under 2^53)."""
     nr = len(r2k)
     bin_ = shell_binner(r2k)
     W = grid.get("W")
-    order = sweep.cell_order(P64)
-    P64, ids = P64[order], ids[order]
-    clock("cell order")
-    acc = np.zeros(len(P64) * nr, dtype=np.int64)
-    accw = np.zeros_like(acc) if W is not None else None
-    for row, gidx, d2 in sweep(grid, P64, clock):
+    ids = acc = accw = None
+
+    def fold(row, gidx, d2):
         # rows are sorted within a chunk: count into its slice
         r0 = int(row[0])
         sl = slice(r0 * nr, (int(row[-1]) + 1) * nr)
@@ -907,209 +963,86 @@ def _probe_counts(sweep, grid, P64: np.ndarray, ids: np.ndarray, id_col: str,
             else:
                 np.add.at(accw[sl], keys, wk)
         clock("accumulate")
-    nz = np.nonzero(acc)[0]
-    cols = {
-        id_col: ids.astype(np.int64, copy=False)[nz // nr],
-        "shell_idx": (nz % nr).astype(np.int32),
-        "cnt": acc[nz],
-    }
-    if accw is not None:
-        cols["wsum"] = accw[nz]
-    return cols
+
+    def emit(next_ids):
+        nonlocal ids, acc, accw
+        cols = None
+        if acc is not None:
+            nz = np.nonzero(acc)[0]
+            cols = [ids.astype(np.int64, copy=False)[nz // nr],
+                    (nz % nr).astype(np.int32), acc[nz]]
+            if accw is not None:
+                cols.append(accw[nz])
+        ids, acc, accw = next_ids, None, None
+        if ids is not None:
+            acc = np.zeros(len(ids) * nr, dtype=np.int64)
+            accw = np.zeros_like(acc) if W is not None else None
+        return cols
+
+    return fold, emit
 
 
-def _bcast_plan(
-    halos: DataFrame,
-    particles: DataFrame,
-    r2: np.ndarray,
-    box: float,
-    dtype: str,
-    id_col: str,
-    ncells: int,
-    h_coords: tuple[str, str, str],
-    p_coords: tuple[str, str, str],
-    ring_k: int,
-) -> DataFrame:
-    """Broadcast-halo-grid plan: stream the BIG table map-side only.
+def _grid_row_counts(grid, r2k: np.ndarray, clock=_tick):
+    """Reducer of plan 'bcast': the streamed rows are particles and the
+    output keys are grid (halo) rows, so the counts span the whole
+    task and leave at its end as nonzero partial (halo id, shell_idx,
+    cnt) rows.
 
-    The reference holds its whole index in memory per node and streams
-    probes past it (``src/astr_rcount/main.c``); this is the same
-    architecture with the sides flipped to fit Spark's broadcast model:
-    the probe (halo) table — the small side by the workload's own shape
-    (10M probes vs 3x100M particles in the published run) — is sorted
-    by cell key into a CSR layout, broadcast once, and every particle
-    partition counts against it in a numpy kernel.  The 100 TB particle
-    table is NEVER shuffled, exploded, or cogrouped: one scan, map-side
-    partial (halo, shell) counts, and a tiny final aggregation whose
-    input is bounded by nonzero (halo, shell) cells per partition.
-    Requires the halo side to fit in executor memory (~40 B/halo: 10M
-    halos ≈ 400 MB — the same assumption the reference makes per node).
-
-    Candidate work per particle = halos in the ring-k cell neighborhood
-    around it (k = ring_k; cells of size rmax/k), cut by a per-probe
-    Euclidean slab prune.  A finer-than-rmax grid (ring_k >= 2) trades
-    a few more candidate CELLS for far fewer candidate PAIRS: the kept
-    volume shrinks from the (3*rmax)^3 ring-1 cube toward the ball
-    volume plus one cell-width shell — the closest Spark-shaped analog
-    of the reference tree's tight MBR descent.  Numerics are identical
-    to the other plans' (f32-safe (dx2+dy2)+dz2, strict-< first-match
-    binning by ``shell_binner``), so the byte-exact golden tests hold
-    for this plan too.
-
-    Kernel hot-path design: the ring sweep is ``_make_sweep``, shared
-    with plan='dgrid' (z-stripe CSR ranges for interior particles, a
-    per-cell wrapped pass for boundary ones, chunked pair phase); this
-    plan only accumulates.  Particles arrive as Arrow record batches
-    (``mapInArrow``) and each batch streams in the halo grid's cell-key
-    order (``sweep.cell_order``; the output keys are halo rows, so the
-    permutation needs no mapping back).  Each in-range pair becomes one
-    ``halo_row * nshells + shell`` key; keys are sort-reduced (or
-    bincounted, when they outnumber the halo x shell domain) per task,
-    so only nonzero partial (halo, shell) counts leave it.
-    """
-    np_dtype = np.float32 if dtype == "float32" else np.float64
-    bc, m = _build_grid(halos, h_coords, id_col, ncells, box, np_dtype)
-    r2k = np.asarray(r2, dtype=np_dtype)
+    Each in-range pair becomes one ``grid_row * nshells + shell`` key.
+    Every 24M keys are sort-reduced (or bincounted, when they outnumber
+    the halo x shell domain) and the task end merges the partials."""
     nr = len(r2k)
-    sweep = _make_sweep(ncells, box, ring_k, r2, np_dtype, m)
+    m = len(grid["Hx"])
+    bin_ = shell_binner(r2k)
     # int32 wherever the bounds allow — halves the bytes every sort and
     # multiply touches vs int64
     out_t = np.int32 if m * nr < 2**31 - 1 else np.int64
+    comp: list[tuple[np.ndarray, np.ndarray]] = []
+    raw: list[np.ndarray] = []
+    raw_n = 0
 
-    def _count(keys: np.ndarray):
-        # sort-reduce of unit counts: ~4x cheaper than a dense bincount
-        # over the m*nr domain at typical keys/task volumes (measured),
-        # and it never touches an O(m*nr) accumulator
-        ks = np.sort(keys)
-        b = np.nonzero(np.r_[True, ks[1:] != ks[:-1]])[0]
-        return ks[b], np.diff(np.r_[b, len(ks)]).astype(np.int64)
+    def flush():
+        nonlocal raw, raw_n
+        if not raw:
+            return
+        k = np.concatenate(raw)
+        if len(k) * 4 > m * nr:
+            b = np.bincount(k, minlength=m * nr)  # keys outnumber domain
+            knz = np.nonzero(b)[0]
+            comp.append((knz.astype(k.dtype), b[knz]))
+        else:
+            # sort-reduce of unit counts: ~4x cheaper than a dense
+            # bincount over the m*nr domain at typical keys/task volumes
+            # (measured), and it never touches an O(m*nr) accumulator
+            ks = np.sort(k)
+            b = np.nonzero(np.r_[True, ks[1:] != ks[:-1]])[0]
+            comp.append((ks[b], np.diff(np.r_[b, len(ks)]).astype(np.int64)))
+        raw, raw_n = [], 0
 
-    def kern(batches):
-        data = bc.value
-        bin_ = shell_binner(r2k)
-        comp: list[tuple[np.ndarray, np.ndarray]] = []
-        raw: list[np.ndarray] = []
-        raw_n = 0
+    def fold(_row, gidx, d2):
+        nonlocal raw_n
+        sh = bin_(d2).astype(out_t, copy=False)
+        raw.append(gidx.astype(out_t) * out_t(nr) + sh)
+        raw_n += len(sh)
+        if raw_n > 24_000_000:
+            flush()
 
-        def flush():
-            nonlocal raw, raw_n
-            if not raw:
-                return
-            k = np.concatenate(raw)
-            if len(k) * 4 > m * nr:
-                b = np.bincount(k, minlength=m * nr)  # keys outnumber domain
-                knz = np.nonzero(b)[0]
-                comp.append((knz.astype(k.dtype), b[knz]))
-            else:
-                comp.append(_count(k))
-            raw, raw_n = [], 0
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            # bin from original precision (plan-invariant cells); the
-            # kernel-dtype copy is used only for distances
-            P64 = _arrow_xyz(batch, _P)
-            for _row, gidx, d2 in sweep(data, P64[sweep.cell_order(P64)]):
-                sh = bin_(d2).astype(out_t, copy=False)
-                raw.append(gidx.astype(out_t) * out_t(nr) + sh)
-                raw_n += len(sh)
-                if raw_n > 24_000_000:
-                    flush()
+    def emit(ids):
+        if ids is not None:
+            return None  # counts span the task
         flush()
         if not comp:
-            return
+            return None
         k = np.concatenate([x[0] for x in comp])
         c = np.concatenate([x[1] for x in comp])
         o = np.argsort(k, kind="stable")
         k, c = k[o], c[o]
         b = np.nonzero(np.r_[True, k[1:] != k[:-1]])[0]
         k, c = k[b], np.add.reduceat(c, b)
-        if len(k):
-            yield pa.record_batch(
-                [data["ids"][(k // nr).astype(np.int64)],
-                 (k % nr).astype(np.int32), c.astype(np.int64)],
-                names=[id_col, "shell_idx", "cnt"])
+        return [grid["ids"][(k // nr).astype(np.int64)],
+                (k % nr).astype(np.int32), c.astype(np.int64)]
 
-    out = particles.select(
-        *[F.col(c).alias(a) for c, a in zip(p_coords, _P)]
-    ).mapInArrow(kern, schema=f"{id_col} long, shell_idx int, cnt long")
-    return out.groupBy(id_col, "shell_idx").agg(F.sum("cnt").alias("cnt"))
-
-
-def _dgrid_plan(
-    halos: DataFrame,
-    particles: DataFrame,
-    r2: np.ndarray,
-    box: float,
-    dtype: str,
-    id_col: str,
-    ncells: int,
-    h_coords: tuple[str, str, str],
-    p_coords: tuple[str, str, str],
-    ring_k: int,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Broadcast-DATA grid: the reference's architecture, sides as-is.
-
-    ``astr_rcount`` holds the whole particle index in per-node memory
-    and streams probes past it (``src/astr_rcount/main.c``); this plan
-    is the 1:1 Spark analog: the PARTICLE table is cell-sorted into a
-    CSR grid, broadcast once, and the (small) probe table streams
-    through ``mapInArrow``.  Every probe's shell counts complete
-    inside its own task, so the output needs NO shuffle and NO
-    aggregation — the map output IS the result.  Two structural wins
-    over plan='bcast' at in-memory data scales:
-
-    * ring bookkeeping (neighbor keys, CSR lookups, slab prune) is per
-      PROBE, and probes are typically 10x fewer than particles;
-    * per-batch counts accumulate into a dense (batch x nshells)
-      array and leave pre-aggregated — the JVM never hash-aggregates
-      tens of millions of partial rows (measured at ~40% of plan=
-      'bcast' wall time at the reference-matched shape).
-
-    Kernel hot-path design: the ring sweep is ``_make_sweep``, shared
-    with plans 'bcast' and 'fused': an interior probe visits (2k+1)^2
-    z-stripes, each one contiguous CSR range of particles, instead of
-    (2k+1)^3 cells; boundary probes take the per-cell wrapped pass.
-    Each Arrow record batch of probes is counted by ``_probe_counts``
-    (shared with plan='fused'), which streams it in the grid's cell-key
-    order; no pandas frame is built on either side of the kernel.
-
-    Scale envelope: the DATA side must fit executor memory (16-20 B/
-    particle; the reference's own published run holds 3x100M particles
-    ~5 GB per node the same way).  Beyond the broadcast budget use
-    plan='bcast' (stream the 100 TB side); choose_plan gates on both
-    budgets.  Numerics identical to the other plans (f32-safe
-    (dx2+dy2)+dz2, strict-< first-match binning, min-image fold only
-    where a pair can wrap) — pinned by the same golden tests.
-    """
-    np_dtype = np.float32 if dtype == "float32" else np.float64
-    bc, n_data = _build_grid(particles, p_coords, None, ncells, box, np_dtype,
-                             weight_col=weight_col)
-    r2k = np.asarray(r2, dtype=np_dtype)
-    sweep = _make_sweep(ncells, box, ring_k, r2, np_dtype, n_data)
-
-    def kern(batches):
-        data = bc.value
-        for batch in batches:
-            out = _probe_counts(sweep, data, _arrow_xyz(batch, _H),
-                                np.asarray(batch.column(id_col)), id_col, r2k)
-            if len(out["cnt"]):
-                yield pa.record_batch(list(out.values()), names=list(out))
-
-    probes = halos.select(
-        F.col(id_col), *[F.col(c).alias(a) for c, a in zip(h_coords, _H)]
-    )
-    # the probe table is small by this plan's contract, so Spark's scan
-    # bin-packing often lands it in one or two partitions — spread it
-    # over the cluster (a shuffle of the SMALL side only)
-    par = halos.sparkSession.sparkContext.defaultParallelism
-    if probes.rdd.getNumPartitions() < par:
-        probes = probes.repartition(par)
-    schema = f"{id_col} long, shell_idx int, cnt long" + (
-        ", wsum long" if weight_col else "")
-    return probes.mapInArrow(kern, schema=schema)
+    return fold, emit
 
 
 def range_join_pairs(

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+from urllib.parse import urlparse
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -31,7 +32,7 @@ from ..functions.phash import decode_phash
 from ..operators.cells import grid_ncells, with_cell
 from ..operators.shell_count import shell_count
 from ..operators.semi_join import filter_halos
-from ..sources.tableio import read_table, write_table
+from ..sources.tableio import parquet_footer_rows, read_table, write_table
 
 
 def sjcs_pipeline(
@@ -125,12 +126,23 @@ def _marker(path: str) -> str:
 def checkpoint(df: DataFrame, path: str, token: str) -> dict:
     """Idempotent overwrite write + lineage marker.
 
-    The marker records the completion token and per-partition counts;
-    `resume` treats a matching marker as proof of completion."""
-    write_table(df, path)
-    # the schema it just wrote: no footer-inference job on read-back
-    back = read_table(df.sparkSession, path, schema=df.schema)
-    metrics = [r.asDict() for r in partition_metrics(back).collect()]
+    The marker records the completion token, the rows written
+    (``n_rows``) and per-partition counts; `resume` treats a matching
+    marker as proof of completion.  On the parquet stand-in at a local
+    path the counts come from the written files' footers, one
+    ``partitions`` entry (file, n_rows) per file and no Spark job
+    after the write.  An Iceberg table or a non-local path is read
+    back and counted per read partition (partition_id, n_rows): one
+    more job."""
+    if write_table(df, path) == "parquet" and not urlparse(path).scheme:
+        files = sorted(f for f in os.listdir(path)
+                       if f.endswith(".parquet") and not f.startswith(("_", ".")))
+        rows = parquet_footer_rows(os.path.join(path, f) for f in files)
+        metrics = [{"file": f, "n_rows": n} for f, n in zip(files, rows)]
+    else:
+        # the schema it just wrote: no footer-inference job on read-back
+        back = read_table(df.sparkSession, path, schema=df.schema)
+        metrics = [r.asDict() for r in partition_metrics(back).collect()]
     meta = {"token": token, "n_rows": int(sum(m["n_rows"] for m in metrics)),
             "partitions": metrics}
     with open(_marker(path), "w") as f:

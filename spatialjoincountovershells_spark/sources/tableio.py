@@ -28,6 +28,8 @@ _SJCS_DONE marker is subsumed by Iceberg's own snapshot commit.
 from __future__ import annotations
 
 import weakref
+from collections.abc import Iterable
+from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
@@ -93,3 +95,46 @@ def read_table(
         return spark.table(location)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(location)
+
+
+def parquet_footer_rows(paths: Iterable[str]) -> list[int]:
+    """Row count of each local parquet file, read from its footer by
+    pyarrow on the driver: a few KB per file and no Spark job."""
+    import pyarrow.parquet as pq
+
+    return [pq.read_metadata(p).num_rows for p in paths]
+
+
+def count_rows(df: DataFrame, exact: bool = True) -> int:
+    """``df.count()``, from parquet footers without a Spark job when
+    the optimized plan allows it.
+
+    Footers answer when every node of the optimized plan is a Project
+    (or, with ``exact=False``, a Filter) over parquet file relations on
+    local files: no such node can add rows, so the footers' total is
+    the count, or with a Filter an upper bound on it.  Exact counts
+    feed estimator denominators, so ``exact=True`` takes no Filter.
+    Any other node (an explode, a join, a limit, an in-memory or
+    non-parquet source) or a non-local file runs ``count()``."""
+    keep = ("Project",) if exact else ("Project", "Filter")
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "LogicalRelation":
+            rel = node.relation()
+            if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+                    or rel.fileFormat().getClass().getSimpleName()
+                    != "ParquetFileFormat"):
+                return df.count()
+        elif kind not in keep:
+            return df.count()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    paths = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        if u.scheme not in ("", "file"):
+            return df.count()
+        paths.append(unquote(u.path))
+    return sum(parquet_footer_rows(paths))

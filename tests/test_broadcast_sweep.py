@@ -1,7 +1,8 @@
 """The broadcast plans' shared ring sweep (``_make_sweep``) against brute
-force: the exact in-range pair set straight from the sweep, and dgrid
-(weighted and unweighted) and bcast shell counts through Spark, on the
-grids that exercise each of its branches — z-stripes (interior rows),
+force: the exact in-range pair set straight from the sweep, and every
+consumer of the sweep operator through Spark (dgrid and fused shell
+counts, weighted and unweighted, bcast, and nn_dist_cdf's dgrid pass),
+on the grids that exercise each of its branches — z-stripes (interior rows),
 the wrapped per-cell pass (boundary rows, coarse grids), no prune
 (nc < 2k+1) and the sorted-keys fallback (nc^3 > 16M)."""
 
@@ -62,12 +63,17 @@ def _inputs(case, seed=0):
     return H, P, w, nc, logspace_edges(*spec)
 
 
-def _brute(H, P, r2, w):
-    """f32 min-image brute force -> (counts, weight sums), dense."""
+def _d2(H, P):
+    """f32 min-image squared distances, (len(H), len(P))."""
     d = np.abs(H[:, None, :] - P[None, :, :])
     d = np.minimum(d, np.float32(BOX) - d)
     d *= d
-    d2 = (d[..., 0] + d[..., 1]) + d[..., 2]
+    return (d[..., 0] + d[..., 1]) + d[..., 2]
+
+
+def _brute(H, P, r2, w):
+    """f32 min-image brute force -> (counts, weight sums), dense."""
+    d2 = _d2(H, P)
     sh = np.searchsorted(r2, d2, side="right")
     cnt = np.zeros((len(H), len(r2)), dtype=np.int64)
     wsum = np.zeros_like(cnt)
@@ -139,12 +145,22 @@ def _frames(spark, H, P, w):
 
 @pytest.mark.parametrize("case", CASES, ids=[c[0] for c in CASES])
 def test_broadcast_plans_vs_brute_force(spark, case):
+    """Every sweep consumer against brute force: shell counts of dgrid
+    and fused (plain and weighted) and bcast, and nn_dist_cdf's dgrid
+    pass in G mode (self-mode, with one point duplicated under a new
+    id: the coincident pair is a neighbour at distance 0, the identity
+    pair is not) and F mode (halos probing the particles)."""
+    from spatialjoincountovershells_spark.operators.correlation import (
+        nn_dist_cdf,
+    )
+
     H, P, w, nc, edges = _inputs(case, seed=1)
     r2 = squared_edges(edges).astype(np.float32)
     want_c, want_w = _brute(H, P, r2, w)
     assert want_c.tolist() == oracle_shell_counts(H, P, r2).tolist()
     halos, parts = _frames(spark, H, P, w)
-    for plan, wcol in (("dgrid", None), ("dgrid", "w"), ("bcast", None)):
+    for plan, wcol in (("dgrid", None), ("dgrid", "w"), ("bcast", None),
+                       ("fused", None), ("fused", "w")):
         res = shell_count(halos, parts, edges, plan=plan, ncells=nc,
                           weight_col=wcol).toPandas()
         got_c = np.zeros_like(want_c)
@@ -154,6 +170,21 @@ def test_broadcast_plans_vs_brute_force(spark, case):
             got_w = np.zeros_like(want_w)
             got_w[res.halo_id, res.shell_idx] = res.wsum
             assert got_w.tolist() == want_w.tolist()
+
+    PG = np.vstack([P, P[:1]])  # P[0] twice, under distinct ids
+    dG = _d2(PG, PG)
+    np.fill_diagonal(dG, np.inf)  # identity excluded
+    assert dG[0].min() == dG[-1].min() == 0.0
+    points = spark.createDataFrame(pd.DataFrame({
+        "pid": np.arange(len(PG), dtype=np.int64),
+        "x": PG[:, 0], "y": PG[:, 1], "z": PG[:, 2]}),
+        "pid long, x float, y float, z float")
+    for mode, dmin, kw in (("G", dG.min(axis=1), dict(id_col="pid")),
+                           ("F", _d2(H, P).min(axis=1), dict(ref=halos))):
+        res = nn_dist_cdf(points if mode == "G" else parts, edges,
+                          dtype="float32", plan="dgrid", **kw).toPandas()
+        want = [int((dmin < e).sum()) for e in r2]
+        assert res.sort_values("shell_idx").n_lt.tolist() == want, mode
 
 
 def _binner_cases(dt):
@@ -245,9 +276,13 @@ def test_probe_order_invariance(spark, case):
     on a probe batch and on a random permutation of it give the same
     rows, and so does plan='bcast' (its kernel streams the particles)
     on a permuted particle table."""
+    import pyarrow as pa
+
     from spatialjoincountovershells_spark.operators.shell_count import (
+        _S,
         _cell_key,
         _probe_counts,
+        _sweep_batches,
     )
 
     H, P, w, nc, edges = _inputs(case, seed=2)
@@ -261,7 +296,12 @@ def test_probe_order_invariance(spark, case):
     perm = np.random.default_rng(3).permutation(len(H))
 
     def rows(H64, hid):
-        out = pd.DataFrame(_probe_counts(sweep, grid, H64, hid, "h", r2))
+        schema = pa.schema([("h", pa.int64()), ("shell_idx", pa.int32()),
+                            ("cnt", pa.int64()), ("wsum", pa.int64())])
+        batch = pa.record_batch([hid, *H64.T], names=["h", *_S])
+        out = pa.Table.from_batches(list(_sweep_batches(
+            sweep, grid, [batch], "h", _probe_counts, schema)),
+            schema=schema).to_pandas()
         return out.sort_values(["h", "shell_idx"]).reset_index(drop=True)
 
     a = rows(H.astype(np.float64), ids)

@@ -61,6 +61,19 @@ def test_bcast_plan_shuffles_only_the_partial_counts(sides):
     assert "Generate" not in p  # no ring explode of either side
 
 
+def test_nn_dist_cdf_dgrid_is_one_arrow_sweep(sides):
+    """nn_dist_cdf(plan='dgrid') runs the shared sweep operator once:
+    exactly one MapInArrow, and no ring explode."""
+    from spatialjoincountovershells_spark.operators.correlation import (
+        nn_dist_cdf,
+    )
+
+    _, parts = sides
+    p = plan_of(nn_dist_cdf(parts, EDGES, id_col="pid", plan="dgrid"))
+    assert n_nodes(p, "MapInArrow") == 1
+    assert "Generate" not in p
+
+
 def test_sql_plan_is_an_equi_join_with_partial_aggregation(sides):
     halos, parts = sides
     p = plan_of(shell_count(halos, parts, EDGES, plan="sql"))

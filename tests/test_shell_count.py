@@ -717,7 +717,7 @@ def test_row_bound_reads_parquet_footers_without_a_job(spark, tmp_path):
     """A parquet scan under projects is bounded from the files' footers:
     exact, and neither the bound nor building plan='auto'/'fused' over
     such inputs (which bound both sides) starts a Spark job."""
-    from spatialjoincountovershells_spark.operators.shell_count import _row_bound
+    from spatialjoincountovershells_spark.sources.tableio import count_rows
 
     sc = spark.sparkContext
     parts = _parquet_points(spark, tmp_path, 5000, seed=21)
@@ -726,8 +726,8 @@ def test_row_bound_reads_parquet_footers_without_a_job(spark, tmp_path):
     edges = logspace_edges(1.0, 40.0, 6)
     sc.setJobGroup("row_bound", "no job expected")
     try:
-        assert _row_bound(parts.select("x", "y", "z")) == 5000
-        assert _row_bound(halos) == 300
+        assert count_rows(parts.select("x", "y", "z"), exact=False) == 5000
+        assert count_rows(halos, exact=False) == 300
         # plan='auto' with a broadcast-budget miss would collect; fused
         # builds lazily, so it shows the bound's cost alone
         shell_count(halos, parts, edges, plan="fused")
@@ -742,17 +742,15 @@ def test_row_bound_counts_when_rows_can_grow(spark, tmp_path):
     choose_plan picks the same plan from it as from the true count."""
     from pyspark.sql import functions as F
 
-    from spatialjoincountovershells_spark.operators.shell_count import (
-        _row_bound,
-        choose_plan,
-    )
+    from spatialjoincountovershells_spark.operators.shell_count import choose_plan
+    from spatialjoincountovershells_spark.sources.tableio import count_rows
 
     parts = _parquet_points(spark, tmp_path, 4000, seed=23)
     exploded = parts.withColumn("k", F.explode(F.array(F.lit(1), F.lit(2))))
-    assert _row_bound(exploded) == exploded.count() == 8000
+    assert count_rows(exploded, exact=False) == exploded.count() == 8000
     filtered = parts.where("x < 300")
     n = filtered.count()
-    bound = _row_bound(filtered)
+    bound = count_rows(filtered, exact=False)
     assert 0 < n < bound == 4000
     for budget in (512 << 20, 100_000, 0):
         assert (choose_plan(300, bound, 40.0, max_broadcast_bytes=budget)

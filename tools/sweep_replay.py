@@ -4,14 +4,16 @@
 
 Reads perfbench's seeded inputs (``perfbench/gen.py``; nothing is
 written), builds each plan's sweep grid exactly as the plan does and
-streams the probes through ``_probe_counts`` in one thread, with no
-Spark and no Arrow I/O.  The sweep reports each phase as it ends, and
-the replay prints the CPU seconds (``time.process_time``) charged to
-each:
+streams the probes, as the Arrow record batches Spark hands a Python
+worker, through the operator's own per-batch loop
+(``_sweep_batches`` with the ``_probe_counts`` reducer) in one thread,
+with no Spark.  The sweep reports each phase as it ends, and the
+replay prints the CPU seconds (``time.process_time``) charged to each:
 
 * grid build — ``_cell_key`` + ``_csr_grid`` (dgrid's is the driver's
   broadcast build; fused builds one per block);
-* cell order — the argsort that puts a probe batch in cell-key order;
+* cell order — the Arrow -> float64 decode and the argsort that puts
+  a probe batch in cell-key order;
 * segments — cell indices, slab gaps and the CSR ranges per probe;
 * index build — the per-pair grid and probe row indices;
 * grid gather — the grid's three coordinate gathers;
@@ -19,7 +21,8 @@ each:
   subtraction;
 * arithmetic — min-image fold, squares, sum, the r_max cut;
 * binning — ``shell_binner``;
-* accumulate — the per-(probe, shell) bincounts.
+* accumulate — the per-(probe, shell) bincounts and the emitted
+  Arrow rows.
 
 dgrid streams the probes in ``--parts`` round-robin partitions of at
 most ``--batch`` rows (what ``repartition`` and get_spark's Arrow batch
@@ -38,6 +41,7 @@ import time
 from collections import defaultdict
 
 import numpy as np
+import pyarrow as pa
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -51,16 +55,36 @@ from spatialjoincountovershells_spark.functions.shells import (  # noqa: E402
     squared_edges,
 )
 from spatialjoincountovershells_spark.operators.shell_count import (  # noqa: E402
+    _S,
     _cell_index,
     _cell_key,
     _csr_grid,
     _make_sweep,
     _plan_grid,
     _probe_counts,
+    _sweep_batches,
 )
 
 PHASES = ("grid build", "cell order", "segments", "index build", "grid gather",
           "probe gather", "arithmetic", "binning", "accumulate")
+
+
+SCHEMA = pa.schema([("h", pa.int64()), ("shell_idx", pa.int32()),
+                    ("cnt", pa.int64())])
+
+
+def probe_batch(H, rows) -> pa.RecordBatch:
+    """Halo rows as the Arrow batch a plan streams: id and f32 coords."""
+    return pa.record_batch([rows.astype(np.int64), *H[rows].T],
+                           names=["h", *_S])
+
+
+def pairs(sweep, grid, batches, clock) -> int:
+    """Drive the operator's per-batch loop -> total in-range pairs."""
+    clock.last = time.process_time()
+    return sum(int(np.asarray(b.column("cnt")).sum()) for b in
+               _sweep_batches(sweep, grid, batches, "h", _probe_counts,
+                              SCHEMA, clock))
 
 
 class PhaseClock:
@@ -84,17 +108,12 @@ def dgrid(P, H, edges, np_dtype, parts, batch, clock):
     grid = _csr_grid(_cell_key(P64.T, nc, gen.BOX), P64.T, nc, np_dtype)
     clock("grid build")
     sweep = _make_sweep(nc, gen.BOX, ring_k, r2, np_dtype, len(P))
-    r2k = r2.astype(np_dtype)
     total = 0
-    ids = np.arange(len(H), dtype=np.int64)
-    for p in range(parts):
+    for p in range(parts):  # one Spark task per partition
         rows = np.arange(p, len(H), parts)
-        for b0 in range(0, len(rows), batch):
-            rb = rows[b0:b0 + batch]
-            clock.last = time.process_time()
-            out = _probe_counts(sweep, grid, H[rb].astype(np.float64), ids[rb],
-                                "h", r2k, clock)
-            total += int(out["cnt"].sum())
+        batches = [probe_batch(H, rows[b0:b0 + batch])
+                   for b0 in range(0, len(rows), batch)]
+        total += pairs(sweep, grid, batches, clock)
     return total
 
 
@@ -119,7 +138,6 @@ def fused(P, H, edges, np_dtype, parts, clock):
     hrow = np.concatenate([c[0] for c in copies])
     hblock = np.concatenate([c[1] for c in copies])
     sweep = _make_sweep(nc, gen.BOX, ring_k, r2, np_dtype, len(P))
-    r2k = r2.astype(np_dtype)
     porder, horder = np.argsort(pblock), np.argsort(hblock)
     total = 0
     for blk in np.unique(pblock):
@@ -133,9 +151,7 @@ def fused(P, H, edges, np_dtype, parts, clock):
         grid = _csr_grid(_cell_key(P64[pi].T, nc, gen.BOX), P64[pi].T, nc,
                          np_dtype, n_probes=len(hi))
         clock("grid build")
-        out = _probe_counts(sweep, grid, H64[hi], hi.astype(np.int64), "h",
-                            r2k, clock)
-        total += int(out["cnt"].sum())
+        total += pairs(sweep, grid, [probe_batch(H, hi)], clock)
     return total, nb**3, len(hrow)
 
 
