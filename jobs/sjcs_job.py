@@ -12,14 +12,15 @@ execution, resumable output.
       [--format parquet|decoded|compressed] \
       [--halo-format parquet|halo-text] \
       [--filter-file /data/filter_ids.csv] \
-      [--salt-threshold 100000] [--plan sql|fused|bcast|dgrid|auto] \
-      [--report out.txt]
+      [--plan sql|fused|bcast|dgrid|auto] [--report out.txt]
 
 Input formats: 'parquet' expects either (id,x,y,z) columns or the
 images-table shape with a phash column (auto-decoded); 'decoded' /
 'compressed' / 'halo-text' read the reference's own file formats.
 The job is idempotent: it checkpoints through plans/pipeline.py with a
 token derived from the inputs, so a restarted run skips completed work.
+Dense cells need no flag: AQE's skew join (on in get_spark) splits a
+hot join partition at run time.
 """
 
 from __future__ import annotations
@@ -89,10 +90,6 @@ def main(argv=None) -> int:
                     choices=[None, "parquet", "halo-text"])
     ap.add_argument("--filter-file", default=None)
     ap.add_argument("--plan", default="sql", choices=[*_PLANS, "auto"])
-    ap.add_argument("--salt-threshold", type=int, default=None,
-                    help="split join groups holding more particles than "
-                         "this: sql's cells; fused's coarse blocks (a few "
-                         "dozen per job), so size it per block there")
     ap.add_argument("--box", type=float, default=1000.0)
     ap.add_argument("--report", default=None, help="optional text report path")
     args = ap.parse_args(argv)
@@ -103,6 +100,7 @@ def main(argv=None) -> int:
     from spatialjoincountovershells_spark.plans.pipeline import resume_or_compute
     from spatialjoincountovershells_spark.sources.gadget import read_filter_ids
     from spatialjoincountovershells_spark.sources.report import write_report
+    from spatialjoincountovershells_spark.sources.tableio import count_rows
 
     spark = get_spark(app="sjcs_job")
     edges = parse_radius(args.radius)
@@ -129,12 +127,10 @@ def main(argv=None) -> int:
         spark,
         args.output,
         token,
-        lambda: shell_count(
-            halos, parts, edges, box=args.box, plan=args.plan,
-            salt_threshold=args.salt_threshold, id_col=id_key,
-        ),
+        lambda: shell_count(halos, parts, edges, box=args.box,
+                            plan=args.plan, id_col=id_key),
     )
-    n = counts.count()
+    n = count_rows(counts)  # the written files' footers: no Spark job
     print(json.dumps({"output": args.output, "rows": n, "token": token}))
     if args.report:
         id_cols = [c for c in halos.columns if c in ("row_idx", "halo_id")]

@@ -71,20 +71,3 @@ def squared_distance_np(
         sq = d * d
         out = sq if out is None else out + sq  # (dx2+dy2)+dz2 order
     return out
-
-
-def squared_distance_pairs_np(
-    A: np.ndarray, B: np.ndarray, box: float, periodic: bool = True
-) -> np.ndarray:
-    """(k,3) x (k,3) ALIGNED rows -> (k,) squared distances — identical
-    numerics ((dx2+dy2)+dz2, f32-safe min-image) to squared_distance_np
-    but elementwise, for pair-list kernels."""
-    dt = A.dtype.type
-    out = None
-    for a in range(3):
-        d = np.abs(A[:, a] - B[:, a])
-        if periodic:
-            np.minimum(d, dt(box) - d, out=d)
-        sq = d * d
-        out = sq if out is None else out + sq
-    return out

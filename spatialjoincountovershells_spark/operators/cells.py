@@ -22,11 +22,14 @@ from pyspark.sql import functions as F
 
 from ..functions.sqltext import dlit, ident
 
+# cells per axis never exceed this: keeps the composite key's nc^3
+# range (6.9e10) far inside int64 whatever r_max a caller passes
+_MAX_PER_AXIS = 4096
+
 
 def grid_ncells(
     rmax: float,
     box: float = 1000.0,
-    max_per_axis: int = 4096,
     n_hint: int | None = None,
 ) -> int:
     """Cells per axis: the finest grid with cell_size >= rmax (ring-1 safe).
@@ -44,7 +47,7 @@ def grid_ncells(
         nc -= 1
     if n_hint is not None and n_hint > 0:
         nc = min(nc, max(1, int(round(n_hint ** (1.0 / 3.0)))))
-    return max(1, min(nc, max_per_axis))
+    return max(1, min(nc, _MAX_PER_AXIS))
 
 
 def _axis_idx(col: str, cs: float, ncells: int) -> str:
@@ -79,7 +82,7 @@ def cell_stats(
     union during index build (``adjustMbrArraySTRNode``,
     ``src/objects/ArraySTR/Node.c:10-58``); here the same statistic is
     one grouped min/max aggregation over the cell key — used for
-    pruning diagnostics and as the salting pre-pass input.
+    pruning and occupancy diagnostics.
     -> (cell_id, n_points, min_x..max_z)
     """
     g = with_cell(df, ncells, box, cols=cols).groupBy("cell_id")

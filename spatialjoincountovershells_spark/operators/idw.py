@@ -13,8 +13,8 @@ step is ONE fixed correctly-rounded IEEE-f64 tree (a division, or
 division by d2*sqrt(d2) for odd powers), immediately quantized to
 int64 — so the aggregation is an EXACT integer sum (decimal(38,0))
 with order-independent results, and the final ratio is one more f64
-tree quantized to floor(x * 2^out_shift).  The DuckDB oracle mirrors
-the trees verbatim.
+tree quantized to floor(x * 2^10).  The DuckDB oracle mirrors the
+trees verbatim, with the same two scales.
 
 Exact hits (d == 0, a query point coinciding with a data point) take
 the standard IDW convention: the estimate is the mean of the
@@ -41,10 +41,13 @@ from .shell_count import _pairs_within, _prep
 # tiny (but nonzero) d2 saturates identically in Spark and the oracle
 # instead of hitting engine-specific overflow behavior
 _W_CLAMP = float(1 << 62)
+# weights are floor(2^30 / d^power), estimates floor(est * 2^10)
+_W_SCALE = float(1 << 30)
+_OUT_SCALE = float(1 << 10)
 
 
-def _weight_expr(d2, power: int, scale: float):
-    """floor(scale / d^power) as ONE fixed f64 tree, int64-clamped."""
+def _weight_expr(d2, power: int):
+    """floor(2^30 / d^power) as ONE fixed f64 tree, int64-clamped."""
     if power == 1:
         den = F.sqrt(d2)
     elif power == 2:
@@ -58,7 +61,7 @@ def _weight_expr(d2, power: int, scale: float):
     # clamp BEFORE floor: Spark's floor(double) returns LONG while
     # DuckDB's returns DOUBLE, so the trees only agree if the value is
     # already <= 2^62 (long-exact) when floor runs
-    return F.floor(F.least(F.lit(scale) / den, F.lit(_W_CLAMP))).cast("long")
+    return F.floor(F.least(F.lit(_W_SCALE) / den, F.lit(_W_CLAMP))).cast("long")
 
 
 def idw_interpolate(
@@ -73,16 +76,12 @@ def idw_interpolate(
     h_coords: tuple[str, str, str] = ("x", "y", "z"),
     p_coords: tuple[str, str, str] = ("x", "y", "z"),
     ncells: int | None = None,
-    weight_shift: int = 30,
-    out_shift: int = 10,
 ) -> DataFrame:
     """-> (id_col, n_neighbors, idw_q) per query point with >= 1
     neighbor at d < radius (periodic min-image metric, like every
     spatial operator here).  `value_col` must be an integral mark;
-    idw_q = floor(estimate * 2^out_shift).  `weight_shift` sets the
-    weight quantization floor(2^weight_shift / d^power) — larger keeps
-    more precision for far neighbors, at the cost of bigger integers
-    (sums are exact decimal(38,0) either way)."""
+    idw_q = floor(estimate * 2^10), from weights quantized to
+    floor(2^30 / d^power) and summed exactly as decimal(38,0)."""
     edges = np.asarray(
         [radius], dtype=np.float32 if dtype == "float32" else np.float64
     )
@@ -94,7 +93,7 @@ def idw_interpolate(
         h.join(p, "cell_id"), squared_edges(edges)[0], box, dtype, id_col,
         value_col,
     ).selectExpr(ident(id_col), f"CAST({ident(value_col)} AS BIGINT) AS _v", "_d2")
-    wq = _weight_expr(F.col("_d2"), power, float(1 << weight_shift))
+    wq = _weight_expr(F.col("_d2"), power)
     ex = F.col("_d2") == F.lit(0.0)
     dec = "decimal(38,0)"
     agg = pairs.groupBy(id_col).agg(
@@ -106,14 +105,13 @@ def idw_interpolate(
         # overflow for near-zero d2 weights at the 2^62 clamp
         F.sum(F.when(~ex, wq.cast(dec) * F.col("_v"))).alias("_num"),
     )
-    scale = float(1 << out_shift)
     est_exact = F.floor(
         (F.col("_v_exact").cast("double") / F.col("_n_exact").cast("double"))
-        * F.lit(scale)
+        * F.lit(_OUT_SCALE)
     )
     est_idw = F.floor(
         (F.col("_num").cast("double") / F.col("_den").cast("double"))
-        * F.lit(scale)
+        * F.lit(_OUT_SCALE)
     )
     return agg.select(
         F.col(id_col),

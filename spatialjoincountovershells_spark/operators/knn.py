@@ -50,9 +50,7 @@ def knn(
     h_coords: tuple[str, str, str] = ("x", "y", "z"),
     p_coords: tuple[str, str, str] = ("x", "y", "z"),
     ncells: int | None = None,
-    max_ring: int | None = None,
     n_particles_est: int | None = None,
-    warmup: bool = False,
 ) -> DataFrame:
     """-> (halo_id, particle_id, rank 1..k, d2) — exact periodic kNN.
 
@@ -60,10 +58,7 @@ def knn(
     grid_ncells(box/16, n_hint=n_particles_est) — pass the (free, if a
     catalog tracks stats) particle-count estimate so sparse tables get
     a coarser grid whose first ring already holds ~k candidates instead
-    of fanning probes into empty cells.  warmup=True materializes the
-    cell-keyed particle cache up front (one extra count job) — useful
-    before latency measurements; off by default (the ring loop's own
-    first job populates the cache anyway).
+    of fanning probes into empty cells.
     """
     spark = halos.sparkSession
     nc = ncells or grid_ncells(box / 16, box, n_hint=n_particles_est)
@@ -76,12 +71,9 @@ def knn(
         *[F.col(c).alias(a) for c, a in zip(p_coords, _P)],
     )
     p = with_cell(p, nc, box, cols=_P).persist()
-    if warmup:
-        p.count()
 
     d2 = squared_distance_expr(_H, _P, box, dtype)
     w = Window.partitionBy(id_col).orderBy("d2", particle_id_col)
-    limit = max_ring or (nc // 2 + 1)
 
     pending = h
     topk: DataFrame | None = None
@@ -95,8 +87,7 @@ def knn(
             F.col(id_col), F.col(particle_id_col), *_H, d2.alias("d2")
         )
         pool = cand if topk is None else topk.unionByName(cand)
-        full_cover = 2 * ring + 1 >= nc or ring >= limit
-        if full_cover:
+        if 2 * ring + 1 >= nc:  # the ring covers the whole grid
             done_parts.append(
                 pool.withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= k)

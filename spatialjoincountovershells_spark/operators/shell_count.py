@@ -81,8 +81,16 @@ so the byte-exact golden tests pin every plan.
   wrap included), so a pair is found only in its particle's block and
   the blocks partition the pair set exactly; pairs across the box
   wrap take the sweep's fold path.  One final aggregation sums the
-  groups' partial counts.  Salting splits a hot block's particles
-  over sub-keys, every one of which receives the block's halos.
+  groups' partial counts.
+
+Skew: 'sql' and 'fused' always join on ``cell_id``, and AQE's skew
+join (``get_spark`` turns it on) splits a hot join partition at run
+time, the analog of the reference's morsel-driven chunks of 100
+(``src/astr_rcount/main.c:795-826``).  A static dense-cell salting
+pre-pass on top of it lost every measurement and was removed: at
+300k x 20k clustered (warm ``local[4]``) sql took 2.96 CPU.s per
+call unsalted against 4.18-5.08 salted, and fused at 1.2M x 80k
+8.4-11.5 against 14.6-18.3.
 
 Output: long-form (halo_id, shell_idx, cnt), nonzero rows only — the
 dense (nhalos x nshells) matrix of the reference is a presentation
@@ -110,60 +118,6 @@ from .cells import explode_ring, grid_ncells, ring_offsets, with_cell  # noqa: F
 _H = ("_hx", "_hy", "_hz")
 _P = ("_px", "_py", "_pz")
 _S = ("_sx", "_sy", "_sz")  # the sweep's streamed side
-
-
-def apply_salting(
-    h: DataFrame,
-    p: DataFrame,
-    salt_threshold: int,
-    max_salt: int = 64,
-    key: str = "cell_id",
-) -> tuple[DataFrame, DataFrame, str]:
-    """Split dense cells across sub-keys so no single reducer owns a hot cell.
-
-    Explicit skew handling (BASELINE north_star) on top of AQE's runtime
-    skew-join:  a cheap pre-pass counts particles per cell; cells above
-    `salt_threshold` get factor = ceil(n/threshold) (capped) sub-keys.
-    Particles pick a deterministic sub-key by xxhash64 of their coords;
-    halo-ring rows fan out to ALL sub-keys of a hot cell (sequence +
-    explode), so the join result is unchanged while the hot cell's work
-    spreads over `factor` tasks.  Cold cells pay nothing (factor 1, no
-    fanout).  Returns (salted_h, salted_p, new_key).
-
-    Sizing: the broadcast hot-cell list is tiny (cells above threshold
-    only); the halo fanout multiplies only ring rows that touch hot
-    cells — bounded by 27 * max_salt per halo in the worst case.
-    """
-    hot = (
-        p.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > salt_threshold)
-        .select(
-            key,
-            F.least(
-                F.ceil(F.col("_n") / F.lit(salt_threshold)), F.lit(max_salt)
-            ).cast("int").alias("_factor"),
-        )
-    )
-    skey = "_salted_cell_id"
-    p2 = (
-        p.join(F.broadcast(hot), key, "left")
-        .withColumn("_factor", F.coalesce(F.col("_factor"), F.lit(1)))
-        .withColumn(
-            skey,
-            F.col(key) * F.lit(max_salt)
-            + F.pmod(F.xxhash64(*[F.col(c) for c in _P]), F.col("_factor")),
-        )
-        .drop("_factor")
-    )
-    h2 = (
-        h.join(F.broadcast(hot), key, "left")
-        .withColumn("_factor", F.coalesce(F.col("_factor"), F.lit(1)))
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_factor") - 1)))
-        .withColumn(skey, F.col(key) * F.lit(max_salt) + F.col("_salt"))
-        .drop("_factor", "_salt")
-    )
-    return h2, p2, skey
 
 
 _PLANS = ("sql", "fused", "bcast", "dgrid")
@@ -320,9 +274,13 @@ def choose_plan(
     Else 'bcast' whenever the probe (halo) side fits the budget
     (real payload: 3 coords + id + sorted key ≈ 40 B/halo, plus the
     dense CSR offsets array of ~4 B/cell; 512 MB covers ~12M probes —
-    reference scale is 10M): the only plan that never shuffles the
-    big table — at 100 TB (where the data side can't possibly fit)
-    that dominates everything else.
+    reference scale is 10M).  This is a reasoned choice, not a
+    measured one: bcast is the only plan that never shuffles the big
+    table, which should dominate at 100 TB, where the data side cannot
+    fit.  In-memory measurements go the other way wherever this rule
+    picks it (warm ``local[4]``, parquet sink, 5 alternated calls): at
+    1M x 100k (the shells_ref inputs) bcast took 8.6 CPU.s per call
+    against fused's 6.7-6.9, and at 1M x 10k 4.4 against sql's 2.9.
 
     Otherwise 'fused' vs 'sql' by estimated per-plan core-time, each
     plan priced as it runs (``_plan_grid``): sql's candidate pairs on
@@ -378,8 +336,6 @@ def shell_count(
     p_coords: tuple[str, str, str] = ("x", "y", "z"),
     ncells: int | None = None,
     plan: str = "sql",
-    salt_threshold: int | None = None,
-    max_salt: int = 64,
     n_halos_est: int | None = None,
     n_particles_est: int | None = None,
     weight_col: str | None = None,
@@ -416,18 +372,6 @@ def shell_count(
     (``_plan_grid``, which documents each plan's measured grid; for
     'fused' the sweep grid, not its blocks); the ring depth always
     follows the grid, so any explicit grid is exact.
-
-    salt_threshold: if set, run the dense-cell salting pre-pass
-    (apply_salting) on the shuffle plans' join key so no hot one
-    serializes one reducer/task.  The threshold counts particles per
-    join group: sql's cell, but fused's coarse block (~1/27 of the
-    data on 4 cores, ``_plan_grid``), so a threshold sized for cells
-    splits every fused block.  A split block sends all its halos to
-    each sub-key, and each sub-key pays the sweep's fixed cost: at
-    1.2M x 80k clustered (27 blocks of ~44k particles, warm
-    ``local[4]``, 3 calls each) fused took 8.4-11.5 CPU.s per call
-    unsalted, 14.6-18.3 at threshold 20000 (every block split in 3)
-    and 10.3-12.0 at 100000 (no split; the count pre-pass only).
     """
     edges = np.asarray(edges)
     rmax = float(edges[-1])
@@ -464,7 +408,6 @@ def shell_count(
                            (particles, p_coords, None, weight_col),
                            _probe_counts, schema, *sweep_args, spread=True)
     if plan == "bcast":
-        # no shuffle at all -> salting is moot
         return _sweep_join((particles, p_coords, None),
                            (halos, h_coords, id_col, None),
                            _grid_row_counts, schema, *sweep_args) \
@@ -477,18 +420,15 @@ def shell_count(
         halos, particles, edges, box, id_col, h_coords, p_coords, join_nc,
         extra_p=(weight_col,) if weight_col else (),
     )
-    join_key = "cell_id"
-    if salt_threshold is not None:
-        h, p, join_key = apply_salting(h, p, salt_threshold, max_salt)
     if plan == "fused":
         aggs = [F.expr("sum(cnt) AS cnt")]
         if weight_col:
             aggs.append(F.expr("sum(wsum) AS wsum"))
         return _sweep_join((h, _H, id_col), (p, _P, None, weight_col),
-                           _probe_counts, schema, *sweep_args, key=join_key,
+                           _probe_counts, schema, *sweep_args, key="cell_id",
                            n_grid=n_est).groupBy(id_col, "shell_idx").agg(*aggs)
     wcols = [weight_col] if weight_col else []
-    proj = _pairs_within(h.join(p, join_key), r2[-1], box, dtype, id_col, *wcols)
+    proj = _pairs_within(h.join(p, "cell_id"), r2[-1], box, dtype, id_col, *wcols)
     aggs = [F.expr("count(1) AS cnt")]
     if weight_col:
         aggs.append(F.expr(f"CAST(sum({ident(weight_col)}) AS BIGINT) AS wsum"))

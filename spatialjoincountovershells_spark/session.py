@@ -27,14 +27,9 @@ def get_spark(
     pp = os.environ.get("PYTHONPATH", "")
     if pkg_root not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = f"{pkg_root}{os.pathsep}{pp}" if pp else pkg_root
-    if shuffle_partitions is None:
-        # match parallelism, not the 200 default
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
     b = (
         SparkSession.builder.master(master)
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -62,6 +57,15 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    key, sc = "spark.sql.shuffle.partitions", spark.sparkContext
+    if key not in (extra or {}):
+        # match parallelism, not the 200 default.  A local master's
+        # parallelism is read off the started context, so local[*],
+        # local[N,F] and local-cluster[...] need no parsing here
+        if shuffle_partitions is None:
+            shuffle_partitions = (max(8, sc.defaultParallelism)
+                                  if sc.master.startswith("local") else 32)
+        spark.conf.set(key, str(shuffle_partitions))
     if spark.sparkContext.getCheckpointDir() is None:
         # reliable-checkpoint home for iterative operators (knn).
         # SJCS_CHECKPOINT_DIR (a durable shared path — HDFS/S3) is

@@ -1,10 +1,10 @@
-"""Operator tests: image payload invariant, skew salting, kNN, PIP."""
+"""Operator tests: image payload invariant, kNN, PIP."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from spatialjoincountovershells_spark import knn, logspace_edges, shell_count, squared_edges
+from spatialjoincountovershells_spark import knn
 from spatialjoincountovershells_spark.functions.geometry import squared_distance_np
 from spatialjoincountovershells_spark.operators.images import (
     image_augment,
@@ -20,8 +20,6 @@ from spatialjoincountovershells_spark.operators.pip import (
     point_in_polygon_np,
 )
 from spatialjoincountovershells_spark.sources.synth import synth_images, synth_points_np
-
-from fixtures import PB_HALOS, PB_PARTICLES, dense_from_long, oracle_shell_counts
 
 
 def _df_points(spark, arr, id_col=None):
@@ -194,48 +192,6 @@ def test_image_knn_hist_matches_bruteforce(spark):
         assert list(sub["image_id"]) == [i for _, i in want]
         assert list(sub["l1_dist"]) == [int(v) for v, _ in want]
         assert list(sub["rank"]) == [1, 2, 3]
-
-
-# ------------------------------------------------------------ salting
-
-@pytest.mark.parametrize("plan", ["sql", "fused"])
-def test_salting_preserves_counts(spark, plan):
-    """Dense-cell salting must not change any count (PB + random oracle)."""
-    P = synth_points_np(800, seed=4)
-    H = synth_points_np(30, seed=1004)
-    edges = logspace_edges(10.0, 300.0, 8)
-    halos = _df_points(spark, H, id_col="halo_id")
-    parts = _df_points(spark, P)
-    res = shell_count(
-        halos, parts, edges, plan=plan, salt_threshold=5, max_salt=8
-    )
-    got = dense_from_long(
-        [(r.halo_id, r.shell_idx, r.cnt) for r in res.collect()], len(H), len(edges)
-    )
-    want = oracle_shell_counts(H, P, squared_edges(edges))
-    assert got.tolist() == want.tolist()
-
-
-def test_salting_splits_hot_cells(spark):
-    """With threshold 1 every occupied cell gets salted; key space grows."""
-    from spatialjoincountovershells_spark.operators.cells import explode_ring, with_cell
-    from spatialjoincountovershells_spark.operators.shell_count import apply_salting
-
-    P = synth_points_np(500, seed=11)
-    parts = with_cell(_df_points(spark, P).selectExpr("x as _px", "y as _py", "z as _pz"),
-                      4, cols=("_px", "_py", "_pz"))
-    halos = explode_ring(
-        _df_points(spark, P[:10], id_col="halo_id").selectExpr(
-            "halo_id", "x as _hx", "y as _hy", "z as _hz"
-        ),
-        4, cols=("_hx", "_hy", "_hz"),
-    )
-    h2, p2, skey = apply_salting(halos, parts, salt_threshold=2, max_salt=8)
-    plain = parts.select("cell_id").distinct().count()
-    salted = p2.select(skey).distinct().count()
-    assert salted > plain  # hot cells actually split
-    # every particle still joins: per-key particle totals preserved
-    assert p2.count() == parts.count()
 
 
 # ------------------------------------------------------------ kNN oracle

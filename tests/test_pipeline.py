@@ -324,10 +324,37 @@ def test_sjcs_job_via_spark_submit(spark, tmp_path):
     assert first["rows"] > 0
     marker = os.path.join(out, "_SJCS_DONE.json")
     assert os.path.exists(marker)
+    with open(marker) as f:
+        assert first["rows"] == _json.load(f)["n_rows"]
     mtime = os.path.getmtime(marker)
     second = run()
     assert second["rows"] == first["rows"]
     assert os.path.getmtime(marker) == mtime, "second run must resume"
+
+
+def test_get_spark_local_master_with_retries(tmp_path):
+    """get_spark starts ``local[N,F]`` (N threads, F task attempts) and
+    defaults the shuffle partitions to max(8, the started context's
+    parallelism) rather than parsing the master string."""
+    import subprocess
+    import sys as _sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from spatialjoincountovershells_spark import get_spark\n"
+        "for m in ('local[2,3]', 'local[10,2]'):\n"
+        "    s = get_spark(master=m, driver_memory='1g')\n"
+        "    print('SP', m, s.sparkContext.defaultParallelism,\n"
+        "          s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "    s.stop()\n"
+    )
+    r = subprocess.run([_sys.executable, "-c", code], capture_output=True,
+                       text=True, cwd=str(tmp_path), timeout=600)
+    assert r.returncode == 0, (r.stdout + r.stderr)[-3000:]
+    got = [l.split()[1:] for l in r.stdout.splitlines() if l.startswith("SP ")]
+    assert got == [["local[2,3]", "2", "8"], ["local[10,2]", "10", "10"]]
 
 
 def test_python_workers_hold_no_zipimporter(spark):

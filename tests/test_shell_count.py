@@ -74,10 +74,9 @@ def test_random_vs_oracle(spark, plan, seed, n_part, n_halo, spec):
 
 @pytest.mark.parametrize("plan", ["sql", "fused", "bcast", "dgrid"])
 def test_skewed_clusters_vs_oracle(spark, plan):
-    """Heavily clustered data (the 100-TB failure mode the salting path
+    """Heavily clustered data (the 100-TB failure mode AQE's skew join
     exists for): 80% of particles in one tight blob, halos half inside
-    the blob — every plan must match the numpy oracle, and the sql plan
-    must also match with salting enabled on the hot cells."""
+    the blob — every plan must match the numpy oracle."""
     rng = np.random.default_rng(42)
     blob = (rng.normal(0, 4.0, size=(800, 3)) + 500.0) % 1000.0
     bg = rng.uniform(0, 1000.0, size=(200, 3))
@@ -90,13 +89,6 @@ def test_skewed_clusters_vs_oracle(spark, plan):
     want = oracle_shell_counts(H, P, squared_edges(edges))
     got = _run(spark, H, P, edges, plan)
     assert got.tolist() == want.tolist()
-    if plan == "sql":
-        halos = _df_points(spark, H, id_col="halo_id")
-        parts = _df_points(spark, P)
-        salted = shell_count(halos, parts, edges, plan="sql",
-                             salt_threshold=50, max_salt=8)
-        rows = [(r.halo_id, r.shell_idx, r.cnt) for r in salted.collect()]
-        assert dense_from_long(rows, len(H), len(edges)).tolist() == want.tolist()
 
 
 @pytest.mark.parametrize("plan", ["bcast", "dgrid"])
@@ -137,8 +129,11 @@ def test_choose_plan_measured_regimes():
     # (the reference's own in-memory-grid architecture; fastest in
     # every CPU-pinned measurement, BENCH/BASELINE.md)
     assert choose_plan(60_000, 600_000, rmax=20.0) == "dgrid"
-    # data too big, probe side fits: bcast — never shuffles the big
-    # table (ref scale: 10M probes vs 300M particles)
+    # data too big, probe side fits: bcast, by reasoning rather than
+    # measurement — it never shuffles the big table (ref scale: 10M
+    # probes vs 300M particles).  Warm in-memory calls (local[4],
+    # parquet sink) lost where this rule picks it: 1M x 100k bcast 8.6
+    # CPU.s vs fused 6.7-6.9, 1M x 10k bcast 4.4 vs sql 2.9
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0) == "bcast"
     # beyond the budget: fused's ~5 CPU.s fixed cost per call keeps
     # small jobs on sql, and at 6M x 600k the sweep's pairs on the
@@ -230,23 +225,21 @@ def test_weighted_shell_sums(spark, plan):
     cnt stays identical to the unweighted run.  Two inputs: uniform
     points, and halos at the faces, edges and corners of fused's
     blocks (>= 3 per axis) inside the box and across its wrap, with a
-    hot block that the shuffle plans also run salted (sql salts its
-    cells, fused its blocks)."""
+    hot block."""
     from spatialjoincountovershells_spark.operators.shell_count import _plan_grid
 
     rng = np.random.default_rng(8)
     H = rng.uniform(0, 1000.0, size=(60, 3))
     P = rng.uniform(0, 1000.0, size=(500, 3))
     cases = [(H, P, rng.integers(0, 1000, size=len(P)),
-              logspace_edges(30.0, 240.0, 4), [None])]
+              logspace_edges(30.0, 240.0, 4))]
     nb, _ = _plan_grid("fused", 40.0, 1000.0, 1000,
                        blocks_for=spark.sparkContext.defaultParallelism)
     assert nb >= 3
     H, P = _block_edge_points(rng, nb, 40.0)
     cases.append((H, P, rng.integers(0, 1000, size=len(P)),
-                  logspace_edges(2.0, 40.0, 4),
-                  [None] if plan == "dgrid" else [None, 50]))
-    for H, P, w, edges, salts in cases:
+                  logspace_edges(2.0, 40.0, 4)))
+    for H, P, w, edges in cases:
         r2 = squared_edges(edges).astype(np.float64)
         # float64 min-image brute force with exact integer weight sums
         d = np.abs(H[:, None, :] - P[None, :, :])
@@ -274,17 +267,15 @@ def test_weighted_shell_sums(spark, plan):
             [(float(x), float(y), float(z), int(wi)) for (x, y, z), wi in zip(P, w)],
             "x double, y double, z double, w long",
         )
-        for salt in salts:
-            got = shell_count(halos, parts, edges, dtype="float64", plan=plan,
-                              id_col="halo_id", weight_col="w",
-                              salt_threshold=salt, max_salt=8)
-            gc = np.zeros_like(want_c)
-            gw = np.zeros_like(want_w)
-            for r in got.collect():
-                gc[r.halo_id, r.shell_idx] = r.cnt
-                gw[r.halo_id, r.shell_idx] = r.wsum
-            assert gc.tolist() == want_c.tolist(), salt
-            assert gw.tolist() == want_w.tolist(), salt
+        got = shell_count(halos, parts, edges, dtype="float64", plan=plan,
+                          id_col="halo_id", weight_col="w")
+        gc = np.zeros_like(want_c)
+        gw = np.zeros_like(want_w)
+        for r in got.collect():
+            gc[r.halo_id, r.shell_idx] = r.cnt
+            gw[r.halo_id, r.shell_idx] = r.wsum
+        assert gc.tolist() == want_c.tolist()
+        assert gw.tolist() == want_w.tolist()
 
 
 def test_weight_col_rejected_on_bcast_plan(spark):
