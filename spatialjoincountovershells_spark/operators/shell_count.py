@@ -112,7 +112,7 @@ from pyspark.sql.types import StructType
 from ..functions.geometry import squared_distance_expr, squared_distance_sql
 from ..functions.shells import shell_binner, shell_index_expr, squared_edges
 from ..functions.sqltext import dlit, ident
-from ..sources.tableio import count_rows
+from ..sources.tableio import count_rows, plan_nodes
 from .cells import explode_ring, grid_ncells, ring_offsets, with_cell  # noqa: F401
 
 _H = ("_hx", "_hy", "_hz")
@@ -767,6 +767,14 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
     return sweep
 
 
+# optimized-plan nodes that never shuffle: `_sweep_join`'s `spread`
+# reads the partition count of a side made only of these from its RDD
+_NARROW_NODES = frozenset((
+    "Project", "Filter", "LogicalRelation", "LogicalRDD", "LocalRelation",
+    "Range", "MapInPandas", "MapInArrow", "BatchEvalPython",
+    "ArrowEvalPython"))
+
+
 def _sweep_join(stream: tuple, indexed: tuple, reducer, schema: str, r2,
                 box: float, dtype: str, nc: int, ring_k: int,
                 spread: bool = False, key: str | None = None,
@@ -784,7 +792,11 @@ def _sweep_join(stream: tuple, indexed: tuple, reducer, schema: str, r2,
     ``mapInArrow``: no shuffle.  With `spread`, a streamed side with
     fewer partitions than cores is repartitioned first — Spark's scan
     bin-packing often lands a small probe table in one or two
-    partitions, and this shuffles the SMALL side only.
+    partitions, and this shuffles the SMALL side only.  Only a side
+    whose optimized plan is all ``_NARROW_NODES`` is asked for its
+    partition count: on any other, ``.rdd`` would run the side's
+    shuffle as a hidden job, so it is repartitioned unasked, to an
+    explicit count AQE leaves alone.
 
     With `key` (plan 'fused') the two sides are cogrouped on it
     (``applyInArrow``; no pandas on either side): each group's indexed
@@ -803,7 +815,8 @@ def _sweep_join(stream: tuple, indexed: tuple, reducer, schema: str, r2,
         s = sdf.select(*ssel)
         if spread:
             par = sdf.sparkSession.sparkContext.defaultParallelism
-            if s.rdd.getNumPartitions() < par:
+            if (any(k not in _NARROW_NODES for k, _ in plan_nodes(s))
+                    or s.rdd.getNumPartitions() < par):
                 s = s.repartition(par)
         return s.mapInArrow(
             lambda batches: _sweep_batches(sweep, bc.value, batches, s_id,

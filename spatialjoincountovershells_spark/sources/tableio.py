@@ -105,6 +105,17 @@ def parquet_footer_rows(paths: Iterable[str]) -> list[int]:
     return [pq.read_metadata(p).num_rows for p in paths]
 
 
+def plan_nodes(df: DataFrame):
+    """-> (class simple name, JVM node) for every node of `df`'s
+    optimized logical plan; reading it starts no Spark job."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        yield node.getClass().getSimpleName(), node
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+
 def count_rows(df: DataFrame, exact: bool = True) -> int:
     """``df.count()``, from parquet footers without a Spark job when
     the optimized plan allows it.
@@ -117,10 +128,7 @@ def count_rows(df: DataFrame, exact: bool = True) -> int:
     Any other node (an explode, a join, a limit, an in-memory or
     non-parquet source) or a non-local file runs ``count()``."""
     keep = ("Project",) if exact else ("Project", "Filter")
-    stack = [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        kind = node.getClass().getSimpleName()
+    for kind, node in plan_nodes(df):
         if kind == "LogicalRelation":
             rel = node.relation()
             if (rel.getClass().getSimpleName() != "HadoopFsRelation"
@@ -129,8 +137,6 @@ def count_rows(df: DataFrame, exact: bool = True) -> int:
                 return df.count()
         elif kind not in keep:
             return df.count()
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
     paths = []
     for uri in df.inputFiles():
         u = urlparse(uri)

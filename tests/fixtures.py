@@ -67,3 +67,14 @@ def dense_from_long(rows, nhalos: int, nshells: int) -> np.ndarray:
     for hid, sh, c in rows:
         m[int(hid), int(sh)] = c
     return m
+
+
+def jobs_in_group(spark, group, fn):
+    """-> (fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

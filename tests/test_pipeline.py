@@ -17,6 +17,8 @@ from spatialjoincountovershells_spark.plans.pipeline import (
 )
 from spatialjoincountovershells_spark.sources.synth import synth_images, synth_points
 
+from fixtures import jobs_in_group
+
 
 def test_sjcs_pipeline_with_filter(spark):
     """images + halos + filter-id list end-to-end; filtered counts are a
@@ -70,17 +72,6 @@ def test_checkpoint_records_lineage(spark, tmp_path):
     assert resume(spark, p, "other") is None
 
 
-def _jobs_in_group(spark, group, fn):
-    """-> (fn(), number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_checkpoint_counts_from_footers_without_a_job(spark, tmp_path):
     """On the parquet stand-in checkpoint counts what it wrote from the
     files' footers: it starts exactly the jobs a plain write_table of
@@ -90,8 +81,8 @@ def test_checkpoint_counts_from_footers_without_a_job(spark, tmp_path):
 
     df = synth_points(spark, 500, seed=7).repartition(3)
     p = str(tmp_path / "ck")
-    meta, n_ck = _jobs_in_group(spark, "ck", lambda: checkpoint(df, p, "t"))
-    _, n_w = _jobs_in_group(
+    meta, n_ck = jobs_in_group(spark, "ck", lambda: checkpoint(df, p, "t"))
+    _, n_w = jobs_in_group(
         spark, "w", lambda: write_table(df, str(tmp_path / "w")))
     assert n_ck == n_w >= 1
     assert meta["n_rows"] == spark.read.parquet(p).count() == 500
@@ -107,11 +98,11 @@ def test_footer_count_is_exact_and_jobless_only_unfiltered(spark, tmp_path):
     p = str(tmp_path / "pts")
     synth_points(spark, 700, seed=8, id_col="id").repartition(2).write.parquet(p)
     df = spark.read.parquet(p)
-    n, jobs = _jobs_in_group(spark, "plain",
-                             lambda: count_rows(df.select("id", "phash")))
+    n, jobs = jobs_in_group(spark, "plain",
+                            lambda: count_rows(df.select("id", "phash")))
     assert (n, jobs) == (700, 0)
     sub = df.where("id % 3 = 0")
-    n, jobs = _jobs_in_group(spark, "filtered", lambda: count_rows(sub))
+    n, jobs = jobs_in_group(spark, "filtered", lambda: count_rows(sub))
     assert n == sub.count() < 700 and jobs >= 1
 
 

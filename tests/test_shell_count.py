@@ -11,7 +11,13 @@ from spatialjoincountovershells_spark import (
 )
 from spatialjoincountovershells_spark.sources.synth import synth_points_np
 
-from fixtures import PB_HALOS, PB_PARTICLES, dense_from_long, oracle_shell_counts
+from fixtures import (
+    PB_HALOS,
+    PB_PARTICLES,
+    dense_from_long,
+    jobs_in_group,
+    oracle_shell_counts,
+)
 
 
 def _df_points(spark, arr, id_col=None):
@@ -710,21 +716,20 @@ def test_row_bound_reads_parquet_footers_without_a_job(spark, tmp_path):
     such inputs (which bound both sides) starts a Spark job."""
     from spatialjoincountovershells_spark.sources.tableio import count_rows
 
-    sc = spark.sparkContext
     parts = _parquet_points(spark, tmp_path, 5000, seed=21)
     halos = _parquet_points(spark, tmp_path, 300, seed=22).withColumnRenamed(
         "id", "halo_id")
     edges = logspace_edges(1.0, 40.0, 6)
-    sc.setJobGroup("row_bound", "no job expected")
-    try:
+
+    def bound_and_build():
         assert count_rows(parts.select("x", "y", "z"), exact=False) == 5000
         assert count_rows(halos, exact=False) == 300
         # plan='auto' with a broadcast-budget miss would collect; fused
         # builds lazily, so it shows the bound's cost alone
         shell_count(halos, parts, edges, plan="fused")
-        assert list(sc.statusTracker().getJobIdsForGroup("row_bound")) == []
-    finally:
-        sc.setJobGroup(None, None)
+
+    _, jobs = jobs_in_group(spark, "row_bound", bound_and_build)
+    assert jobs == 0
 
 
 def test_row_bound_counts_when_rows_can_grow(spark, tmp_path):
@@ -746,3 +751,26 @@ def test_row_bound_counts_when_rows_can_grow(spark, tmp_path):
     for budget in (512 << 20, 100_000, 0):
         assert (choose_plan(300, bound, 40.0, max_broadcast_bytes=budget)
                 == choose_plan(300, n, 40.0, max_broadcast_bytes=budget))
+
+
+def test_dgrid_on_a_shuffled_halo_side_builds_in_one_job(spark):
+    """dgrid's `spread` never asks a halo side that holds a shuffle for
+    its partition count (``.rdd`` would run that shuffle as a hidden
+    job): building the plan starts exactly one job, the particle grid's
+    collect, and the counts equal the brute force."""
+    from pyspark.sql import functions as F
+
+    P = synth_points_np(3000, seed=31)
+    H = synth_points_np(2000, seed=32)
+    one = _df_points(spark, H, id_col="halo_id")
+    # every halo twice, merged back by the groupBy's shuffle
+    halos = one.union(one).groupBy("halo_id").agg(
+        *(F.min(c).alias(c) for c in "xyz"))
+    edges = logspace_edges(1.0, 60.0, 6)
+    res, jobs = jobs_in_group(spark, "dgrid_build", lambda: shell_count(
+        halos, _df_points(spark, P), edges, plan="dgrid"))
+    assert jobs == 1
+    got = dense_from_long([(r.halo_id, r.shell_idx, r.cnt)
+                           for r in res.collect()], len(H), len(edges))
+    assert got.tolist() == oracle_shell_counts(
+        H, P, squared_edges(edges)).tolist()
