@@ -15,9 +15,15 @@ restarts via its checkpoint.
       --checkpoint /data/ckpt \
       [--stateful] [--available-now] [--box 1000] [--dtype float32]
 
---stateful uses the applyInPandasWithState operator (explicit per-halo
-running-totals array in group state; only halos touched by a batch are
-re-emitted) instead of the streaming groupBy.  --available-now drains
+Both operators sweep every micro-batch past one halo grid (plan
+'bcast'): --halo-file is read, CSR-indexed and broadcast once, when the
+query starts, so a changed halo file needs a new query (and a new
+--checkpoint); it must fit the broadcast payload (about 40 B per halo)
+with an integer halo_id.  Each batch emits partial (halo, shell, cnt)
+rows; the default streaming groupBy sums them, and --stateful adds
+them into the applyInPandasWithState operator's explicit per-halo
+running-totals array in group state (only halos touched by a batch are
+re-emitted).  --available-now drains
 every file currently in the directory and exits (incremental: a
 restart with the same --checkpoint processes only NEW files) — the
 exact batch-boundary semantics of the reference's file loop; without

@@ -73,7 +73,10 @@ so the byte-exact golden tests pin every plan.
   (halo, shell) counts and a small final aggregation whose input is
   bounded by nonzero (halo, shell) cells per task.  The halo side
   must fit executor memory (~40 B/halo: 10M halos ≈ 400 MB, the
-  reference's own per-node assumption).
+  reference's own per-node assumption) and its id must be an integer.
+  The halo table is read and broadcast once, when the plan is built,
+  so a streaming particle side (``stream_shell_counts``) sweeps every
+  micro-batch past one grid; a changed halo table needs a new query.
 * plan="fused" (``_probe_counts``): one particle grid per coarse
   block, built inside its cogroup group; nothing is broadcast.  Every
   particle lies in exactly one block and every halo is copied to each
@@ -975,10 +978,12 @@ def _grid_row_counts(grid, r2k: np.ndarray, clock=_tick):
     def fold(_row, gidx, d2):
         nonlocal raw_n
         sh = bin_(d2).astype(out_t, copy=False)
+        clock("binning")
         raw.append(gidx.astype(out_t) * out_t(nr) + sh)
         raw_n += len(sh)
         if raw_n > 24_000_000:
             flush()
+        clock("accumulate")
 
     def emit(ids):
         if ids is not None:

@@ -40,34 +40,6 @@ def stream_cell_occupancy(
     )
 
 
-def _binned_stream(
-    stream: DataFrame,
-    halos: DataFrame,
-    edges,
-    box: float,
-    dtype: str,
-    id_col: str,
-):
-    """Shared join+bin stage: particle STREAM x static halo ring table
-    -> streaming (halo_id, shell_idx) rows, one per in-range pair.
-
-    The plan is the sql join plan (ring-explode the STATIC side,
-    stream->static equi-join on cell_id — stream-static joins are
-    stateless and append-safe).  Returns (binned_df, n_shells).
-    """
-    from ..functions.shells import shell_index_expr, squared_edges
-    from ..functions.sqltext import ident
-    from ..operators.shell_count import _pairs_within, _prep
-
-    xyz = ("x", "y", "z")
-    h, p, _, edges = _prep(halos, stream, edges, box, id_col, xyz, xyz, None)
-    r2 = squared_edges(edges)
-    # stream on the left: stream-static join
-    proj = _pairs_within(p.join(h, "cell_id"), r2[-1], box, dtype, id_col)
-    sh = shell_index_expr("_d2", r2)
-    return proj.selectExpr(ident(id_col), f"{sh} AS shell_idx"), len(r2)
-
-
 def stream_shell_counts(
     stream: DataFrame,
     halos: DataFrame,
@@ -80,19 +52,24 @@ def stream_shell_counts(
     particle STREAM against a static halo table.
 
     The streaming analog of the reference's per-file accumulation loop
-    (`src/astr_rcount/main.c` processes particle files one at a time,
-    adding each file's counts into the running totals — SURVEY §3.1):
+    (`src/astr_rcount/main.c` builds its index once and adds each
+    particle file's counts into the running totals — SURVEY §3.1):
     here every micro-batch plays the role of one particle file.  The
-    join+bin stage (`_binned_stream`) feeds a streaming groupBy; run it
-    in update/complete mode and the sink holds the same running totals
-    the reference prints at the end of its file loop.
+    call is ``shell_count(plan='bcast')`` with the stream as the
+    particle side: the static halo table is read, CSR-indexed and
+    broadcast ONCE, when this query is built (a changed halo table
+    needs a new query), and every micro-batch runs one ``mapInArrow``
+    past that grid, emitting partial (halo, shell, cnt) rows that a
+    streaming ``sum(cnt)`` folds in.  Run it in update/complete mode
+    and the sink holds the same running totals the reference prints at
+    the end of its file loop.  The halo table must fit the broadcast
+    payload (about 40 B per halo) and `id_col` must be an integer
+    column.
     -> streaming (halo_id, shell_idx, cnt)
     """
-    binned, _ = _binned_stream(stream, halos, edges, box, dtype, id_col)
-    return (
-        binned.groupBy(id_col, "shell_idx")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    from ..operators.shell_count import shell_count
+
+    return shell_count(halos, stream, edges, box, dtype, id_col, plan="bcast")
 
 
 def stream_shell_counts_stateful(
@@ -110,35 +87,38 @@ def stream_shell_counts_stateful(
     probe across its particle-file loop (`src/astr_rcount/main.c`
     running totals, SURVEY §3.1); this operator is that accumulator as
     a Structured Streaming custom stateful operator — group state keyed
-    by halo_id holds the dense shell vector, each micro-batch bincounts
-    its pairs into it, and only the halos TOUCHED by the batch are
-    re-emitted (update-mode sink).  Compared to `stream_shell_counts`
-    (streaming groupBy whose state lives in Spark's agg hash map and
-    whose complete-mode sink rewrites every halo every batch), this is
-    the shape you want when the probe set is large and each micro-batch
-    touches few of them: sink traffic is proportional to the batch, not
-    the state.
+    by halo_id holds the dense shell vector, each micro-batch adds its
+    partial (halo, shell, cnt) rows into it with exact int64 adds, and
+    only the halos TOUCHED by the batch are re-emitted (update-mode
+    sink).  The partial rows come from the same sweep as
+    `stream_shell_counts`: the static halo table is read, CSR-indexed
+    and broadcast ONCE, when this query is built (a changed halo table
+    needs a new query); it must fit the broadcast payload (about 40 B
+    per halo) and `id_col` must be an integer column.  Compared to
+    `stream_shell_counts` (streaming groupBy whose state lives in
+    Spark's agg hash map and whose complete-mode sink rewrites every
+    halo every batch), this is the shape you want when the probe set
+    is large and each micro-batch touches few of them: sink traffic is
+    proportional to the batch, not the state.
     -> streaming (halo_id, shell_idx, cnt) — updated running totals.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    binned, n_shells = _binned_stream(stream, halos, edges, box, dtype, id_col)
-    out_t = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("shell_idx", IntegerType()),
-            StructField("cnt", LongType()),
-        ]
-    )
+    from ..functions.shells import squared_edges
+    from ..functions.sqltext import ident
+    from ..operators.shell_count import _grid_row_counts, _plan_grid, _sweep_join
+
+    r2 = squared_edges(edges)
+    n_shells = len(r2)
+    schema = f"{ident(id_col)} long, shell_idx int, cnt long"
+    xyz = ("x", "y", "z")
+    partial = _sweep_join(
+        (stream, xyz, None), (halos, xyz, id_col, None), _grid_row_counts,
+        schema, r2, box, dtype,
+        *_plan_grid("bcast", float(np.asarray(edges)[-1]), box))
     state_t = StructType([StructField("counts", ArrayType(LongType()))])
 
     def accumulate(key, pdfs, state):
@@ -146,10 +126,8 @@ def stream_shell_counts_stateful(
         if state.exists:
             acc += np.asarray(state.get[0], dtype=np.int64)
         for pdf in pdfs:
-            b = np.bincount(
-                pdf["shell_idx"].to_numpy(dtype=np.int64), minlength=n_shells
-            )
-            acc += b
+            np.add.at(acc, pdf["shell_idx"].to_numpy(np.int64),
+                      pdf["cnt"].to_numpy(np.int64))
         state.update((acc.tolist(),))
         nz = np.nonzero(acc)[0]
         yield pd.DataFrame(
@@ -160,8 +138,9 @@ def stream_shell_counts_stateful(
             }
         )
 
-    return binned.groupBy(id_col).applyInPandasWithState(
-        accumulate, out_t, state_t, "update", GroupStateTimeout.NoTimeout
+    return partial.groupBy(id_col).applyInPandasWithState(
+        accumulate, StructType.fromDDL(schema), state_t, "update",
+        GroupStateTimeout.NoTimeout
     )
 
 
@@ -204,8 +183,8 @@ def stream_geo_shell_counts(
     """Streaming GREAT-CIRCLE shell counts: arriving geo-tagged rows
     against a static site table — e.g. "images within 1/5/25 km of each
     POI, live".  Both sides embed on the quantized chord lattice
-    (operators/geo.py) and the unchanged stateless stream-static
-    ring join + bin stage runs on the shifted coordinates.
+    (operators/geo.py) and ``stream_shell_counts``' broadcast site grid
+    is swept by every micro-batch on the shifted coordinates.
     -> streaming (id_col, shell_idx, cnt); update/complete-mode sink
     holds the running totals.
     """

@@ -7,8 +7,9 @@ in the corpus".  Because the minhash band keys are a stateless per-row
 kernel (minhash_band_buckets: one mapInPandas pass, no
 explode/distinct/groupBy), the stream side needs NO state and NO
 shuffle, and the corpus check is one stream-static equi-join on
-(band, key) — the same stateless append-safe join shape as
-stream_cells.stream_shell_counts' cell join.
+(band, key): stateless and append-safe.  (Streaming shell counts,
+stream_cells.stream_shell_counts, need no join at all: every
+micro-batch sweeps a halo grid broadcast once per query.)
 """
 
 from __future__ import annotations

@@ -449,3 +449,140 @@ def test_stream_near_dup_matches_batch_join(spark):
     finally:
         q.stop()
     assert got == want
+
+
+def _stream_plan_nodes(query) -> list[str]:
+    """Node names of a streaming query's last micro-batch physical plan."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        query.explain()
+    names = []
+    for line in buf.getvalue().splitlines():
+        m = re.match(r"^[\s:|+-]*(?:\*\(\d+\)\s*)?([A-Z]\w*)", line)
+        if m:
+            names.append(m.group(1))
+    return names
+
+
+def _corner_stream_inputs(seed: int = 11):
+    """Halos on the box's faces, edges and corners plus a few inside;
+    particles in 3 files, uniform plus a clump at each corner, so many
+    pairs cross the periodic wrap (the sweep's fold path)."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    near = (0.5, 999.5)
+    H = np.vstack([
+        np.array(np.meshgrid(near, near, near)).T.reshape(-1, 3),  # corners
+        [[0.5, 500.0, 500.0], [999.5, 500.0, 500.0], [500.0, 3.0, 500.0],
+         [500.0, 500.0, 996.0], [2.0, 998.0, 500.0]],  # faces, an edge
+        rng.uniform(0, 1000, (7, 3)),
+    ]).astype(np.float32)
+    files = []
+    for _ in range(3):
+        corner = rng.integers(0, 2, (120, 3)) * 1000.0 + rng.uniform(
+            -25, 25, (120, 3))
+        P = np.vstack([rng.uniform(0, 1000, (200, 3)), corner % 1000.0])
+        files.append(P.astype(np.float32))
+    return H, files
+
+
+def test_stream_shell_counts_run_one_arrow_sweep_per_batch(spark, tmp_path):
+    """Both streaming shell operators sweep the broadcast halo grid:
+    every micro-batch plan holds exactly one MapInArrow, and no ring
+    explode (Generate) or join."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spatialjoincountovershells_spark.streaming.stream_cells import (
+        stream_shell_counts,
+        stream_shell_counts_stateful,
+    )
+
+    H, files = _corner_stream_inputs()
+    halos = spark.createDataFrame(
+        [(i, *map(float, h)) for i, h in enumerate(H)],
+        "halo_id long, x float, y float, z float")
+    src = tmp_path / "parts"
+    src.mkdir()
+    pq.write_table(pa.table(dict(zip("xyz", files[0].T))), src / "f0.parquet")
+    edges = np.array([5.0, 20.0, 40.0], dtype=np.float32)
+    for name, op in (("plan_stateless", stream_shell_counts),
+                     ("plan_stateful", stream_shell_counts_stateful)):
+        stream = spark.readStream.schema("x float, y float, z float") \
+            .parquet(str(src))
+        q = (op(stream, halos, edges).writeStream.format("memory")
+             .queryName(name).outputMode("update").start())
+        try:
+            q.processAllAvailable()
+            nodes = _stream_plan_nodes(q)
+        finally:
+            q.stop()
+        assert nodes.count("MapInArrow") == 1, (name, nodes)
+        assert not [n for n in nodes if "Generate" in n or "Join" in n], (
+            name, nodes)
+
+
+def test_stream_shell_counts_match_brute_force_per_trigger(spark, tmp_path):
+    """A 3-file stream, one file per trigger, against halos on the box
+    faces and corners: after every trigger both streaming operators
+    must equal the numpy brute force over the files read so far."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fixtures import oracle_shell_counts
+    from spatialjoincountovershells_spark.functions.shells import (
+        squared_edges,
+    )
+    from spatialjoincountovershells_spark.streaming.stream_cells import (
+        stream_shell_counts,
+        stream_shell_counts_stateful,
+    )
+
+    H, files = _corner_stream_inputs()
+    halos = spark.createDataFrame(
+        [(i, *map(float, h)) for i, h in enumerate(H)],
+        "halo_id long, x float, y float, z float")
+    edges = np.array([5.0, 12.0, 25.0, 40.0], dtype=np.float32)
+    src = tmp_path / "parts"
+    src.mkdir()
+    pq.write_table(pa.table(dict(zip("xyz", files[0].T))), src / "f0.parquet")
+
+    def start(op, name, mode):
+        stream = (spark.readStream.schema("x float, y float, z float")
+                  .option("maxFilesPerTrigger", 1).parquet(str(src)))
+        return (op(stream, halos, edges).writeStream.format("memory")
+                .queryName(name).outputMode(mode).start())
+
+    queries = [start(stream_shell_counts, "brute_stateless", "complete"),
+               start(stream_shell_counts_stateful, "brute_stateful", "update")]
+    try:
+        for k, P in enumerate(files):
+            if k:
+                pq.write_table(pa.table(dict(zip("xyz", P.T))),
+                               src / f"f{k}.parquet")
+            for q in queries:
+                q.processAllAvailable()
+                assert q.lastProgress["numInputRows"] == len(P)
+            dense = oracle_shell_counts(H, np.vstack(files[:k + 1]),
+                                        squared_edges(edges))
+            want = {(int(h), int(s)): int(dense[h, s])
+                    for h, s in zip(*np.nonzero(dense))}
+            # some pairs exist only across the periodic wrap
+            assert (dense != oracle_shell_counts(
+                H, np.vstack(files[:k + 1]), squared_edges(edges),
+                box=1e9)).any()
+            for name in ("brute_stateless", "brute_stateful"):
+                got = {(r.halo_id, r.shell_idx): r.cnt for r in spark.sql(
+                    "SELECT halo_id, shell_idx, max(cnt) AS cnt FROM "
+                    f"{name} GROUP BY halo_id, shell_idx").collect()}
+                assert got == want, (name, k)
+    finally:
+        for q in queries:
+            q.stop()

@@ -1,35 +1,38 @@
-"""Driver-only numpy replay of the dgrid and fused ring-sweep kernels.
+"""Driver-only numpy replay of the dgrid, bcast and fused ring-sweep kernels.
 
     python3 tools/sweep_replay.py --workload shells_ref --seed 1003 --repeat 3
 
 Reads perfbench's seeded inputs (``perfbench/gen.py``; nothing is
 written), builds each plan's sweep grid exactly as the plan does and
-streams the probes, as the Arrow record batches Spark hands a Python
-worker, through the operator's own per-batch loop
-(``_sweep_batches`` with the ``_probe_counts`` reducer) in one thread,
-with no Spark.  The sweep reports each phase as it ends, and the
-replay prints the CPU seconds (``time.process_time``) charged to each:
+streams the other side, as the Arrow record batches Spark hands a
+Python worker, through the operator's own per-batch loop
+(``_sweep_batches``, with the plan's reducer: ``_probe_counts`` for
+dgrid and fused, ``_grid_row_counts`` for bcast) in one thread, with
+no Spark.  The sweep reports each phase as it ends, and the replay
+prints the CPU seconds (``time.process_time``) charged to each:
 
-* grid build — ``_cell_key`` + ``_csr_grid`` (dgrid's is the driver's
-  broadcast build; fused builds one per block);
+* grid build — ``_cell_key`` + ``_csr_grid`` (dgrid's particle grid
+  and bcast's halo grid are the driver's broadcast builds; fused
+  builds one per block);
 * cell order — the Arrow -> float64 decode and the argsort that puts
-  a probe batch in cell-key order;
-* segments — cell indices, slab gaps and the CSR ranges per probe;
-* index build — the per-pair grid and probe row indices;
+  a streamed batch in cell-key order;
+* segments — cell indices, slab gaps and the CSR ranges per row;
+* index build — the per-pair grid and streamed row indices;
 * grid gather — the grid's three coordinate gathers;
-* probe gather — the probes' three coordinate gathers, with the
-  subtraction;
+* probe gather — the streamed rows' three coordinate gathers, with
+  the subtraction;
 * arithmetic — min-image fold, squares, sum, the r_max cut;
 * binning — ``shell_binner``;
-* accumulate — the per-(probe, shell) bincounts and the emitted
-  Arrow rows.
+* accumulate — the per-(probe, shell) bincounts (bcast: the per-(grid
+  row, shell) keys and their sort-reduce) and the emitted Arrow rows.
 
-dgrid streams the probes in ``--parts`` round-robin partitions of at
-most ``--batch`` rows (what ``repartition`` and get_spark's Arrow batch
-size give it); fused cogroups the coarse blocks of ``_plan_grid`` for
-``--parts`` cores, each halo copied to every block its r_max ball
-touches.  Both plans must find the same pairs, which the replay
-checks.
+dgrid streams the halos and bcast (the kernel streaming shell counts
+run on every micro-batch) the particles, in ``--parts`` round-robin
+partitions of at most ``--batch`` rows (what ``repartition``, a scan's
+splits and get_spark's Arrow batch size give them); fused cogroups the
+coarse blocks of ``_plan_grid`` for ``--parts`` cores, each halo
+copied to every block its r_max ball touches.  Every plan must find
+the same pairs, which the replay checks.
 """
 
 from __future__ import annotations
@@ -59,6 +62,7 @@ from spatialjoincountovershells_spark.operators.shell_count import (  # noqa: E4
     _cell_index,
     _cell_key,
     _csr_grid,
+    _grid_row_counts,
     _make_sweep,
     _plan_grid,
     _probe_counts,
@@ -73,17 +77,19 @@ SCHEMA = pa.schema([("h", pa.int64()), ("shell_idx", pa.int32()),
                     ("cnt", pa.int64())])
 
 
-def probe_batch(H, rows) -> pa.RecordBatch:
-    """Halo rows as the Arrow batch a plan streams: id and f32 coords."""
-    return pa.record_batch([rows.astype(np.int64), *H[rows].T],
-                           names=["h", *_S])
+def stream_batch(X, rows, id_col: str | None) -> pa.RecordBatch:
+    """Rows of X as the Arrow batch a plan streams: f32 coords, and
+    the row numbers as ids under `id_col`."""
+    ids = [rows.astype(np.int64)] if id_col else []
+    return pa.record_batch([*ids, *X[rows].T],
+                           names=([id_col] if id_col else []) + list(_S))
 
 
-def pairs(sweep, grid, batches, clock) -> int:
+def pairs(sweep, grid, batches, clock, id_col="h", reducer=_probe_counts) -> int:
     """Drive the operator's per-batch loop -> total in-range pairs."""
     clock.last = time.process_time()
     return sum(int(np.asarray(b.column("cnt")).sum()) for b in
-               _sweep_batches(sweep, grid, batches, "h", _probe_counts,
+               _sweep_batches(sweep, grid, batches, id_col, reducer,
                               SCHEMA, clock))
 
 
@@ -100,20 +106,25 @@ class PhaseClock:
         self.last = now
 
 
-def dgrid(P, H, edges, np_dtype, parts, batch, clock):
-    nc, ring_k = _plan_grid("dgrid", float(edges[-1]), gen.BOX)
+def broadcast(plan, G, S, edges, np_dtype, parts, batch, clock):
+    """Plan 'dgrid' (G the particles, S the halos) or 'bcast' (G the
+    halos, with ids, S the particles): one grid, S streamed past it."""
+    nc, ring_k = _plan_grid(plan, float(edges[-1]), gen.BOX)
     r2 = squared_edges(edges)
-    P64 = P.astype(np.float64)
+    G64 = G.astype(np.float64)
     clock.last = time.process_time()
-    grid = _csr_grid(_cell_key(P64.T, nc, gen.BOX), P64.T, nc, np_dtype)
+    grid = _csr_grid(_cell_key(G64.T, nc, gen.BOX), G64.T, nc, np_dtype,
+                     ids=np.arange(len(G)) if plan == "bcast" else None)
     clock("grid build")
-    sweep = _make_sweep(nc, gen.BOX, ring_k, r2, np_dtype, len(P))
+    sweep = _make_sweep(nc, gen.BOX, ring_k, r2, np_dtype, len(G))
+    id_col, reducer = (None, _grid_row_counts) if plan == "bcast" \
+        else ("h", _probe_counts)
     total = 0
     for p in range(parts):  # one Spark task per partition
-        rows = np.arange(p, len(H), parts)
-        batches = [probe_batch(H, rows[b0:b0 + batch])
+        rows = np.arange(p, len(S), parts)
+        batches = [stream_batch(S, rows[b0:b0 + batch], id_col)
                    for b0 in range(0, len(rows), batch)]
-        total += pairs(sweep, grid, batches, clock)
+        total += pairs(sweep, grid, batches, clock, id_col, reducer)
     return total
 
 
@@ -151,7 +162,7 @@ def fused(P, H, edges, np_dtype, parts, clock):
         grid = _csr_grid(_cell_key(P64[pi].T, nc, gen.BOX), P64[pi].T, nc,
                          np_dtype, n_probes=len(hi))
         clock("grid build")
-        total += pairs(sweep, grid, [probe_batch(H, hi)], clock)
+        total += pairs(sweep, grid, [stream_batch(H, hi, "h")], clock)
     return total, nb**3, len(hrow)
 
 
@@ -181,9 +192,10 @@ def main(argv=None) -> int:
         runs = []
         for _ in range(args.repeat):
             clock = PhaseClock()
-            if plan == "dgrid":
-                totals[plan] = dgrid(P, H, edges, np_dtype, args.parts,
-                                     args.batch, clock)
+            if plan in ("dgrid", "bcast"):
+                G, S = (P, H) if plan == "dgrid" else (H, P)
+                totals[plan] = broadcast(plan, G, S, edges, np_dtype,
+                                         args.parts, args.batch, clock)
                 note = ""
             else:
                 totals[plan], n_blocks, n_copies = fused(
