@@ -13,18 +13,16 @@ restarts via its checkpoint.
       --radius 0.001:5:40 \
       --output sjcs.db.shell_totals \
       --checkpoint /data/ckpt \
-      [--stateful] [--available-now] [--box 1000] [--dtype float32]
+      [--available-now] [--box 1000] [--dtype float32]
 
-Both operators sweep every micro-batch past one halo grid (plan
-'bcast'): --halo-file is read, CSR-indexed and broadcast once, when the
-query starts, so a changed halo file needs a new query (and a new
+Every micro-batch is swept past one halo grid (``stream_shell_counts``,
+plan 'bcast'): --halo-file is read, CSR-indexed and broadcast once, when
+the query starts, so a changed halo file needs a new query (and a new
 --checkpoint); it must fit the broadcast payload (about 40 B per halo)
 with an integer halo_id.  Each batch emits partial (halo, shell, cnt)
-rows; the default streaming groupBy sums them, and --stateful adds
-them into the applyInPandasWithState operator's explicit per-halo
-running-totals array in group state (only halos touched by a batch are
-re-emitted).  --available-now drains
-every file currently in the directory and exits (incremental: a
+rows and a streaming groupBy sums them; the update-mode sink receives
+only the (halo, shell) totals that the batch changed.  --available-now
+drains every file currently in the directory and exits (incremental: a
 restart with the same --checkpoint processes only NEW files) — the
 exact batch-boundary semantics of the reference's file loop; without
 it the query runs until killed.
@@ -93,15 +91,14 @@ def run_stream_job(spark, args) -> dict:
     from spatialjoincountovershells_spark.sources.tableio import write_table
     from spatialjoincountovershells_spark.streaming.stream_cells import (
         stream_shell_counts,
-        stream_shell_counts_stateful,
     )
 
     edges = parse_radius(args.radius)
     halos = load_halos(spark, args.halo_file)
     schema = spark.read.parquet(args.particle_dir).schema
     stream = spark.readStream.schema(schema).parquet(args.particle_dir)
-    op = stream_shell_counts_stateful if args.stateful else stream_shell_counts
-    counts = op(stream, halos, edges, box=args.box, dtype=args.dtype)
+    counts = stream_shell_counts(stream, halos, edges, box=args.box,
+                                 dtype=args.dtype)
 
     def sink(batch_df, epoch_id):
         write_table(
@@ -133,7 +130,6 @@ def main(argv=None) -> int:
     ap.add_argument("--radius", required=True, help="min:max:nbins (log2-spaced)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--stateful", action="store_true")
     ap.add_argument("--available-now", action="store_true")
     ap.add_argument("--box", type=float, default=1000.0)
     ap.add_argument("--dtype", default="float32", choices=["float32", "float64"])

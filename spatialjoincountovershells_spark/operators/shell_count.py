@@ -193,9 +193,14 @@ def _pairs_within(joined: DataFrame, r2max: float, box: float, dtype: str,
                   *cols: str) -> DataFrame:
     """Candidate pairs (a join carrying `_H` and `_P` coords) ->
     ``(*cols, _d2)`` rows with ``_d2 < r2max``, as SQL text.  The
-    min-image squared distance is projected ONCE, so shell binning
-    reads the column instead of re-evaluating the expression per CASE
-    branch (which also blows codegen limits at 40 shells)."""
+    min-image squared distance is evaluated TWICE per survivor, not
+    once: Catalyst inlines the alias and pushes ``_d2 < r2max`` into
+    the join condition, so d2 is computed for every candidate pair
+    there (5.40M at the shuffle benchmark's shape) and again in the
+    Project for the survivors (1.02M).  What the projection buys is
+    the shell CASE tree reading ``_d2`` once instead of re-evaluating
+    the expression per branch (which also blows codegen limits at 40
+    shells)."""
     d2 = squared_distance_sql(_H, _P, box, dtype)
     return joined.selectExpr(*map(ident, cols), f"{d2} AS _d2").where(
         f"_d2 < {dlit(r2max)}")

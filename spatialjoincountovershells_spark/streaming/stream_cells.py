@@ -62,86 +62,16 @@ def stream_shell_counts(
     past that grid, emitting partial (halo, shell, cnt) rows that a
     streaming ``sum(cnt)`` folds in.  Run it in update/complete mode
     and the sink holds the same running totals the reference prints at
-    the end of its file loop.  The halo table must fit the broadcast
-    payload (about 40 B per halo) and `id_col` must be an integer
-    column.
+    the end of its file loop.  In update mode the sink receives only the
+    (halo, shell) totals that the batch changed, so sink traffic follows
+    the batch, not the halo table; complete mode rewrites every total
+    every batch.  The halo table must fit the broadcast payload (about
+    40 B per halo) and `id_col` must be an integer column.
     -> streaming (halo_id, shell_idx, cnt)
     """
     from ..operators.shell_count import shell_count
 
     return shell_count(halos, stream, edges, box, dtype, id_col, plan="bcast")
-
-
-def stream_shell_counts_stateful(
-    stream: DataFrame,
-    halos: DataFrame,
-    edges,
-    box: float = 1000.0,
-    dtype: str = "float32",
-    id_col: str = "halo_id",
-) -> DataFrame:
-    """Stateful streaming count-over-shells via applyInPandasWithState:
-    the per-halo running-totals ARRAY as explicit group state.
-
-    The reference keeps one `long counts[n_shells]` accumulator per
-    probe across its particle-file loop (`src/astr_rcount/main.c`
-    running totals, SURVEY §3.1); this operator is that accumulator as
-    a Structured Streaming custom stateful operator — group state keyed
-    by halo_id holds the dense shell vector, each micro-batch adds its
-    partial (halo, shell, cnt) rows into it with exact int64 adds, and
-    only the halos TOUCHED by the batch are re-emitted (update-mode
-    sink).  The partial rows come from the same sweep as
-    `stream_shell_counts`: the static halo table is read, CSR-indexed
-    and broadcast ONCE, when this query is built (a changed halo table
-    needs a new query); it must fit the broadcast payload (about 40 B
-    per halo) and `id_col` must be an integer column.  Compared to
-    `stream_shell_counts` (streaming groupBy whose state lives in
-    Spark's agg hash map and whose complete-mode sink rewrites every
-    halo every batch), this is the shape you want when the probe set
-    is large and each micro-batch touches few of them: sink traffic is
-    proportional to the batch, not the state.
-    -> streaming (halo_id, shell_idx, cnt) — updated running totals.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    from ..functions.shells import squared_edges
-    from ..functions.sqltext import ident
-    from ..operators.shell_count import _grid_row_counts, _plan_grid, _sweep_join
-
-    r2 = squared_edges(edges)
-    n_shells = len(r2)
-    schema = f"{ident(id_col)} long, shell_idx int, cnt long"
-    xyz = ("x", "y", "z")
-    partial = _sweep_join(
-        (stream, xyz, None), (halos, xyz, id_col, None), _grid_row_counts,
-        schema, r2, box, dtype,
-        *_plan_grid("bcast", float(np.asarray(edges)[-1]), box))
-    state_t = StructType([StructField("counts", ArrayType(LongType()))])
-
-    def accumulate(key, pdfs, state):
-        acc = np.zeros(n_shells, dtype=np.int64)
-        if state.exists:
-            acc += np.asarray(state.get[0], dtype=np.int64)
-        for pdf in pdfs:
-            np.add.at(acc, pdf["shell_idx"].to_numpy(np.int64),
-                      pdf["cnt"].to_numpy(np.int64))
-        state.update((acc.tolist(),))
-        nz = np.nonzero(acc)[0]
-        yield pd.DataFrame(
-            {
-                id_col: np.full(len(nz), key[0], dtype=np.int64),
-                "shell_idx": nz.astype(np.int32),
-                "cnt": acc[nz],
-            }
-        )
-
-    return partial.groupBy(id_col).applyInPandasWithState(
-        accumulate, StructType.fromDDL(schema), state_t, "update",
-        GroupStateTimeout.NoTimeout
-    )
 
 
 def stream_geo_tile_counts(

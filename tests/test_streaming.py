@@ -64,93 +64,10 @@ def test_stream_cell_occupancy_matches_batch(spark):
     assert got == want
 
 
-def test_stream_shell_counts_stateful_accumulates_across_batches(spark, tmp_path):
-    """applyInPandasWithState running totals: two deterministic file-source
-    micro-batches; after batch 1 the update-mode sink holds exactly the
-    batch-1 counts, after batch 2 the latest row per key equals the batch
-    shell_count over BOTH files — the reference's per-file accumulation
-    loop (src/astr_rcount/main.c running totals) as explicit group state."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import FloatType, StructField, StructType
-
-    from spatialjoincountovershells_spark import shell_count
-    from spatialjoincountovershells_spark.streaming.stream_cells import (
-        stream_shell_counts_stateful,
-    )
-
-    n_parts, n_halos = 400, 20
-    edges = np.logspace(np.log2(30.0), np.log2(200.0), 4, base=2.0).astype(np.float32)
-
-    def pos(ids):
-        mults = (2654435761, 2246822519, 3266489917)
-        return {
-            c: ((ids * m) % 64000 / 64.0).astype(np.float32)
-            for c, m in zip("xyz", mults)
-        }
-
-    halos = spark.createDataFrame(
-        [
-            (int(i), *(float(pos(np.array([i + 7919]))[c][0]) for c in "xyz"))
-            for i in range(n_halos)
-        ],
-        "halo_id long, x float, y float, z float",
-    )
-    src = tmp_path / "parts"
-    src.mkdir()
-    ids = np.arange(n_parts, dtype=np.int64)
-    halves = [ids[: n_parts // 2], ids[n_parts // 2:]]
-    pq.write_table(pa.table(pos(halves[0])), src / "b1.parquet")
-
-    schema = StructType([StructField(c, FloatType()) for c in "xyz"])
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    agg = stream_shell_counts_stateful(stream, halos, edges)
-    q = (
-        agg.writeStream.format("memory").queryName("shells_state")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-
-    def batch_counts(id_arr):
-        df = spark.createDataFrame(
-            [tuple(map(float, r)) for r in np.column_stack(
-                [pos(id_arr)[c] for c in "xyz"])],
-            "x float, y float, z float",
-        )
-        return {
-            (r.halo_id, r.shell_idx): r.cnt
-            for r in shell_count(halos, df, edges).collect()
-        }
-
-    try:
-        q.processAllAvailable()
-        got1 = {
-            (r.halo_id, r.shell_idx): r.cnt
-            for r in spark.sql("SELECT * FROM shells_state").collect()
-        }
-        assert got1 == batch_counts(halves[0]) and len(got1) > 0
-
-        pq.write_table(pa.table(pos(halves[1])), src / "b2.parquet")
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT halo_id, shell_idx, max(cnt) AS cnt FROM shells_state "
-            "GROUP BY halo_id, shell_idx"
-        ).collect()
-        got = {(r.halo_id, r.shell_idx): r.cnt for r in rows}
-    finally:
-        q.stop()
-    want = batch_counts(ids)
-    assert got == want
-    # the totals really did grow across batches (state carried over)
-    assert any(got[k] > got1[k] for k in got1)
-
-
-def test_stream_shell_counts_stateful_resumes_from_checkpoint(spark, tmp_path):
-    """North-rule resumability: STOP the stateful query after batch 1,
-    restart a NEW query from the same checkpoint, feed batch 2 — the
-    recovered group state must keep accumulating (final totals equal the
+def test_stream_shell_counts_resumes_from_checkpoint(spark, tmp_path):
+    """Resumability: STOP the update-mode query after batch 1, restart a
+    NEW query from the same checkpoint, feed batch 2 — the recovered
+    aggregation state must keep accumulating (final totals equal the
     batch shell_count over both files, not just file 2)."""
     import numpy as np
     import pyarrow as pa
@@ -159,7 +76,7 @@ def test_stream_shell_counts_stateful_resumes_from_checkpoint(spark, tmp_path):
 
     from spatialjoincountovershells_spark import shell_count
     from spatialjoincountovershells_spark.streaming.stream_cells import (
-        stream_shell_counts_stateful,
+        stream_shell_counts,
     )
 
     n_parts, n_halos = 300, 12
@@ -189,7 +106,7 @@ def test_stream_shell_counts_stateful_resumes_from_checkpoint(spark, tmp_path):
         # the memory sink cannot recover from a checkpoint; foreachBatch can
         stream = spark.readStream.schema(schema).parquet(str(src))
         return (
-            stream_shell_counts_stateful(stream, halos, edges)
+            stream_shell_counts(stream, halos, edges)
             .writeStream.foreachBatch(
                 lambda df, _eid: rows.extend(df.collect())
             )
@@ -213,11 +130,16 @@ def test_stream_shell_counts_stateful_resumes_from_checkpoint(spark, tmp_path):
         q2.processAllAvailable()
     finally:
         q2.stop()
-    got = {}
-    for r in rows2:  # latest emission per key wins (counts are monotone)
-        got[(r.halo_id, r.shell_idx)] = max(
-            r.cnt, got.get((r.halo_id, r.shell_idx), 0)
-        )
+
+    def latest(rows, into=None):
+        # latest emission per key wins (counts are monotone)
+        into = dict(into or {})
+        for r in rows:
+            k = (r.halo_id, r.shell_idx)
+            into[k] = max(r.cnt, into.get(k, 0))
+        return into
+
+    got1, got = latest(rows1), latest(rows2)
     pdf = spark.createDataFrame(
         [tuple(map(float, r)) for r in np.column_stack(
             [pos(ids)[c] for c in "xyz"])],
@@ -236,13 +158,15 @@ def test_stream_shell_counts_stateful_resumes_from_checkpoint(spark, tmp_path):
         (r.halo_id, r.shell_idx): r.cnt
         for r in shell_count(halos, pdf2, edges).collect()
     }
-    # resume_b only ever SAW file 2 (the memory sink holds batch-2
-    # updates only, so keys untouched by file 2 don't reappear): every
-    # re-emitted total must be the TWO-file total, and at least one must
-    # exceed its file-2-only count — both require the batch-1 state to
-    # have been recovered from the checkpoint
+    # the restarted query only ever SAW file 2 (update mode re-emits
+    # only the keys file 2 touched): every re-emitted total must be the
+    # TWO-file total, and at least one must exceed its file-2-only count
+    # — both require the batch-1 state to have been recovered from the
+    # checkpoint.  Both runs' updates together are the final totals.
     assert got and all(want[k] == v for k, v in got.items())
     assert any(v > want2.get(k, 0) for k, v in got.items())
+    assert any(v > got1[k] for k, v in got.items() if k in got1)
+    assert latest(rows2, got1) == want
 
 
 def test_stream_shell_counts_matches_batch(spark):
@@ -352,7 +276,6 @@ def test_stream_job_available_now_incremental(spark, tmp_path):
         radius = edges_spec
         output = str(tmp_path / "totals")
         checkpoint = str(tmp_path / "ckpt")
-        stateful = True
         available_now = True
         box = 1000.0
         dtype = "float32"
@@ -492,7 +415,7 @@ def _corner_stream_inputs(seed: int = 11):
 
 
 def test_stream_shell_counts_run_one_arrow_sweep_per_batch(spark, tmp_path):
-    """Both streaming shell operators sweep the broadcast halo grid:
+    """The streaming shell operator sweeps the broadcast halo grid:
     every micro-batch plan holds exactly one MapInArrow, and no ring
     explode (Generate) or join."""
     import numpy as np
@@ -501,7 +424,6 @@ def test_stream_shell_counts_run_one_arrow_sweep_per_batch(spark, tmp_path):
 
     from spatialjoincountovershells_spark.streaming.stream_cells import (
         stream_shell_counts,
-        stream_shell_counts_stateful,
     )
 
     H, files = _corner_stream_inputs()
@@ -512,26 +434,25 @@ def test_stream_shell_counts_run_one_arrow_sweep_per_batch(spark, tmp_path):
     src.mkdir()
     pq.write_table(pa.table(dict(zip("xyz", files[0].T))), src / "f0.parquet")
     edges = np.array([5.0, 20.0, 40.0], dtype=np.float32)
-    for name, op in (("plan_stateless", stream_shell_counts),
-                     ("plan_stateful", stream_shell_counts_stateful)):
-        stream = spark.readStream.schema("x float, y float, z float") \
-            .parquet(str(src))
-        q = (op(stream, halos, edges).writeStream.format("memory")
-             .queryName(name).outputMode("update").start())
-        try:
-            q.processAllAvailable()
-            nodes = _stream_plan_nodes(q)
-        finally:
-            q.stop()
-        assert nodes.count("MapInArrow") == 1, (name, nodes)
-        assert not [n for n in nodes if "Generate" in n or "Join" in n], (
-            name, nodes)
+    stream = spark.readStream.schema("x float, y float, z float") \
+        .parquet(str(src))
+    q = (stream_shell_counts(stream, halos, edges).writeStream
+         .format("memory").queryName("plan_sweep").outputMode("update")
+         .start())
+    try:
+        q.processAllAvailable()
+        nodes = _stream_plan_nodes(q)
+    finally:
+        q.stop()
+    assert nodes.count("MapInArrow") == 1, nodes
+    assert not [n for n in nodes if "Generate" in n or "Join" in n], nodes
 
 
 def test_stream_shell_counts_match_brute_force_per_trigger(spark, tmp_path):
     """A 3-file stream, one file per trigger, against halos on the box
-    faces and corners: after every trigger both streaming operators
-    must equal the numpy brute force over the files read so far."""
+    faces and corners: after every trigger the streaming totals, in
+    complete and in update mode, must equal the numpy brute force over
+    the files read so far."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -542,7 +463,6 @@ def test_stream_shell_counts_match_brute_force_per_trigger(spark, tmp_path):
     )
     from spatialjoincountovershells_spark.streaming.stream_cells import (
         stream_shell_counts,
-        stream_shell_counts_stateful,
     )
 
     H, files = _corner_stream_inputs()
@@ -554,14 +474,14 @@ def test_stream_shell_counts_match_brute_force_per_trigger(spark, tmp_path):
     src.mkdir()
     pq.write_table(pa.table(dict(zip("xyz", files[0].T))), src / "f0.parquet")
 
-    def start(op, name, mode):
+    def start(name, mode):
         stream = (spark.readStream.schema("x float, y float, z float")
                   .option("maxFilesPerTrigger", 1).parquet(str(src)))
-        return (op(stream, halos, edges).writeStream.format("memory")
-                .queryName(name).outputMode(mode).start())
+        return (stream_shell_counts(stream, halos, edges).writeStream
+                .format("memory").queryName(name).outputMode(mode).start())
 
-    queries = [start(stream_shell_counts, "brute_stateless", "complete"),
-               start(stream_shell_counts_stateful, "brute_stateful", "update")]
+    queries = [start("brute_complete", "complete"),
+               start("brute_update", "update")]
     try:
         for k, P in enumerate(files):
             if k:
@@ -578,7 +498,7 @@ def test_stream_shell_counts_match_brute_force_per_trigger(spark, tmp_path):
             assert (dense != oracle_shell_counts(
                 H, np.vstack(files[:k + 1]), squared_edges(edges),
                 box=1e9)).any()
-            for name in ("brute_stateless", "brute_stateful"):
+            for name in ("brute_complete", "brute_update"):
                 got = {(r.halo_id, r.shell_idx): r.cnt for r in spark.sql(
                     "SELECT halo_id, shell_idx, max(cnt) AS cnt FROM "
                     f"{name} GROUP BY halo_id, shell_idx").collect()}
