@@ -528,7 +528,7 @@ def q_tile_getis(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tile_getis_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted Getis-Ord Gi*: hot spots of an integer MARK (particle_id
     mod 97 as the stand-in value column) instead of point counts —
-    exercises weight_col through _tile_counts/_cell_ring_table."""
+    exercises weight_col through _tile_counts/_ring_totals."""
     p = _parts(spark, sf_dir).withColumn(
         "w", (F.col("particle_id") % 97).cast("long")
     )

@@ -41,6 +41,14 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tiling import (
+    _SPREAD_STEPS,
+    _grid_dbscan,
+    _kring_gather,
+    morton_expr,
+    spread_np,
+)
+
 # f64 literals shared by both engines (repr round-trips exactly)
 _SQRT3_3 = "0.5773502691896258"   # sqrt(3)/3
 _THIRD = "0.3333333333333333"     # 1/3
@@ -169,12 +177,15 @@ def hex_rollup(
 ) -> DataFrame:
     """Per-hex aggregation -> (hq, hr, n_points[, wsum]), occupied
     cells only.  One map-side-combined groupBy; the hex assignment is
-    pure whole-stage-codegen arithmetic (no lattice table, no UDF)."""
+    pure whole-stage-codegen arithmetic (no lattice table, no UDF).
+    ``wsum`` sums each row's weight cast to BIGINT (truncated per row,
+    as tiling's tile counts do), so the sum is exact and independent
+    of partition order."""
     d = with_hex(points.select(*coords, *(
         [weight_col] if weight_col else [])), size, coords)
     aggs = [F.count(F.lit(1)).alias("n_points")]
     if weight_col:
-        aggs.append(F.sum(weight_col).cast("long").alias("wsum"))
+        aggs.append(F.sum(F.col(weight_col).cast("long")).alias("wsum"))
     return d.groupBy("hq", "hr").agg(*aggs)
 
 
@@ -189,44 +200,27 @@ def hex_kring_stats(
     n_points own count, kring_sum counts over the hex k-ring incl.
     self, n_kring_cells occupied ring cells incl. self).
 
-    Same scatter-gather shape as tile_kring_stats (no self-join: the
-    per-hex agg executes once, each occupied cell scatters its count
-    to its ring — 3k(k+1)+1 offsets — and a second agg gathers per
-    receiver), but on the hexagonal lattice where every ring-1
-    neighbor is equidistant.  The lattice is unbounded (axial coords
-    are plain integers), so there is no edge clamp; unoccupied
-    receivers are dropped by the occupancy flag.  ``weight_col``
-    switches both sums from point counts to an integer mark summed per
-    cell (the tile_kring_stats contract); occupancy still means "holds
-    >= 1 point"."""
+    The same scatter-gather as tile_kring_stats (tiling._kring_gather;
+    no self-join: the per-hex agg executes once, each occupied cell
+    scatters its count to its ring — 3k(k+1)+1 offsets — and a second
+    agg gathers per receiver), but on the hexagonal lattice where
+    every ring-1 neighbor is equidistant.  The lattice is unbounded
+    (axial coords are plain integers), so there is no edge clamp;
+    unoccupied receivers are dropped by the occupancy flag.
+    ``weight_col`` switches both sums from point counts to an integer
+    mark summed per cell (the tile_kring_stats contract); occupancy
+    still means "holds >= 1 point"."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    t = hex_rollup(points, size, coords, weight_col=weight_col)
     val = "wsum" if weight_col else "n_points"
-    offs = F.array(*[
-        F.struct(F.lit(dq).alias("dq"), F.lit(dr).alias("dr"))
-        for dq, dr in hex_ring_offsets(k)
-    ])
-    scat = t.select("hq", "hr", F.col(val).alias("_v"),
-                    F.explode(offs).alias("_o")).select(
-        (F.col("hq") + F.col("_o.dq")).alias("rq"),
-        (F.col("hr") + F.col("_o.dr")).alias("rr"),
-        F.col("_v"),
-        ((F.col("_o.dq") == 0) & (F.col("_o.dr") == 0))
-        .cast("long").alias("own"),
-    )
-    g = scat.groupBy("rq", "rr").agg(
-        F.sum(F.col("own") * F.col("_v")).alias("_own_v"),
-        F.sum("_v").alias("kring_sum"),
-        F.count(F.lit(1)).alias("n_kring_cells"),
-        F.max("own").alias("_occ"),
-    )
-    return g.where(F.col("_occ") == 1).select(
-        F.col("rq").alias("hq"),
-        F.col("rr").alias("hr"),
-        F.col("_own_v").cast("long").alias(val),
-        F.col("kring_sum").cast("long").alias("kring_sum"),
-        F.col("n_kring_cells").cast("long").alias("n_kring_cells"),
+    g = _kring_gather(hex_rollup(points, size, coords, weight_col=weight_col),
+                      ("hq", "hr"), val, hex_ring_offsets(k), None)
+    return g.where("_occ = 1").select(
+        F.col("_ra").alias("hq"),
+        F.col("_rb").alias("hr"),
+        F.col("_own").cast("long").alias(val),
+        F.col("_ring").cast("long").alias("kring_sum"),
+        F.col("_cells").cast("long").alias("n_kring_cells"),
     )
 
 
@@ -258,73 +252,25 @@ def hex_dbscan(
     one row per OCCUPIED cell: (hq, hr, n_points, role, cluster_id),
     role in {'core','border','noise'}.
 
-    Same semantics and scale shape as tiling.tile_dbscan, on the hex
-    lattice: a cell with n >= min_pts is CORE; cores sharing any of
-    their 6 edges are one cluster (hex adjacency is edge-only — no
-    square-grid corner-touch ambiguity); an occupied non-core cell
-    adjacent to >= 1 core is BORDER and takes the minimum adjacent
-    cluster id; else NOISE (-1).  cluster_id is the minimum packed hex
-    key (hex_key_expr) reachable through cores — deterministic.
+    The same semantics and code as tiling.tile_dbscan
+    (tiling._grid_dbscan), on the hex lattice: a cell with n >= min_pts
+    is CORE; cores sharing any of their 6 edges are one cluster (hex
+    adjacency is edge-only — no square-grid corner-touch ambiguity);
+    an occupied non-core cell adjacent to >= 1 core is BORDER and
+    takes the minimum adjacent cluster id; else NOISE (-1).
+    cluster_id is the minimum packed hex key (hex_key_expr) reachable
+    through cores — deterministic.
 
     The point table aggregates ONCE per cell; core adjacency scatters
     each core to its 6 neighbors and equi-joins back against the core
     set (two tiny tables); components collapse via dedup_clusters'
     min-label + pointer-jumping loop.
     """
-    from .dedup import dedup_clusters
-
-    keyed = (
-        hex_rollup(points, size, coords)
-        .select("hq", "hr", F.col("n_points").alias("n"),
-                hex_key_expr(F.col("hq"), F.col("hr")).alias("key"))
-        .persist()
-    )
-    core = keyed.where(F.col("n") >= int(min_pts))
-    ring = F.array(*[
-        F.struct(F.lit(dq).alias("dq"), F.lit(dr).alias("dr"))
-        for dq, dr in hex_ring_offsets(1, include_self=False)
-    ])
-
-    def _scatter(df: DataFrame, payload: str) -> DataFrame:
-        return df.select(payload, "hq", "hr", F.explode(ring).alias("_o")).select(
-            F.col(payload),
-            (F.col("hq") + F.col("_o.dq")).alias("rq"),
-            (F.col("hr") + F.col("_o.dr")).alias("rr"),
-        )
-
-    edges = _scatter(core.select(F.col("key").alias("src"), "hq", "hr"),
-                     "src").join(
-        core.select(F.col("hq").alias("rq"), F.col("hr").alias("rr"),
-                    F.col("key").alias("dst")),
-        ["rq", "rr"],
-    ).select("src", "dst")
-    lbl = dedup_clusters(
-        edges, id_a="src", id_b="dst", out_id="key",
-        out_cluster="cluster_id", max_iter=max_iter,
-    )
-    core_lbl = core.join(lbl, "key", "left").select(
-        "key", "hq", "hr", "n",
-        F.coalesce(F.col("cluster_id"), F.col("key")).alias("cluster_id"),
-    )
-    nbr_lbl = (
-        _scatter(core_lbl.select("cluster_id", "hq", "hr"), "cluster_id")
-        .groupBy("rq", "rr")
-        .agg(F.min("cluster_id").alias("_nbr_cluster"))
-    )
-    rest = keyed.where(F.col("n") < int(min_pts)).join(
-        nbr_lbl,
-        (F.col("hq") == F.col("rq")) & (F.col("hr") == F.col("rr")),
-        "left",
-    ).select(
-        "hq", "hr", "n",
-        F.when(F.col("_nbr_cluster").isNotNull(), F.lit("border"))
-        .otherwise(F.lit("noise"))
-        .alias("role"),
-        F.coalesce(F.col("_nbr_cluster"), F.lit(-1)).alias("cluster_id"),
-    )
-    out = core_lbl.select(
-        "hq", "hr", "n", F.lit("core").alias("role"), "cluster_id"
-    ).unionByName(rest)
+    keyed = hex_rollup(points, size, coords).select(
+        "hq", "hr", F.col("n_points").alias("n"),
+        hex_key_expr(F.col("hq"), F.col("hr")).alias("key"))
+    out = _grid_dbscan(keyed, ("hq", "hr"), hex_ring_offsets(1, False),
+                       None, min_pts, max_iter)
     return out.select(
         "hq", "hr",
         F.col("n").cast("long").alias("n_points"),
@@ -354,8 +300,6 @@ def geohash_expr(lat, lon, precision: int = 6):
     """
     if not 1 <= precision <= 6:
         raise ValueError(f"precision must be in 1..6, got {precision}")
-    from .tiling import morton_expr
-
     nbits = 5 * precision
     lon_bits = (nbits + 1) // 2
     lat_bits = nbits // 2
@@ -407,8 +351,6 @@ def geohash_sql(lat_sql: str, lon_sql: str, precision: int = 6,
     """
     if not 1 <= precision <= 6:
         raise ValueError(f"precision must be in 1..6, got {precision}")
-    from .tiling import _SPREAD_STEPS
-
     nbits = 5 * precision
     lon_bits = (nbits + 1) // 2
     lat_bits = nbits // 2
@@ -461,8 +403,6 @@ def geohash_np(lat: np.ndarray, lon: np.ndarray, precision: int = 6
         ),
         0,
     ).astype(np.int64)
-    from .tiling import spread_np
-
     gh = (
         (spread_np(lon_q << (16 - lon_bits)) << 1)
         | spread_np(lat_q << (16 - lat_bits))

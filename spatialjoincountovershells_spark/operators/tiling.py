@@ -312,16 +312,125 @@ def _tile_counts(
     )
 
 
-def _ring_offsets(k: int, include_self: bool):
-    """array<struct<dx,dy>> Column of the (2k+1)^2 Chebyshev offsets."""
-    guard = "" if include_self else ", x -> NOT (x.dx = 0 AND x.dy = 0)"
-    inner = (
-        f"flatten(transform(sequence({-k}, {k}), dx -> "
-        f"transform(sequence({-k}, {k}), dy -> struct(dx, dy))))"
+def _square_offsets(k: int, include_self: bool = True
+                   ) -> list[tuple[int, int]]:
+    """The (2k+1)^2 Chebyshev offsets of the square k-ring."""
+    return [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)
+            if include_self or (dx, dy) != (0, 0)]
+
+
+# --- shared lattice engine ---------------------------------------------
+#
+# Square tiles and hexes run the same neighbourhood algorithms; they
+# differ only in the cell columns (tx, ty) / (hq, hr), the integer
+# offset list (_square_offsets / hexgrid.hex_ring_offsets), the edge
+# bound (res tiles per axis, or None on the unbounded hex lattice) and
+# the cluster key (Morton id / hexgrid.hex_key_expr).
+
+
+def _lattice_scatter(
+    t: DataFrame,
+    cell: tuple[str, str],
+    offsets: list[tuple[int, int]],
+    res: int | None,
+    *payload: str,
+) -> DataFrame:
+    """(cell a, cell b, payload...) -> one row per (cell, offset) with
+    the receiver (_ra, _rb), the payload and own = 1 on the zero
+    offset.  The offset array is one folded SQL literal (no per-row
+    lambda); `res` drops receivers off a [0, res)^2 grid."""
+    a, b = cell
+    arr = ", ".join(f"named_struct('da', {da}, 'db', {db})"
+                    for da, db in offsets)
+    scat = t.select(*payload, a, b, F.expr(f"explode(array({arr})) AS _o"))
+    scat = scat.selectExpr(
+        f"{a} + _o.da AS _ra", f"{b} + _o.db AS _rb", *payload,
+        "CAST(_o.da = 0 AND _o.db = 0 AS BIGINT) AS own",
     )
-    if include_self:
-        return F.expr(inner)
-    return F.expr(f"filter({inner}{guard})")
+    if res is not None:
+        scat = scat.where(
+            f"_ra >= 0 AND _ra < {res} AND _rb >= 0 AND _rb < {res}")
+    return scat
+
+
+def _kring_gather(
+    t: DataFrame,
+    cell: tuple[str, str],
+    val: str,
+    offsets: list[tuple[int, int]],
+    res: int | None,
+) -> DataFrame:
+    """Scatter-gather k-ring sums of `val` -> one row per receiver
+    touched by any cell's ring: (_ra, _rb, _own own value, _ring ring
+    sum incl. self, _cells contributing cells incl. self, _occ = 1 when
+    the receiver itself is in `t`).  No self-join, so the upstream
+    plan executes exactly once; each cell's value reaches its ring in
+    one explode and one aggregation gathers per receiver."""
+    return _lattice_scatter(t, cell, offsets, res, val).groupBy(
+        "_ra", "_rb").agg(
+        F.sum(F.col("own") * F.col(val)).alias("_own"),
+        F.sum(val).alias("_ring"),
+        F.count(F.lit(1)).alias("_cells"),
+        F.max("own").alias("_occ"),
+    )
+
+
+def _grid_dbscan(
+    keyed: DataFrame,
+    cell: tuple[str, str],
+    offsets: list[tuple[int, int]],
+    res: int | None,
+    min_pts: int,
+    max_iter: int,
+) -> DataFrame:
+    """Grid DBSCAN over a (cell a, cell b, n, key) occupied-cell table
+    -> (a, b, key, n, role, cluster_id), `offsets` the adjacency (no
+    self).  Cores (n >= min_pts) scatter to their neighbours and
+    equi-join back against the core set (two tiny tables); components
+    collapse via dedup_clusters' min-label + pointer-jumping loop;
+    non-cores adjacent to a core are border with the minimum adjacent
+    cluster id, else noise (-1).  The cell table is cached because
+    core/border/noise all derive from it."""
+    from .dedup import dedup_clusters
+
+    a, b = cell
+    keyed = keyed.persist()
+    core = keyed.where(F.col("n") >= int(min_pts))
+    edges = _lattice_scatter(
+        core.withColumnRenamed("key", "src"), cell, offsets, res, "src"
+    ).join(
+        core.select(F.col(a).alias("_ra"), F.col(b).alias("_rb"),
+                    F.col("key").alias("dst")),
+        ["_ra", "_rb"],
+    ).select("src", "dst")
+    lbl = dedup_clusters(
+        edges, id_a="src", id_b="dst", out_id="key",
+        out_cluster="cluster_id", max_iter=max_iter,
+    )
+    # isolated cores (no core neighbour) never enter the pair graph:
+    # they are their own singleton cluster
+    core_lbl = core.join(lbl, "key", "left").select(
+        a, b, "key", "n",
+        F.coalesce(F.col("cluster_id"), F.col("key")).alias("cluster_id"),
+    )
+    nbr_lbl = (
+        _lattice_scatter(core_lbl, cell, offsets, res, "cluster_id")
+        .groupBy("_ra", "_rb")
+        .agg(F.min("cluster_id").alias("_nbr_cluster"))
+    )
+    rest = keyed.where(F.col("n") < int(min_pts)).join(
+        nbr_lbl, (F.col(a) == F.col("_ra")) & (F.col(b) == F.col("_rb")),
+        "left",
+    ).select(
+        a, b, "key", "n",
+        F.when(F.col("_nbr_cluster").isNotNull(), F.lit("border"))
+        .otherwise(F.lit("noise"))
+        .alias("role"),
+        F.coalesce(F.col("_nbr_cluster"), F.lit(-1)).alias("cluster_id"),
+    )
+    return core_lbl.select(
+        a, b, "key", "n", F.lit("core").alias("role"), "cluster_id"
+    ).unionByName(rest)
 
 
 def tile_kring_stats(
@@ -353,35 +462,13 @@ def tile_kring_stats(
     joined against."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    res = 1 << level
-    t = _tile_counts(points, level, box, coords, weight_col)
-    offs = _ring_offsets(k, include_self=True)
-    scat = (
-        t.select("tx", "ty", "n", F.explode(offs).alias("_o"))
-        .select(
-            (F.col("tx") + F.col("_o.dx")).alias("rx"),
-            (F.col("ty") + F.col("_o.dy")).alias("ry"),
-            F.col("n"),
-            ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0))
-            .cast("long")
-            .alias("own"),
-        )
-        .where(
-            (F.col("rx") >= 0) & (F.col("rx") < res)
-            & (F.col("ry") >= 0) & (F.col("ry") < res)
-        )
-    )
-    g = scat.groupBy("rx", "ry").agg(
-        F.sum(F.col("own") * F.col("n")).alias("n_points"),
-        F.sum("n").alias("kring_sum"),
-        F.count(F.lit(1)).alias("n_kring_tiles"),
-        F.max("own").alias("_occ"),
-    )
-    return g.where(F.col("_occ") == 1).select(
-        morton_expr(F.col("rx"), F.col("ry")).alias("tile_id"),
-        F.col("n_points").cast("long").alias("n_points"),
-        F.col("kring_sum").cast("long").alias("kring_sum"),
-        F.col("n_kring_tiles").cast("long").alias("n_kring_tiles"),
+    g = _kring_gather(_tile_counts(points, level, box, coords, weight_col),
+                      ("tx", "ty"), "n", _square_offsets(k), 1 << level)
+    return g.where("_occ = 1").select(
+        morton_expr(F.col("_ra"), F.col("_rb")).alias("tile_id"),
+        F.col("_own").cast("long").alias("n_points"),
+        F.col("_ring").cast("long").alias("kring_sum"),
+        F.col("_cells").cast("long").alias("n_kring_tiles"),
     )
 
 
@@ -415,70 +502,10 @@ def tile_dbscan(
     tile table is cached because core/border/noise all derive from it
     — without the persist each branch would re-aggregate the big point
     table."""
-    from .dedup import dedup_clusters
-
-    res = 1 << level
-    keyed = (
-        _tile_counts(points, level, box, coords)
-        .select(
-            "tx", "ty", "n",
-            morton_expr(F.col("tx"), F.col("ty")).alias("key"),
-        )
-        .persist()
-    )
-    core = keyed.where(F.col("n") >= int(min_pts))
-    ring = _ring_offsets(1, include_self=False)
-
-    def _scatter(df: DataFrame, payload: str) -> DataFrame:
-        return (
-            df.select(payload, "tx", "ty", F.explode(ring).alias("_o"))
-            .select(
-                F.col(payload),
-                (F.col("tx") + F.col("_o.dx")).alias("rx"),
-                (F.col("ty") + F.col("_o.dy")).alias("ry"),
-            )
-            .where(
-                (F.col("rx") >= 0) & (F.col("rx") < res)
-                & (F.col("ry") >= 0) & (F.col("ry") < res)
-            )
-        )
-
-    edges = _scatter(core.select(F.col("key").alias("src"), "tx", "ty"), "src").join(
-        core.select(
-            F.col("tx").alias("rx"), F.col("ty").alias("ry"),
-            F.col("key").alias("dst"),
-        ),
-        ["rx", "ry"],
-    ).select("src", "dst")
-    lbl = dedup_clusters(
-        edges, id_a="src", id_b="dst", out_id="key",
-        out_cluster="cluster_id", max_iter=max_iter,
-    )
-    # isolated core tiles (no core neighbor) never enter the pair
-    # graph: they are their own singleton cluster
-    core_lbl = core.join(lbl, "key", "left").select(
-        "key", "tx", "ty", "n",
-        F.coalesce(F.col("cluster_id"), F.col("key")).alias("cluster_id"),
-    )
-    nbr_lbl = (
-        _scatter(core_lbl.select("cluster_id", "tx", "ty"), "cluster_id")
-        .groupBy("rx", "ry")
-        .agg(F.min("cluster_id").alias("_nbr_cluster"))
-    )
-    rest = keyed.where(F.col("n") < int(min_pts)).join(
-        nbr_lbl,
-        (F.col("tx") == F.col("rx")) & (F.col("ty") == F.col("ry")),
-        "left",
-    ).select(
-        "key", "n",
-        F.when(F.col("_nbr_cluster").isNotNull(), F.lit("border"))
-        .otherwise(F.lit("noise"))
-        .alias("role"),
-        F.coalesce(F.col("_nbr_cluster"), F.lit(-1)).alias("cluster_id"),
-    )
-    out = core_lbl.select(
-        "key", "n", F.lit("core").alias("role"), "cluster_id"
-    ).unionByName(rest)
+    keyed = _tile_counts(points, level, box, coords).withColumn(
+        "key", morton_expr(F.col("tx"), F.col("ty")))
+    out = _grid_dbscan(keyed, ("tx", "ty"), _square_offsets(1, False),
+                       1 << level, min_pts, max_iter)
     return out.select(
         F.col("key").alias("tile_id"),
         F.col("n").cast("long").alias("n_points"),
@@ -487,56 +514,43 @@ def tile_dbscan(
     )
 
 
-def _cell_ring_table(
+def _ring_scatter(t: DataFrame, res: int) -> DataFrame:
+    """(tx, ty, n) tile table -> one row per grid cell TOUCHED by any
+    tile's 3x3 stamp: (rx, ry, x own value, r queen-ring sum excl.
+    self, m #valid grid neighbors — a pure function of position).
+    Untouched cells have x = 0 AND r = 0, so spatial statistics over
+    the FULL grid fold them in via closed forms on grid totals instead
+    of materializing 4^level rows (see tile_moran_i / tile_getis_g)."""
+    g = _kring_gather(t, ("tx", "ty"), "n", _square_offsets(1), res)
+    return g.selectExpr(
+        "_ra AS rx", "_rb AS ry", "_own AS x", "_ring - _own AS r",
+        f"CAST((least(_ra + 1, {res - 1}) - greatest(_ra - 1, 0) + 1) * "
+        f"(least(_rb + 1, {res - 1}) - greatest(_rb - 1, 0) + 1) - 1 "
+        "AS BIGINT) AS m",
+    )
+
+
+def _ring_totals(
     points: DataFrame,
     level: int,
     box: float,
     coords: tuple[str, str],
-    weight_col: str | None = None,
+    weight_col: str | None,
 ) -> DataFrame:
-    """One ring-scatter of the occupied-tile table -> one row per grid
-    cell TOUCHED by any occupied tile's 3x3 stamp: (rx, ry, x own
-    count, r queen-ring sum excl. self, m #valid grid neighbors — a
-    pure function of position).  Untouched cells
-    have x = 0 AND r = 0, so spatial statistics over the FULL grid fold
-    them in via closed forms on grid totals instead of materializing
-    4^level rows (see tile_moran_i / tile_getis_g)."""
-    t = _tile_counts(points, level, box, coords, weight_col)
-    return _ring_scatter(t, 1 << level)
-
-
-def _ring_scatter(t: DataFrame, res: int) -> DataFrame:
-    """(tx, ty, n) tile table -> (rx, ry, x, r, m) ring table (the
-    scatter half of `_cell_ring_table`, reusable for derived tile
-    tables such as the binary mark of `tile_join_counts`)."""
-    offs = _ring_offsets(1, include_self=True)
-    scat = (
-        t.select("tx", "ty", "n", F.explode(offs).alias("_o"))
-        .select(
-            (F.col("tx") + F.col("_o.dx")).alias("rx"),
-            (F.col("ty") + F.col("_o.dy")).alias("ry"),
-            F.col("n"),
-            ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0))
-            .cast("long")
-            .alias("own"),
-        )
-        .where(
-            (F.col("rx") >= 0) & (F.col("rx") < res)
-            & (F.col("ry") >= 0) & (F.col("ry") < res)
-        )
+    """The (rx, ry, x, r, m) ring table of the point table's tile
+    counts with the grid totals S = sum x and S2 = sum x^2 (exact
+    decimal(38,0)) appended to every row as _s, _s2.  The ring table is
+    cached because it feeds both the 1-row total and the caller's
+    aggregate — without it each branch would re-aggregate the point
+    table; the total is a 1-row broadcast, never collected."""
+    dec = "decimal(38,0)"
+    cell = _ring_scatter(_tile_counts(points, level, box, coords, weight_col),
+                         1 << level).persist()
+    tot = cell.agg(
+        F.sum("x").cast(dec).alias("_s"),
+        F.sum(F.col("x").cast(dec) * F.col("x").cast(dec)).alias("_s2"),
     )
-    mx = F.least(F.col("rx") + 1, F.lit(res - 1)) - F.greatest(
-        F.col("rx") - 1, F.lit(0)
-    ) + 1
-    my = F.least(F.col("ry") + 1, F.lit(res - 1)) - F.greatest(
-        F.col("ry") - 1, F.lit(0)
-    ) + 1
-    return scat.groupBy("rx", "ry").agg(
-        F.sum(F.col("own") * F.col("n")).alias("x"),
-        F.sum((F.lit(1) - F.col("own")) * F.col("n")).alias("r"),
-    ).select(
-        "rx", "ry", "x", "r", (mx * my - 1).cast("long").alias("m")
-    )
+    return cell.crossJoin(F.broadcast(tot))
 
 
 def tile_moran_i(
@@ -573,16 +587,7 @@ def tile_moran_i(
     n_cells = res * res
     w_pairs = 4 * res * (res - 1) + 4 * (res - 1) * (res - 1)
     dec = "decimal(38,0)"
-    # cached: feeds both the 1-row total and the main aggregate —
-    # without it each branch would re-aggregate the point table
-    cell = (
-        _cell_ring_table(points, level, box, coords, weight_col)
-        .select("x", "r", "m")
-        .persist()
-    )
-    # S (total points) as a 1-row broadcast — never collected
-    tot = cell.agg(F.sum("x").cast(dec).alias("_s"),)
-    joined = cell.crossJoin(F.broadcast(tot))
+    joined = _ring_totals(points, level, box, coords, weight_col)
     d = (F.lit(n_cells).cast(dec) * F.col("x").cast(dec)) - F.col("_s")
     cross = d * (
         F.lit(n_cells).cast(dec) * F.col("r").cast(dec)
@@ -653,12 +658,7 @@ def tile_getis_g(
     res = 1 << level
     n_cells = res * res
     dec = "decimal(38,0)"
-    cell = _cell_ring_table(points, level, box, coords, weight_col).persist()
-    tot = cell.agg(
-        F.sum("x").cast(dec).alias("_s"),
-        F.sum(F.col("x").cast(dec) * F.col("x").cast(dec)).alias("_s2"),
-    )
-    j = cell.crossJoin(F.broadcast(tot))
+    j = _ring_totals(points, level, box, coords, weight_col)
     w = F.col("m") + 1
     swi = F.col("x") + F.col("r")
     a = F.lit(n_cells).cast(dec) * swi.cast(dec) - F.col("_s") * w.cast(dec)
@@ -720,12 +720,7 @@ def tile_local_moran(
     res = 1 << level
     n_cells = res * res
     dec = "decimal(38,0)"
-    cell = _cell_ring_table(points, level, box, coords, weight_col).persist()
-    tot = cell.agg(
-        F.sum("x").cast(dec).alias("_s"),
-        F.sum(F.col("x").cast(dec) * F.col("x").cast(dec)).alias("_s2"),
-    )
-    j = cell.crossJoin(F.broadcast(tot))
+    j = _ring_totals(points, level, box, coords, weight_col)
     dx = F.lit(n_cells).cast(dec) * F.col("x").cast(dec) - F.col("_s")
     dr = (
         F.lit(n_cells).cast(dec) * F.col("r").cast(dec)

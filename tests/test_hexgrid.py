@@ -79,12 +79,13 @@ def test_hex_ring_offsets_counts():
     assert len(hex_ring_offsets(1, include_self=False)) == 6
 
 
-def test_hex_kring_stats_vs_bruteforce(spark):
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_hex_kring_stats_vs_bruteforce(spark, k):
     x, y = _xy(3000, seed=11)
     df = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}))
     got = {
         (r["hq"], r["hr"]): (r["n_points"], r["kring_sum"], r["n_kring_cells"])
-        for r in hex_kring_stats(df, SIZE, k=1).collect()
+        for r in hex_kring_stats(df, SIZE, k=k).collect()
     }
     hq, hr = hex_np(x, y, SIZE)
     counts: dict = {}
@@ -94,7 +95,7 @@ def test_hex_kring_stats_vs_bruteforce(spark):
     for (a, b), n in counts.items():
         ring = [
             counts.get((a + dq, b + dr))
-            for dq, dr in hex_ring_offsets(1)
+            for dq, dr in hex_ring_offsets(k)
             if (a + dq, b + dr) in counts
         ]
         want[(a, b)] = (n, sum(ring), len(ring))
@@ -200,9 +201,15 @@ def test_geohash_cells_rollup(spark):
     assert got == want
 
 
-def test_hex_kring_weighted_vs_bruteforce(spark):
+@pytest.mark.parametrize("frac", [False, True], ids=["int64", "float64"])
+def test_hex_kring_weighted_vs_bruteforce(spark, frac):
+    """Weights follow the tile_kring_stats contract: each row's weight
+    is truncated to an integer BEFORE the per-cell sum, so fractional
+    marks give the same exact, order-free sums on both lattices."""
     x, y = _xy(2500, seed=17)
     w = (np.arange(len(x)) * 7 % 23).astype(np.int64)
+    if frac:
+        w = w / 3.0
     df = spark.createDataFrame(pd.DataFrame({"x": x, "y": y, "wt": w}))
     from spatialjoincountovershells_spark.operators.hexgrid import (
         hex_kring_stats as hks,

@@ -201,3 +201,38 @@ def test_ivf_centroid_seed_prefilters_before_takeordered(spark):
     assert "Filter" in p and "1000000" in p  # the hash-threshold prefilter
     rows = seed.toPandas()
     assert len(rows) == 16 and rows.vec_id.is_unique
+
+
+def _lattice_ops():
+    from spatialjoincountovershells_spark.operators.hexgrid import (
+        hex_dbscan,
+        hex_kring_stats,
+    )
+    from spatialjoincountovershells_spark.operators.tiling import (
+        tile_dbscan,
+        tile_getis_g,
+        tile_kring_stats,
+    )
+
+    return {
+        "tile_kring_stats": lambda p: tile_kring_stats(p, level=4, k=2),
+        "tile_dbscan": lambda p: tile_dbscan(p, level=4, min_pts=3),
+        "hex_kring_stats": lambda p: hex_kring_stats(p, 60.0, k=2),
+        "hex_dbscan": lambda p: hex_dbscan(p, 60.0, min_pts=3),
+        "tile_getis_g": lambda p: tile_getis_g(p, level=4),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_lattice_ops()))
+def test_lattice_plans_have_no_per_row_lambda(spark, op):
+    """The lattice ring scatter explodes one folded offset literal:
+    a higher-order-function lambda in the optimized plan would be
+    evaluated per row, interpreted, outside whole-stage codegen."""
+    pts = spark.createDataFrame(
+        [(float(i * 37 % 1000), float(i * 61 % 1000)) for i in range(200)],
+        "x double, y double",
+    )
+    df = _lattice_ops()[op](pts)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Generate" in plan
+    assert "lambdafunction" not in plan
