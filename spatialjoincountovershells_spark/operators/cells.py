@@ -114,24 +114,6 @@ def ring_offsets(ncells: int, k: int = 1, shell_only: bool = False) -> list[tupl
     return sorted(out)
 
 
-def expected_ring_cells(ratio: float) -> float:
-    """E[candidate cells after the Euclidean prune], ratio = rmax/cell_size.
-
-    Steiner formula: the expected number of unit-lattice cells a ball
-    of radius `ratio` (in cell units) centered uniformly at random
-    intersects equals vol(unit cube ⊕ ball) = 1 + 6r + 3πr² + (4π/3)r³.
-    Valid for ANY ratio — ring-1 at cs=rmax (ratio 1: ~20.6 of 27) and
-    the sub-rmax grids (ratio m = rmax/cs: candidate VOLUME
-    E(m)·cs³ = E(m)/m³·rmax³ falls from 20.6·rmax³ at m=1 toward the
-    ball volume 4.19·rmax³ — 10.5 at m=2, 8.1 at m=3).  Used by the
-    plan chooser to size per-plan candidate volumes under pruning.
-    """
-    import math
-
-    r = ratio
-    return 1.0 + 6.0 * r + 3.0 * math.pi * r**2 + (4.0 * math.pi / 3.0) * r**3
-
-
 def explode_ring(
     df: DataFrame,
     ncells: int,
@@ -159,8 +141,9 @@ def explode_ring(
     cuts candidate pairs ~25% at cs=rmax; on sub-rmax grids
     (k >= 2, cs = rmax/k) the kept set shrinks from the
     (2k+1)^3 Chebyshev cube toward the ball cover itself — ~2x fewer
-    candidate PAIRS at k=2, ~2.5x at k=3 (Steiner formula,
-    expected_ring_cells).  Safe under the engine's strict d^2 < r^2
+    candidate PAIRS at k=2, ~2.5x at k=3 (Steiner formula: a random
+    ball of radius m cells meets 1 + 6m + 3πm² + (4π/3)m³ cells on
+    average).  Safe under the engine's strict d^2 < r^2
     predicate: a pruned cell's points all sit at d >= d_min >= r
     (threshold inflated by 1e-9 relative to swallow f64 boundary
     rounding).  Valid whenever ncells >= 2k+1 (raw offsets recoverable
@@ -202,8 +185,8 @@ def explode_ring(
         # raw offset from its mod-nc representative: m<=nc/2 -> m, else m-nc
         return [m if m <= half_nc else m - ncells for m in o]
 
+    r2_infl = float(prune_radius or 0.0) ** 2 * (1.0 + 1e-9)
     if prune and not shell_only:
-        r2_infl = float(prune_radius) ** 2 * (1.0 + 1e-9)
         # offset-level prune: min gap over every probe position
         offs = [
             o for o in offs
@@ -241,8 +224,7 @@ def explode_ring(
                     f"({s} * {fr}), (-{s}) * {fr}))")
 
         gx, gy, gz = gap("x"), gap("y"), gap("z")
-        r2 = float(prune_radius) ** 2 * (1.0 + 1e-9)
         df = df.where(
-            f"(({gx} * {gx}) + ({gy} * {gy})) + ({gz} * {gz}) < {dlit(r2)}"
+            f"(({gx} * {gx}) + ({gy} * {gy})) + ({gz} * {gz}) < {dlit(r2_infl)}"
         ).drop("_frx", "_fry", "_frz")
     return df.drop("_o")

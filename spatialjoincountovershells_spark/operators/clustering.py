@@ -156,8 +156,9 @@ def lloyd_kmeans(
       smallest cluster index; empty clusters drop out (deterministic).
 
     Scale shape: the centroid table is k rows — assignment is a
-    broadcast nested-loop join + one window (or min_by) per point,
-    fully JVM (`zip_with`/`aggregate` codegen); the update explodes to
+    broadcast join (``_pq_lloyd`` with one subspace, so every point
+    meets all k centroids) + one window per point, fully JVM
+    (`zip_with`/`aggregate` codegen); the update explodes to
     (rows x dim) and partial-aggregates per (cluster, dim), the
     standard shuffle-light mean.  No driver-side math beyond the k-row
     init.
@@ -166,7 +167,7 @@ def lloyd_kmeans(
         F.col(id_col),
         _quantize(vec_col, scale).alias("q"),
     ).persist()  # probed once per assignment round
-    assign, _ = _lloyd(q, k, iters, id_col)
+    assign, _ = _pq_lloyd(q, 1, None, k, iters, id_col)
     return assign.select(
         F.col(id_col),
         F.col("cl").alias("cluster_id"),
@@ -179,66 +180,6 @@ def _quantize(vec_col: str, scale: int):
         f"transform({vec_col}, x -> "
         f"cast(floor(cast(x as double) * {scale}.0) as bigint))"
     )
-
-
-def _lloyd(q: DataFrame, k: int, iters: int, id_col: str):
-    """The Lloyd loop over an already-quantized (id, q) frame ->
-    (assignment (id, cl, dist2), codebook (cl, c)) where the codebook
-    is the one the LAST assignment ran against (c_{iters-1}).
-
-    Every codebook frame is persisted: each update's plan contains the
-    previous full assignment pass, and callers reference the returned
-    codebook from MULTIPLE subtrees (pq_ann_topk broadcasts it as the
-    per-query LUT seed *and* embeds it in the code assignment), so an
-    unpersisted k-row frame re-executes the whole Lloyd chain once per
-    consuming subtree — the same loop-invariant-recompute disease
-    pagerank had (VERDICT r4 #1)."""
-    cent = (
-        q.orderBy(id_col)
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy(id_col)) - 1)
-            .cast("long")
-            .alias("cl"),
-            F.col("q").alias("c"),
-        )
-        .persist()
-    )
-
-    dist2 = F.expr(
-        "aggregate(zip_with(q, c, (a, b) -> (a - b) * (a - b)), "
-        "0L, (s, v) -> s + v)"
-    )
-    assign = None
-    for i in range(iters):
-        w = Window.partitionBy(id_col).orderBy("dist2", "cl")
-        assign = (
-            q.crossJoin(F.broadcast(cent))
-            .select(F.col(id_col), F.col("cl"), dist2.alias("dist2"))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if i < iters - 1:
-            ex = assign.join(q, id_col).select(
-                "cl", F.posexplode("q").alias("d", "v")
-            )
-            cent = (
-                ex.groupBy("cl", "d")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-                .withColumn(
-                    "m", F.floor(F.col("s").cast("double") / F.col("n"))
-                )
-                .groupBy("cl")
-                .agg(
-                    F.expr(
-                        "transform(array_sort(collect_list(struct(d, m))), "
-                        "s -> s.m)"
-                    ).alias("c")
-                )
-                .persist()
-            )
-    return assign, cent
 
 
 def semantic_dedup(
@@ -277,13 +218,7 @@ def semantic_dedup(
     asg = lloyd_kmeans(
         emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col, scale=scale
     ).select(id_col, "cluster_id")
-    q = emb.select(
-        F.col(id_col),
-        F.expr(
-            f"transform({vec_col}, x -> "
-            f"cast(floor(cast(x as double) * {scale}.0) as bigint))"
-        ).alias("_q"),
-    )
+    q = emb.select(F.col(id_col), _quantize(vec_col, scale).alias("_q"))
     m = asg.join(q, id_col).persist()  # both sides of the pair join
 
     a = m.select(
@@ -330,26 +265,41 @@ def semantic_dedup(
     )
 
 
-def _subspace_slices(m: int, d: int, q_col: str = "q"):
-    """array of the m contiguous d-length subspace slices of `q_col`."""
+def _subspace_slices(m: int, d: int | None, q_col: str = "q"):
+    """array of the m contiguous d-length subspace slices of `q_col`
+    (m=1 with d=None: the whole vector, whatever its length)."""
+    if d is None:
+        return F.array(F.col(q_col))
     return F.array(
         *[F.expr(f"slice({q_col}, {j * d + 1}, {d})") for j in range(m)]
     )
 
 
-def _pq_lloyd(q: DataFrame, m: int, d: int, k: int, iters: int, id_col: str):
-    """All m subspace Lloyd chains of product quantization as ONE keyed
-    plan -> (assignment (j, id, cl, dist2), codebook (j, cl, c)).
+def _pq_lloyd(q: DataFrame, m: int, d: int | None, k: int, iters: int,
+              id_col: str):
+    """The one integer-lattice Lloyd loop, over an already-quantized
+    (id, q) frame: all m subspace chains of product quantization as
+    ONE keyed plan -> (assignment (j, id, cl, dist2), codebook (j, cl,
+    c)), where the codebook is the one the LAST assignment ran against
+    (c_{iters-1}).  ``lloyd_kmeans`` is the m=1 case (d=None: one
+    subspace, the whole vector).
 
-    Bit-identical to running ``_lloyd`` per subspace (same seed rows —
-    the k smallest ids, which are the same ids in every subspace — same
-    int64 distances, floor-mean updates and (dist2, cl) tie-breaks, now
-    windowed per (j, id) instead of per id), but the m independent
-    chains collapse into one: one TakeOrdered seed job instead of m,
-    one assignment/update pass over the subspace-exploded frame per
-    round instead of m — the job count is O(iters), not O(m*iters),
-    which on a short-job-latency-bound cluster (and this sandbox) is
-    most of pq_encode/pq_ann_topk's wall clock."""
+    Every subspace chain is the plain Lloyd loop (same seed rows — the
+    k smallest ids, which are the same ids in every subspace — int64
+    distances, floor-mean updates and (dist2, cl) tie-breaks, windowed
+    per (j, id)), but the m independent chains collapse into one: one
+    TakeOrdered seed job instead of m, one assignment/update pass over
+    the subspace-exploded frame per round instead of m — the job count
+    is O(iters), not O(m*iters), which on a short-job-latency-bound
+    cluster (and in local mode) is most of pq_encode/pq_ann_topk's wall
+    clock.
+
+    Every codebook frame is persisted: each update's plan contains the
+    previous full assignment pass, and callers reference the returned
+    codebook from MULTIPLE subtrees (pq_ann_topk broadcasts it as the
+    per-query LUT seed *and* embeds it in the code assignment), so an
+    unpersisted k-row frame re-executes the whole Lloyd chain once per
+    consuming subtree."""
     slices = _subspace_slices(m, d)
     qk = q.select(id_col, F.posexplode(slices).alias("j", "qj"))
     cent = (

@@ -11,10 +11,17 @@ Reference semantics (SURVEY §2.3 J1/J2, §2.4 A1, §2.11):
 
 Four physical plans share one uniform periodic cell grid.  Its size
 and ring depth come from one rule, ``_plan_grid``, which also enforces
-r_max < box/2: explicit ``ncells`` wins, else cells of r_max/2 for the
-sweep plans ('dgrid', 'bcast', 'fused') and the finest
-occupancy-capped ring-1 grid for 'sql'.  The same rule sizes the
-coarse blocks 'fused' cogroups on.
+r_max < box/2: explicit ``ncells`` wins, else cells of r_max/2 probed
+ring-2 for 'dgrid' and 'fused', which stream the probes, cells of
+r_max probed ring-1 for 'bcast', which streams the particles, and the
+finest occupancy-capped ring-1 grid for 'sql'.  The same rule sizes
+the coarse blocks 'fused' cogroups on.
+
+plan='auto' (``choose_plan``) picks by the broadcast budget alone:
+'dgrid' when the particle grid fits it, else 'bcast' when the halo
+grid fits it (unweighted only), else 'fused', which broadcasts
+nothing.  'sql' is never picked: it stays as the explicit JVM-only
+plan, with no Python workers.
 
 The shuffle plans ('sql', 'fused') explode the probe side over its
 ring of a join grid and equi-join it with the cell-assigned particles:
@@ -102,6 +109,7 @@ concern (see sources/report.py).
 
 from __future__ import annotations
 
+import logging
 import math
 from collections.abc import Iterable
 
@@ -122,8 +130,11 @@ _H = ("_hx", "_hy", "_hz")
 _P = ("_px", "_py", "_pz")
 _S = ("_sx", "_sy", "_sz")  # the sweep's streamed side
 
+log = logging.getLogger(__name__)
+
 
 _PLANS = ("sql", "fused", "bcast", "dgrid")
+_BUDGET = 512 << 20  # choose_plan's default broadcast budget, bytes
 
 
 def _plan_grid(
@@ -143,11 +154,22 @@ def _plan_grid(
     'fused''s coarse cogroup blocks; otherwise an explicit `ncells`
     wins, else:
 
-    * 'bcast'/'dgrid'/'fused' (the sweep plans): cells of size r_max/2,
-      probed ring-2.  Empty cells are free in the CSR layout and the
-      ring bookkeeping is a few numpy ops per row inside the kernel,
-      so the Euclidean prune's ~2x cut in candidate pairs vs ring-1 is
-      nearly free (measured, BENCH/BASELINE.md).
+    * 'dgrid'/'fused' (the sweep plans that stream the probes): cells
+      of size r_max/2, probed ring-2.  Empty cells are free in the CSR
+      layout and the ring bookkeeping is a few numpy ops per streamed
+      row, so with ~10x fewer probes than particles the Euclidean
+      prune's ~2x cut in candidate pairs vs ring-1 is nearly free
+      (measured, BENCH/BASELINE.md).
+    * 'bcast' (streams the particles past the halo grid): cells of
+      size r_max, probed ring-1.  Here the per-row bookkeeping (25
+      z-stripes at ring 2, 9 at ring 1) is paid per particle and
+      outweighs the extra candidates.  ``tools/sweep_replay.py``
+      (single thread, min of 3 repeats, runs alternated with the
+      r_max/2 ring-2 grid) on the shuffle workload's seed-1003 inputs
+      (300k particles past 20k halos): bcast 0.65-0.83 -> 0.34-0.43
+      CPU.s, its ``segments`` phase 0.44-0.58 -> 0.15-0.20, the same
+      1,020,613 pairs; on the shells_ref inputs (1M past 100k)
+      3.47-3.73 -> 2.16-2.21, the same 5,237,510 pairs.
     * 'fused' blocks: at least 3 per axis (the halo explode's prune
       needs 2k+1), never narrower than r_max (a halo's ball touches a
       27-block ring), and no fewer than two groups per core or than
@@ -182,10 +204,10 @@ def _plan_grid(
                  grid_ncells(rmax, box))
     elif ncells:
         nc = ncells
-    elif plan in ("bcast", "dgrid", "fused"):
+    elif plan in ("dgrid", "fused"):
         nc = grid_ncells(rmax / 2, box)
-    else:
-        nc = grid_ncells(rmax, box, n_hint=n_particles)
+    else:  # ring-1 on r_max cells, occupancy-capped for sql only
+        nc = grid_ncells(rmax, box, n_hint=n_particles if plan == "sql" else None)
     return nc, max(1, math.ceil(rmax / (box / nc) - 1e-9))
 
 
@@ -238,27 +260,17 @@ def _prep(
     return h, p, nc, edges
 
 
-# Per-core cost model, each plan's own work at its own measured rates
-# (a single pairs-per-core threshold does not predict the winner).
-# sql: the codegen join's candidates on its fine ring-1 grid at ~2.5M
-# pairs/s/core plus ~2.3 us per exploded halo-ring row (shuffled +
-# hash-probed), fitted CPU-pinned in round 4 at 6M x 600k
-# (BENCH/BASELINE.md).  fused: the ring sweep's candidates on the
-# r_max/2 grid plus a per-row cost for every row shipped through the
-# cogroup (particles + halo block copies), fitted from warm calls at
-# 300k x 20k and 1.2M x 80k clustered (r_max 10, 40 shells, local[4]
-# on 4 vCPUs; 2.28M / 36.8M candidate pairs, 321k / 1.28M rows; medians
-# of 9 calls each): Python-worker CPU.s rose 0.94 -> 3.85 with the
-# pairs and JVM CPU.s 5.32 -> 7.98 with the rows.
-R_SQL_PAIRS_PER_CORE_SEC = 2.5e6
-A_SQL_SEC_PER_ROW = 2.3e-6
-R_FUSED_PAIRS_PER_CORE_SEC = 1.2e7
-A_FUSED_SEC_PER_ROW = 2.8e-6
-# fused's fixed cost per call (job and cogroup set-up, Python-worker
-# dispatch, Arrow init): the warm calls above leave ~5.1 CPU.s at both
-# shapes that neither rate explains, and a cold session pays the
-# worker pool spin-up on top.  Keeps small jobs on the pure-JVM sql.
-F_FUSED_FIXED_CORE_SEC = 5.0
+def _broadcast_bytes(n_halos: int, n_particles: int, rmax: float, box: float,
+                     ncells: int | None, weighted: bool) -> tuple[int, int]:
+    """-> (dgrid, bcast) broadcast payload estimates in bytes, each on
+    the grid its plan runs (``_plan_grid``): the CSR rows, ~28 B per
+    particle (36 with a weight, one int64 more) or ~40 B per halo (3
+    coords + id + sorted key), plus ~4 B per cell of dense offsets
+    (``_csr_grid`` switches to sorted keys past 16M cells)."""
+    nc_d, nc_b = (_plan_grid(p, rmax, box, ncells=ncells)[0]
+                  for p in ("dgrid", "bcast"))
+    return (n_particles * (36 if weighted else 28) + min(nc_d**3, 16_000_000) * 4,
+            n_halos * 40 + min(nc_b**3, 16_000_000) * 4)
 
 
 def choose_plan(
@@ -267,70 +279,44 @@ def choose_plan(
     rmax: float,
     box: float = 1000.0,
     ncells: int | None = None,
-    max_broadcast_bytes: int = 512 << 20,
+    max_broadcast_bytes: int = _BUDGET,
     weighted: bool = False,
 ) -> str:
-    """Pick the physical plan for shell_count.
+    """Pick the physical plan for shell_count by the broadcast budget
+    alone (payloads: ``_broadcast_bytes``).
 
-    'dgrid' whenever the DATA (particle) side fits the broadcast
-    budget (~28 B/particle CSR payload + 4 B/cell dense offsets): the
+    'dgrid' whenever the DATA (particle) grid fits the budget: the
     reference's own architecture — in-memory data grid, streamed
     probes — with no shuffle AND no aggregation; fastest in every
     CPU-pinned measurement at in-memory data scales
     (BENCH/BASELINE.md).
 
-    Else 'bcast' whenever the probe (halo) side fits the budget
-    (real payload: 3 coords + id + sorted key ≈ 40 B/halo, plus the
-    dense CSR offsets array of ~4 B/cell; 512 MB covers ~12M probes —
-    reference scale is 10M).  This is a reasoned choice, not a
-    measured one: bcast is the only plan that never shuffles the big
-    table, which should dominate at 100 TB, where the data side cannot
-    fit.  In-memory measurements go the other way wherever this rule
-    picks it (warm ``local[4]``, parquet sink, 5 alternated calls): at
-    1M x 100k (the shells_ref inputs) bcast took 8.6 CPU.s per call
-    against fused's 6.7-6.9, and at 1M x 10k 4.4 against sql's 2.9.
+    Else 'bcast' whenever the probe (halo) grid fits the budget (512
+    MB covers ~12M probes — reference scale is 10M), unweighted only:
+    its sort-reduce kernel has no weighted twin (see shell_count).
+    This is a reasoned choice, not a measured one: bcast is the only
+    plan that never shuffles the big table, which should dominate at
+    100 TB, where the data side cannot fit.  In-memory measurements on
+    its old r_max/2 grid went the other way (warm ``local[4]``,
+    parquet sink, 5 alternated calls): at 1M x 100k bcast took 8.6
+    CPU.s per call against fused's 6.7-6.9.
 
-    Otherwise 'fused' vs 'sql' by estimated per-plan core-time, each
-    plan priced as it runs (``_plan_grid``): sql's candidate pairs on
-    its finest occupancy-capped ring-1 grid plus its exploded ring
-    rows; fused's candidate pairs on the sweep's r_max/2 grid plus the
-    rows its cogroup ships (particles + halo block copies, at the
-    fewest blocks — the copy count barely moves with parallelism) plus
-    its fixed Python-worker cost.  Ties go to sql (pure JVM).
+    Otherwise 'fused', the one plan that broadcasts nothing ('sql'
+    broadcasts its exploded ring side at any size, since Spark sizes a
+    Generate from its input).  'sql' is never picked: warm calls
+    (``local[4]``, noop sink, 4 warm-up then 7 alternated calls,
+    process-tree CPU.s medians) cost sql/fused 2.15/1.63 at 300k x 20k
+    clustered (r_max 10) and 4.42/2.78 at 600k x 60k uniform (r_max
+    20); at 1.2M x 80k clustered (checkpoint sink) 19.63/5.40.  sql
+    won only at 60k x 6k uniform, by 0.29 CPU.s, a shape the default
+    budget keeps on dgrid.
     """
-    from .cells import expected_ring_cells
-
-    nc_bcast, _ = _plan_grid("dgrid", rmax, box, ncells=ncells)
-    grid_bytes = min(nc_bcast**3, 16_000_000) * 4
-    # a weight adds one int64 per particle to the dgrid payload; the
-    # bcast plan stays count-only (its sort-reduce kernel has no
-    # weighted twin — see shell_count docstring)
-    per_particle = 36 if weighted else 28
-    if n_particles * per_particle + grid_bytes <= max_broadcast_bytes:
+    dgrid, bcast = _broadcast_bytes(n_halos, n_particles, rmax, box, ncells, weighted)
+    if dgrid <= max_broadcast_bytes:
         return "dgrid"
-    if not weighted and n_halos * 40 + grid_bytes <= max_broadcast_bytes:
+    if not weighted and bcast <= max_broadcast_bytes:
         return "bcast"
-
-    nc_sql, _ = _plan_grid("sql", rmax, box, n_particles, ncells)
-    nc_sweep, _ = _plan_grid("fused", rmax, box, n_particles, ncells)
-    n_blocks, _ = _plan_grid("fused", rmax, box, n_particles, blocks_for=1)
-
-    def ring(nc: int) -> float:
-        return expected_ring_cells(rmax / (box / nc))  # Euclidean cell prune
-
-    def pairs(nc: int) -> float:
-        return n_halos * ring(nc) * n_particles / float(nc**3)
-
-    t_sql = (
-        pairs(nc_sql) / R_SQL_PAIRS_PER_CORE_SEC
-        + n_halos * ring(nc_sql) * A_SQL_SEC_PER_ROW
-    )
-    t_fused = (
-        pairs(nc_sweep) / R_FUSED_PAIRS_PER_CORE_SEC
-        + (n_particles + n_halos * ring(n_blocks)) * A_FUSED_SEC_PER_ROW
-        + F_FUSED_FIXED_CORE_SEC
-    )
-    return "sql" if t_sql <= t_fused else "fused"
+    return "fused"
 
 
 def shell_count(
@@ -360,21 +346,26 @@ def shell_count(
     counts, exact while every partial sum stays under 2^53).  'bcast'
     raises: there the weight lives on the streamed side and its
     sort-reduce kernel ships unit counts only.  `plan='auto'` with a
-    weight considers dgrid/sql/fused.  Keep weights integer for
-    bit-exact cross-engine sums.
+    weight picks dgrid or fused.  Keep weights integer for bit-exact
+    cross-engine sums.
 
     plan: 'sql' (codegen join), 'fused' (cogroup of coarse blocks),
     'dgrid' (broadcast particle grid), 'bcast' (broadcast halo grid),
-    or 'auto' — pick by estimated per-plan cost (choose_plan); any
-    other name raises.  'auto' needs row counts: pass n_halos_est /
-    n_particles_est (free if the caller tracks table stats, as any
-    catalog/Iceberg metadata does), or each missing side is bounded
-    here by ``sources.tableio.count_rows(exact=False)``: the parquet
-    footers' row counts, with no Spark job, when the side is a parquet
-    scan under projects and filters (a filter makes it an upper
-    bound); a count() pre-job for any other input.  'fused' needs the particle count too (its block
-    count is occupancy-capped), so without n_particles_est it bounds
-    the particles the same way, even with an explicit `ncells`.
+    or 'auto' — dgrid, bcast or fused by the 512 MiB broadcast budget
+    (choose_plan); any other name raises.  'auto' needs row counts:
+    pass n_halos_est / n_particles_est (free if the caller tracks
+    table stats, as any catalog/Iceberg metadata does), or each
+    missing side is bounded here by
+    ``sources.tableio.count_rows(exact=False)``: the parquet footers'
+    row counts, with no Spark job, when the side is a parquet scan
+    under projects and filters (a filter makes it an upper bound); a
+    count() pre-job for any other input.  The halos are counted only
+    when the particle grid misses the budget and bcast is still open.
+    Every 'auto' decision is logged at INFO on this module's logger
+    with its row counts, both payload estimates, the budget and the
+    plan.  'fused' needs the particle count too (its block count is
+    occupancy-capped), so without n_particles_est it bounds the
+    particles the same way, even with an explicit `ncells`.
 
     ncells: cells per axis, overriding the plan's grid rule
     (``_plan_grid``, which documents each plan's measured grid; for
@@ -387,30 +378,33 @@ def shell_count(
     if plan == "auto":
         n_est = n_est or count_rows(particles, exact=False)
         kw = dict(box=box, ncells=ncells, weighted=weight_col is not None)
-        # choose_plan's first test (dgrid) reads only the particle
-        # side: with no halos it answers 'dgrid' iff that test passes,
-        # so the halos are counted only when the choice needs them
+        # with no halos choose_plan answers 'bcast' iff the halo count
+        # can still decide, so the halos are counted only then
+        n_h = None
         plan = choose_plan(0, n_est, rmax, **kw)
-        if plan != "dgrid":
-            plan = choose_plan(
-                n_halos_est or count_rows(halos, exact=False), n_est, rmax,
-                **kw)
+        if plan == "bcast":
+            n_h = n_halos_est or count_rows(halos, exact=False)
+            plan = choose_plan(n_h, n_est, rmax, **kw)
+        log.info("shell_count plan=auto: %d particles, halos %s, payload bytes "
+                 "(dgrid, bcast) %s, budget %d B, weighted=%s -> %s",
+                 n_est, "not needed" if n_h is None else n_h,
+                 _broadcast_bytes(n_h or 0, n_est, rmax, **kw), _BUDGET,
+                 kw["weighted"], plan)
     if weight_col is not None and plan == "bcast":
-        raise ValueError(
-            "weight_col is not supported by plan='bcast': its sort-"
-            "reduce kernel ships unit counts only (the weight lives on "
-            "the STREAMED side there, so a weighted twin would have to "
-            "materialize per-pair weights — use 'dgrid' when the data "
-            "side fits the broadcast budget, else 'sql'/'fused')"
-        )
+        raise ValueError("weight_col is not supported by plan='bcast': its "
+                         "kernel ships unit counts only; use 'dgrid', "
+                         "'fused' or 'sql'")
     if plan == "fused":
         n_est = n_est or count_rows(particles, exact=False)
-    # the plan runs on the grid the cost model priced (ADVICE r2)
+    # dgrid and bcast run on the grids choose_plan priced their payloads on
     nc, ring_k = _plan_grid(plan, rmax, box, n_est, ncells)
     r2 = squared_edges(edges)
     schema = f"{ident(id_col)} long, shell_idx int, cnt long" + (
         ", wsum long" if weight_col else "")
     sweep_args = (r2, box, dtype, nc, ring_k)
+    # bcast's and fused's partial rows summed per (halo, shell)
+    sums = [F.expr("sum(cnt) AS cnt")] + (
+        [F.expr("sum(wsum) AS wsum")] if weight_col else [])
     if plan == "dgrid":
         return _sweep_join((halos, h_coords, id_col),
                            (particles, p_coords, None, weight_col),
@@ -419,7 +413,7 @@ def shell_count(
         return _sweep_join((particles, p_coords, None),
                            (halos, h_coords, id_col, None),
                            _grid_row_counts, schema, *sweep_args) \
-            .groupBy(id_col, "shell_idx").agg(F.sum("cnt").alias("cnt"))
+            .groupBy(id_col, "shell_idx").agg(*sums)
     join_nc = nc
     if plan == "fused":  # joins on coarse blocks, sweeps on the nc grid
         par = halos.sparkSession.sparkContext.defaultParallelism
@@ -429,12 +423,9 @@ def shell_count(
         extra_p=(weight_col,) if weight_col else (),
     )
     if plan == "fused":
-        aggs = [F.expr("sum(cnt) AS cnt")]
-        if weight_col:
-            aggs.append(F.expr("sum(wsum) AS wsum"))
         return _sweep_join((h, _H, id_col), (p, _P, None, weight_col),
                            _probe_counts, schema, *sweep_args, key="cell_id",
-                           n_grid=n_est).groupBy(id_col, "shell_idx").agg(*aggs)
+                           n_grid=n_est).groupBy(id_col, "shell_idx").agg(*sums)
     wcols = [weight_col] if weight_col else []
     proj = _pairs_within(h.join(p, "cell_id"), r2[-1], box, dtype, id_col, *wcols)
     aggs = [F.expr("count(1) AS cnt")]

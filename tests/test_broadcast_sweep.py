@@ -6,6 +6,10 @@ on the grids that exercise each of its branches — z-stripes (interior rows),
 the wrapped per-cell pass (boundary rows, coarse grids), no prune
 (nc < 2k+1) and the sorted-keys fallback (nc^3 > 16M)."""
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -316,3 +320,18 @@ def test_probe_order_invariance(spark, case):
            for p in (parts, parts_perm)]
     assert len(got[0]) > 0
     pd.testing.assert_frame_equal(got[0], got[1])
+
+
+def test_sweep_replay_plans_find_the_same_pairs():
+    """tools/sweep_replay.py on the shuffle workload's seed-1003 inputs:
+    dgrid, bcast and fused, each on the grid ``_plan_grid`` gives it,
+    find the same pair count (the replay exits 1 on a MISMATCH).  It
+    reads perfbench's seeded generator only; nothing is written."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "sweep_replay.py"),
+         "--workload", "shells_clustered_shuffle", "--seed", "1003",
+         "--plans", "dgrid,bcast,fused", "--repeat", "1"],
+        cwd=root, capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
+    assert out.stdout.count(" pairs\n") == 3

@@ -141,29 +141,29 @@ def test_choose_plan_measured_regimes():
     # parquet sink) lost where this rule picks it: 1M x 100k bcast 8.6
     # CPU.s vs fused 6.7-6.9, 1M x 10k bcast 4.4 vs sql 2.9
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0) == "bcast"
-    # beyond the budget: fused's ~5 CPU.s fixed cost per call keeps
-    # small jobs on sql, and at 6M x 600k the sweep's pairs on the
-    # r_max/2 grid (12M/s) beat sql's ring-1 pairs (2.5M/s).  The same
-    # winners were measured in round 4 with fused's old per-cell
-    # kernel (pinned@4: sf0.1 rmax=20: sql 3.35 vs fused 4.58; sf1
-    # rmax=20: sql 67.0 vs fused 30.6; ref-shape rmax=12.77: sql 23.9
-    # vs fused 18.2), which the block plan beats by 1.3-1.5x in warm
-    # CPU.s (300k x 20k and 1.2M x 80k clustered)
-    assert choose_plan(60_000, 600_000, rmax=20.0, max_broadcast_bytes=0) == "sql"
+    # beyond both budgets: fused, the one plan that broadcasts nothing.
+    # Warm calls (local[4], noop sink, 7 alternated calls, CPU.s
+    # medians) cost sql/fused 4.42/2.78 at 600k x 60k uniform r_max 20
+    # and 2.15/1.63 at 300k x 20k clustered; sql won only at 60k x 6k
+    # (0.74/1.03), which the default budget keeps on dgrid
+    assert choose_plan(60_000, 600_000, rmax=20.0, max_broadcast_bytes=0) == "fused"
     assert choose_plan(600_000, 6_000_000, rmax=20.0, max_broadcast_bytes=0) == "fused"
     assert choose_plan(600_000, 6_000_000, rmax=12.77, max_broadcast_bytes=0) == "fused"
     # a weight keeps dgrid (its grid carries int64 weights, r4) but
     # excludes bcast (count-only kernel): probe side fits, data side
-    # doesn't -> falls through to the join-plan cost model
+    # doesn't -> fused
     assert choose_plan(60_000, 600_000, rmax=20.0, weighted=True) == "dgrid"
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0) == "bcast"
     assert choose_plan(10_000_000, 300_000_000, rmax=5.0,
-                       weighted=True) in ("sql", "fused")
-    # the broadcast payload is priced on the grid that runs: r_max/2
-    # cells, 100^3 at r_max 20 = 4 MB of CSR offsets, which with 2.8 MB
-    # of particles overflows 4 MiB; an explicit ncells is what runs
+                       weighted=True) == "fused"
+    # each broadcast payload is priced on the grid its plan runs: dgrid
+    # on r_max/2 cells, 100^3 at r_max 20 = 4 MB of CSR offsets, which
+    # with 2.8 MB of particles overflows 4 MiB; bcast on r_max cells,
+    # 50^3 = 0.5 MB of offsets, which 10k halos (0.4 MB) fit beside
+    # and 100k halos (4 MB) do not; an explicit ncells is what runs
     budget = dict(max_broadcast_bytes=4 << 20)
-    assert choose_plan(10_000, 100_000, 20.0, **budget) not in ("dgrid", "bcast")
+    assert choose_plan(10_000, 100_000, 20.0, **budget) == "bcast"
+    assert choose_plan(100_000, 100_000, 20.0, **budget) == "fused"
     assert choose_plan(10_000, 100_000, 20.0, ncells=50, **budget) == "dgrid"
 
 
@@ -180,6 +180,25 @@ def test_plan_auto_matches_sql(spark):
     got = _run(spark, H, P, edges, "auto")
     want = _run(spark, H, P, edges, "sql")
     assert got.tolist() == want.tolist()
+
+
+def test_plan_auto_logs_one_decision(spark, caplog):
+    """plan='auto' logs its decision once, at INFO on the module logger:
+    the particle count, the halos (not counted when the particle grid
+    fits), both payload estimates, the budget, weighted and the plan."""
+    import logging
+
+    log = "spatialjoincountovershells_spark.operators.shell_count"
+    halos = _df_points(spark, synth_points_np(40, seed=1004), id_col="halo_id")
+    parts = _df_points(spark, synth_points_np(800, seed=4))
+    with caplog.at_level(logging.INFO, logger=log):
+        shell_count(halos, parts, logspace_edges(10.0, 300.0, 8), plan="auto")
+    recs = [r for r in caplog.records if r.name == log]
+    assert len(recs) == 1 and recs[0].levelno == logging.INFO
+    msg = recs[0].getMessage()
+    assert msg.endswith("-> dgrid"), msg
+    assert "800 particles, halos not needed" in msg
+    assert f"budget {512 << 20} B, weighted=False" in msg
 
 
 def test_self_join_autocorr_counts(spark):
@@ -545,9 +564,9 @@ def test_explode_ring_k_prune_covers_and_is_tight(spark):
 
 def test_manual_sql_grid_matches_auto_grid_on_sparse_data(spark):
     """VERDICT r3 #6: an explicit plan='sql' call WITH a row-count
-    estimate must execute on the same occupancy-capped grid the auto
-    path's cost model evaluates — on sparse data the cbrt(n) cap binds,
-    not the rmax cap."""
+    estimate must execute on the occupancy-capped grid ``_plan_grid``
+    gives sql — on sparse data the cbrt(n) cap binds, not the rmax
+    cap."""
     from spatialjoincountovershells_spark.operators.cells import grid_ncells
     from spatialjoincountovershells_spark.operators.shell_count import _prep
 
