@@ -15,7 +15,8 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .sqltext import dlit, ident
 
 BOX = 1000.0
 SCALE = BOX / 65536.0  # exact binary fraction
@@ -27,17 +28,23 @@ def decode_phash(
     out: tuple[str, str, str] = ("x", "y", "z"),
     dtype: str = "float32",
 ) -> DataFrame:
-    """Add x/y/z position columns decoded from phash — pure JVM exprs."""
-    t = "float" if dtype == "float32" else "double"
-    p = F.col(col)
-    exprs = [
-        F.shiftright(p, 32).bitwiseAND(F.lit(0xFFFF)),
-        F.shiftright(p, 16).bitwiseAND(F.lit(0xFFFF)),
-        p.bitwiseAND(F.lit(0xFFFF)),
-    ]
-    for name, q in zip(out, exprs):
-        df = df.withColumn(name, q.cast(t) * F.lit(SCALE).cast(t))
-    return df
+    """Add x/y/z position columns decoded from phash — pure JVM exprs,
+    built as SQL text in one ``selectExpr`` (one py4j call instead of
+    ~10 per Column op).  An existing column named like an output (by
+    the session's case rule) is replaced in place, as ``withColumn``
+    would."""
+    t = "FLOAT" if dtype == "float32" else "DOUBLE"
+    p = ident(col)
+    bits = (f"shiftright({p}, 32)", f"shiftright({p}, 16)", p)
+    fold = (str.lower if df.sparkSession.conf.get("spark.sql.caseSensitive")
+            == "false" else str)
+    q = {fold(name): f"CAST(({b} & 65535) AS {t}) * "
+                     f"CAST({dlit(SCALE)} AS {t}) AS {ident(name)}"
+         for name, b in zip(out, bits)}
+    if not q.keys() & {fold(c) for c in df.columns}:
+        return df.selectExpr("*", *q.values())
+    keep = [q.pop(fold(c), ident(c)) for c in df.columns]
+    return df.selectExpr(*keep, *q.values())
 
 
 def decode_phash_np(phash: np.ndarray, dtype=np.float32) -> np.ndarray:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tableio import count_rows_past
 from .dedup import dedup_clusters
 from .shell_count import range_join_pairs
 
@@ -431,7 +432,9 @@ def pq_ann_topk(
     per row — guarded: above `exhaustive_limit` corpus rows the call
     raises unless `exhaustive=True` is passed explicitly, pointing at
     ivf_candidates (VERDICT r3 #3: an unwary default would otherwise
-    schedule 10^12-row pair tables at production scale).
+    schedule 10^12-row pair tables at production scale).  The guard
+    sizes the corpus as ``ann_l2_topk``'s does (footers, else a count
+    bounded at `exhaustive_limit` + 1, never a full scan).
 
     Scale shape: the m codebooks are k rows each and the per-query LUT
     is one dense m*k int64 array per query — broadcast; the pair table
@@ -444,13 +447,15 @@ def pq_ann_topk(
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     if candidates is None and not exhaustive:
-        # cheap metadata-or-count guard: the exhaustive baseline is
+        # metadata-or-bounded-count guard: the exhaustive baseline is
         # O(n^2) pair rows and must be an explicit choice beyond toy n
-        n = emb.count()
+        n, exact = count_rows_past(emb, exhaustive_limit)
         if n > exhaustive_limit:
+            size = (f"{n} corpus rows -> ~{n * n:.0e} pairs" if exact
+                    else f"more than {exhaustive_limit} corpus rows")
             raise ValueError(
                 f"pq_ann_topk without candidates= is an exhaustive "
-                f"cross join ({n} corpus rows -> ~{n * n:.0e} pairs). "
+                f"cross join ({size}). "
                 f"Pass candidates=ivf_candidates(...) (IVF+PQ), or "
                 f"exhaustive=True to insist."
             )

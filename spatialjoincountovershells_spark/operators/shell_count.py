@@ -123,7 +123,7 @@ from pyspark.sql.types import StructType
 from ..functions.geometry import squared_distance_expr, squared_distance_sql
 from ..functions.shells import shell_binner, shell_index_expr, squared_edges
 from ..functions.sqltext import dlit, ident
-from ..sources.tableio import count_rows, plan_nodes
+from ..sources.tableio import count_rows, footprint
 from .cells import explode_ring, grid_ncells, ring_offsets, with_cell  # noqa: F401
 
 _H = ("_hx", "_hy", "_hz")
@@ -356,11 +356,12 @@ def shell_count(
     pass n_halos_est / n_particles_est (free if the caller tracks
     table stats, as any catalog/Iceberg metadata does), or each
     missing side is bounded here by
-    ``sources.tableio.count_rows(exact=False)``: the parquet footers'
-    row counts, with no Spark job, when the side is a parquet scan
-    under projects and filters (a filter makes it an upper bound); a
-    count() pre-job for any other input.  The halos are counted only
-    when the particle grid misses the budget and bcast is still open.
+    ``sources.tableio.count_rows(exact=False)``: the leaf's size from
+    metadata (parquet footers, a Range, an in-memory relation), with
+    no Spark job, when the side is such a leaf under projects and
+    filters (a filter makes it an upper bound); a count() pre-job for
+    any other input.  The halos are counted only when the particle
+    grid misses the budget and bcast is still open.
     Every 'auto' decision is logged at INFO on this module's logger
     with its row counts, both payload estimates, the budget and the
     plan.  'fused' needs the particle count too (its block count is
@@ -487,13 +488,25 @@ def _cell_index(xyz64: np.ndarray, nc: int, box: float) -> np.ndarray:
     return np.fmin(np.fmax(i, 0), nc - 1).astype(np.int64)
 
 
+def _key_dtype(nc: int):
+    """Cell-key dtype of the nc^3 grid: int32 while every key fits."""
+    return np.int32 if nc**3 < 2**31 - 1 else np.int64
+
+
 def _cell_key(xyz, nc: int, box: float) -> np.ndarray:
     """Three per-axis coordinate arrays (any float dtype; an (n, 3)
-    array's ``.T``) -> ``with_cell``'s composite int64 key
-    (cx*nc + cy)*nc + cz."""
-    cx, cy, cz = (_cell_index(np.asarray(c, dtype=np.float64), nc, box)
-                  for c in xyz)
-    return (cx * nc + cy) * nc + cz
+    array's ``.T``) -> ``with_cell``'s composite key (cx*nc + cy)*nc +
+    cz, in ``_key_dtype(nc)``.  Each axis is ``_cell_index``'s f64
+    floor and clamp, done in place on one temporary, and the key is
+    accumulated in the key dtype: argsort's cost tracks the key width."""
+    kt = _key_dtype(nc)
+    key = np.zeros(len(xyz[0]), kt)
+    for c in xyz:
+        i = np.divide(c, box / nc, dtype=np.float64)
+        np.fmin(np.fmax(np.floor(i, out=i), 0, out=i), nc - 1, out=i)
+        key *= nc
+        key += i.astype(kt)
+    return key
 
 
 def _arrow_xyz(tbl, names) -> np.ndarray:
@@ -510,9 +523,9 @@ def _csr_grid(key, xyz, nc: int, np_dtype, ids=None, W=None,
     """Sort rows by cell key into a sweep grid payload: coords Hx/Hy/Hz
     (np_dtype), optional ids/W (int64), and one CSR index — dense
     offsets ``starts`` over the nc^3 grid, else the sorted ``keys``
-    (8 B per row) for a searchsorted lookup.  Never both: with dense
-    offsets the kernels never touch the keys, and dropping them cuts
-    the broadcast ~35%.
+    (``_key_dtype``: 4 B per row below 2^31 cells) for a searchsorted
+    lookup.  Never both: with dense offsets the kernels never touch
+    the keys, and dropping them cuts the broadcast ~35%.
 
     Dense while nc^3 <= 16M and, when the grid serves a known number
     of probe rows (`n_probes`: one fused group's halos), while nc^3 <=
@@ -626,7 +639,7 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
     # of the box/2 boundary
     fastpath_ok = 2 * nc >= 5 * (kk + 1)
     oidx = raw_offs + kk  # raw offset -k..+k -> gap-table column
-    key_t = np.int32 if nc**3 < 2**31 - 1 else np.int64
+    key_t = _key_dtype(nc)
     idx_t = np.int32 if n_grid + _SWEEP_CHUNK < 2**31 - 1 else np.int64
     seg_t = np.int32 if n_grid < 2**31 - 1 else np.int64
     bx = np_dtype(box)
@@ -758,20 +771,11 @@ def _make_sweep(nc: int, box: float, ring_k: int, r2: np.ndarray, np_dtype,
                 base, s0 = int(cum[s1 - 1]), s1
 
     def cell_order(P64):
-        # int32 keys while they fit: argsort's cost tracks the key width
-        return np.argsort(_cell_key(P64.T, nc, box).astype(key_t, copy=False))
+        return np.argsort(_cell_key(P64.T, nc, box))
 
     sweep.cell_order = cell_order
     sweep.r2k = np.asarray(r2, dtype=np_dtype)
     return sweep
-
-
-# optimized-plan nodes that never shuffle: `_sweep_join`'s `spread`
-# reads the partition count of a side made only of these from its RDD
-_NARROW_NODES = frozenset((
-    "Project", "Filter", "LogicalRelation", "LogicalRDD", "LocalRelation",
-    "Range", "MapInPandas", "MapInArrow", "BatchEvalPython",
-    "ArrowEvalPython"))
 
 
 def _sweep_join(stream: tuple, indexed: tuple, reducer, schema: str, r2,
@@ -788,13 +792,16 @@ def _sweep_join(stream: tuple, indexed: tuple, reducer, schema: str, r2,
 
     Without `key` the indexed side is collected and broadcast once
     (``_build_grid``) and the streamed side runs through one
-    ``mapInArrow``: no shuffle.  With `spread`, a streamed side with
-    fewer partitions than cores is repartitioned first — Spark's scan
-    bin-packing often lands a small probe table in one or two
-    partitions, and this shuffles the SMALL side only.  Only a side
-    whose optimized plan is all ``_NARROW_NODES`` is asked for its
-    partition count: on any other, ``.rdd`` would run the side's
-    shuffle as a hidden job, so it is repartitioned unasked, to an
+    ``mapInArrow``: no shuffle.  With `spread`, a streamed side whose
+    non-empty pieces do not cover the cores is repartitioned first, so
+    the sweep gets one non-empty task per core; this shuffles the
+    SMALL side only.  The pieces come from
+    ``sources.tableio.footprint``, which reads parquet footers or the
+    plan's leaf and builds no physical plan: a parquet scan counts its
+    row groups, not its partitions (a one-row-group file split into
+    one byte range per core has rows in one range only), a ``Range``
+    its slices and an in-memory relation its rows.  Any other side
+    (one holding a shuffle, an RDD) is repartitioned unasked, to an
     explicit count AQE leaves alone.
 
     With `key` (plan 'fused') the two sides are cogrouped on it
@@ -814,8 +821,8 @@ def _sweep_join(stream: tuple, indexed: tuple, reducer, schema: str, r2,
         s = sdf.select(*ssel)
         if spread:
             par = sdf.sparkSession.sparkContext.defaultParallelism
-            if (any(k not in _NARROW_NODES for k, _ in plan_nodes(s))
-                    or s.rdd.getNumPartitions() < par):
+            fp = footprint(s)
+            if fp is None or fp.pieces < par:
                 s = s.repartition(par)
         return s.mapInArrow(
             lambda batches: _sweep_batches(sweep, bc.value, batches, s_id,

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.synth import splitmix64
+from ..sources.tableio import count_rows, count_rows_past
 from .dedup import bucket_pairs
 
 
@@ -78,15 +79,20 @@ def ann_l2_topk(
     unless `exhaustive=True` is passed explicitly, pointing at the
     candidate generators (lsh_cosine_pairs / ivf_candidates), so a
     production-scale corpus can't silently schedule 10^12-row work.
+    The corpus is sized by ``sources.tableio.count_rows_past``: from
+    parquet footers with no Spark job, else a count that stops at
+    `exhaustive_limit` + 1 rows, never a full scan.
     """
     spark = emb.sparkSession
     if candidates is None and queries is None and not exhaustive:
-        n = emb.count()
+        n, exact = count_rows_past(emb, exhaustive_limit)
         if n > exhaustive_limit:
+            size = (f"{n} corpus rows -> ~{n * n:.0e} distances" if exact
+                    else f"more than {exhaustive_limit} corpus rows")
             raise ValueError(
                 f"ann_l2_topk without candidates= is an exact "
-                f"all-pairs search ({n} corpus rows -> ~{n * n:.0e} "
-                f"distances). Pass candidates= (lsh_cosine_pairs / "
+                f"all-pairs search ({size}). Pass candidates= "
+                f"(lsh_cosine_pairs / "
                 f"ivf_candidates output), a small queries= frame, or "
                 f"exhaustive=True to insist."
             )
@@ -212,7 +218,7 @@ def seed_centroid_rows(
     """
     from ..functions.texthash import P, affine_sql
 
-    n = emb.count()  # one cheap action (a catalog count at scale)
+    n = count_rows(emb)  # footers when they answer, else one count()
     rate = min(1_000_000, (8_000_000 * int(n_centroids)) // max(n, 1) + 1)
     h = f"({affine_sql(f'({id_col} % {P})', _CENTROID_STREAM)} % 1000000)"
     return emb.where(F.expr(h) < rate).orderBy(id_col).limit(n_centroids)

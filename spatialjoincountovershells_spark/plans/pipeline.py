@@ -32,7 +32,7 @@ from ..functions.phash import decode_phash
 from ..operators.cells import grid_ncells, with_cell
 from ..operators.shell_count import shell_count
 from ..operators.semi_join import filter_halos
-from ..sources.tableio import parquet_footer_rows, read_table, write_table
+from ..sources.tableio import parquet_footers, read_table, write_table
 
 
 def sjcs_pipeline(
@@ -137,8 +137,8 @@ def checkpoint(df: DataFrame, path: str, token: str) -> dict:
     if write_table(df, path) == "parquet" and not urlparse(path).scheme:
         files = sorted(f for f in os.listdir(path)
                        if f.endswith(".parquet") and not f.startswith(("_", ".")))
-        rows = parquet_footer_rows(os.path.join(path, f) for f in files)
-        metrics = [{"file": f, "n_rows": n} for f, n in zip(files, rows)]
+        footers = parquet_footers(os.path.join(path, f) for f in files)
+        metrics = [{"file": f, "n_rows": n} for f, (n, _) in zip(files, footers)]
     else:
         # the schema it just wrote: no footer-inference job on read-back
         back = read_table(df.sparkSession, path, schema=df.schema)

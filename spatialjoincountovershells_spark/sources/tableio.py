@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import weakref
 from collections.abc import Iterable
+from typing import NamedTuple
 from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JJavaError
@@ -97,50 +98,112 @@ def read_table(
     return reader.parquet(location)
 
 
-def parquet_footer_rows(paths: Iterable[str]) -> list[int]:
-    """Row count of each local parquet file, read from its footer by
-    pyarrow on the driver: a few KB per file and no Spark job."""
+def parquet_footers(paths: Iterable[str]) -> list[tuple[int, int]]:
+    """(rows, non-empty row groups) of each local parquet file, read
+    from its footer by pyarrow on the driver: a few KB per file and no
+    Spark job."""
     import pyarrow.parquet as pq
 
-    return [pq.read_metadata(p).num_rows for p in paths]
+    mds = [pq.read_metadata(p) for p in paths]
+    return [(md.num_rows, sum(md.row_group(i).num_rows > 0
+                              for i in range(md.num_row_groups)))
+            for md in mds]
 
 
-def plan_nodes(df: DataFrame):
-    """-> (class simple name, JVM node) for every node of `df`'s
-    optimized logical plan; reading it starts no Spark job."""
-    stack = [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        yield node.getClass().getSimpleName(), node
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
+class Footprint(NamedTuple):
+    """What a side's metadata says about its size.
+
+    rows: its row count, an upper bound on it when not `exact`, or None
+    when a node may change it (a Python map).  pieces: how many pieces
+    of its scan hold rows (parquet row groups, Range slices, in-memory
+    rows), which bounds the tasks that read any."""
+
+    rows: int | None
+    exact: bool
+    pieces: int
+
+
+# optimized-plan nodes `footprint` reads through, each of which maps
+# one input piece to one output piece, and what each does to the rows
+_THROUGH = {
+    "Project": "keeps", "BatchEvalPython": "keeps",
+    "ArrowEvalPython": "keeps", "Filter": "bounds",
+    "MapInPandas": "changes", "MapInArrow": "changes",
+}
+
+
+def footprint(df: DataFrame) -> Footprint | None:
+    """`df`'s size from metadata: the one place an input is sized.
+
+    Answers when the optimized plan is a chain of ``_THROUGH`` nodes
+    over one leaf it can read without a Spark job or a physical plan
+    (reading the optimized plan starts neither):
+
+    * a parquet scan of local files: rows and non-empty row groups from
+      the footers (Spark splits files into byte ranges, and a range
+      holds rows only if a row group's midpoint falls in it, so a
+      one-row-group file is one non-empty task however it is split);
+    * a ``Range``: its elements, in its slices;
+    * an in-memory ``LocalRelation``: its rows, each a piece.
+
+    Any other plan (a shuffle, a join, a limit, an RDD, a non-parquet
+    or non-local source) -> None."""
+    rows_known, exact = True, True
+    node = df._jdf.queryExecution().optimizedPlan()
+    while (kind := node.getClass().getSimpleName()) in _THROUGH:
+        exact &= _THROUGH[kind] != "bounds"
+        rows_known &= _THROUGH[kind] != "changes"
+        node = node.children().apply(0)
+    if kind == "Range":
+        rows = int(node.numElements())
+        sl = node.numSlices()
+        pieces = min(rows, sl.get() if sl.isDefined()
+                     else df.sparkSession.sparkContext.defaultParallelism)
+    elif kind == "LocalRelation":
+        rows = pieces = node.data().size()
+    elif kind == "LogicalRelation":
+        rel = node.relation()
+        if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+                or rel.fileFormat().getClass().getSimpleName()
+                != "ParquetFileFormat"):
+            return None
+        uris = [urlparse(u) for u in df.inputFiles()]
+        if any(u.scheme not in ("", "file") for u in uris):
+            return None
+        footers = parquet_footers(unquote(u.path) for u in uris)
+        rows = sum(r for r, _ in footers)
+        pieces = sum(g for _, g in footers)
+    else:
+        return None
+    return Footprint(rows if rows_known else None, exact, pieces)
 
 
 def count_rows(df: DataFrame, exact: bool = True) -> int:
-    """``df.count()``, from parquet footers without a Spark job when
-    the optimized plan allows it.
+    """``df.count()``, from ``footprint`` without a Spark job when the
+    metadata answers.
 
-    Footers answer when every node of the optimized plan is a Project
-    (or, with ``exact=False``, a Filter) over parquet file relations on
-    local files: no such node can add rows, so the footers' total is
-    the count, or with a Filter an upper bound on it.  Exact counts
-    feed estimator denominators, so ``exact=True`` takes no Filter.
-    Any other node (an explode, a join, a limit, an in-memory or
-    non-parquet source) or a non-local file runs ``count()``."""
-    keep = ("Project",) if exact else ("Project", "Filter")
-    for kind, node in plan_nodes(df):
-        if kind == "LogicalRelation":
-            rel = node.relation()
-            if (rel.getClass().getSimpleName() != "HadoopFsRelation"
-                    or rel.fileFormat().getClass().getSimpleName()
-                    != "ParquetFileFormat"):
-                return df.count()
-        elif kind not in keep:
-            return df.count()
-    paths = []
-    for uri in df.inputFiles():
-        u = urlparse(uri)
-        if u.scheme not in ("", "file"):
-            return df.count()
-        paths.append(unquote(u.path))
-    return sum(parquet_footer_rows(paths))
+    It answers when the optimized plan is Projects and Python UDF
+    evaluations (with ``exact=False``, Filters too) over a local
+    parquet scan, a ``Range`` or an in-memory relation: no such node
+    can add rows, so the leaf's rows are the count, or with a Filter
+    an upper bound on it.  Exact counts feed estimator denominators,
+    so ``exact=True`` takes no Filter.  Any other plan (an explode, a
+    join, a limit, a Python map, an RDD or a non-parquet source) runs
+    ``count()``."""
+    fp = footprint(df)
+    if fp is not None and fp.rows is not None and (fp.exact or not exact):
+        return fp.rows
+    return df.count()
+
+
+def count_rows_past(df: DataFrame, limit: int) -> tuple[int, bool]:
+    """-> (n, exact) for a guard that only asks whether `df` holds more
+    than `limit` rows: ``count_rows``'s exact metadata count when it
+    answers, else a bounded ``df.limit(limit + 1).count()``, never a
+    full scan.  Past `limit` that count stops at limit + 1, and `exact`
+    is then False."""
+    fp = footprint(df)
+    if fp is not None and fp.rows is not None and fp.exact:
+        return fp.rows, True
+    n = df.limit(limit + 1).count()
+    return n, n <= limit

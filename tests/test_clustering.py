@@ -328,20 +328,34 @@ def test_pq_ann_ivf_candidates_subset(spark):
     assert per_q and max(per_q.values()) <= k_nn
 
 
-def test_pq_ann_exhaustive_guard(spark):
+def test_pq_ann_exhaustive_guard(spark, tmp_path):
     """Without candidates=, pq_ann_topk above the row limit must refuse
     (the O(n^2) cross join is an explicit opt-in), and exhaustive=True
-    must override; with candidates= no count/guard runs at all."""
+    must override; with candidates= no count/guard runs at all.  The
+    refusal sizes the corpus from metadata with no Spark job (a Range,
+    a parquet scan's footers), else with a count bounded at the limit."""
     import pytest as _pytest
 
+    from fixtures import jobs_in_group
     from spatialjoincountovershells_spark.operators.clustering import pq_ann_topk
 
     df = spark.range(30).selectExpr(
         "id as vec_id",
         "transform(sequence(1, 8), i -> cast(pmod(id * i, 7) as double)) as embedding",
     )
-    with _pytest.raises(ValueError, match="ivf_candidates"):
-        pq_ann_topk(df, k_nn=2, m=2, k=4, iters=1, dim=8, exhaustive_limit=10)
+    df.write.parquet(str(tmp_path / "emb"))
+
+    def refuse(emb):
+        with _pytest.raises(ValueError, match="ivf_candidates") as e:
+            pq_ann_topk(emb, k_nn=2, m=2, k=4, iters=1, dim=8,
+                        exhaustive_limit=10)
+        return str(e.value)
+
+    for case, emb in (("range", df),
+                      ("parquet", spark.read.parquet(str(tmp_path / "emb")))):
+        msg, jobs = jobs_in_group(spark, case, lambda: refuse(emb))
+        assert jobs == 0 and "(30 corpus rows" in msg
+    assert "(more than 10 corpus rows)" in refuse(df.union(df))
     out = pq_ann_topk(df, k_nn=2, m=2, k=4, iters=1, dim=8,
                       exhaustive_limit=10, exhaustive=True)
     assert out.count() > 0

@@ -673,11 +673,26 @@ def test_hamming_pairs_hot_bucket_cap(spark):
     assert len(full) == 20 * 19 // 2 and (full.hamming == 0).all()
 
 
-def test_ann_l2_exhaustive_guard(spark):
+def test_ann_l2_exhaustive_guard(spark, tmp_path):
     """Self-search above exhaustive_limit refuses unless exhaustive=True
-    (round-4 VERDICT #3 — same policy as pq_ann_topk)."""
+    (round-4 VERDICT #3 — same policy as pq_ann_topk).  The refusal
+    sizes the corpus from metadata with no Spark job (an in-memory
+    relation, a parquet scan's footers), else with a count bounded at
+    the limit."""
+    from fixtures import jobs_in_group
+
     emb, _ = _rand_emb(spark, 40, dim=8, seed=5)
-    with pytest.raises(ValueError, match="exhaustive"):
-        ann_l2_topk(emb, k=2, exhaustive_limit=10)
+    emb.write.parquet(str(tmp_path / "emb"))
+
+    def refuse(df):
+        with pytest.raises(ValueError, match="exhaustive") as e:
+            ann_l2_topk(df, k=2, exhaustive_limit=10)
+        return str(e.value)
+
+    for case, df in (("local", emb),
+                     ("parquet", spark.read.parquet(str(tmp_path / "emb")))):
+        msg, jobs = jobs_in_group(spark, case, lambda: refuse(df))
+        assert jobs == 0 and "(40 corpus rows" in msg
+    assert "(more than 10 corpus rows)" in refuse(emb.union(emb))
     out = ann_l2_topk(emb, k=2, exhaustive_limit=10, exhaustive=True).toPandas()
     assert len(out) == 40 * 2

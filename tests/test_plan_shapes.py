@@ -45,11 +45,17 @@ def sides(spark):
 EDGES = logspace_edges(1.0, 80.0, 8)
 
 
-def test_dgrid_plan_has_no_shuffle_and_no_aggregate(sides):
+def test_dgrid_plan_has_no_shuffle_and_no_aggregate(spark, sides, tmp_path):
+    """Neither a synthetic halo side nor a parquet one with a row group
+    per file and a file per core or more (perfbench's halo table) is
+    shuffled: their pieces cover the cores."""
     halos, parts = sides
-    p = plan_of(shell_count(halos, parts, EDGES, plan="dgrid"))
-    assert "Exchange" not in p
-    assert "Aggregate" not in p  # the map output IS the result
+    path = str(tmp_path / "halos")
+    halos.select("halo_id", "phash").repartition(8).write.parquet(path)
+    for h in (halos, decode_phash(spark.read.parquet(path))):
+        p = plan_of(shell_count(h, parts, EDGES, plan="dgrid"))
+        assert "Exchange" not in p
+        assert "Aggregate" not in p  # the map output IS the result
 
 
 def test_bcast_plan_shuffles_only_the_partial_counts(sides):

@@ -712,7 +712,7 @@ def test_cell_grid_builders_quote_column_names(spark):
     assert got.tolist() == want.tolist() and want.sum() > 0
 
 
-def _parquet_points(spark, tmp_path, n, seed):
+def _parquet_points(spark, tmp_path, n, seed, files=3):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -722,7 +722,7 @@ def _parquet_points(spark, tmp_path, n, seed):
     P = synth_points_np(n, seed=seed)
     d = tmp_path / f"pts{seed}"
     d.mkdir()
-    for i, part in enumerate(np.array_split(np.arange(n), 3)):
+    for i, part in enumerate(np.array_split(np.arange(n), files)):
         pq.write_table(pa.table({"id": part.astype(np.int64),
                                  "phash": encode_phash_np(P[part])}),
                        d / f"part-{i}.parquet")
@@ -772,24 +772,46 @@ def test_row_bound_counts_when_rows_can_grow(spark, tmp_path):
                 == choose_plan(300, n, 40.0, max_broadcast_bytes=budget))
 
 
-def test_dgrid_on_a_shuffled_halo_side_builds_in_one_job(spark):
-    """dgrid's `spread` never asks a halo side that holds a shuffle for
-    its partition count (``.rdd`` would run that shuffle as a hidden
-    job): building the plan starts exactly one job, the particle grid's
-    collect, and the counts equal the brute force."""
+def test_dgrid_on_a_shuffled_halo_side_builds_in_one_job(spark, tmp_path,
+                                                         monkeypatch):
+    """dgrid's `spread` sizes the halo side from metadata alone: it
+    never reads ``DataFrame.rdd`` (on a side holding a shuffle that
+    would run the shuffle as a hidden job), so building the plan starts
+    exactly one job, the particle grid's collect.  A side that holds a
+    shuffle, and a one-row-group parquet file split into a byte range
+    per core (one non-empty range), are both repartitioned, and the
+    counts equal the brute force."""
     from pyspark.sql import functions as F
 
     P = synth_points_np(3000, seed=31)
     H = synth_points_np(2000, seed=32)
     one = _df_points(spark, H, id_col="halo_id")
     # every halo twice, merged back by the groupBy's shuffle
-    halos = one.union(one).groupBy("halo_id").agg(
+    shuffled = one.union(one).groupBy("halo_id").agg(
         *(F.min(c).alias(c) for c in "xyz"))
+    one_group = _parquet_points(spark, tmp_path, 2000, seed=32, files=1)
+    size = next(tmp_path.glob("pts32/*.parquet")).stat().st_size
     edges = logspace_edges(1.0, 60.0, 6)
-    res, jobs = jobs_in_group(spark, "dgrid_build", lambda: shell_count(
-        halos, _df_points(spark, P), edges, plan="dgrid"))
-    assert jobs == 1
-    got = dense_from_long([(r.halo_id, r.shell_idx, r.cnt)
-                           for r in res.collect()], len(H), len(edges))
-    assert got.tolist() == oracle_shell_counts(
-        H, P, squared_edges(edges)).tolist()
+
+    def no_rdd(self):
+        raise AssertionError("DataFrame.rdd read while sizing a side")
+
+    for case, halos in (("shuffled", shuffled), ("one_row_group", one_group
+                        .withColumnRenamed("id", "halo_id"))):
+        # byte ranges of a quarter file: 4+ scan partitions, rows in one
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(size // 4))
+        try:
+            with monkeypatch.context() as m:
+                m.setattr(type(halos), "rdd", property(no_rdd))
+                res, jobs = jobs_in_group(
+                    spark, case, lambda: shell_count(
+                        halos, _df_points(spark, P), edges, plan="dgrid"))
+            assert jobs == 1
+            plan = res._jdf.queryExecution().optimizedPlan().toString()
+            assert "Repartition" in plan
+            got = dense_from_long([(r.halo_id, r.shell_idx, r.cnt)
+                                   for r in res.collect()], len(H), len(edges))
+        finally:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        assert got.tolist() == oracle_shell_counts(
+            H, P, squared_edges(edges)).tolist()
